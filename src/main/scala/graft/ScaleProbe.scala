@@ -1581,7 +1581,7 @@ object ScaleProbe {
         }
       }
       // Compact-path A/B (VERDICT r11 #3): the r12 binary row-group
-      // concatenation (`ParquetFileWriter.appendFile`, what compact() now
+      // concatenation ([[graft.sources.ParquetConcat]], what compact() now
       // runs) against the r11 Group-API row decode/re-encode loop it
       // replaced, SAME RUN over the SAME fragmented generation. The real
       // compact runs FIRST (its reads warm the page cache for the row
@@ -1676,7 +1676,7 @@ object ScaleProbe {
             .parquet(s"$root/out-app-2/kind=simple/*/*").count()
           rmOut(s"$root/out-row-2"); rmOut(s"$root/out-app-2")
           // and the real protocol compact (generation swap + retirement),
-          // which now runs the appendFile path internally — same drained
+          // which runs the same concatenation internally — same drained
           // start, same sync-inclusive timing
           drain()
           val tProto = timed(TimeStore.compact(spark, ns))
@@ -1766,63 +1766,32 @@ object ScaleProbe {
   }
 
   /** The `compact_ab` probe's two merge shapes over one partition dir:
-    * useAppend=true replicates the r12 binary row-group concatenation
-    * (what `TimeStore.compact` now runs), useAppend=false the r11
-    * Group-API row decode/re-encode it replaced — both probe-local so the
-    * A/B runs symmetric passes over the same immutable generation. */
+    * useAppend=true runs the binary row-group concatenation
+    * `TimeStore.compact` ships ([[graft.sources.ParquetConcat]]),
+    * useAppend=false the r11 Group-API row decode/re-encode it replaced —
+    * both driven probe-locally so the A/B runs symmetric passes over the
+    * same immutable generation. */
   private def probeMerge(conf: org.apache.hadoop.conf.Configuration,
                          srcDir: org.apache.hadoop.fs.Path,
                          dstFile: org.apache.hadoop.fs.Path,
                          useAppend: Boolean): Unit =
-    if (useAppend) appendMerge(conf, srcDir, dstFile)
+    if (useAppend)
+      require(graft.sources.ParquetConcat.mergeSameSchema(conf,
+        graft.sources.ParquetConcat.dataFiles(conf, srcDir), dstFile),
+        s"mixed physical schemas under $srcDir")
     else rowLoopMerge(conf, srcDir, dstFile)
 
-  private def listMergeFiles(conf: org.apache.hadoop.conf.Configuration,
-                             srcDir: org.apache.hadoop.fs.Path)
-      : Seq[org.apache.hadoop.fs.FileStatus] =
-    srcDir.getFileSystem(conf).listStatus(srcDir).toSeq
-      .filter { st =>
-        val nm = st.getPath.getName
-        st.isFile && !nm.startsWith("_") && !nm.startsWith(".")
-      }
-      .sortBy(_.getPath.getName)
-
-  private def appendMerge(conf: org.apache.hadoop.conf.Configuration,
-                          srcDir: org.apache.hadoop.fs.Path,
-                          dstFile: org.apache.hadoop.fs.Path): Unit = {
-    import org.apache.parquet.hadoop.{ParquetFileReader, ParquetFileWriter, ParquetWriter}
-    import org.apache.parquet.hadoop.util.{HadoopInputFile, HadoopOutputFile}
-    val f = srcDir.getFileSystem(conf)
-    val files = listMergeFiles(conf, srcDir)
-    if (files.isEmpty) return
-    f.mkdirs(dstFile.getParent)
-    if (files.sizeIs == 1) {
-      org.apache.hadoop.fs.FileUtil.copy(
-        f, files.head.getPath, f, dstFile, false, true, conf)
-      return
-    }
-    val inputs = files.map(st => HadoopInputFile.fromStatus(st, conf))
-    val meta = {
-      val r = ParquetFileReader.open(inputs.head)
-      try r.getFooter.getFileMetaData finally r.close()
-    }
-    val w = new ParquetFileWriter(HadoopOutputFile.fromPath(dstFile, conf),
-      meta.getSchema, ParquetFileWriter.Mode.OVERWRITE,
-      ParquetWriter.DEFAULT_BLOCK_SIZE, ParquetWriter.MAX_PADDING_SIZE_DEFAULT)
-    w.start()
-    inputs.foreach(w.appendFile)
-    w.end(meta.getKeyValueMetaData)
-  }
-
-  /** The r11 compact merge path, preserved verbatim for the `compact_ab`
-    * probe: Group-API row-at-a-time decode of every source file re-encoded
-    * through an ExampleParquetWriter under the store's 4-field schema —
-    * the code shape `ParquetFileWriter.appendFile` replaced in r12. */
+  /** The r11 compact merge path for the `compact_ab` probe: Group-API
+    * row-at-a-time decode of every source file re-encoded through an
+    * ExampleParquetWriter under the store's 4-field schema — the code shape
+    * the binary row-group concatenation replaced in r12. Files open
+    * through [[graft.sources.ParquetOpen]] like every other parquet read,
+    * so the A/B compares merge shapes, not per-open costs. */
   private def rowLoopMerge(conf: org.apache.hadoop.conf.Configuration,
                            srcDir: org.apache.hadoop.fs.Path,
                            dstFile: org.apache.hadoop.fs.Path): Unit = {
-    import org.apache.parquet.hadoop.{ParquetFileWriter, ParquetReader}
-    import org.apache.parquet.hadoop.example.{ExampleParquetWriter, GroupReadSupport}
+    import org.apache.parquet.hadoop.ParquetFileWriter
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
     import org.apache.parquet.hadoop.metadata.CompressionCodecName
     import org.apache.parquet.example.data.simple.SimpleGroupFactory
     val schema = org.apache.parquet.schema.MessageTypeParser.parseMessageType(
@@ -1833,12 +1802,7 @@ object ScaleProbe {
         |  optional binary value;
         |}""".stripMargin)
     val f = srcDir.getFileSystem(conf)
-    val files = f.listStatus(srcDir).toSeq
-      .filter { st =>
-        val nm = st.getPath.getName
-        st.isFile && !nm.startsWith("_") && !nm.startsWith(".")
-      }
-      .sortBy(_.getPath.getName)
+    val files = graft.sources.ParquetConcat.dataFiles(conf, srcDir)
     if (files.isEmpty) return
     f.mkdirs(dstFile.getParent)
     if (files.sizeIs == 1) {
@@ -1853,22 +1817,16 @@ object ScaleProbe {
       .build()
     val factory = new SimpleGroupFactory(schema)
     try files.foreach { st =>
-      val reader = ParquetReader.builder(new GroupReadSupport(), st.getPath)
-        .withConf(conf).build()
-      try {
-        var g = reader.read()
-        while (g != null) {
-          val out = factory.newGroup()
-          out.append("address", g.getLong("address", 0))
-          out.append("time", g.getLong("time", 0))
-          out.append("payload", g.getLong("payload", 0))
-          if (g.getType.containsField("value") &&
-              g.getFieldRepetitionCount("value") > 0)
-            out.append("value", g.getBinary("value", 0))
-          writer.write(out)
-          g = reader.read()
-        }
-      } finally reader.close()
+      graft.sources.ParquetOpen.foreachGroup(conf, st) { g =>
+        val out = factory.newGroup()
+        out.append("address", g.getLong("address", 0))
+        out.append("time", g.getLong("time", 0))
+        out.append("payload", g.getLong("payload", 0))
+        if (g.getType.containsField("value") &&
+            g.getFieldRepetitionCount("value") > 0)
+          out.append("value", g.getBinary("value", 0))
+        writer.write(out)
+      }
     } finally writer.close()
   }
 }

@@ -652,19 +652,21 @@ case class GraftScan(root: String, ns: String, filters: Array[Filter],
     else if (plannedFiles.isEmpty) OptionalLong.of(0L)
     else if (plannedFiles.length > GraftScan.MaxStatFooterReads) OptionalLong.empty()
     else try {
-      val conf = SparkSession.active.sparkContext.hadoopConfiguration
-      // footer opens are independent metadata reads — a small fixed pool
-      // hides per-file IO latency during planning (ADVICE r12; bounded by
+      // the session's conf, already loaded: a footer open under it costs
+      // ~0.5 ms, where a conf-less open re-parsed Hadoop's XML defaults for
+      // ~12 ms per file (see [[ParquetOpen]]) — most of a small scan's
+      // planning time (47 → 7 ms for a 1-64-address SQL scan). The opens
+      // are independent metadata reads — a small fixed pool hides per-file
+      // IO latency on remote stores (ADVICE r12; bounded by
       // MaxStatFooterReads, so peak concurrency and total work stay capped)
+      val conf = SparkSession.active.sparkContext.hadoopConfiguration
       val pool = java.util.concurrent.Executors.newFixedThreadPool(
         math.min(8, plannedFiles.length))
       val total =
         try plannedFiles.map { fs =>
           pool.submit(new java.util.concurrent.Callable[Long] {
             override def call(): Long = {
-              val in = org.apache.parquet.hadoop.util.HadoopInputFile
-                .fromPath(new Path(fs.path), conf)
-              val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+              val r = ParquetOpen.open(conf, new Path(fs.path), None)
               try r.getRecordCount finally r.close()
             }
           })
@@ -995,12 +997,9 @@ class GraftPartitionReader(conf: SerializableHadoopConf, required: StructType,
                            deleteTriples: Array[Long] = Array.emptyLongArray)
     extends PartitionReader[InternalRow] {
 
-  import org.apache.parquet.HadoopReadOptions
   import org.apache.parquet.column.ColumnReader
   import org.apache.parquet.column.impl.ColumnReadStoreImpl
-  import org.apache.parquet.filter2.compat.FilterCompat
   import org.apache.parquet.hadoop.ParquetFileReader
-  import org.apache.parquet.hadoop.util.HadoopInputFile
   import org.apache.parquet.io.api.{Converter, GroupConverter, PrimitiveConverter}
   import org.apache.parquet.schema.MessageType
 
@@ -1109,10 +1108,8 @@ class GraftPartitionReader(conf: SerializableHadoopConf, required: StructType,
     else {
       import scala.jdk.CollectionConverters._
       curFile = files(fileIdx)
-      val in = HadoopInputFile.fromPath(new Path(curFile.path), conf.conf)
-      val optsB = HadoopReadOptions.builder(conf.conf, in.getPath)
-      rowGroupPredicate.foreach(p => optsB.withRecordFilter(FilterCompat.get(p)))
-      fileReader = ParquetFileReader.open(in, optsB.build())
+      fileReader = ParquetOpen.open(conf.conf, new Path(curFile.path),
+        rowGroupPredicate)
       val fileSchema = fileReader.getFooter.getFileMetaData.getSchema
       val readCols = readColsFor(curFile.delTouched)
       val keep = fileSchema.getFields.asScala

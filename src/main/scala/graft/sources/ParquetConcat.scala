@@ -7,7 +7,7 @@ import org.apache.hadoop.fs.{FileStatus, Path}
   * compaction ([[TimeStore.compact]]) and the persisted ANN index
   * compaction ([[graft.operators.Similarity.indexCompact]]): merges one
   * directory's accumulated small parquet files into a single file by RAW
-  * ROW-GROUP COPY (`ParquetFileWriter.appendFile` — pages, dictionaries
+  * ROW-GROUP COPY (`ParquetFileReader.appendTo` — pages, dictionaries
   * and row-group statistics carry over intact; no decode, no re-encode, no
   * writer buffer; pure IO with the footers rewritten). Files append in
   * name order so the merged row groups preserve per-append locality and
@@ -46,7 +46,7 @@ private[graft] object ParquetConcat {
   def mergeSameSchema(conf: Configuration, files: Seq[FileStatus],
                       dstFile: Path): Boolean = {
     import org.apache.parquet.hadoop.{ParquetFileReader, ParquetFileWriter, ParquetWriter}
-    import org.apache.parquet.hadoop.util.{HadoopInputFile, HadoopOutputFile}
+    import org.apache.parquet.hadoop.util.HadoopOutputFile
     if (files.isEmpty) return true
     val f = dstFile.getFileSystem(conf)
     f.mkdirs(dstFile.getParent)
@@ -56,28 +56,31 @@ private[graft] object ParquetConcat {
         f, dstFile, false, true, conf)
       return true
     }
-    val inputs = files.map(st => HadoopInputFile.fromStatus(st, conf))
-    val metas = inputs.map { in =>
-      val r = ParquetFileReader.open(in)
-      try r.getFooter.getFileMetaData finally r.close()
-    }
-    val schemas = metas.map(_.getSchema)
-    if (!schemas.forall(_ == schemas.head)) return false
-    val kv = new java.util.HashMap[String, String]()
-    metas.zip(files).foreach { case (m, st) =>
-      m.getKeyValueMetaData.forEach { (k, v) =>
-        val prev = kv.putIfAbsent(k, v)
-        require(prev == null || prev == v,
-          s"concat: conflicting footer metadata for key '$k' at " +
-            s"${st.getPath} — refusing to drop one value silently")
+    // each file opens ONCE ([[ParquetOpen]], under the caller's conf): the
+    // footer pass below and the row-group copy share that reader, so every
+    // input of the directory stays open until the merged file is written
+    val readers = scala.collection.mutable.ArrayBuffer.empty[ParquetFileReader]
+    try {
+      files.foreach(st => readers += ParquetOpen.open(conf, st))
+      val metas = readers.map(_.getFooter.getFileMetaData)
+      val schemas = metas.map(_.getSchema)
+      if (!schemas.forall(_ == schemas.head)) return false
+      val kv = new java.util.HashMap[String, String]()
+      metas.zip(files).foreach { case (m, st) =>
+        m.getKeyValueMetaData.forEach { (k, v) =>
+          val prev = kv.putIfAbsent(k, v)
+          require(prev == null || prev == v,
+            s"concat: conflicting footer metadata for key '$k' at " +
+              s"${st.getPath} — refusing to drop one value silently")
+        }
       }
-    }
-    val w = new ParquetFileWriter(HadoopOutputFile.fromPath(dstFile, conf),
-      schemas.head, ParquetFileWriter.Mode.OVERWRITE,
-      ParquetWriter.DEFAULT_BLOCK_SIZE, ParquetWriter.MAX_PADDING_SIZE_DEFAULT)
-    w.start()
-    inputs.foreach(w.appendFile)
-    w.end(kv)
-    true
+      val w = new ParquetFileWriter(HadoopOutputFile.fromPath(dstFile, conf),
+        schemas.head, ParquetFileWriter.Mode.OVERWRITE,
+        ParquetWriter.DEFAULT_BLOCK_SIZE, ParquetWriter.MAX_PADDING_SIZE_DEFAULT)
+      w.start()
+      readers.foreach(_.appendTo(w))
+      w.end(kv)
+      true
+    } finally readers.foreach(_.close())
   }
 }

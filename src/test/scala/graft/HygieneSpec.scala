@@ -40,6 +40,58 @@ class HygieneSpec extends SparkSpec {
     assert(ScaleProbe.selects(Seq("a", "store_write"), "store_write"))
   }
 
+  /** Calls into parquet-mr's conf-less entry points in `src`: each builds a
+    * fresh Hadoop `Configuration` and re-parses its XML defaults (~10 ms)
+    * per file: a one-argument `ParquetFileReader.open(` (no top-level
+    * comma in its argument list), `ParquetReader.builder(` and the
+    * writer's `appendFile`. */
+  private def confLessParquetOpens(src: String): Seq[String] = {
+    def at(re: String) = re.r.findAllMatchIn(src).map(_.end).toSeq
+    def line(i: Int) = src.substring(0, i).count(_ == '\n') + 1
+    def oneArg(from: Int): Boolean = {
+      var (depth, i) = (1, from)
+      while (i < src.length && depth > 0) {
+        src(i) match {
+          case '(' | '[' | '{' => depth += 1
+          case ')' | ']' | '}' => depth -= 1
+          case ',' if depth == 1 => return false
+          case _ =>
+        }
+        i += 1
+      }
+      true
+    }
+    at("""ParquetFileReader\.open\(""").filter(oneArg)
+      .map(i => s"line ${line(i)}: one-argument ParquetFileReader.open(") ++
+      at("""ParquetReader\.builder\(""").map(i => s"line ${line(i)}: ParquetReader.builder(") ++
+      // also as a method value: `files.foreach(w.appendFile)`
+      at("""\.appendFile\b""").map(i => s"line ${line(i)}: .appendFile")
+  }
+
+  test("src/main opens parquet files only through ParquetOpen, under the caller's conf") {
+    // the detector itself: flags each conf-less form, passes the conf'd ones
+    assert(confLessParquetOpens("ParquetFileReader.open(in)").size === 1)
+    assert(confLessParquetOpens("ParquetFileReader.open(f(a, b))").size === 1)
+    assert(confLessParquetOpens("ParquetFileReader.open(in, opts.build())").isEmpty)
+    assert(confLessParquetOpens("ParquetReader.builder(rs, p).withConf(c)").size === 1)
+    assert(confLessParquetOpens("inputs.foreach(w.appendFile)\nw.appendFile(in)").size === 2)
+    assert(confLessParquetOpens("r.appendTo(w); w.appendFiles(x)").isEmpty)
+    val root = new java.io.File("src/main/scala")
+    assert(root.isDirectory, s"run from the repository root: ${root.getAbsolutePath}")
+    def walk(f: java.io.File): Seq[java.io.File] =
+      if (f.isDirectory) f.listFiles().toSeq.sortBy(_.getName).flatMap(walk)
+      else if (f.getName.endsWith(".scala")) Seq(f) else Nil
+    val offenders = walk(root).flatMap { f =>
+      val src = new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
+      confLessParquetOpens(src).map(h => s"${f.getPath} $h")
+    }
+    assert(offenders.isEmpty,
+      "parquet-mr's conf-less entry points re-parse Hadoop's XML defaults " +
+        "(~10 ms) on every file; open through graft.sources.ParquetOpen " +
+        "(open / withReader / foreachGroup) with the caller's conf instead:\n" +
+        offenders.mkString("\n"))
+  }
+
   test("duplicateGroups runs exactly ONE driver action per round") {
     // star graph: round 1 relabels every leaf (changed=3), round 2 confirms
     // convergence (changed=0) -> exactly 2 rounds, so exactly 2 actions

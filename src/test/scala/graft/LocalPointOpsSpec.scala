@@ -69,6 +69,148 @@ class LocalPointOpsSpec extends SparkSpec {
     assert(subDist.map(_.address) === Seq(2L, 6L))
   }
 
+  test("local reads match the distributed scan on a compacted, fragmented, tombstoned namespace") {
+    val n = freshNs()
+    TimeStore.register(spark, n, 2, 2)
+    val addrs = (2L to 9L).toSeq // even: simple, odd: extended
+    def batch(times: Seq[Long], pay: Long): Seq[Point] =
+      for (a <- addrs; t <- times) yield
+        if (a % 2 == 0) Point(a, t, pay + a)
+        else Point(a, t, pay + a, Array[Byte](a.toByte, pay.toByte))
+    // four chronological distributed batches, one per time band — across
+    // the unsigned sign boundary — so each compacted bucket file holds one
+    // row group per batch, with disjoint time statistics
+    val bands = Seq(100L to 140L by 10L,
+      (Long.MaxValue - 40L) to Long.MaxValue by 10L,
+      Long.MinValue to (Long.MinValue + 40L) by 10L,
+      -50L to -10L by 10L)
+    bands.zipWithIndex.foreach { case (ts, i) =>
+      TimeStore.writePoints(spark, n, ds(batch(ts, 10L * i): _*))
+    }
+    TimeStore.compact(spark, n)
+    // fragments after the compaction: duplicates of compacted (address,
+    // time) pairs that win (smaller payload) and lose, plus new points
+    TimeStore.writePointsLocal(spark, n, batch(Seq(110L, Long.MinValue + 10L), -2L))
+    TimeStore.writePointsLocal(spark, n, batch(Seq(120L, Long.MaxValue), 99L) ++
+      batch(Seq(Long.MaxValue - 5L), 7L))
+    // pending takedowns: a whole address, a sign-crossing range, a stream batch
+    TimeStore.deletePoints(spark, n, Seq(4L))
+    TimeStore.deletePoints(spark, n, Seq(5L, 6L), Long.MaxValue - 20L, Long.MinValue + 20L)
+    val streamed = Seq((3L, 100L, 120L), (8L, -50L, -30L), (7L, 0L, -1L))
+    TimeStore.deletePointsBatch(spark, n, streamed, "parity", 0L)
+    val triples = TimeStore.loadDeleteTriples(spark.sparkContext.hadoopConfiguration,
+      TimeStore.deleteFiles(spark, n))
+    val published = triples.grouped(3).map(t => (t(0), t(1), t(2))).toSet
+    assert(published === Set((4L, 0L, -1L), (5L, Long.MaxValue - 20L, Long.MinValue + 20L),
+      (6L, Long.MaxValue - 20L, Long.MinValue + 20L)) ++ streamed)
+
+    // the compacted files really hold several row groups, and the
+    // sign-crossing predicate really skips some of them at open
+    import org.apache.parquet.filter2.predicate.FilterApi
+    val (start, end) = (Long.MaxValue - 25L, Long.MinValue + 25L)
+    val tcol = FilterApi.longColumn("time")
+    val crossing = FilterApi.or(FilterApi.gtEq(tcol, java.lang.Long.valueOf(start)),
+      FilterApi.ltEq(tcol, java.lang.Long.valueOf(end)))
+    val conf = spark.sparkContext.hadoopConfiguration
+    val live = new org.apache.hadoop.fs.Path(TimeStore.livePointsPath(spark, n).get)
+    val files = live.getFileSystem(conf).listFiles(live, true)
+    val compacted = Iterator.continually(files).takeWhile(_.hasNext).map(_.next())
+      .filter(_.getPath.getName.startsWith("compacted")).toSeq
+    assert(compacted.nonEmpty)
+    compacted.foreach { st =>
+      val (all, kept) = graft.sources.ParquetOpen.withReader(conf, st, Some(crossing)) { r =>
+        (r.getFooter.getBlocks.size, r.getRowGroups.size)
+      }
+      assert(all >= bands.size && kept > 0 && kept < all,
+        s"${st.getPath}: $kept of $all row groups kept")
+    }
+
+    val simple = addrs.filter(_ % 2 == 0)
+    val ext = addrs.filter(_ % 2 == 1)
+    // full range, the sign-crossing range, a single-half range, one address,
+    // and an unsigned-empty range (start > end) that must read as nothing
+    val ranges = Seq((0L, -1L), (start, end), (105L, 135L), (-45L, -15L), (-50L, 150L))
+    ranges.foreach { case (s0, e0) =>
+      Seq(simple, Seq(2L)).foreach { as =>
+        assert(TimeStore.readSimpleLocal(spark, n, s0, e0, as) === collectSimple(n, s0, e0, as),
+          s"simple [$s0, $e0] $as")
+      }
+      Seq(ext, Seq(9L)).foreach { as =>
+        assert(TimeStore.readExtendedLocal(spark, n, s0, e0, as) === collectExtended(n, s0, e0, as),
+          s"extended [$s0, $e0] $as")
+      }
+    }
+    // the comparison is not vacuous: rows survive, fragments win, takedowns bite
+    val full = TimeStore.readSimpleLocal(spark, n, 0L, -1L, simple)
+    assert(full.exists(p => p.address == 2L && p.time == 110L && p.payload == 0L))
+    assert(!full.exists(_.address == 4L))
+    assert(!full.exists(p => p.address == 6L && (p.time == Long.MaxValue || p.time == Long.MinValue)))
+    assert(full.exists(p => p.address == 6L && p.time == 100L))
+    assert(TimeStore.readExtendedLocal(spark, n, 0L, -1L, Seq(7L)).isEmpty)
+    assert(TimeStore.readSimpleLocal(spark, n, -50L, 150L, simple).isEmpty)
+    assert(TimeStore.readSimpleLocal(spark, n, start, end, simple).map(_.time).toSet ===
+      Set(Long.MaxValue - 20L, Long.MaxValue - 10L, Long.MaxValue - 5L, Long.MaxValue,
+        Long.MinValue, Long.MinValue + 10L, Long.MinValue + 20L))
+  }
+
+  test("ParquetOpen's filtered row loop returns exactly ParquetReader's rows") {
+    import org.apache.parquet.example.data.Group
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.filter2.compat.FilterCompat
+    import org.apache.parquet.filter2.predicate.{FilterApi, FilterPredicate}
+    import org.apache.parquet.hadoop.ParquetReader
+    import org.apache.parquet.hadoop.example.{ExampleParquetWriter, GroupReadSupport}
+    val schema = org.apache.parquet.schema.MessageTypeParser.parseMessageType(
+      "message m { required int64 address; required int64 time; optional binary value; }")
+    val conf = spark.sparkContext.hadoopConfiguration
+    val path = new org.apache.hadoop.fs.Path(
+      Files.createTempDirectory("graft-open").resolve("f.parquet").toString)
+    // small pages and row groups, time-sorted: several row groups, each of
+    // several pages, so stats skip whole groups and column indexes skip pages
+    val w = ExampleParquetWriter.builder(path).withConf(conf).withType(schema)
+      .withRowGroupSize(16L << 10).withPageSize(1024).withPageRowCountLimit(200)
+      .build()
+    val factory = new SimpleGroupFactory(schema)
+    try (0 until 6000).foreach { i =>
+      val g = factory.newGroup()
+      g.append("address", (i * 7919L) % 50)
+      g.append("time", Long.MaxValue - 3000L + i) // crosses into the negative half
+      if (i % 3 == 0) g.append("value", s"v$i")
+      w.write(g)
+    } finally w.close()
+    def row(g: Group) = (g.getLong("address", 0), g.getLong("time", 0),
+      if (g.getFieldRepetitionCount("value") > 0) g.getString("value", 0) else null)
+    def viaReader(p: Option[FilterPredicate]) = {
+      val b = ParquetReader.builder(new GroupReadSupport(), path).withConf(conf)
+      val r = p.fold(b)(q => b.withFilter(FilterCompat.get(q))).build()
+      try Iterator.continually(r.read()).takeWhile(_ != null).map(row).toVector
+      finally r.close()
+    }
+    def viaOpen(p: Option[FilterPredicate]) = {
+      val st = path.getFileSystem(conf).getFileStatus(path)
+      val out = Vector.newBuilder[(Long, Long, String)]
+      graft.sources.ParquetOpen.foreachGroup(conf, st, p)(g => out += row(g))
+      out.result()
+    }
+    val (t, a) = (FilterApi.longColumn("time"), FilterApi.longColumn("address"))
+    def L(x: Long) = java.lang.Long.valueOf(x)
+    val addrSet = new java.util.HashSet[java.lang.Long]()
+    Seq(3L, 17L).foreach(x => addrSet.add(L(x)))
+    val preds = Seq(None,
+      Some(FilterApi.and(FilterApi.gtEq(t, L(Long.MaxValue - 2500L)),
+        FilterApi.ltEq(t, L(Long.MaxValue - 2400L)))),
+      Some(FilterApi.or(FilterApi.gtEq(t, L(Long.MaxValue - 10L)),
+        FilterApi.ltEq(t, L(Long.MinValue + 10L)))),
+      Some(FilterApi.and(FilterApi.ltEq(t, L(Long.MaxValue - 2000L)), FilterApi.in(a, addrSet))),
+      Some(FilterApi.eq(t, L(5L))))
+    preds.foreach { p =>
+      val expected = viaReader(p)
+      assert(viaOpen(p) === expected, s"predicate $p")
+      if (p.isEmpty) assert(expected.size === 6000)
+    }
+    assert(viaOpen(preds(2)).size === 22)
+  }
+
   test("local write honors the writer fence") {
     val n = freshNs()
     TimeStore.register(spark, n, 4, 4)
