@@ -68,9 +68,17 @@ object Bench {
       .split("\\s+")(0).toDouble
     catch { case _: Throwable => -1.0 }
 
+  /** `SPARK_GRAFT_CPUS` as a positive core count (8 when unset). */
+  private[graft] def parseCpus(raw: Option[String]): Int =
+    raw.fold(8)(s => s.trim.toIntOption.filter(_ > 0).getOrElse(
+      throw new IllegalArgumentException(
+        s"SPARK_GRAFT_CPUS must be a positive integer, got '$s'")))
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
+    // parsed once, failing fast: the JSON lines and the per-cpus artifact
+    // name below splice this canonical number, never the raw env string
+    val cpus = parseCpus(sys.env.get("SPARK_GRAFT_CPUS")).toString
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)

@@ -140,12 +140,12 @@ object TimeSeries {
     * The whole events fixture ingests through the store protocol, then a
     * takedown request deletes two addresses over a time sub-range; the
     * read is served TWICE under one hash — first with the rows suppressed
-    * by the pending-tombstone anti-join (materialized before the vacuum,
+    * by the scan's pending-tombstone mask (materialized before the vacuum,
     * while the delete files still exist), then after
     * [[graft.sources.TimeStore.vacuumDeletes]] physically rewrote the
     * points generation without them (reader-safe `_SUCCESS` swap, applied
     * delete files cleared). The twin serves the surviving rows for both
-    * phases from the raw fixture: a row that leaks through the anti-join,
+    * phases from the raw fixture: a row that leaks through the mask,
     * a row lost or kept wrongly by the vacuum rewrite, or a dedup winner
     * chosen before the delete all break the hash. */
   def storeDelete(s: SparkSession, dir: String): DataFrame = {
@@ -362,7 +362,7 @@ object TimeSeries {
     * inside `foreachBatch` — the idempotent at-least-once shape (a replayed
     * batch replaces its own file; StoreDeleteSpec pins the replay). The
     * read serves TWICE under one hash, exactly like the bulk-delete gate:
-    * first through the pending-tombstone anti-join, then after
+    * first through the pending-tombstone mask, then after
     * [[graft.sources.TimeStore.vacuumDeletes]] folded the stream's
     * tombstones in physically — so the streamed takedown must be
     * indistinguishable from the bulk `deletePoints` twin. The per-batch

@@ -11,12 +11,10 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsDelete, SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
-import org.apache.spark.sql.sources.{AlwaysTrue, And, DataSourceRegister, EqualTo, Filter, GreaterThan, GreaterThanOrEqual, In, IsNotNull, LessThan, LessThanOrEqual}
+import org.apache.spark.sql.sources.{AlwaysTrue, And, DataSourceRegister, EqualTo, Filter, GreaterThan, GreaterThanOrEqual, In, IsNotNull, LessThan, LessThanOrEqual, Or}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
-
-import graft.core.EpochIndex
 
 /** Hadoop `Configuration` is not `Serializable`; ship it to executors via
   * its own wire codec. (Spark's internal `SerializableConfiguration` is
@@ -56,8 +54,10 @@ final class SerializableHadoopConf(@transient var conf: Configuration)
   * index epochs, and `kind =` halves the tree — all BEFORE any file is
   * listed, replacing the conf-published [[graft.plans.BucketPruneRule]]
   * side channel for table reads (the rule stays for raw-parquet SQL).
-  * Pushed filters are ALSO evaluated row-exactly in the reader, so they do
-  * not return as residuals and the scan is genuinely selective.
+  * Every filter also returns to Spark as a residual, re-checked over the
+  * scan's columnar batches; the scan prunes files and skips row groups.
+  * [[TimeStore.readSimple]], [[TimeStore.readExtended]] and
+  * [[TimeStore.latestPerAddress]] are thin wrappers over this relation.
   *
   * Scale: planning is driver-side metadata only (one index read + one
   * `listStatus` per SELECTED bucket directory — pruned-first, so a 5-address
@@ -340,6 +340,7 @@ class GraftScanBuilder(root: String, ns: String,
     * over the columnar batches — the same contract as Spark's own parquet
     * source); `pushedFilters()` reports them for `.explain` fidelity. */
   private def accepts(f: Filter): Boolean = f match {
+    case GraftScan.SignCrossing(_, _) => true
     case EqualTo(c, v) => colKind(c) != 'x' && litOk(c, v)
     case In(c, vs) => colKind(c) != 'x' && vs.nonEmpty && vs.forall(litOk(c, _))
     case GreaterThan(c, v) => colKind(c) == 'n' && litOk(c, v)
@@ -452,62 +453,53 @@ case class GraftScan(root: String, ns: String, filters: Array[Filter],
     vals.reduceOption((a, b) => a.intersect(b))
   }
 
-  /** Signed time bounds from pushed filters, usable for unsigned epoch
-    * pruning only when non-negative (signed [a,b] with a,b ≥ 0 IS unsigned
-    * [a,b]; a negative signed bound is a huge unsigned value — skip, the
-    * row filter still applies). Conservative by construction: pruning may
-    * keep extra epochs, never drop a live one. */
+  /** The unsigned time range the pushed filters confine the scan to, for
+    * epoch pruning. Plain comparisons intersect into one signed interval,
+    * which IS an unsigned interval while it stays in one sign half (signed
+    * [a, b] with a, b >= 0, or a, b < 0) and prunes nothing when it spans
+    * zero. A [[GraftScan.SignCrossing]] disjunction is the unsigned range
+    * it denotes. Conservative: pruning may keep extra epochs, never drop a
+    * live one. */
   private def timeBounds(fs: Array[Filter]): (Long, Long) = {
-    var lo = 0L
-    var hi = -1L // unsigned max
+    def maxU(a: Long, b: Long) = if (java.lang.Long.compareUnsigned(a, b) >= 0) a else b
+    def minU(a: Long, b: Long) = if (java.lang.Long.compareUnsigned(a, b) <= 0) a else b
+    var lo = Long.MinValue // signed, from the plain comparisons
+    var hi = Long.MaxValue
+    var uLo = 0L // unsigned, from the sign-crossing disjunctions
+    var uHi = -1L
     fs.foreach {
-      case GreaterThan("time", v: java.lang.Number) if v.longValue >= 0 =>
+      case GreaterThan("time", v: java.lang.Number) =>
         lo = math.max(lo, v.longValue) // >v pruned as >=v: conservative
-      case GreaterThanOrEqual("time", v: java.lang.Number) if v.longValue >= 0 =>
+      case GreaterThanOrEqual("time", v: java.lang.Number) =>
         lo = math.max(lo, v.longValue)
-      case LessThan("time", v: java.lang.Number) if v.longValue >= 0 =>
-        if (java.lang.Long.compareUnsigned(v.longValue, hi) < 0) hi = v.longValue
-      case LessThanOrEqual("time", v: java.lang.Number) if v.longValue >= 0 =>
-        if (java.lang.Long.compareUnsigned(v.longValue, hi) < 0) hi = v.longValue
-      case EqualTo("time", v: java.lang.Number) if v.longValue >= 0 =>
-        lo = math.max(lo, v.longValue)
-        if (java.lang.Long.compareUnsigned(v.longValue, hi) < 0) hi = v.longValue
+      case LessThan("time", v: java.lang.Number) =>
+        hi = math.min(hi, v.longValue) // <v pruned as <=v: conservative
+      case LessThanOrEqual("time", v: java.lang.Number) =>
+        hi = math.min(hi, v.longValue)
+      case EqualTo("time", v: java.lang.Number) =>
+        lo = math.max(lo, v.longValue); hi = math.min(hi, v.longValue)
+      case GraftScan.SignCrossing(s, e) =>
+        uLo = maxU(uLo, s); uHi = minU(uHi, e)
       case _ =>
     }
-    (lo, hi)
+    val (sLo, sHi) = if (lo >= 0 || hi < 0) (lo, hi) else (0L, -1L)
+    (maxU(sLo, uLo), minU(sHi, uHi))
   }
 
-  /** The pruned file list — identical pruning to the Scala read path
-    * ([[TimeStore.readKind]]'s static predicates): index range lookup
-    * selects epochs, the `placeBucket` image of the address list selects
-    * buckets, `kind =` selects subtrees; only SELECTED directories are
-    * listed. */
+  /** The pruned file list: the pushed filters' address set, unsigned time
+    * range, kinds, epochs and buckets, planned by [[TimeStore.targetObjs]]
+    * — the one pruning the API reads, this SQL scan and the driver-local
+    * point-gets share; only SELECTED directories are listed. */
   private[graft] lazy val plannedFiles: Seq[GraftFileSlice] =
     plannedFilesFor(filters)
 
   private[graft] def plannedFilesFor(fs0: Array[Filter]): Seq[GraftFileSlice] = {
     val spark = SparkSession.active
     val n = TimeStore.Namespace(root, ns)
-    // the distinct pending-tombstone addresses, for plan-time bucket
-    // scoping (empty on snapshot scans and vacuumed stores)
-    val delAddrs: Array[Long] = {
-      val t = deleteTriples
-      if (t.isEmpty) Array.emptyLongArray
-      else {
-        val s = new java.util.HashSet[java.lang.Long]()
-        var i = 0
-        while (i < t.length) { s.add(t(i)); i += 3 }
-        val out = new Array[Long](s.size)
-        val it = s.iterator(); var j = 0
-        while (it.hasNext) { out(j) = it.next(); j += 1 }
-        out
-      }
-    }
     generation.map(g => Some(TimeStore.snapshotPath(spark, n, g)))
       .getOrElse(TimeStore.livePointsPath(spark, n)) match {
       case None => Nil
-      case Some(live) =>
-        val f = new Path(live).getFileSystem(spark.sparkContext.hadoopConfiguration)
+      case Some(base) =>
         val kinds = kindFilter(fs0).getOrElse(Seq("simple", "extended"))
           .filter(k => k == "simple" || k == "extended")
         val addrs = numFilterValues(fs0, "address")
@@ -522,40 +514,9 @@ case class GraftScan(root: String, ns: String, filters: Array[Filter],
                   s"invalid namespace: $ns (simple index missing)")
               Nil
             case Some(idx) =>
-              idx.rangeEntries(lo, hi)
-                .filter { case (e, _) => epochSel.forall(_.contains(e)) }
-                .flatMap { case (epoch, bc) =>
-                  val buckets = addrs match {
-                    case Some(as) =>
-                      as.map(a => EpochIndex.placeBucket(bc, a)).distinct
-                    case None => 0 until bc
-                  }
-                  // tombstone scope for this epoch: the placeBucket image
-                  // of the pending-delete addresses under ITS bucket count
-                  // — a file outside the image provably holds no
-                  // tombstoned row (rows route by the same image at write)
-                  val delBuckets: java.util.BitSet =
-                    if (delAddrs.isEmpty) null
-                    else {
-                      val bs = new java.util.BitSet(bc)
-                      delAddrs.foreach(a =>
-                        bs.set(EpochIndex.placeBucket(bc, a)))
-                      bs
-                    }
-                  buckets.filter(b => bucketSel.forall(_.contains(b)))
-                    .flatMap { b =>
-                      val dir = new Path(s"$live/kind=$kind/epoch=$epoch/bucket=$b")
-                      if (!f.exists(dir)) Nil
-                      else f.listStatus(dir).toSeq.filter { st =>
-                        st.isFile && {
-                          val nm = st.getPath.getName
-                          !nm.startsWith("_") && !nm.startsWith(".")
-                        }
-                      }.map(st => GraftFileSlice(st.getPath.toString, kind,
-                        epoch, b, st.getLen,
-                        delTouched = delBuckets != null && delBuckets.get(b)))
-                    }
-                }
+              TimeStore.targetObjs(spark, base, kind, idx, lo, hi, addrs, mask,
+                (e, b) => epochSel.forall(_.contains(e)) &&
+                  bucketSel.forall(_.contains(b)))
           }
         }
     }
@@ -604,23 +565,18 @@ case class GraftScan(root: String, ns: String, filters: Array[Filter],
 
   /** Pending takedown tombstones, loaded ONCE at plan time (driver-side,
     * bounded by the takedown volume since the last vacuum) and shipped to
-    * every reader: the SQL scan must suppress deleted rows exactly like
-    * [[TimeStore.readSimple]]'s anti-join. The vectorized path SURVIVES a
+    * every reader: the [[TimeStore.DeleteMask]] the driver-local point-gets
+    * test rows against, through the same signature-keyed cache, so a
+    * dashboard's many small queries re-decode the tombstone parquet only
+    * when a delete or vacuum moves it. The vectorized path SURVIVES a
     * pending takedown (VERDICT r14 #2): [[GraftColumnarReader]] applies
     * the mask to decoded column batches — untouched batches pass through
-    * zero-copy, touched ones compact — so a single pending tombstone no
-    * longer de-vectorizes every full scan until the next vacuum. */
-  private lazy val deleteTriples: Array[Long] =
-    // the signature-keyed cache: a dashboard's many small queries against
-    // a namespace with a pending takedown backlog must not re-decode the
-    // tombstone parquet per PLAN, only when a delete or vacuum moves the
-    // file signature (the same O(pending)-per-read fix the local point
-    // ops got this round). Snapshot (generation-pinned) scans serve the
-    // pinned generation's files VERBATIM — no mutable tombstone overlay —
-    // so they never load the mask at all.
-    if (generation.isDefined) Array.emptyLongArray
-    else TimeStore.deleteTriplesCached(SparkSession.active,
-      TimeStore.Namespace(root, ns))
+    * zero-copy, touched ones compact. Snapshot (generation-pinned) scans
+    * serve the pinned generation's files VERBATIM — no mutable tombstone
+    * overlay — so they never load the mask at all. */
+  private lazy val mask: TimeStore.DeleteMask =
+    if (generation.isDefined) TimeStore.DeleteMask.Empty
+    else TimeStore.deleteMask(SparkSession.active, TimeStore.Namespace(root, ns))
 
   override def createReaderFactory(): PartitionReaderFactory = {
     val spark = SparkSession.active
@@ -629,7 +585,7 @@ case class GraftScan(root: String, ns: String, filters: Array[Filter],
       required, filters,
       spark.conf.get("spark.sql.parquet.columnarReaderBatchSize", "4096").toInt,
       spark.conf.get("spark.sql.columnVector.offheap.enabled", "false").toBoolean,
-      deleteTriples)
+      mask.triples)
   }
 
   /** Exact row count of the pruned file set from parquet footer metadata —
@@ -647,7 +603,7 @@ case class GraftScan(root: String, ns: String, filters: Array[Filter],
     // until the vacuum folds them in. Scoped per file (r16): only a plan
     // whose pruned set actually intersects the tombstones' bucket image
     // degrades; a scan of untouched buckets keeps exact row statistics.
-    if (deleteTriples.nonEmpty && plannedFiles.exists(_.delTouched))
+    if (plannedFiles.exists(_.delTouched))
       OptionalLong.empty()
     else if (plannedFiles.isEmpty) OptionalLong.of(0L)
     else if (plannedFiles.length > GraftScan.MaxStatFooterReads) OptionalLong.empty()
@@ -692,6 +648,35 @@ case class GraftScan(root: String, ns: String, filters: Array[Filter],
 object GraftScan {
   /** Cap on per-scan driver-side footer reads for row-count statistics. */
   val MaxStatFooterReads = 256
+
+  /** `time >= s OR time <= e` with s >= 0 > e, in either order and with
+    * strict forms: the signed image of an unsigned range [s, e] that
+    * crosses the sign bit, which [[TimeStore.readSimple]] pushes. Yields
+    * that unsigned range. */
+  object SignCrossing {
+    private def floor(f: Filter): Option[Long] = f match {
+      case GreaterThanOrEqual("time", v: java.lang.Number) if v.longValue >= 0 =>
+        Some(v.longValue)
+      case GreaterThan("time", v: java.lang.Number)
+          if v.longValue >= 0 && v.longValue < Long.MaxValue =>
+        Some(v.longValue + 1)
+      case _ => None
+    }
+    private def ceil(f: Filter): Option[Long] = f match {
+      case LessThanOrEqual("time", v: java.lang.Number) if v.longValue < 0 =>
+        Some(v.longValue)
+      case LessThan("time", v: java.lang.Number)
+          if v.longValue <= 0 && v.longValue > Long.MinValue =>
+        Some(v.longValue - 1)
+      case _ => None
+    }
+    def unapply(f: Filter): Option[(Long, Long)] = f match {
+      case Or(l, r) =>
+        (for (s <- floor(l); e <- ceil(r)) yield (s, e))
+          .orElse(for (s <- floor(r); e <- ceil(l)) yield (s, e))
+      case _ => None
+    }
+  }
 }
 
 object GraftParquetFilters {
@@ -709,7 +694,8 @@ object GraftParquetFilters {
   def rowGroupPredicate(filters: Array[Filter]): Option[FilterPredicate] = {
     val LongCols = Set("address", "time", "payload")
     def lcol(c: String) = FilterApi.longColumn(c)
-    val preds = filters.toSeq.flatMap {
+    def pred(f: Filter): Option[FilterPredicate] = f match {
+      case Or(l, r) => for (a <- pred(l); b <- pred(r)) yield FilterApi.or(a, b)
       case EqualTo(c, v: java.lang.Number) if LongCols(c) =>
         Some(FilterApi.eq(lcol(c), java.lang.Long.valueOf(v.longValue)))
       case In(c, vs) if LongCols(c) && vs.nonEmpty &&
@@ -727,7 +713,7 @@ object GraftParquetFilters {
         Some(FilterApi.ltEq(lcol(c), java.lang.Long.valueOf(v.longValue)))
       case _ => None
     }
-    preds.reduceOption(FilterApi.and)
+    filters.toSeq.flatMap(pred).reduceOption(FilterApi.and)
   }
 }
 
@@ -737,30 +723,19 @@ class GraftReaderFactory(conf: SerializableHadoopConf, required: StructType,
                          deleteTriples: Array[Long] = Array.emptyLongArray)
     extends PartitionReaderFactory {
 
-  private val DataColNames = Set("address", "time", "payload", "value")
-
-  /** Columnar reads need the output schema shaped data-columns-then-
-    * partition-columns (the vectorized reader appends partition vectors
-    * after the file's data vectors). Catalyst prunes preserving the table
-    * schema order — which IS data-then-partition — so this holds for every
-    * real plan; the row-based reader remains as the general fallback.
-    * Pending takedown tombstones do NOT force the row path (VERDICT r14
-    * #2 — they did, measured ~4× on a full scan): [[GraftColumnarReader]]
-    * keeps the vectorized decode and applies the delete mask at BATCH
-    * granularity — an untouched batch passes through zero-copy, a touched
-    * one compacts its surviving rows. */
-  private def dataThenPartition: Boolean = {
-    val firstPart = required.fieldNames.indexWhere(n => !DataColNames(n))
-    firstPart < 0 || required.fieldNames.drop(firstPart).forall(n => !DataColNames(n))
-  }
-
-  override def supportColumnarReads(partition: InputPartition): Boolean =
-    dataThenPartition
+  /** Always columnar: the vectorized reader appends partition vectors
+    * after the file's data vectors, so the output schema must be data
+    * columns then partition columns — and Catalyst's column pruning keeps
+    * the table order, which is exactly that. Pending takedown tombstones
+    * keep the vectorized decode too (VERDICT r14 #2):
+    * [[GraftColumnarReader]] applies the delete mask per batch. */
+  override def supportColumnarReads(partition: InputPartition): Boolean = true
 
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
-    new GraftPartitionReader(conf, required,
-      partition.asInstanceOf[GraftInputPartition].files, filters,
-      deleteTriples)
+    throw new IllegalStateException(
+      "graft scans are columnar-only: supportColumnarReads is true for every " +
+        "partition, since Catalyst prunes columns in table order (data " +
+        "columns, then kind/epoch/bucket)")
 
   override def createColumnarReader(partition: InputPartition)
       : PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] =
@@ -795,8 +770,8 @@ class GraftColumnarReader(conf: SerializableHadoopConf, required: StructType,
   // mask those columns must DECODE even when the projection pruned them
   // away — they append after the projected data columns (extras), and the
   // output batch projects them back out. The mask hashes ranges by
-  // address once per reader (TimeStore.DeleteMask, shared with the row
-  // reader and the local point ops). Scoped PER FILE (VERDICT r15 #5):
+  // address once per reader (TimeStore.DeleteMask, shared with the local
+  // point ops). Scoped PER FILE (VERDICT r15 #5):
   // only files whose (epoch, bucket) intersects the tombstones' placeBucket
   // image (`delTouched`, computed at plan time) decode extras and test the
   // mask — every other file keeps the exactly-clean vectorized path.
@@ -979,217 +954,4 @@ class GraftColumnarReader(conf: SerializableHadoopConf, required: StructType,
     closeOwned()
     if (reader != null) { reader.close(); reader = null }
   }
-}
-
-/** Executor-side reader: ONE parquet footer open per file (VERDICT r10 #4
-  * — the previous shape opened each footer twice, once for the projection
-  * probe and again inside `ParquetReader.builder`), decoding the projected
-  * columns DIRECTLY through parquet's `ColumnReader`s — primitive
-  * long/binary reads, no per-row `Group` materialization — with partition
-  * values injected from the directory image and the pushed filters
-  * evaluated row-exactly (they were NOT returned as residuals). The same
-  * pushed filters are ALSO compiled to a parquet `FilterPredicate` so
-  * whole row groups outside the predicate's min/max range are skipped from
-  * the footer stats before any page IO — the DSv2 twin of the row-group
-  * skipping the raw-parquet Scala read path gets from Spark's reader. */
-class GraftPartitionReader(conf: SerializableHadoopConf, required: StructType,
-                           files: Seq[GraftFileSlice], filters: Array[Filter],
-                           deleteTriples: Array[Long] = Array.emptyLongArray)
-    extends PartitionReader[InternalRow] {
-
-  import org.apache.parquet.column.ColumnReader
-  import org.apache.parquet.column.impl.ColumnReadStoreImpl
-  import org.apache.parquet.hadoop.ParquetFileReader
-  import org.apache.parquet.io.api.{Converter, GroupConverter, PrimitiveConverter}
-  import org.apache.parquet.schema.MessageType
-
-  private val DataColNames = Set("address", "time", "payload", "value")
-  // Read every data column the OUTPUT needs plus every data column a pushed
-  // filter references — the filters were not returned as residuals, so they
-  // must see real values even when the projection pruned their column away
-  // (e.g. `count(*) WHERE time >= t` prunes all columns). A partition-only
-  // projection with no filters still needs row COUNT: read the narrowest
-  // column.
-  // Pending takedown tombstones test (address, time) — those columns must
-  // decode even if the projection pruned them away. The shared mask
-  // (TimeStore.DeleteMask) hashes the triples by address once per reader.
-  // Scoped PER FILE (VERDICT r15 #5): only files whose bucket intersects
-  // the tombstones' placeBucket image (`delTouched`) decode the extra
-  // columns and pay the per-row mask test.
-  private val mask = new TimeStore.DeleteMask(deleteTriples)
-
-  private val baseCols = (required.fieldNames.filter(DataColNames.contains) ++
-    filters.flatMap(_.references).filter(DataColNames.contains)).distinct
-  private def readColsFor(touched: Boolean): Array[String] = {
-    val dataCols =
-      if (touched && deleteTriples.nonEmpty)
-        (baseCols ++ Array("address", "time")).distinct
-      else baseCols
-    if (dataCols.nonEmpty) dataCols else Array("address")
-  }
-
-  private var fileIdx = -1
-  private var fileReader: ParquetFileReader = _
-  private var current: InternalRow = _
-  private var curFile: GraftFileSlice = _
-
-  // per-file decode state: column readers aligned to the projected schema,
-  // max definition levels, column→reader slot for each point column
-  private var projSchema: MessageType = _
-  private var colReaders: Array[ColumnReader] = _
-  private var maxDef: Array[Int] = _
-  private var addrSlot, timeSlot, paySlot, valSlot: Int = -1
-  private var rowsLeft: Long = 0L
-
-  // ColumnReaderImpl requires a converter binding; values are pulled via
-  // getLong/getBinary directly, so the converter never sees data
-  private object NoopGroup extends GroupConverter {
-    private val prim = new PrimitiveConverter {}
-    override def getConverter(i: Int): Converter = prim
-    override def start(): Unit = ()
-    override def end(): Unit = ()
-  }
-
-  private val rowGroupPredicate = GraftParquetFilters.rowGroupPredicate(filters)
-
-  // compile the pushed filters once per task
-  private val rowPred: (Long, Long, Long, Array[Byte], GraftFileSlice) => Boolean = {
-    def num(name: String, p: (Long, Long, Long, GraftFileSlice)): Option[Long] = {
-      val (a, t, pl, f) = p
-      name match {
-        case "address" => Some(a)
-        case "time" => Some(t)
-        case "payload" => Some(pl)
-        case "epoch" => Some(f.epoch)
-        case "bucket" => Some(f.bucket.toLong)
-        case _ => None
-      }
-    }
-    val checks: Array[(Long, Long, Long, Array[Byte], GraftFileSlice) => Boolean] =
-      filters.map {
-        case EqualTo("kind", v: String) =>
-          (_, _, _, _, f) => f.kind == v
-        case In("kind", vs) =>
-          val set = vs.collect { case s: String => s }.toSet
-          (_, _, _, _, f) => set.contains(f.kind)
-        case EqualTo(c, v: java.lang.Number) =>
-          val lit = v.longValue
-          (a, t, p, _, f) => num(c, (a, t, p, f)).forall(_ == lit)
-        case In(c, vs) =>
-          val set = vs.collect { case n: java.lang.Number => n.longValue }.toSet
-          (a, t, p, _, f) => num(c, (a, t, p, f)).forall(set.contains)
-        case GreaterThan(c, v: java.lang.Number) =>
-          val lit = v.longValue
-          (a, t, p, _, f) => num(c, (a, t, p, f)).forall(_ > lit)
-        case GreaterThanOrEqual(c, v: java.lang.Number) =>
-          val lit = v.longValue
-          (a, t, p, _, f) => num(c, (a, t, p, f)).forall(_ >= lit)
-        case LessThan(c, v: java.lang.Number) =>
-          val lit = v.longValue
-          (a, t, p, _, f) => num(c, (a, t, p, f)).forall(_ < lit)
-        case LessThanOrEqual(c, v: java.lang.Number) =>
-          val lit = v.longValue
-          (a, t, p, _, f) => num(c, (a, t, p, f)).forall(_ <= lit)
-        case _ => (_, _, _, _, _) => true // IsNotNull on non-null cols, etc.
-      }
-    (a, t, p, v, f) => checks.forall(_(a, t, p, v, f))
-  }
-
-  /** Open the next file: ONE footer read, projection set from the FILE's
-    * own schema pruned to the needed columns (parquet's `checkContains` is
-    * exact, and the store holds both required-column files from the typed
-    * writers and optional-column files from [[TimeStore.compact]]'s
-    * rewrite), row-group stats filter installed from the pushed
-    * predicates. */
-  private def openNext(): Boolean = {
-    if (fileReader != null) { fileReader.close(); fileReader = null }
-    fileIdx += 1
-    if (fileIdx >= files.length) false
-    else {
-      import scala.jdk.CollectionConverters._
-      curFile = files(fileIdx)
-      fileReader = ParquetOpen.open(conf.conf, new Path(curFile.path),
-        rowGroupPredicate)
-      val fileSchema = fileReader.getFooter.getFileMetaData.getSchema
-      val readCols = readColsFor(curFile.delTouched)
-      val keep = fileSchema.getFields.asScala
-        .filter(f => readCols.contains(f.getName))
-      projSchema = new MessageType(fileSchema.getName, keep.asJava)
-      fileReader.setRequestedSchema(projSchema)
-      val slot = projSchema.getFields.asScala.map(_.getName).zipWithIndex.toMap
-      addrSlot = slot.getOrElse("address", -1)
-      timeSlot = slot.getOrElse("time", -1)
-      paySlot = slot.getOrElse("payload", -1)
-      valSlot = slot.getOrElse("value", -1)
-      rowsLeft = 0L
-      colReaders = null
-      true
-    }
-  }
-
-  /** Position on the next row group of the current file (stats-filtered by
-    * the reader); false when the file is exhausted. */
-  private def advanceRowGroup(): Boolean = {
-    val pages = fileReader.readNextRowGroup()
-    if (pages == null) false
-    else {
-      import scala.jdk.CollectionConverters._
-      val store = new ColumnReadStoreImpl(pages, NoopGroup, projSchema,
-        fileReader.getFooter.getFileMetaData.getCreatedBy)
-      val descs = projSchema.getColumns.asScala
-      colReaders = descs.map(store.getColumnReader).toArray
-      maxDef = descs.map(_.getMaxDefinitionLevel).toArray
-      rowsLeft = pages.getRowCount
-      true
-    }
-  }
-
-  private def readLongAt(slot: Int): Long = {
-    val r = colReaders(slot)
-    val v = if (r.getCurrentDefinitionLevel == maxDef(slot)) r.getLong else 0L
-    r.consume(); v
-  }
-
-  private def readBinaryAt(slot: Int): Array[Byte] = {
-    val r = colReaders(slot)
-    val v = if (r.getCurrentDefinitionLevel == maxDef(slot))
-      r.getBinary.getBytes else null
-    r.consume(); v
-  }
-
-  override def next(): Boolean = {
-    while (true) {
-      if (fileReader == null && !openNext()) return false
-      if (rowsLeft == 0L && !advanceRowGroup()) {
-        fileReader.close(); fileReader = null
-      } else {
-        rowsLeft -= 1
-        val address = if (addrSlot >= 0) readLongAt(addrSlot) else 0L
-        val time = if (timeSlot >= 0) readLongAt(timeSlot) else 0L
-        val payload = if (paySlot >= 0) readLongAt(paySlot) else 0L
-        val value = if (valSlot >= 0) readBinaryAt(valSlot) else null
-        if ((!curFile.delTouched || !mask.deleted(address, time)) &&
-            rowPred(address, time, payload, value, curFile)) {
-          val vals: Array[Any] = required.fieldNames.map {
-            case "address" => address
-            case "time" => time
-            case "payload" => payload
-            case "value" => value
-            case "kind" => UTF8String.fromString(curFile.kind)
-            case "epoch" => curFile.epoch
-            case "bucket" => curFile.bucket
-            case other => throw new IllegalStateException(s"unknown column $other")
-          }
-          current = InternalRow.fromSeq(vals.toIndexedSeq)
-          return true
-        }
-      }
-    }
-    false
-  }
-
-  override def get(): InternalRow = current
-
-  override def close(): Unit =
-    if (fileReader != null) { fileReader.close(); fileReader = null }
 }

@@ -110,8 +110,8 @@ object MutableKV {
   private def lookupWithSeq(spark: SparkSession, shadowNs: TimeStore.Namespace,
                             addr: Long): Option[(Long, Array[Byte])] =
     // Single-object read (Mutable.lookup reads ONE rados object,
-    // Mutable.hs:48-73): the driver-local pruned read shares readKind's
-    // exact contract (bucket pruning, pinned dedup, unsigned order — the
+    // Mutable.hs:48-73): the driver-local pruned read shares readExtended's
+    // targetObjs planner and exact contract (pinned dedup, unsigned order — the
     // result arrives sorted by unsigned time, so `last` IS the unsigned
     // max, Core.hs:232-243 / VERDICT r2 #2) without scheduling a Spark job
     // for a point-get.
@@ -172,7 +172,7 @@ object MutableKV {
   private def deleteHorizon(spark: SparkSession,
                             shadowNs: TimeStore.Namespace,
                             addr: Long): Long = {
-    val triples = TimeStore.deleteTriplesCached(spark, shadowNs)
+    val triples = TimeStore.deleteMask(spark, shadowNs).triples
     var h = 0L
     var i = 0
     while (i < triples.length) {

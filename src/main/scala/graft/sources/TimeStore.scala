@@ -24,16 +24,17 @@ import graft.functions.PointFunctions
   *
   * Design mapping (SURVEY §7): the reference's lock-protected append +
   * offset/pointer machinery is replaced by Parquet partitioned appends —
-  * `kind`/`epoch`/`bucket` are partition columns, so Catalyst partition
-  * pruning plays the role of `targetObjs` (`StoreHelpers.hs:78-104`) and
+  * `kind`/`epoch`/`bucket` are partition directories, which every read
+  * plans through [[targetObjs]] (`StoreHelpers.hs:78-104`), and
   * variable-length BINARY subsumes the extended-bucket blob store. Writers
   * are declared single-process (the reference needs locks because multiple
   * daemons share Ceph; a Spark deployment runs one streaming writer per
   * namespace — see [[graft.streaming.StreamingIngest]]).
   *
   * Scale notes: ingest shuffles once on (kind, epoch, bucket) to write one
-  * file per bucket partition; reads prune partitions from predicates before
-  * any IO; nothing is collected to the driver except the tiny index.
+  * file per bucket partition; reads list only the selected bucket
+  * directories before any IO; nothing is collected to the driver except
+  * the tiny index.
   */
 object TimeStore {
 
@@ -452,14 +453,14 @@ object TimeStore {
     * unsigned time range, optional address set, sorted (time, address),
     * first-wins dedup on (address, time). Returns simple points only.
     *
-    * Bucket pruning: epochs come from the index range lookup and, when an
-    * address set is given, the exact bucket list per epoch is the
-    * `placeBucket` image (`targetObjs`, `StoreHelpers.hs:78-104`) — both
-    * become partition-column predicates Catalyst prunes before any IO.
+    * A thin wrapper over the `graft` relation ([[GraftTableProvider]]): the
+    * pushed address set and time range plan the `targetObjs` file image
+    * ([[targetObjs]], `StoreHelpers.hs:78-104`) before any IO, and the
+    * scan's [[DeleteMask]] drops pending takedowns.
     */
   def readSimple(spark: SparkSession, n: Namespace, start: Long, end: Long,
                  addrs: Seq[Long], generation: Option[Long] = None): DataFrame =
-    readKind(spark, n, "simple", start, end, addrs, generation)
+    readPoints(spark, n, "simple", start, end, addrs, generation)
       .select("address", "time", "payload")
 
   /** `readExtended` (`TimeStore.hs:158-177`): same contract with the blob
@@ -471,8 +472,50 @@ object TimeStore {
     * result is reproducible bit-for-bit for as long as the pin holds. */
   def readExtended(spark: SparkSession, n: Namespace, start: Long, end: Long,
                    addrs: Seq[Long], generation: Option[Long] = None): DataFrame =
-    readKind(spark, n, "extended", start, end, addrs, generation)
+    readPoints(spark, n, "extended", start, end, addrs, generation)
       .select("address", "time", "payload", "value")
+
+  /** The `graft` relation over `n`: the live generation with pending
+    * tombstones masked in the scan, or generation `g`'s files verbatim.
+    * Built from the table itself rather than `format("graft")`, whose
+    * option parsing rejects the reserved `-INTERNAL` names of the KV
+    * shadows ([[MutableKV]] reads through here). */
+  private def storeRelation(spark: SparkSession, n: Namespace,
+                            generation: Option[Long]): DataFrame =
+    org.apache.spark.sql.graftshim.DatasetBridge.scan(spark,
+      GraftTable(n.root, n.ns), generation.map(g => "generation" -> g.toString).toMap)
+
+  private def readPoints(spark: SparkSession, n: Namespace, kind: String,
+                         start: Long, end: Long, addrs: Seq[Long],
+                         generation: Option[Long]): DataFrame = {
+    // loud at the call, not at the first action, on an unregistered namespace
+    mustFetchIndex(spark, n, kind)
+    // The unsigned range [start, end] as the signed predicate it denotes,
+    // which the scan pushes and prunes epochs on: one interval while both
+    // bounds share a sign half; both ends of the signed line when it
+    // crosses the sign bit (start >= 0 > end); nothing when start is
+    // unsigned-above end. targetObjs over an empty address list is the
+    // empty object set (StoreHelpers.hs:86-104): nothing is scanned.
+    val inRange =
+      if ((start < 0) == (end < 0)) col("time").between(start, end)
+      else if (start >= 0) col("time") >= start || col("time") <= end
+      else lit(false)
+    val selected =
+      if (addrs.isEmpty) lit(false)
+      else col("kind") === kind && col("address").isin(addrs: _*) && inRange
+    // First-wins dedup with a PINNED winner (`deDuplicate`,
+    // Algorithms.hs:273-298): `dropDuplicates` keeps an arbitrary row that
+    // can flip under repartitioning when two points share (address, time)
+    // with different payloads — the winner here is the smallest (payload,
+    // value), deterministic under any partitioning (VERDICT r2 #3).
+    val deduped = graft.operators.TimeSeriesOps.firstWinsDedup(
+      storeRelation(spark, n, generation).filter(selected),
+      Seq("address", "time"),
+      Seq(col("payload").bitwiseXOR(lit(Long.MinValue)), col("value")))
+    // Unsigned (time, address) order — Core.hs:252-258 — via sign-bit flip.
+    deduped.orderBy(col("time").bitwiseXOR(lit(Long.MinValue)),
+      col("address").bitwiseXOR(lit(Long.MinValue)))
+  }
 
   /** STREAMING tail of a namespace's committed points — the read arm of
     * the store's streaming story (ingest: [[graft.streaming
@@ -514,28 +557,10 @@ object TimeStore {
         s"namespace '${n.ns}' has never been written — nothing to tail " +
           "(the file source needs an existing generation directory)"))
     spark.readStream
-      .schema(storeSchema)
+      .schema(GraftTableProvider.StoreSchema)
       .option("maxFilesPerTrigger", maxFilesPerTrigger)
       .parquet(base)
   }
-
-  /** The routed on-disk schema: the point columns plus the partition
-    * columns. Declared explicitly on every scan so a registered namespace
-    * whose first append is still in flight (or crashed mid-job, leaving
-    * only `_temporary`) reads as EMPTY instead of failing schema inference
-    * — the reference's missing-object ⇒ empty-bytes behavior
-    * (`Memory.hs:72-76`). */
-  private def storeSchema: org.apache.spark.sql.types.StructType = {
-    import org.apache.spark.sql.types._
-    Point.schema
-      .add("kind", StringType).add("epoch", LongType).add("bucket", IntegerType)
-  }
-
-  /** Empty result with the store schema — a registered namespace that has
-    * never been written has no parquet directory yet. */
-  private def emptyPoints(spark: SparkSession): DataFrame =
-    spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], storeSchema)
 
   // ---- generation-numbered points directories ---------------------------
   //
@@ -765,58 +790,38 @@ object TimeStore {
       .map(_._2.toString)
   }
 
-  private def readKind(spark: SparkSession, n: Namespace, kind: String,
-                       start: Long, end: Long, addrs: Seq[Long],
-                       generation: Option[Long] = None): DataFrame = {
-    val idx = mustFetchIndex(spark, n, kind)
-    // targetObjs over an empty address list is the empty object set — the
-    // reference reads nothing rather than scanning every bucket
-    // (StoreHelpers.hs:86-104); mirror that contract explicitly instead of
-    // burying it in a false predicate
-    if (addrs.isEmpty) return emptyPoints(spark)
-    // snapshot reads resolve the PINNED generation's path (loud if retired)
-    // and skip the pending-tombstone overlay — see [[pinGeneration]]
-    val liveOpt = generation.map(g => snapshotPath(spark, n, g))
-      .orElse(livePointsPath(spark, n))
-    if (liveOpt.isEmpty) return emptyPoints(spark)
-    val entries = idx.rangeEntries(start, end)
-    val epochs = entries.map(_._1)
-    // targetObjs: image of placeBucket over the address list, per epoch.
-    val bucketPred = entries.map {
-      case (e, bc) =>
-        val bs = addrs.map(a => EpochIndex.placeBucket(bc, a)).distinct
-        col("epoch") === lit(e) && col("bucket").isin(bs: _*)
-    }.reduce(_ || _)
-    val addrPred = col("address").isin(addrs: _*)
-    // The unsigned (sign-flip) comparisons don't push to parquet; add an
-    // equivalent signed predicate that does. Unsigned [start, end] maps to:
-    //   both bounds "positive":   time in [start, end] signed
-    //   start pos, end "negative": time >= start OR time < 0
-    //   start "negative":          time in [start, end] signed (both < 0)
-    val signedRange: org.apache.spark.sql.Column =
-      if (start >= 0 && end >= 0) col("time").between(start, end)
-      else if (start >= 0) col("time") >= start || col("time") < 0
-      else col("time").between(start, end)
-    val scan = spark.read.schema(storeSchema).parquet(liveOpt.get)
-      .filter(col("kind") === kind && col("epoch").isin(epochs: _*) && bucketPred)
-      .filter(addrPred && signedRange &&
-        PointFunctions.unsignedGte(col("time"), lit(start)) &&
-        PointFunctions.unsignedLte(col("time"), lit(end)))
-    val df =
-      if (generation.isDefined) scan // snapshot: no mutable-overlay anti-join
-      else applyDeletes(spark, n, scan)
-    // First-wins dedup with a PINNED winner (`deDuplicate`,
-    // Algorithms.hs:273-298): `dropDuplicates` keeps an arbitrary row that
-    // can flip under repartitioning when two points share (address, time)
-    // with different payloads — the winner here is the smallest (payload,
-    // value), deterministic under any partitioning (VERDICT r2 #3).
-    val deduped = graft.operators.TimeSeriesOps.firstWinsDedup(
-      df, Seq("address", "time"),
-      Seq(col("payload").bitwiseXOR(lit(Long.MinValue)), col("value")))
-    // Unsigned (time, address) order — Core.hs:252-258 — via sign-bit flip.
-    deduped.orderBy(col("time").bitwiseXOR(lit(Long.MinValue)),
-      col("address").bitwiseXOR(lit(Long.MinValue)))
-  }
+  /** `targetObjs` (`StoreHelpers.hs:78-104`): the data files under the
+    * generation directory `base` that can hold `kind` points in the
+    * UNSIGNED range [start, end]. Epochs come from the index range lookup;
+    * per epoch the buckets are the `placeBucket` image of `addrs` (every
+    * bucket when None), narrowed by `keep(epoch, bucket)`; only those
+    * directories are listed. A file is `delTouched` when `mask`'s pending
+    * addresses route to its bucket — rows route by the same image at
+    * write, so an untouched file provably holds no tombstoned row. The one
+    * pruning shared by the point-gets, the API reads and the SQL scan. */
+  private[graft] def targetObjs(spark: SparkSession, base: String, kind: String,
+                                idx: EpochIndex, start: Long, end: Long,
+                                addrs: Option[Seq[Long]], mask: DeleteMask,
+                                keep: (Long, Int) => Boolean = (_, _) => true)
+      : Seq[GraftFileSlice] =
+    if (java.lang.Long.compareUnsigned(start, end) > 0) Nil
+    else {
+      val f = fs(spark, base)
+      idx.rangeEntries(start, end).flatMap { case (epoch, bc) =>
+        val buckets = addrs.fold[Seq[Int]](0 until bc)(
+          _.map(a => EpochIndex.placeBucket(bc, a)).distinct)
+        val touched = mask.bucketImage(bc)
+        buckets.filter(keep(epoch, _)).flatMap { b =>
+          val dir = new Path(s"$base/kind=$kind/epoch=$epoch/bucket=$b")
+          if (!f.exists(dir)) Nil
+          else f.listStatus(dir).toSeq.filter { st =>
+            val nm = st.getPath.getName
+            st.isFile && !nm.startsWith("_") && !nm.startsWith(".")
+          }.map(st => GraftFileSlice(st.getPath.toString, kind, epoch, b,
+            st.getLen, delTouched = touched.get(b)))
+        }
+      }
+    }
 
   /** Compact a namespace: rewrite each (kind, epoch, bucket) partition's
     * accumulated small append files into one file per partition. The
@@ -979,19 +984,21 @@ object TimeStore {
   // Representation: (address, tstart, tend) unsigned-range tombstones in
   // small parquet files under `<ns>/deletes/` — one atomically-published
   // file per delete call, ids+range only (24 bytes/row). Every read path
-  // (readSimple/readExtended, latestUniques, the local point ops, the DSv2
-  // SQL scan) suppresses matching rows immediately; [[vacuumDeletes]]
-  // folds them in physically as a new points generation under the SAME
-  // reader-safe swap as [[compact]] and clears exactly the applied files.
-  // Pending-tombstone cost: one anti-join against a table bounded by the
-  // takedown volume since the last vacuum (broadcast under
-  // [[DeleteBroadcastBytes]]), never corpus-sized.
+  // suppresses matching rows immediately through one [[DeleteMask]]: the
+  // `graft` scan behind readSimple/readExtended/latestPerAddress and SQL
+  // tests it per decoded batch, the local point ops per row. Only files
+  // whose bucket a pending address routes to pay the test.
+  // [[vacuumDeletes]] folds the tombstones in physically as a new points
+  // generation under the SAME reader-safe swap as [[compact]] and clears
+  // exactly the applied files. Pending-tombstone cost: a driver-side mask
+  // bounded by the takedown volume since the last vacuum, never
+  // corpus-sized.
 
   private[graft] def deletesDir(n: Namespace) = s"${n.dir}/deletes"
 
-  /** Broadcast ceiling for the pending-delete anti-join side — the
+  /** Broadcast ceiling for [[vacuumDeletes]]' anti-join side — the
     * probe-size-gate pattern; past it the planner picks its own strategy
-    * and the namespace is overdue for [[vacuumDeletes]]. */
+    * and the namespace is overdue for a vacuum. */
   private[graft] val DeleteBroadcastBytes: Long = 64L << 20
 
   private val DeleteFileSchema = org.apache.parquet.schema.MessageTypeParser
@@ -1157,15 +1164,13 @@ object TimeStore {
   }
 
   /** Pending-tombstone row test over packed [[loadDeleteTriples]] entries,
-    * hashed by address ONCE at construction — the shared mask for every
-    * read path that evaluates rows outside a Spark plan (the local point
-    * ops, the DSv2 row reader, the DSv2 columnar batch filter). The
-    * per-row test is O(ranges for this address), never a linear pass over
-    * the whole tombstone batch: a bulk takedown (10⁵⁺ pending ranges)
-    * must not tax every point-get until the vacuum (VERDICT r14 #6 — the
-    * row reader gained this hash in r14, the local readers kept the
-    * linear walk). */
-  private[graft] final class DeleteMask(triples: Array[Long])
+    * hashed by address ONCE at construction — the one mask every read path
+    * tests rows against: the local point ops per row, the `graft` scan's
+    * [[GraftColumnarReader]] per decoded batch. The per-row test is
+    * O(ranges for this address), never a linear pass over the whole
+    * tombstone batch: a bulk takedown (10⁵⁺ pending ranges) must not tax
+    * every point-get until the vacuum (VERDICT r14 #6). */
+  private[graft] final class DeleteMask(val triples: Array[Long])
       extends Serializable {
     private val ranges: java.util.HashMap[Long, Array[Long]] = {
       val m = new java.util.HashMap[Long, Array[Long]]()
@@ -1190,9 +1195,21 @@ object TimeStore {
       }
       false
     }
+    /** The buckets the pending addresses route to among `buckets`
+      * (`placeBucket`) — the files a tombstone can touch. */
+    def bucketImage(buckets: Int): java.util.BitSet = {
+      val bs = new java.util.BitSet(buckets)
+      ranges.keySet.forEach(a => bs.set(EpochIndex.placeBucket(buckets, a)))
+      bs
+    }
   }
 
-  /** Driver-side [[DeleteMask]] cache for the LOCAL point ops, keyed by
+  private[graft] object DeleteMask {
+    val Empty = new DeleteMask(Array.emptyLongArray)
+  }
+
+  /** Driver-side [[DeleteMask]] cache for every read (the local point ops
+    * and the `graft` scan's planning), keyed by
     * the pending delete FILES' signature (path+length+mtime — a new
     * delete is a new UUID file, a vacuum removes files; either changes
     * the signature): without it every point-get re-reads the whole
@@ -1212,10 +1229,10 @@ object TimeStore {
   // driver-side and rare, contention is nil.
   private[graft] val MaskCacheCap = 64
   private val maskCache =
-    new java.util.LinkedHashMap[String, (String, Array[Long], DeleteMask)](
+    new java.util.LinkedHashMap[String, (String, DeleteMask)](
       MaskCacheCap, 0.75f, /*accessOrder=*/ true) {
       override def removeEldestEntry(
-          e: java.util.Map.Entry[String, (String, Array[Long], DeleteMask)])
+          e: java.util.Map.Entry[String, (String, DeleteMask)])
           : Boolean = size() > MaskCacheCap
     }
 
@@ -1226,53 +1243,18 @@ object TimeStore {
     maskCache.keySet().asScala.toVector
   }
 
-  private def maskEntry(spark: SparkSession,
-                        n: Namespace): (String, Array[Long], DeleteMask) = {
+  private[graft] def deleteMask(spark: SparkSession, n: Namespace): DeleteMask = {
     val files = deleteFiles(spark, n)
     val sig = files.map(st =>
         s"${st.getPath}:${st.getLen}:${st.getModificationTime}")
       .sorted.mkString("|")
     val cached = maskCache.synchronized(maskCache.get(n.dir))
-    if (cached != null && cached._1 == sig) cached
+    if (cached != null && cached._1 == sig) cached._2
     else {
-      val triples = loadDeleteTriples(
-        spark.sparkContext.hadoopConfiguration, files)
-      val entry = (sig, triples, new DeleteMask(triples))
-      maskCache.synchronized(maskCache.put(n.dir, entry))
-      entry
-    }
-  }
-
-  private[graft] def deleteMask(spark: SparkSession, n: Namespace): DeleteMask =
-    maskEntry(spark, n)._3
-
-  /** The packed pending triples through the same signature cache — for
-    * [[MutableKV]]'s tombstone-horizon scan, which otherwise re-reads the
-    * delete parquet on every re-creating insert. */
-  private[sources] def deleteTriplesCached(spark: SparkSession,
-                                           n: Namespace): Array[Long] =
-    maskEntry(spark, n)._2
-
-  /** Anti-join a point scan against the namespace's pending delete
-    * tombstones (no-op when none): equi-key on address with the unsigned
-    * range as the join residual, delete side broadcast under
-    * [[DeleteBroadcastBytes]]. Applied BEFORE dedup — the pinned
-    * first-wins winner must be chosen among SURVIVING rows only. */
-  private def applyDeletes(spark: SparkSession, n: Namespace,
-                           df: DataFrame): DataFrame = {
-    val files = deleteFiles(spark, n)
-    if (files.isEmpty) df
-    else {
-      val bytes = files.map(_.getLen).sum
-      val tomb = spark.read.parquet(files.map(_.getPath.toString): _*)
-        .select(col("address").as("__del_addr"),
-          col("tstart").as("__del_start"), col("tend").as("__del_end"))
-      val t = if (bytes <= DeleteBroadcastBytes) broadcast(tomb) else tomb
-      df.join(t,
-        col("address") === col("__del_addr") &&
-          PointFunctions.unsignedGte(col("time"), col("__del_start")) &&
-          PointFunctions.unsignedLte(col("time"), col("__del_end")),
-        "left_anti")
+      val mask = new DeleteMask(loadDeleteTriples(
+        spark.sparkContext.hadoopConfiguration, files))
+      maskCache.synchronized(maskCache.put(n.dir, (sig, mask)))
+      mask
     }
   }
 
@@ -1280,8 +1262,8 @@ object TimeStore {
     * the live points generation WITHOUT the matching rows as generation
     * N+1 — the same reader-safe `_SUCCESS` swap and lease-horizon
     * retirement as [[compact]] — then remove exactly the delete files that
-    * were applied (a delete landing mid-vacuum keeps its file and still
-    * serves through the anti-join).
+    * were applied (a delete landing mid-vacuum keeps its file and stays in
+    * every reader's [[DeleteMask]]).
     *
     * Scale shape: unlike compact's binary merge, row removal must decode —
     * but while the pending tombstones fit [[DeleteBroadcastBytes]] (the
@@ -1298,8 +1280,8 @@ object TimeStore {
     * fans a leaf into several files.) A vacuum that dies before its `_SUCCESS`
     * never becomes live ([[recoverStranded]] clears it); one that dies
     * after the swap but before clearing the applied files re-applies them
-    * harmlessly (the rows are already gone — the anti-join matches
-    * nothing) until the next vacuum clears them. */
+    * harmlessly (the rows are already gone — the mask and the anti-join
+    * match nothing) until the next vacuum clears them. */
   def vacuumDeletes(spark: SparkSession, n: Namespace): Unit =
     withWriterLease(spark, n) {
       val applied = deleteFiles(spark, n)
@@ -1310,7 +1292,7 @@ object TimeStore {
         liveComplete match {
           case None =>
             // never-written (or first-append-in-flight) namespace: nothing
-            // to fold, reads are empty/anti-joined either way — keep the
+            // to fold, reads are empty/masked either way — keep the
             // tombstones pending until there is a generation to rewrite
             ()
           case Some((curGen, curPath)) =>
@@ -1329,7 +1311,7 @@ object TimeStore {
               .select(col("address").as("__del_addr"),
                 col("tstart").as("__del_start"), col("tend").as("__del_end"))
             val t = if (bytes <= DeleteBroadcastBytes) broadcast(tomb) else tomb
-            spark.read.schema(storeSchema).parquet(curPath.toString)
+            spark.read.schema(GraftTableProvider.StoreSchema).parquet(curPath.toString)
               .join(t,
                 col("address") === col("__del_addr") &&
                   PointFunctions.unsignedGte(col("time"), col("__del_start")) &&
@@ -1415,7 +1397,7 @@ object TimeStore {
       }
     }
     val delFiles = deleteFiles(spark, n)
-    val delRanges = deleteTriplesCached(spark, n).length / 3
+    val delRanges = deleteMask(spark, n).triples.length / 3
     val delBytes = delFiles.map(_.getLen).sum
     val kvShadow = isRegistered(spark, n.copy(ns = s"${n.ns}-INTERNAL"))
     Seq("simple", "extended").map { kind =>
@@ -1457,18 +1439,13 @@ object TimeStore {
     * x ^ MinValue), so a point at time >= 2^63 beats any small time. When
     * duplicate (address, time) rows carry different payloads the winner is
     * the smallest unsigned (payload, value) — the SAME pinned winner as
-    * [[readKind]]'s first-wins dedup, so `lookup` (via readExtended) and
+    * [[readSimple]]'s first-wins dedup, so `lookup` (via readExtended) and
     * `enumerate` (via this) can never disagree on a key's value. Expressed
     * as one min_by: bitwise-NOT inverts the flipped-time order (~x is
     * strictly decreasing), so min over (~flippedTime, unsignedPayload,
     * value) == max unsigned time, then min unsigned (payload, value). */
   def latestPerAddress(spark: SparkSession, n: Namespace, kind: String): DataFrame = {
-    // schema declared explicitly, matching readKind: a namespace whose
-    // first append crashed mid-job (only _temporary present) must read as
-    // empty here too, not fail schema inference (ADVICE r6 low)
-    val base = applyDeletes(spark, n, livePointsPath(spark, n)
-      .map(spark.read.schema(storeSchema).parquet(_))
-      .getOrElse(emptyPoints(spark)).filter(col("kind") === kind))
+    val base = storeRelation(spark, n, None).filter(col("kind") === kind)
     val payload = struct(col("time"), col("payload"), col("value"))
     val ord = struct(
       bitwise_not(col("time").bitwiseXOR(lit(Long.MinValue))),
@@ -1554,7 +1531,7 @@ object TimeStore {
 
   /** Spark BinaryType order: unsigned lexicographic, shorter-prefix-first,
     * nulls first under ascending — the local dedup must pick the same
-    * winner as [[readKind]]'s `firstWinsDedup`. */
+    * winner as [[readSimple]]'s `firstWinsDedup`. */
   private def compareBytes(a: Array[Byte], b: Array[Byte]): Int =
     if (a eq b) 0
     else if (a == null) -1
@@ -1571,7 +1548,7 @@ object TimeStore {
     }
 
   /** The pinned first-wins winner among duplicate (address, time) rows:
-    * smallest unsigned (payload, value) — identical to [[readKind]] and
+    * smallest unsigned (payload, value) — identical to [[readSimple]] and
     * [[latestPerAddress]], so a local point-get can never disagree with a
     * distributed scan of the same namespace. */
   private val pinnedWinner: Ordering[Point] = (x: Point, y: Point) => {
@@ -1597,13 +1574,10 @@ object TimeStore {
                             addrs: Seq[Long]): Seq[Point] = {
     val idx = mustFetchIndex(spark, n, kind)
     if (addrs.isEmpty) return Nil
-    val liveOpt = livePointsPath(spark, n)
-    if (liveOpt.isEmpty) return Nil
-    val live = liveOpt.get
-    val f = fs(spark, live)
+    val live = livePointsPath(spark, n).getOrElse(return Nil)
     val conf = spark.sparkContext.hadoopConfiguration
     val addrSet = addrs.toSet
-    // The bucket files this walks grow with corpus/buckets, not with the
+    // The bucket files this reads grow with corpus/buckets, not with the
     // selection — without a parquet filter a single point-get decodes the
     // WHOLE bucket file (measured 2.6 s against a 4M-row bucket, 8x SLOWER
     // than the distributed scan it exists to undercut). Push the time range
@@ -1635,32 +1609,23 @@ object TimeStore {
     val addrJSet = new java.util.HashSet[java.lang.Long]()
     addrs.foreach(a => addrJSet.add(java.lang.Long.valueOf(a)))
     val pred = Some(FilterApi.and(timePred, FilterApi.in(acol, addrJSet)))
-    // targetObjs (StoreHelpers.hs:78-104): the same pruned (epoch, bucket)
-    // image readKind turns into partition predicates, walked directly
-    val rows = idx.rangeEntries(start, end).flatMap { case (e, bc) =>
-      addrs.map(a => EpochIndex.placeBucket(bc, a)).distinct.flatMap { b =>
-        val dir = new Path(s"$live/kind=$kind/epoch=$e/bucket=$b")
-        if (!f.exists(dir)) Nil
-        else f.listStatus(dir).toSeq
-          .filter(st => st.isFile && {
-            val nm = st.getPath.getName
-            !nm.startsWith("_") && !nm.startsWith(".")
-          })
-          .flatMap(st => readParquetPoints(conf, st, pred))
-      }
-    }.filter(p => addrSet.contains(p.address) &&
-      java.lang.Long.compareUnsigned(p.time, start) >= 0 &&
-      java.lang.Long.compareUnsigned(p.time, end) <= 0)
-    // pending takedown tombstones suppress rows here exactly like the
-    // distributed scan's anti-join (local/distributed parity is spec- and
-    // oracle-pinned); applied BEFORE the pinned-winner dedup. The mask is
-    // signature-cached and hashes by address — point-get cost stays flat
-    // in the pending-tombstone count (one rebuild per takedown change).
+    // pending takedown tombstones suppress rows here through the same
+    // signature-cached mask the distributed scan ships to its readers,
+    // scoped to the same touched files; applied BEFORE the pinned-winner
+    // dedup. Point-get cost stays flat in the pending-tombstone count.
     val mask = deleteMask(spark, n)
-    val live2 =
-      if (mask.isEmpty) rows
-      else rows.filterNot(p => mask.deleted(p.address, p.time))
-    live2.groupBy(p => (p.address, p.time)).valuesIterator
+    val rows = targetObjs(spark, live, kind, idx, start, end, Some(addrs), mask)
+      .flatMap { f =>
+        // the listing already holds the length: no second stat per open
+        val st = new org.apache.hadoop.fs.FileStatus(f.bytes, false, 0, 0L, 0L,
+          new Path(f.path))
+        readParquetPoints(conf, st, pred).filter(p =>
+          addrSet.contains(p.address) &&
+            java.lang.Long.compareUnsigned(p.time, start) >= 0 &&
+            java.lang.Long.compareUnsigned(p.time, end) <= 0 &&
+            !(f.delTouched && mask.deleted(p.address, p.time)))
+      }
+    rows.groupBy(p => (p.address, p.time)).valuesIterator
       .map(_.min(pinnedWinner)).toVector.sorted(Point.ordering)
   }
 
@@ -1710,8 +1675,8 @@ object TimeStore {
             if (st.isFile && st.getPath.getName.endsWith(".inprogress"))
               f.delete(st.getPath, false)
           }
-          // Stage under a dot-prefixed name (both the distributed scan and
-          // readKindLocal skip '.'/'_' names) and rename into place only
+          // Stage under a dot-prefixed name (targetObjs, which every read
+          // plans through, skips '.'/'_' names) and rename into place only
           // after the writer closes: reads are lease-free, so a concurrent
           // reader must never list a file whose footer isn't committed.
           // Rename is atomic on HDFS and the local FS — the same publish

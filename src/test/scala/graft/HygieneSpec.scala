@@ -201,6 +201,14 @@ class HygieneSpec extends SparkSpec {
     assert(okSec > 0 && okErr.isEmpty)
   }
 
+  test("bench cpus: a number in every JSON line, or a fast failure") {
+    assert(Bench.parseCpus(None) === 8)
+    assert(Bench.parseCpus(Some(" 32")) === 32)
+    Seq("", "eight", "0", "-4", "4.5").foreach { raw =>
+      intercept[IllegalArgumentException](Bench.parseCpus(Some(raw)))
+    }
+  }
+
   test("capHotBuckets drops oversized band buckets only") {
     val bucketed = Seq(
       (1L, 0, 10L), (2L, 0, 10L), (3L, 0, 10L), // hot bucket, size 3

@@ -2,8 +2,11 @@ package graft
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+
 import graft.core.Point
-import graft.sources.{MutableKV, TimeStore}
+import graft.sources.{GraftScan, MutableKV, TimeStore}
 
 /** Driver-local point-op parity: the single-object read/append twins
   * ([[TimeStore.readSimpleLocal]]/[[TimeStore.readExtendedLocal]]/
@@ -127,10 +130,12 @@ class LocalPointOpsSpec extends SparkSpec {
 
     val simple = addrs.filter(_ % 2 == 0)
     val ext = addrs.filter(_ % 2 == 1)
-    // full range, the sign-crossing range, a single-half range, one address,
-    // and an unsigned-empty range (start > end) that must read as nothing
-    val ranges = Seq((0L, -1L), (start, end), (105L, 135L), (-45L, -15L), (-50L, 150L))
-    ranges.foreach { case (s0, e0) =>
+    // full range, the sign-crossing ranges (one open to the unsigned max),
+    // single-half ranges (two with both bounds negative), one address, and
+    // an unsigned-empty range (start > end) that must read as nothing
+    val ranges = Seq((0L, -1L), (start, end), (120L, -1L), (105L, 135L), (-45L, -15L),
+      (Long.MinValue + 15L, -20L), (-50L, 150L))
+    def parity(n: TimeStore.Namespace): Unit = ranges.foreach { case (s0, e0) =>
       Seq(simple, Seq(2L)).foreach { as =>
         assert(TimeStore.readSimpleLocal(spark, n, s0, e0, as) === collectSimple(n, s0, e0, as),
           s"simple [$s0, $e0] $as")
@@ -140,6 +145,12 @@ class LocalPointOpsSpec extends SparkSpec {
           s"extended [$s0, $e0] $as")
       }
     }
+    parity(n)
+    // a registered, never-written namespace reads as empty on both paths
+    val unwritten = freshNs()
+    TimeStore.register(spark, unwritten, 2, 2)
+    parity(unwritten)
+    assert(collectSimple(unwritten, 0L, -1L, simple).isEmpty)
     // the comparison is not vacuous: rows survive, fragments win, takedowns bite
     val full = TimeStore.readSimpleLocal(spark, n, 0L, -1L, simple)
     assert(full.exists(p => p.address == 2L && p.time == 110L && p.payload == 0L))
@@ -151,6 +162,40 @@ class LocalPointOpsSpec extends SparkSpec {
     assert(TimeStore.readSimpleLocal(spark, n, start, end, simple).map(_.time).toSet ===
       Set(Long.MaxValue - 20L, Long.MaxValue - 10L, Long.MaxValue - 5L, Long.MaxValue,
         Long.MinValue, Long.MinValue + 10L, Long.MinValue + 20L))
+    assert(collectSimple(n, 120L, -1L, Seq(2L)).map(_.time).contains(-10L))
+    assert(collectSimple(n, Long.MinValue + 15L, -20L, Seq(2L)).map(_.time) ===
+      Seq(Long.MinValue + 20L, Long.MinValue + 30L, Long.MinValue + 40L, -50L, -40L, -30L, -20L))
+  }
+
+  test("sign-crossing reads plan only their index epochs; unregistered reads fail at the call") {
+    // rollover after every batch: epochs on both sides of the sign bit
+    val n = freshNs()
+    TimeStore.register(spark, n, 2, 2)
+    Seq(Seq(10L, 20L), Seq(1000L, 1010L), Seq(Long.MaxValue - 10L), Seq(-30L, -20L))
+      .foreach(ts => TimeStore.writePoints(spark, n, ds(ts.map(t => Point(2L, t, t)): _*),
+        rolloverBytes = 1L))
+    val idx = TimeStore.fetchIndex(spark, n, "simple").get
+    assert(idx.entries.size === 5, idx)
+    Seq((1005L, -1L), (1005L, -25L)).foreach { case (s0, e0) =>
+      val df = TimeStore.readSimple(spark, n, s0, e0, Seq(2L))
+      val plan = df.queryExecution.executedPlan match {
+        case a: AdaptiveSparkPlanExec => a.executedPlan
+        case p => p
+      }
+      val files = plan.collect { case b: BatchScanExec => b.scan }
+        .collect { case g: GraftScan => g.plannedFiles }.flatten
+      val epochs = idx.rangeEntries(s0, e0).map(_._1).toSet
+      assert(epochs.size < idx.entries.size && !epochs.contains(0L), epochs)
+      assert(files.nonEmpty && files.forall(f => epochs.contains(f.epoch)),
+        s"[$s0, $e0] planned ${files.map(_.epoch)} outside $epochs")
+      assert(df.collect().map(_.getLong(1)).toSeq ===
+        TimeStore.readSimpleLocal(spark, n, s0, e0, Seq(2L)).map(_.time))
+    }
+    assert(collectSimple(n, 1005L, -25L, Seq(2L)).map(_.time) === Seq(1010L, Long.MaxValue - 10L, -30L))
+    val ex = intercept[IllegalStateException] {
+      TimeStore.readSimple(spark, freshNs(), 0L, -1L, Seq(2L))
+    }
+    assert(ex.getMessage.contains("invalid namespace"))
   }
 
   test("ParquetOpen's filtered row loop returns exactly ParquetReader's rows") {

@@ -3,11 +3,12 @@ package graft
 import java.nio.file.Files
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 
 import graft.core.Point
-import graft.sources.{PointCodec, TimeStore}
+import graft.sources.{GraftScan, PointCodec, TimeStore}
 
 /** Plan-shape guards: predicates reach the parquet scan, dimensions
   * broadcast, scans prune columns — the properties that keep these plans
@@ -15,14 +16,18 @@ import graft.sources.{PointCodec, TimeStore}
   * if results stay correct. */
 class PlanSpec extends SparkSpec {
 
-  private def scans(df: DataFrame): Seq[FileSourceScanExec] = {
-    val plan = df.queryExecution.executedPlan
-    val stripped = plan match {
+  private def physical(df: DataFrame): SparkPlan =
+    df.queryExecution.executedPlan match {
       case a: AdaptiveSparkPlanExec => a.executedPlan
       case p => p
     }
-    stripped.collect { case s: FileSourceScanExec => s }
-  }
+
+  private def scans(df: DataFrame): Seq[FileSourceScanExec] =
+    physical(df).collect { case s: FileSourceScanExec => s }
+
+  private def graftScans(df: DataFrame): Seq[GraftScan] =
+    physical(df).collect { case b: BatchScanExec => b.scan }
+      .collect { case g: GraftScan => g }
 
   test("ts_range_scan pushes address-set and time-range filters to parquet") {
     val df = SparkEntry.queries("ts_range_scan")(spark, sf("0.001"))
@@ -548,15 +553,14 @@ class PlanSpec extends SparkSpec {
     TimeStore.writeEncoded(spark, n,
       PointCodec.encode((0L until 64L by 2L).map(a => Point(a, a, a))))
     val df = TimeStore.readSimple(spark, n, 4, 20, Seq(2L, 10L))
-    val s = scans(df)
+    val s = graftScans(df)
     assert(s.nonEmpty)
-    val pushed = s.head.metadata("PushedFilters")
+    val pushed = s.head.filters.mkString(", ")
     assert(pushed.contains("In(address"), pushed)
     assert(pushed.contains("GreaterThanOrEqual(time,4)"), pushed)
-    // partition pruning: only bucket 2 of epoch 0 listed
-    val parts = s.head.relation.location.listFiles(
-      s.head.partitionFilters, s.head.dataFilters)
-    assert(parts.length === 1, parts.map(_.values.toString))
+    // targetObjs pruning: only bucket 2 of epoch 0 planned
+    val files = s.head.plannedFiles
+    assert(files.length === 1, files)
   }
 
   test("text_chunk is shuffle-free (tokenize → explode → slice, no Exchange)") {
@@ -656,22 +660,35 @@ class PlanSpec extends SparkSpec {
     fsys.delete(new org.apache.hadoop.fs.Path(path), true)
   }
 
-  test("store reads with pending delete tombstones anti-join via a " +
-      "BROADCAST, never a shuffle of the point scan") {
-    import graft.core.Point
+  test("store reads mask pending tombstones in the scan, never a join") {
+    import graft.core.{EpochIndex, Point}
     import graft.sources.TimeStore
+    import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, Exchange}
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
     import spark.implicits._
     val root = Files.createTempDirectory("graft-del-plan").toString
     val n = TimeStore.namespace(root, "DELPLAN")
     TimeStore.register(spark, n, 4, 4)
     TimeStore.writePoints(spark, n, spark.createDataset(
       (0 until 64).map(a => Point(a.toLong * 2, 100L + a, a.toLong))))
+    val addrs = (0 until 8).map(_.toLong * 2)
+    def read() = TimeStore.readSimple(spark, n, 0L, 100000L, addrs)
+    def exchanges(df: DataFrame) = physical(df).collect { case e: Exchange => e }
+    val clean = exchanges(read()).size
     TimeStore.deletePoints(spark, n, Seq(4L, 8L), 0L, 1000L)
-    val df = TimeStore.readSimple(spark, n, 0L, 100000L,
-      (0 until 8).map(_.toLong * 2))
-    val plan = df.queryExecution.executedPlan.toString
-    assert(plan.contains("BroadcastHashJoin") && plan.contains("LeftAnti"),
-      s"pending deletes must apply as a broadcast anti-join:\n${plan.take(1200)}")
+    val df = read()
+    val plan = physical(df)
+    assert(plan.collect { case j: BaseJoinExec => j }.isEmpty &&
+      plan.collect { case b: BroadcastExchangeExec => b }.isEmpty,
+      s"pending deletes must not join or broadcast:\n$plan")
+    // the tombstones add no exchange: the point scan is never shuffled for them
+    assert(exchanges(df).size === clean, plan)
+    // the mask is scoped to exactly the files the tombstoned addresses route to
+    val files = graftScans(df).head.plannedFiles
+    val delBuckets = Set(4L, 8L).map(EpochIndex.placeBucket(4, _))
+    assert(files.exists(_.delTouched) && files.exists(!_.delTouched), files)
+    files.foreach(f => assert(f.delTouched === delBuckets(f.bucket), f))
+    assert(df.collect().map(_.getLong(0)).toSet === addrs.toSet -- Set(4L, 8L))
     val fsys = new org.apache.hadoop.fs.Path("/tmp")
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     fsys.delete(new org.apache.hadoop.fs.Path(root), true)

@@ -4,10 +4,12 @@ import java.nio.file.Files
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.util.QueryExecutionListener
 
 import graft.core.Point
-import graft.sources.TimeStore
+import graft.sources.{GraftScan, TimeStore}
 
 /** Write-protocol specs: the writer fence (the enforced form of the
   * single-writer declaration — the reference's lock contract,
@@ -258,6 +260,15 @@ class StoreProtocolSpec extends SparkSpec {
     val expected = Set((2L, 1L, 1L), (2L, 2L, 2L), (2L, 3L, 3L))
     // an in-flight reader: this plan resolved generation 0's file listing…
     val inflight = TimeStore.readSimple(spark, n, 0L, 100L, Seq(2L))
+    // (the scan plans its files lazily: bind them now, as a running scan has)
+    val plan = inflight.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.executedPlan
+      case p => p
+    }
+    val planned = plan.collect { case b: BatchScanExec => b.scan }
+      .collect { case g: GraftScan => g.plannedFiles }.flatten
+    assert(planned.nonEmpty && planned.forall(_.path.contains(s"${n.pointsDir}/")),
+      s"the in-flight scan must be bound to generation 0: $planned")
     // …then TWO compactions commit during its scan. The count-based rule
     // (retire everything below live−1) deleted generation 0 at the second
     // commit and broke the scan; age-based retirement keeps it for the
