@@ -68,46 +68,12 @@ object Bench {
       .split("\\s+")(0).toDouble
     catch { case _: Throwable => -1.0 }
 
-  /** `SPARK_GRAFT_CPUS` as a positive core count (8 when unset). */
-  private[graft] def parseCpus(raw: Option[String]): Int =
-    raw.fold(8)(s => s.trim.toIntOption.filter(_ > 0).getOrElse(
-      throw new IllegalArgumentException(
-        s"SPARK_GRAFT_CPUS must be a positive integer, got '$s'")))
-
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     // parsed once, failing fast: the JSON lines and the per-cpus artifact
     // name below splice this canonical number, never the raw env string
-    val cpus = parseCpus(sys.env.get("SPARK_GRAFT_CPUS")).toString
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      // r16 session tuning (static confs — must be set before the context
-      // exists; both scale-independent, see OPTIMIZATION_r16.md):
-      //  - codegen.cache.maxEntries: the default 100 compiled-class slots
-      //    thrash under this inventory's ~2k distinct codegen units — a
-      //    JobProfile thread dump showed 31/32 executor threads parked in
-      //    CodeGenerator.compile's KeyLock re-compiling classes the warmup
-      //    had already built. Sized to hold the whole suite; per-JVM
-      //    memory, identical benefit on a long-lived cluster driver.
-      .config("spark.sql.codegen.cache.maxEntries", "4096")
-      //  - bypassMergeThreshold=1: with reduce-side width ≤ 200 the bypass
-      //    writer opens one file PER REDUCE PARTITION per map task and
-      //    NIO-concatenates them (32×32 tiny files + mmap/unmap per tiny
-      //    exchange here — the dominant task time in the trainer stages,
-      //    measured by thread dump); the sort writer emits ONE file + index
-      //    per map task. At production shuffle widths (> 200 partitions)
-      //    bypass never applies, so this is a no-op at scale — it only
-      //    removes the small-shuffle file churn.
-      .config("spark.shuffle.sort.bypassMergeThreshold", "1")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // bench checkpoints are per-invocation-ephemeral (see Tables scaladoc)
-    Tables.ephemeralStreamTuning(spark)
+    val cpus = GraftSession.parseCpus(sys.env.get("SPARK_GRAFT_CPUS")).toString
+    val spark = GraftSession.local(cpus.toInt)
 
     def cleanup(): Unit = {
       CacheScope.release(spark)

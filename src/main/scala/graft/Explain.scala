@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-audit main: print the formatted physical plan of declared queries.
   *
   * {{{
@@ -19,12 +17,7 @@ object Explain {
       if (args.length > 1) args.drop(1).toSeq
       else Seq("q1_pricing_summary", "join_inner", "ts_range_scan",
         "dedup_embedding", "text_tfidf", "win_sessionize")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.local(4)
     names.foreach { n =>
       println(s"\n======== $n ========")
       SparkEntry.queries(n)(spark, sfDir).explain("formatted")

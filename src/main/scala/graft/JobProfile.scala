@@ -1,7 +1,93 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
+import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue, CopyOnWriteArrayList}
+import java.util.concurrent.atomic.AtomicLong
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerTaskEnd}
+
+/** The job listener the dev-loop tools share (JobProfile, ScaleProbe):
+  * while `enabled`, each Spark job's wall time, description and task
+  * totals, plus every task's duration by stage. Wall-clock alone
+  * under-reports skew on a many-core box until the hot partition exceeds
+  * what one core absorbs inside the job's natural tail — the max/median
+  * task ratio, and the stage holding the slowest task, expose the
+  * imbalance long before that. Listener events arrive asynchronously:
+  * give the bus a beat after the measured action before reading. */
+private[graft] final class JobTimes extends SparkListener {
+  @volatile var enabled = false
+
+  /** Per-job totals over the job's finished tasks. */
+  final class Totals {
+    val taskMs, gcMs, deserMs, tasks = new AtomicLong()
+  }
+
+  private val started = new ConcurrentHashMap[Int, java.lang.Long]()
+  private val desc = new ConcurrentHashMap[Int, String]()
+  private val stageJob = new ConcurrentHashMap[Int, Int]()
+  private val stageName = new ConcurrentHashMap[Int, String]()
+  private val totals = new ConcurrentHashMap[Int, Totals]()
+  private val taskDurs = new ConcurrentLinkedQueue[(Int, Long)]()
+  /** Finished jobs as (job id, seconds, description), in end order. */
+  val jobs = new CopyOnWriteArrayList[(Int, Double, String)]()
+
+  def clear(): Unit = {
+    Seq(started, desc, stageJob, stageName, totals).foreach(_.clear())
+    taskDurs.clear(); jobs.clear()
+  }
+
+  override def onJobStart(j: SparkListenerJobStart): Unit = if (enabled) {
+    started.put(j.jobId, System.nanoTime())
+    j.stageInfos.foreach { s =>
+      stageJob.put(s.stageId, j.jobId)
+      stageName.put(s.stageId, s.name.takeWhile(_ != '\n'))
+    }
+    desc.put(j.jobId, Option(j.properties)
+      .flatMap(p => Option(p.getProperty("spark.job.description")))
+      .filter(_.nonEmpty)
+      .orElse(j.stageInfos.lastOption.map(_.name))
+      .getOrElse(""))
+  }
+
+  override def onTaskEnd(t: SparkListenerTaskEnd): Unit = if (enabled) {
+    taskDurs.add((t.stageId, t.taskInfo.duration))
+    Option(stageJob.get(t.stageId)).foreach { jid =>
+      val tot = totals.computeIfAbsent(jid, _ => new Totals)
+      Option(t.taskMetrics).foreach { m =>
+        tot.taskMs.addAndGet(m.executorRunTime)
+        tot.gcMs.addAndGet(m.jvmGCTime)
+        tot.deserMs.addAndGet(m.executorDeserializeTime)
+      }
+      tot.tasks.incrementAndGet()
+    }
+  }
+
+  override def onJobEnd(j: SparkListenerJobEnd): Unit = if (enabled)
+    Option(started.get(j.jobId)).foreach { s =>
+      jobs.add((j.jobId, (System.nanoTime() - s) / 1e9,
+        Option(desc.get(j.jobId)).getOrElse("")))
+    }
+
+  def totalsOf(jobId: Int): Totals =
+    Option(totals.get(jobId)).getOrElse(new Totals)
+
+  private def durs: Seq[(Int, Long)] = taskDurs.asScala.toSeq
+  private def median(ds: Seq[Long]): Long = ds.sorted.apply(ds.size / 2)
+
+  def maxTaskMs: Long = durs.map(_._2).maxOption.getOrElse(0L)
+  def medTaskMs: Long = { val ds = durs.map(_._2); if (ds.isEmpty) 0L else median(ds) }
+
+  /** The stage owning the slowest task, as (maxMs, medMs, tasks, name) —
+    * the whole-op max/med ratio can't distinguish "one skewed stage" from
+    * "a long stage among short ones"; this pins WHERE the tail lives. */
+  def hotStage: (Long, Long, Int, String) =
+    if (taskDurs.isEmpty) (0L, 0L, 0, "")
+    else {
+      val (sid, ds) = durs.groupMap(_._1)(_._2).maxBy(_._2.max)
+      (ds.max, median(ds), ds.size, Option(stageName.get(sid)).getOrElse(""))
+    }
+}
 
 /** Dev-loop profiler (optimization rounds): run one declared query with a
   * job-level listener and print each Spark job's wall time, so a gate's
@@ -20,72 +106,10 @@ import org.apache.spark.sql.SparkSession
   */
 object JobProfile {
 
-  private final class JobTimes extends SparkListener {
-    val t0 = new java.util.concurrent.ConcurrentHashMap[Int, Long]()
-    val desc = new java.util.concurrent.ConcurrentHashMap[Int, String]()
-    val stageJob = new java.util.concurrent.ConcurrentHashMap[Int, Int]()
-    val taskMs = new java.util.concurrent.ConcurrentHashMap[Int, java.util.concurrent.atomic.AtomicLong]()
-    val nTasks = new java.util.concurrent.ConcurrentHashMap[Int, java.util.concurrent.atomic.AtomicLong]()
-    val rows = new java.util.concurrent.CopyOnWriteArrayList[(Int, Double, String)]()
-    var enabled = false
-    override def onJobStart(j: SparkListenerJobStart): Unit = if (enabled) {
-      t0.put(j.jobId, System.nanoTime())
-      j.stageIds.foreach(sid => stageJob.put(sid, j.jobId))
-      val d = Option(j.properties)
-        .flatMap(p => Option(p.getProperty("spark.job.description")))
-        .filter(_.nonEmpty)
-        .orElse(j.stageInfos.lastOption.map(_.name))
-        .getOrElse("")
-      desc.put(j.jobId, d)
-    }
-    val gcMs = new java.util.concurrent.ConcurrentHashMap[Int, java.util.concurrent.atomic.AtomicLong]()
-    val deserMs = new java.util.concurrent.ConcurrentHashMap[Int, java.util.concurrent.atomic.AtomicLong]()
-    private def acc(m: java.util.concurrent.ConcurrentHashMap[Int, java.util.concurrent.atomic.AtomicLong],
-                    jid: Int, v: Long): Unit =
-      m.computeIfAbsent(jid, _ => new java.util.concurrent.atomic.AtomicLong()).addAndGet(v)
-    override def onTaskEnd(
-        t: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
-      if (enabled) Option(stageJob.get(t.stageId)).foreach { jid =>
-        Option(t.taskMetrics).foreach { m =>
-          acc(taskMs, jid, m.executorRunTime)
-          acc(gcMs, jid, m.jvmGCTime)
-          acc(deserMs, jid, m.executorDeserializeTime)
-        }
-        acc(nTasks, jid, 0L)
-        nTasks.get(jid).incrementAndGet()
-      }
-    override def onJobEnd(j: SparkListenerJobEnd): Unit = if (enabled) {
-      Option(t0.get(j.jobId)).foreach { s =>
-        rows.add((j.jobId, (System.nanoTime() - s) / 1e9,
-          Option(desc.get(j.jobId)).getOrElse("")))
-      }
-    }
-  }
-
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      // r16 session tuning — see Bench.scala for the rationale
-      .config("spark.sql.codegen.cache.maxEntries", "4096")
-      .config("spark.shuffle.sort.bypassMergeThreshold", "1")
-    // ad-hoc A/B knobs: SPARK_GRAFT_EXTRA_CONF="key=value;key=value"
-    sys.env.get("SPARK_GRAFT_EXTRA_CONF").toSeq
-      .flatMap(_.split(";")).map(_.trim).filter(_.contains("="))
-      .foreach { kv =>
-        val Array(k, v) = kv.split("=", 2)
-        builder.config(k, v)
-      }
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // profile sessions mirror Bench's ephemeral-checkpoint tuning
-    Tables.ephemeralStreamTuning(spark)
+    val spark = GraftSession.local(
+      GraftSession.parseCpus(sys.env.get("SPARK_GRAFT_CPUS").orElse(Some("32"))))
     val listener = new JobTimes
     spark.sparkContext.addSparkListener(listener)
 
@@ -100,27 +124,24 @@ object JobProfile {
     args.foreach { name =>
       val fn = SparkEntry.queries(name)
       try { exec(fn(spark, sfDir)) } catch { case _: Throwable => } finally cleanup()
-      listener.rows.clear(); listener.enabled = true
+      listener.clear(); listener.enabled = true
       val t0 = System.nanoTime()
       exec(fn(spark, sfDir))
       val total = (System.nanoTime() - t0) / 1e9
-      listener.enabled = false
-      cleanup()
       // listener events are async; give the bus a beat to drain
       Thread.sleep(400)
-      val inJob = {
-        var s = 0.0; listener.rows.forEach { case (_, sec, _) => s += sec }; s
-      }
-      println(f"==== $name%s total ${total}%.3f s, ${listener.rows.size()}%d jobs, " +
-        f"in-job ${inJob}%.3f s ====")
-      listener.rows.forEach { case (id, sec, d) =>
-        val tms = Option(listener.taskMs.get(id)).map(_.get()).getOrElse(0L)
-        val nt = Option(listener.nTasks.get(id)).map(_.get()).getOrElse(0L)
-        val gc = Option(listener.gcMs.get(id)).map(_.get()).getOrElse(0L)
-        val de = Option(listener.deserMs.get(id)).map(_.get()).getOrElse(0L)
-        println(f"  job $id%4d ${sec}%7.3f  task-sum ${tms / 1e3}%7.3f  " +
-          f"gc ${gc / 1e3}%6.3f deser ${de / 1e3}%6.3f " +
-          f"tasks $nt%3d  ${d.linesIterator.nextOption().getOrElse("").take(110)}%s")
+      listener.enabled = false
+      cleanup()
+      val jobs = listener.jobs.asScala.toSeq
+      val (hsMax, hsMed, hsTasks, hsName) = listener.hotStage
+      println(f"==== $name%s total ${total}%.3f s, ${jobs.size}%d jobs, " +
+        f"in-job ${jobs.map(_._2).sum}%.3f s, hot stage $hsMax%d/$hsMed%d ms " +
+        f"max/med over $hsTasks%d tasks ($hsName%s) ====")
+      jobs.foreach { case (id, sec, d) =>
+        val t = listener.totalsOf(id)
+        println(f"  job $id%4d ${sec}%7.3f  task-sum ${t.taskMs.get / 1e3}%7.3f  " +
+          f"gc ${t.gcMs.get / 1e3}%6.3f deser ${t.deserMs.get / 1e3}%6.3f " +
+          f"tasks ${t.tasks.get}%3d  ${d.linesIterator.nextOption().getOrElse("").take(110)}%s")
       }
     }
     spark.stop()

@@ -9,7 +9,8 @@ package graft
   * paying them end-to-end.
   *
   * Failure contract: EVERY thunk is awaited (no orphaned in-flight write
-  * behind the caller's back), then the first failure is rethrown — the
+  * behind the caller's back — not even when the calling thread is
+  * interrupted), then the first failure is rethrown — the
   * caller observes exactly what a sequential loop that failed part-way
   * would have left on disk, and the surrounding commit protocol (e.g.
   * [[graft.operators.IndexTables.commitRoot]]'s single `_SUCCESS`) decides
@@ -27,16 +28,25 @@ private[graft] object Par {
           override def call(): Unit = t()
         }))
       var first: Throwable = null
+      var interrupted = false
       futs.foreach { f =>
-        try f.get()
-        catch {
-          case e: java.util.concurrent.ExecutionException =>
-            if (first == null) first = e.getCause
-          case e: InterruptedException =>
-            Thread.currentThread().interrupt()
-            if (first == null) first = e
+        // an interrupt of the caller does not cut the wait short: every
+        // thunk is still awaited (uninterruptibly), then the flag is
+        // re-set and the interrupt rethrown
+        var done = false
+        while (!done) {
+          try { f.get(); done = true }
+          catch {
+            case e: java.util.concurrent.ExecutionException =>
+              if (first == null) first = e.getCause
+              done = true
+            case e: InterruptedException =>
+              if (first == null) first = e
+              interrupted = true
+          }
         }
       }
+      if (interrupted) Thread.currentThread().interrupt()
       if (first != null) throw first
     } finally pool.shutdownNow()
   }

@@ -7,9 +7,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * All tables are driver-generated parquet under `/root/testdata/sf*` (see
   * TESTDATA.md). `events.ts` is physically `timestamp[ns]`, which Spark reads
   * as a nanosecond `LongType` when `spark.sql.legacy.parquet.nanosAsLong` is
-  * set — [[GraftSession.tune]] applies that plus the rest of the standard
-  * session tuning, so every entry point (Verify, Bench, tests) sees identical
-  * semantics.
+  * set — [[tune]] applies that plus the rest of the standard session
+  * tuning on every load, so any session (the [[GraftSession]] entry points,
+  * a cluster session) sees identical semantics.
   */
 object Tables {
   import org.apache.spark.sql.functions.{col, lit, timestamp_micros, unix_micros}
@@ -82,8 +82,8 @@ object Tables {
   }
 
   /** Session tuning for ENTRY POINTS whose streaming checkpoints are
-    * per-invocation-ephemeral local directories (Bench, Verify,
-    * JobProfile, the test fixture) — NOT part of [[tune]]'s framework-wide
+    * per-invocation-ephemeral local directories (every
+    * [[GraftSession.local]] session) — NOT part of [[tune]]'s framework-wide
     * defaults. Spark 4.1 generates + awaits an async CHECKSUM file per
     * checkpoint file write (ChecksumCheckpointFileManager). A stream-
     * stream join commits 4 state stores per partition per micro-batch,

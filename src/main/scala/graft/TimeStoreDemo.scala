@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.core.Point
@@ -13,13 +12,7 @@ import graft.sources.{MutableKV, PointCodec, TimeStore}
   * Run: sbt 'runMain graft.TimeStoreDemo'. Prints one OK line per step. */
 object TimeStoreDemo {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(4)
     val root = Files.createTempDirectory("graft-demo").toString
     val n = TimeStore.namespace(root, "PONIES")
 

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -11,19 +10,8 @@ object Verify {
     val keep = args.lift(2).map(_.r)
     def selected(name: String): Boolean =
       keep.forall(_.findFirstIn(name).isDefined)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // r16 session tuning — see Bench.scala for the rationale
-      .config("spark.sql.codegen.cache.maxEntries", "4096")
-      .config("spark.shuffle.sort.bypassMergeThreshold", "1")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // verify checkpoints are per-invocation-ephemeral (see Tables scaladoc)
-    Tables.ephemeralStreamTuning(spark)
+    val spark = GraftSession.local(
+      GraftSession.parseCpus(sys.env.get("SPARK_GRAFT_CPUS").orElse(Some("4"))))
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries.filter(kv => selected(kv._1)).foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")

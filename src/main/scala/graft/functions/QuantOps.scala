@@ -381,7 +381,9 @@ object QuantKernels {
   * subexpression elimination, exchange reuse and plan-cache hits were
   * silently defeated for repeated model matrices where the old literal
   * forms deduped by value. `deepEquals`/`deepHashCode` restore value
-  * comparison; `m` is the raw array the kernels loop over (never copied).
+  * comparison; `m` is the raw array the kernels loop over (never copied,
+  * never mutated after construction — so the k×dim hash is computed once,
+  * not on every plan-cache or canonicalization lookup).
   * toString is shape-only so plans render stably instead of as an array
   * identity hash. */
 final class Mat2(val m: Array[Array[Double]]) extends Serializable {
@@ -390,8 +392,9 @@ final class Mat2(val m: Array[Array[Double]]) extends Serializable {
       m.asInstanceOf[Array[AnyRef]], r.m.asInstanceOf[Array[AnyRef]])
     case _ => false
   }
-  override def hashCode: Int =
+  private lazy val hash =
     java.util.Arrays.deepHashCode(m.asInstanceOf[Array[AnyRef]])
+  override def hashCode: Int = hash
   override def toString: String =
     s"mat[${m.length}x${m.headOption.map(_.length).getOrElse(0)}]"
 }
@@ -403,8 +406,9 @@ final class Mat3(val m: Array[Array[Array[Double]]]) extends Serializable {
       m.asInstanceOf[Array[AnyRef]], r.m.asInstanceOf[Array[AnyRef]])
     case _ => false
   }
-  override def hashCode: Int =
+  private lazy val hash =
     java.util.Arrays.deepHashCode(m.asInstanceOf[Array[AnyRef]])
+  override def hashCode: Int = hash
   override def toString: String =
     s"books[${m.length}x${m.headOption.map(_.length).getOrElse(0)}" +
       s"x${m.headOption.flatMap(_.headOption).map(_.length).getOrElse(0)}]"

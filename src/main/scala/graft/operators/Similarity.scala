@@ -369,21 +369,6 @@ object Similarity {
         new CorpusRows(corpus, nRows)),
       threshold, maxCell)
 
-  /** Probe-only A/B twin of [[semanticDedupWith]] that runs the r7
-    * WINDOW-form hot-cell census (the wide cached frame through one extra
-    * exchange just to count cells) — kept solely so the key-narrow census
-    * change stays measurable as a same-run pair (VERDICT r7 #3). Never
-    * referenced by a declared query. */
-  private[graft] def semanticDedupWindowCensus(corpus: DataFrame,
-                        idCol: String, vecCol: String,
-                        threshold: Double, cents: Array[Array[Double]],
-                        maxCell: Int = Dedup.DefaultMaxBucket,
-                        literalBudget: Long = CellLiteralBudget): DataFrame =
-    semanticPairTail(
-      semanticAssign(corpus, idCol, vecCol, cents, literalBudget,
-        new CorpusRows(corpus)),
-      threshold, maxCell, windowCensus = true)
-
   /** Rank-1 cell assignment shared by the SemDeDup variants: literal
     * codegen argmax at small k, broadcast-codebook join past
     * `literalBudget` (see [[semanticDedupWith]]). */
@@ -423,8 +408,7 @@ object Similarity {
     * and fold order as recomputing the norms per pair, so the DuckDB
     * twins are unchanged; measured 83 s → 25 s at 320k/640 cells). */
   private def semanticPairTail(assigned0: DataFrame, threshold: Double,
-                               maxCell: Int,
-                               windowCensus: Boolean = false): DataFrame = {
+                               maxCell: Int): DataFrame = {
     val assigned = graft.CacheScope.cache(
       assigned0.select(col("vec_id"), col("cell"), col("v"),
         norm(col("v")).as("n")))
@@ -436,20 +420,10 @@ object Similarity {
     // one row per cell, k rows total — and the under-cap cell set
     // broadcasts back. Cap semantics identical (over-`maxCell` cells skip
     // pairing, their rows stay in the verdict as kept).
-    val inPlay =
-      if (windowCensus)
-        // r7 form, probe-only (semanticDedupWindowCensus): the census rides
-        // a window over the wide frame — one extra wide exchange
-        assigned.withColumn("__cn",
-            count(lit(1)).over(Window.partitionBy(col("cell"))))
-          .filter(col("__cn") <= maxCell)
-          .drop("__cn")
-      else {
-        val okCells = assigned.groupBy(col("cell")).count()
-          .filter(col("count") <= maxCell)
-          .select(col("cell"))
-        assigned.join(broadcast(okCells), Seq("cell"))
-      }
+    val okCells = assigned.groupBy(col("cell")).count()
+      .filter(col("count") <= maxCell)
+      .select(col("cell"))
+    val inPlay = assigned.join(broadcast(okCells), Seq("cell"))
     val dup = inPlay.select(col("cell"), col("vec_id").as("a_id"),
         col("v").as("av"), col("n").as("an"))
       .join(inPlay.select(col("cell"), col("vec_id").as("b_id"),
@@ -561,16 +535,13 @@ object Similarity {
   }
 
   /** [[lshBandedPairs]] with the band width SIZED from the corpus count —
-    * the declared 100 TB path. One `count()` (metadata-only on parquet)
-    * unless the caller already knows n (`nHint` — e.g. a catalog stat).
+    * the declared 100 TB path. One `count()` (metadata-only on parquet).
     * At fixture scale (n ≤ 16·2⁸ = 4096) the sizing floors at r = 8, so
     * the static r=8 oracle twin stays exact at the driver's gate. */
   def lshBandedPairsSized(corpus: DataFrame, idCol: String, vecCol: String,
                           threshold: Double, bands: Int = 4, dim: Int = 64,
-                          maxBucket: Int = Dedup.DefaultMaxBucket,
-                          nHint: Option[Long] = None): DataFrame = {
-    val n = nHint.getOrElse(corpus.count())
-    val r = sizedBandBits(n, bands)
+                          maxBucket: Int = Dedup.DefaultMaxBucket): DataFrame = {
+    val r = sizedBandBits(corpus.count(), bands)
     lshBandedPairs(corpus, idCol, vecCol, threshold,
       planes = bands * r, bands = bands, dim = dim, maxBucket = maxBucket)
   }
@@ -924,24 +895,11 @@ object Similarity {
                   dim: Int,
                   literalBudget: Long = CellLiteralBudget,
                   init: (Int, Int) => Double = centroidComponent,
-                  // exactUpdate=true (default, what every gate runs): the
-                  // centroid UPDATE sums in DECIMAL(20,8) — order-independent
-                  // partials, so the trained model is bit-identical across
-                  // partitionings AND across engines (the DuckDB twin's
-                  // contract). false: plain double sums — the production
-                  // knob for training runs that don't need cross-engine bit
-                  // determinism; the decimal accumulation dominates trainer
-                  // cost (SCALE.md imi_parts: ~k-independent but ~115 s/iter
-                  // at 640k×64) while double partials codegen and combine at
-                  // native width. Centroids still round to 1e-6 either way,
-                  // so drift between the two paths is directly measurable
-                  // (SCALE.md trainer_precision_ab row).
-                  exactUpdate: Boolean = true,
                   // cardinality hint (a catalog stat or an already-run
                   // count) — skips the strategy-decision count job
                   nRows: Option[Long] = None): DataFrame =
     kmeansTrainRows(corpus, vecCol, k, iters, dim, literalBudget, init,
-      exactUpdate, new CorpusRows(corpus, nRows))
+      new CorpusRows(corpus, nRows))
 
   /** [[kmeansTrain]] with the shared per-invocation [[CorpusRows]] —
     * composed trainers (imiTrain, the index writes) pass ONE instance
@@ -949,7 +907,7 @@ object Similarity {
     * per entry-point invocation (ADVICE r12). */
   private[graft] def kmeansTrainRows(corpus: DataFrame, vecCol: String,
                   k: Int, iters: Int, dim: Int, literalBudget: Long,
-                  init: (Int, Int) => Double, exactUpdate: Boolean,
+                  init: (Int, Int) => Double,
                   rows: CorpusRows): DataFrame = {
     require(iters >= 1)
     val spark = corpus.sparkSession
@@ -995,7 +953,7 @@ object Similarity {
       v.select(col("v"),
         graft.functions.QuantOps.argMinL2(col("v"), cents).as("cell"))
     def update(assigned: DataFrame): DataFrame =
-      trainerUpdate(assigned, dim, exactUpdate, rows)
+      trainerUpdate(assigned, dim, rows)
     var cents = Array.tabulate(k, dim)((c, d) => init(c, d))
     for (_ <- 1 until iters) {
       val next = cents.map(_.clone)
@@ -1023,8 +981,9 @@ object Similarity {
     * per-cell member count and per-dimension sums → 1e-6-rounded means.
     * TWO physical shapes, chosen by corpus size like the assignment path
     * (the same [[LiteralAssignMaxRows]] crossover — both shapes compute
-    * the identical order-independent decimal sums, so the trained model is
-    * bit-identical either way; the k-means / IMI gates hash-pin that):
+    * the identical order-independent DECIMAL(20,8) sums, so the trained
+    * model is bit-identical across partitionings, engines and shapes; the
+    * k-means / IMI gates hash-pin that):
     *
     *   - BIG corpora: ONE wide hash aggregate over the n assigned rows —
     *     `count(1)` plus `dim` per-component sums read straight off the
@@ -1043,12 +1002,9 @@ object Similarity {
     *
     * Input must carry (cell, v); returns (cell, d, n_members, c_val). */
   private def trainerUpdate(assigned: DataFrame, dim: Int,
-                            exactUpdate: Boolean,
                             rows: CorpusRows): DataFrame =
     if (rows.n <= LiteralAssignMaxRows) {
-      val sx =
-        if (exactUpdate) sum(col("x").cast("decimal(20,8)")).cast("double")
-        else sum(col("x"))
+      val sx = sum(col("x").cast("decimal(20,8)")).cast("double")
       assigned.select(col("cell"), posexplode(col("v")).as(Seq("d", "x")))
         .groupBy(col("cell"), col("d"))
         .agg(count(lit(1)).as("n_members"), sx.as("sx"))
@@ -1056,9 +1012,7 @@ object Similarity {
           (floor(col("sx") / col("n_members") * 1e6 + 0.5) / 1e6).as("c_val"))
     } else {
       def sx(d: Int): Column =
-        if (exactUpdate)
-          sum(col("v").getItem(d).cast("decimal(20,8)")).cast("double")
-        else sum(col("v").getItem(d))
+        sum(col("v").getItem(d).cast("decimal(20,8)")).cast("double")
       val aggs = (0 until dim).map(d => sx(d).as(s"__sx$d"))
       assigned.groupBy(col("cell"))
         .agg(count(lit(1)).as("n_members"), aggs: _*)
@@ -1131,20 +1085,16 @@ object Similarity {
   def imiTrain(corpus: DataFrame, vecCol: String, groups: Int,
                groupSize: Int, iters: Int, dim: Int,
                literalBudget: Long = CellLiteralBudget,
-               // see [[kmeansTrain]]'s exactUpdate — decimal (gated default)
-               // vs double centroid accumulation, threaded through BOTH the
-               // coarse k-means and the fine Lloyd's steps
-               exactUpdate: Boolean = true,
                nRows: Option[Long] = None)
                : (Array[Array[Double]], Array[Array[Double]]) =
     imiTrainRows(corpus, vecCol, groups, groupSize, iters, dim,
-      literalBudget, exactUpdate, new CorpusRows(corpus, nRows))
+      literalBudget, new CorpusRows(corpus, nRows))
 
   /** [[imiTrain]] with the shared per-invocation [[CorpusRows]] (see
     * [[kmeansTrainRows]]). */
   private[graft] def imiTrainRows(corpus: DataFrame, vecCol: String,
                groups: Int, groupSize: Int, iters: Int, dim: Int,
-               literalBudget: Long, exactUpdate: Boolean,
+               literalBudget: Long,
                rows: CorpusRows)
                : (Array[Array[Double]], Array[Array[Double]]) = {
     require(iters >= 1 && groups >= 1 && groupSize >= 1)
@@ -1153,7 +1103,7 @@ object Similarity {
 
     val coarse = Array.ofDim[Double](groups, dim)
     kmeansTrainRows(corpus, vecCol, groups, iters, dim, literalBudget,
-        centroidComponent, exactUpdate, rows)
+        centroidComponent, rows)
       .collect().foreach { r =>
         coarse(r.getAs[Int]("cell"))(r.getAs[Int]("d")) = r.getAs[Double]("c_val")
       }
@@ -1195,7 +1145,7 @@ object Similarity {
           .groupBy(col("__vid"))
           .agg(min_by(col("cell"), struct(col("dist"), col("cell"))).as("cell"))
         trainerUpdate(routed.join(best, Seq("__vid"))
-            .select(col("cell"), col("v")), dim, exactUpdate, rows)
+            .select(col("cell"), col("v")), dim, rows)
           .select(col("cell"), col("d"), col("c_val"))
           .collect()
           .map(r => (r.getAs[Int]("cell"), r.getAs[Int]("d"),
@@ -1224,7 +1174,7 @@ object Similarity {
         val assigned = v.select(col("v"),
           graft.functions.QuantOps.imiAssignL2(col("v"), coarse, cur,
             groupSize).as("cell"))
-        trainerUpdate(assigned, dim, exactUpdate, rows)
+        trainerUpdate(assigned, dim, rows)
           .select(col("cell"), col("d"), col("c_val"))
           .collect()
           .map(r => (r.getAs[Int]("cell"), r.getAs[Int]("d"),
@@ -1284,7 +1234,7 @@ object Similarity {
     val spark = corpus.sparkSession
     val rows = new CorpusRows(corpus)
     val (coarse, fine) = imiTrainRows(corpus, vecCol, groups, groupSize,
-      iters, dim, literalBudget, exactUpdate = true, rows)
+      iters, dim, literalBudget, rows)
     // inverted lists: serve-time two-level rank-1 assignment — one cell
     // per corpus vector, so a (probe, corpus) pair meets at most once
     val corpusCells = semanticAssign2Level(corpus, idCol, vecCol, fine,
@@ -1405,11 +1355,7 @@ object Similarity {
   def imiIndexWrite(corpus: DataFrame, idCol: String, vecCol: String,
                     path: String, groups: Int, groupSize: Int, iters: Int,
                     dim: Int,
-                    literalBudget: Long = CellLiteralBudget,
-                    // production knob (see [[kmeansTrain]]): double centroid
-                    // accumulation — ≤1 ulp drift, measurably cheaper builds
-                    // (SCALE.md); the gated default stays decimal-exact
-                    exactUpdate: Boolean = true): Unit = {
+                    literalBudget: Long = CellLiteralBudget): Unit = {
     val spark = corpus.sparkSession
     import spark.implicits._
     // model + lists land under the NEXT index-root generation and become
@@ -1419,7 +1365,7 @@ object Similarity {
     val root = IndexTables.nextRootDir(spark, path)
     val sharedRows = new CorpusRows(corpus)
     val (coarse, fine) = imiTrainRows(corpus, vecCol, groups, groupSize,
-      iters, dim, literalBudget, exactUpdate, sharedRows)
+      iters, dim, literalBudget, sharedRows)
     def dump(m: Array[Array[Double]], name: String): Unit =
       spark.createDataset(
           for { c <- m.indices; d <- m(c).indices } yield (c, d, m(c)(d)))
@@ -1610,10 +1556,6 @@ object Similarity {
             e: java.util.Map.Entry[String, (String, AnyRef)]): Boolean =
           size() > ModelCacheMax
       })
-
-  /** Test/probe hook: drop every cached model (the "cold serve" arm of the
-    * SCALE.md repeated-serve A/B). */
-  private[graft] def clearModelCache(): Unit = modelCache.clear()
 
   private def dirFingerprint(spark: org.apache.spark.sql.SparkSession,
                              dirs: Seq[String]): String = {
@@ -1883,8 +1825,7 @@ object Similarity {
                       path: String, iters: Int,
                       groupsOverride: Option[Int] = None,
                       groupSizeOverride: Option[Int] = None,
-                      literalBudget: Long = CellLiteralBudget,
-                      exactUpdate: Boolean = true): Unit = {
+                      literalBudget: Long = CellLiteralBudget): Unit = {
     val root = indexLiveRoot(spark, path)
     val (coarse0, fine0) = imiIndexModel(spark, root)
     val groups = groupsOverride.getOrElse(coarse0.length)
@@ -1903,7 +1844,7 @@ object Similarity {
         .select(col("nbr_id"), col("cv"))))
     try {
       imiIndexWrite(corpus, "nbr_id", "cv", path, groups, groupSize, iters,
-        dim, literalBudget, exactUpdate)
+        dim, literalBudget)
     } finally graft.CacheScope.free(corpus)
     // the committed generation contains no tombstoned rows; exactly the
     // applied tombstone files clear (a delete landing mid-rebuild keeps
@@ -1936,7 +1877,7 @@ object Similarity {
     require(Integer.bitCount(ksub) == 1, "ksub must be a power of two")
     val rows = new CorpusRows(corpus)
     val (coarse, fine) = imiTrainRows(corpus, vecCol, groups, groupSize,
-      iters, dim, literalBudget, exactUpdate = true, rows)
+      iters, dim, literalBudget, rows)
     // corpus index: trained two-level cell + packed PQ code, pinned to its
     // own stage (see pqTopK's CollapseProject note)
     val corpusIdx = graft.CacheScope.cache(
@@ -2029,9 +1970,7 @@ object Similarity {
   def imiPqIndexWrite(corpus: DataFrame, idCol: String, vecCol: String,
                       path: String, groups: Int, groupSize: Int, iters: Int,
                       dim: Int, subs: Int = 8, ksub: Int = 4,
-                      literalBudget: Long = CellLiteralBudget,
-                      // production knob, see [[imiIndexWrite]]
-                      exactUpdate: Boolean = true): Unit = {
+                      literalBudget: Long = CellLiteralBudget): Unit = {
     require(Integer.bitCount(ksub) == 1, "ksub must be a power of two")
     val spark = corpus.sparkSession
     import spark.implicits._
@@ -2039,7 +1978,7 @@ object Similarity {
     val root = IndexTables.nextRootDir(spark, path)
     val sharedRows = new CorpusRows(corpus)
     val (coarse, fine) = imiTrainRows(corpus, vecCol, groups, groupSize,
-      iters, dim, literalBudget, exactUpdate, sharedRows)
+      iters, dim, literalBudget, sharedRows)
     def dump(m: Array[Array[Double]], name: String): Unit =
       spark.createDataset(
           for { c <- m.indices; d <- m(c).indices } yield (c, d, m(c)(d)))
@@ -2227,16 +2166,7 @@ object Similarity {
                     // escape hatch SemDeDup uses at paper-scale k (the
                     // probe shows the flat argmax re-creates that
                     // quadratic here); g=1 degenerates to flat exactly
-                    groupSize: Option[Int] = None,
-                    // Pairing strategy, settled by measurement (SCALE.md):
-                    // ordered (a ≠ b) scoring — 2× the dots — BEATS the
-                    // unordered (a < b) + generator-repackage form at
-                    // dim 64 AND dim 256 (13.8 vs 18.1 s at 160k/d256):
-                    // the codegen'd dot loop is cheaper than exploding
-                    // structs outside whole-stage codegen. The unordered
-                    // form stays probe-measurable for future re-asks
-                    // (wider dims, costlier kernels).
-                    orderedPairs: Boolean = true): DataFrame = {
+                    groupSize: Option[Int] = None): DataFrame = {
     val rows = new CorpusRows(corpus)
     val assigned0 = groupSize.fold(
       semanticAssign(corpus, idCol, vecCol, cents, literalBudget, rows))(g =>
@@ -2260,42 +2190,22 @@ object Similarity {
     // pairs for two filtered aggregates: Σ cell² rows — 320M at the 640k
     // probe, ~19 GB — is exactly the frame you must never persist; the
     // single-pass form keeps pairs pipeline-only, and the probe that
-    // OOM'd now runs at the default heap.)
-    val both =
-      if (orderedPairs)
-        inPlay
-          .select(col("cell"), col("vec_id").as("anchor"),
-            col("label").as("anchor_label"), col("v").as("av"), col("n").as("an"))
-          .join(inPlay.select(col("cell"), col("vec_id").as("nbr"),
-            col("label").as("nbr_label"), col("v").as("bv"), col("n").as("bn")),
-            "cell")
-          .filter(col("anchor") =!= col("nbr"))
-          .select(col("anchor"), col("anchor_label"), col("nbr"),
-            col("nbr_label"),
-            round(dot(col("av"), col("bv")) / (col("an") * col("bn")), 6)
-              .as("sim"))
-      else {
-        // the unordered form: score each (a < b) pair once, a generator
-        // repackages both directions — half the dots, but the explode
-        // materializes rows OUTSIDE whole-stage codegen and loses the A/B
-        val scored = inPlay
-          .select(col("cell"), col("vec_id").as("a_id"),
-            col("label").as("a_label"), col("v").as("av"), col("n").as("an"))
-          .join(inPlay.select(col("cell"), col("vec_id").as("b_id"),
-            col("label").as("b_label"), col("v").as("bv"), col("n").as("bn")),
-            "cell")
-          .filter(col("a_id") < col("b_id"))
-          .select(col("a_id"), col("a_label"), col("b_id"), col("b_label"),
-            round(dot(col("av"), col("bv")) / (col("an") * col("bn")), 6)
-              .as("sim"))
-        scored.select(explode(array(
-            struct(col("a_id").as("anchor"), col("a_label").as("anchor_label"),
-              col("b_id").as("nbr"), col("b_label").as("nbr_label"), col("sim")),
-            struct(col("b_id").as("anchor"), col("b_label").as("anchor_label"),
-              col("a_id").as("nbr"), col("a_label").as("nbr_label"), col("sim"))))
-            .as("p"))
-          .select(col("p.*"))
-      }
+    // OOM'd now runs at the default heap.) Pairs are scored ORDERED
+    // (a ≠ b, 2× the dots): scoring each a < b pair once and repackaging
+    // both directions through a generator lost at dim 64 AND dim 256
+    // (13.8 vs 18.1 s at 160k/d256, SCALE.md) — the explode materializes
+    // rows outside whole-stage codegen, which costs more than the dots.
+    val both = inPlay
+      .select(col("cell"), col("vec_id").as("anchor"),
+        col("label").as("anchor_label"), col("v").as("av"), col("n").as("an"))
+      .join(inPlay.select(col("cell"), col("vec_id").as("nbr"),
+        col("label").as("nbr_label"), col("v").as("bv"), col("n").as("bn")),
+        "cell")
+      .filter(col("anchor") =!= col("nbr"))
+      .select(col("anchor"), col("anchor_label"), col("nbr"),
+        col("nbr_label"),
+        round(dot(col("av"), col("bv")) / (col("an") * col("bn")), 6)
+          .as("sim"))
     val same = col("anchor_label") === col("nbr_label")
     val payload = struct(col("nbr"), col("sim"))
     val ord = struct(col("sim"), (-col("nbr")).as("nid"))
@@ -2325,7 +2235,7 @@ object Similarity {
     val cents = Array.ofDim[Double](cells, dim)
     val rows = new CorpusRows(corpus)
     kmeansTrainRows(corpus, vecCol, cells, iters, dim, literalBudget,
-        centroidComponent, exactUpdate = true, rows).collect().foreach { r =>
+        centroidComponent, rows).collect().foreach { r =>
       cents(r.getAs[Int]("cell"))(r.getAs[Int]("d")) = r.getAs[Double]("c_val")
     }
     // rows.n is known by here at zero extra cost: either the literal-fit

@@ -24,8 +24,8 @@ import graft.functions.{DecodePoints, UnsignedMod}
   *     does this statically; the rule extends the same pruning to ad-hoc
   *     SQL over the raw table.
   *
-  * Register with
-  * `SparkSession.builder().withExtensions(new GraftExtensions)` or
+  * Register with the session builder's
+  * `withExtensions(new GraftExtensions)` or
   * `--conf spark.sql.extensions=graft.plans.GraftExtensions`. The rule
   * discovers indexes via `spark.graft.index.<kind>` session confs
   * (`epoch:buckets` pairs, comma-separated) published by

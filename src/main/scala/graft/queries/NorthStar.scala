@@ -2746,6 +2746,17 @@ object NorthStar {
       .select(col("d1"), col("d2"),
         col("cov_pop").cast("decimal(12,6)").as("c6"))
       .collect()
+    // contract: one non-null cell per upper-triangle position of the
+    // dim×dim matrix. An empty corpus, vectors shorter or longer than dim,
+    // or all-NULL components would leave holes the matvec trips over.
+    val cells = dim * (dim + 1) / 2
+    val found = covRows.count(r =>
+      !r.isNullAt(2) && r.getAs[Int]("d2") < dim)
+    if (found != cells || covRows.length != cells)
+      throw new IllegalArgumentException(
+        s"embPcaPower needs a non-empty corpus of $dim-dim embeddings: " +
+          s"expected $cells non-null covariance cells over dims 0..${dim - 1}, " +
+          s"found $found (of ${covRows.length} covariance rows)")
     val c = Array.ofDim[java.math.BigDecimal](dim, dim)
     covRows.foreach { r =>
       val (i, j) = (r.getAs[Int]("d1"), r.getAs[Int]("d2"))

@@ -1,8 +1,8 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 
 import graft.Tables
 import graft.streaming.StreamingIngest
@@ -37,6 +37,39 @@ object Streaming {
     tmp.toString
   }
 
+  /** Runs a gate's stream to completion: checkpoint under the gate's
+    * workspace, `Trigger.AvailableNow` (everything available at start, in
+    * as many micro-batches as the source's rate limit makes, then stop —
+    * the bounded-replay form of a continuous ingest), start, await. */
+  private[queries] def runToCompletion[T](w: DataStreamWriter[T], tmp: String): Unit =
+    w.option("checkpointLocation", s"$tmp/ckpt")
+      .trigger(Trigger.AvailableNow())
+      .start()
+      .awaitTermination()
+
+  /** Append-mode parquet sink under `$tmp/out`, read back with the sink's
+    * own schema — derived from the frame that was written, since a string
+    * literal would silently couple to the fixture's physical types. */
+  private def appendSink(s: SparkSession, sink: DataFrame, tmp: String): DataFrame = {
+    runToCompletion(sink.writeStream.outputMode("append").format("parquet")
+      .option("path", s"$tmp/out"), tmp)
+    s.read.schema(sink.schema).parquet(s"$tmp/out")
+  }
+
+  /** foreachBatch sink: each micro-batch's `serve` output OVERWRITES
+    * `$out/batch=$id`. foreachBatch is AT-LEAST-ONCE — a retry between sink
+    * write and offset commit re-executes the batch — so the write must be
+    * idempotent (the documented foreachBatch exactly-once recipe), never a
+    * blind append that would duplicate rows. */
+  private[queries] def batchSink[T](src: Dataset[T], tmp: String, out: String,
+                                    outputMode: String = "append")
+                                   (serve: Dataset[T] => DataFrame): Unit =
+    runToCompletion(src.writeStream
+      .foreachBatch { (batch: Dataset[T], id: Long) =>
+        serve(batch).write.mode("overwrite").parquet(s"$out/batch=$id")
+      }
+      .outputMode(outputMode), tmp)
+
   /** Tumbling event counts driven through a streaming execution with
     * `Trigger.AvailableNow` (the bounded-replay form of a continuous
     * ingest — the reference's whole store IS such a replayable event log,
@@ -49,8 +82,6 @@ object Streaming {
     * complete-data batch twin of the same aggregation. */
   def streamEventsTumbling(s: SparkSession, dir: String): DataFrame = {
     val tmp = tempWorkspace("graft-stream-replay")
-    val out = s"$tmp/out"
-    val ckpt = s"$tmp/ckpt"
     val batchSchema = Tables.eventsRaw(s, dir).schema // also applies tune()
     // the file stream source requires a DIRECTORY; select just the events
     // fixture out of it by name. The declared schema must be the RAW file
@@ -58,18 +89,7 @@ object Streaming {
     val src = Tables.nsTs(s.readStream.schema(batchSchema)
       .option("pathGlobFilter", "events.parquet").parquet(dir))
     val sink = StreamingIngest.windowedCounts(src, "ts", watermarkDelay = "1 hour")
-    val q = sink
-      .writeStream
-      .outputMode("append")
-      .format("parquet")
-      .option("path", out)
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    // read-back schema derived from the frame that was written — a string
-    // literal would silently couple to the fixture's physical types
-    s.read.schema(sink.schema).parquet(out)
+    appendSink(s, sink, tmp)
       .select((unix_micros(col("window_start")) * 1000L).as("hour_ns"),
         col("event_type"), col("n_events"),
         col("sum_value").cast("double").as("sum_value"))
@@ -104,24 +124,14 @@ object Streaming {
   def streamTopk(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val tmp = tempWorkspace("graft-stream-topk")
-    val out = s"$tmp/out"
-    val ckpt = s"$tmp/ckpt"
     val batchSchema = Tables.eventsRaw(s, dir).schema
     val src = Tables.nsTs(s.readStream.schema(batchSchema)
       .option("pathGlobFilter", "events.parquet").parquet(dir))
     val sink = StreamingIngest.windowedCounts(src, "ts",
       watermarkDelay = "1 hour", windowLen = "2 hours", slide = Some("1 hour"))
-    val q = sink.writeStream
-      .outputMode("append")
-      .format("parquet")
-      .option("path", out)
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
     val w = Window.partitionBy(col("window_ns"))
       .orderBy(col("n_events").desc, col("event_type"))
-    s.read.schema(sink.schema).parquet(out)
+    appendSink(s, sink, tmp)
       .select((unix_micros(col("window_start")) * 1000L).as("window_ns"),
         col("event_type"), col("n_events"))
       .withColumn("rk", row_number().over(w))
@@ -171,27 +181,14 @@ object Streaming {
     import graft.operators.Similarity
     val tmp = tempWorkspace("graft-stream-ann")
     val out = s"$tmp/out"
-    val ckpt = s"$tmp/ckpt"
     val staged = s"$tmp/staged"
     val corpus = Tables.embeddings(s, dir)
     val probes = corpus.filter(col("vec_id") < 20)
     probes.repartition(4).write.parquet(staged)
     val src = s.readStream.schema(probes.schema)
       .option("maxFilesPerTrigger", 1).parquet(staged)
-    val q = src.writeStream
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        // foreachBatch is AT-LEAST-ONCE: a retry between sink write and
-        // offset commit re-executes the batch, so the write must be
-        // idempotent — each batch OVERWRITES its own batchId-keyed
-        // directory (the documented foreachBatch exactly-once recipe),
-        // never a blind append that would duplicate served results
-        Similarity.bruteForceTopK(corpus, batch, "vec_id", "embedding", 5)
-          .write.mode("overwrite").parquet(s"$out/batch=$id")
-      }
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    batchSink(src, tmp, out)(batch =>
+      Similarity.bruteForceTopK(corpus, batch, "vec_id", "embedding", 5))
     s.read.parquet(out)
       .select(col("query_id"), col("rnk"), col("nbr_id"), col("cos_sim"))
       .orderBy(col("query_id"), col("rnk"))
@@ -219,7 +216,6 @@ object Streaming {
     import graft.operators.Similarity
     val tmp = tempWorkspace("graft-stream-imi-index")
     val out = s"$tmp/out"
-    val ckpt = s"$tmp/ckpt"
     val staged = s"$tmp/staged"
     val idxPath = s"$tmp/index"
     val corpus = Tables.embeddings(s, dir)
@@ -234,16 +230,8 @@ object Streaming {
     probes.repartition(4).write.parquet(staged)
     val src = s.readStream.schema(probes.schema)
       .option("maxFilesPerTrigger", 1).parquet(staged)
-    val q = src.writeStream
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        idx.search(batch, "vec_id", "embedding",
-            k = 5, groupSize = 4, nprobeGroups = 2, nprobeCells = 4)
-          .write.mode("overwrite").parquet(s"$out/batch=$id")
-      }
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    batchSink(src, tmp, out)(batch => idx.search(batch, "vec_id", "embedding",
+      k = 5, groupSize = 4, nprobeGroups = 2, nprobeCells = 4))
     s.read.parquet(out)
       .select(col("query_id"), col("rnk"), col("nbr_id"), col("cos_sim"))
       .orderBy(col("query_id"), col("rnk"))
@@ -286,15 +274,8 @@ object Streaming {
     late.repartition(4).write.parquet(arrivals)
     val src = s.readStream.schema(late.schema)
       .option("maxFilesPerTrigger", 1).parquet(arrivals)
-    val q = src.writeStream
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        idx.assign(batch, "vec_id", "embedding", groupSize = 4)
-          .write.mode("overwrite").parquet(s"$staged/batch=$id")
-      }
-      .option("checkpointLocation", s"$tmp/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    batchSink(src, tmp, staged)(batch =>
+      idx.assign(batch, "vec_id", "embedding", groupSize = 4))
     Similarity.imiIndexAppendAssigned(s, s.read.parquet(staged), idxPath)
     Similarity.indexCompact(s, idxPath)
     Similarity.imiIndexSearch(s, emb.filter(col("vec_id") < 10), "vec_id",
@@ -337,16 +318,8 @@ object Streaming {
     incoming.repartition(4).write.parquet(staged)
     val src = s.readStream.schema(incoming.schema)
       .option("maxFilesPerTrigger", 1).parquet(staged)
-    val q = src.writeStream
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        idx.check(Dedup.shingles(batch, "doc_id", "text", 3),
-            k = 64, r = 4, threshold = 0.5)
-          .write.mode("overwrite").parquet(s"$out/batch=$id")
-      }
-      .option("checkpointLocation", s"$tmp/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    batchSink(src, tmp, out)(batch => idx.check(
+      Dedup.shingles(batch, "doc_id", "text", 3), k = 64, r = 4, threshold = 0.5))
     s.read.parquet(out)
       .select(col("i"), col("j"), col("jac"))
       .orderBy(col("i"), col("j"))
@@ -383,7 +356,6 @@ object Streaming {
     * engine-internal, the surviving key set is the contract. */
   def streamDedupEvents(s: SparkSession, dir: String): DataFrame = {
     val tmp = tempWorkspace("graft-stream-dedup")
-    val out = s"$tmp/out"
     val batchSchema = Tables.eventsRaw(s, dir).schema
     val src = Tables.nsTs(s.readStream.schema(batchSchema)
       .option("pathGlobFilter", "events.parquet").parquet(dir))
@@ -394,16 +366,7 @@ object Streaming {
     val sink = StreamingIngest.dedupStream(src, Seq("user_id"), "ts",
         watermarkDelay = "1 hour")
       .select(col("user_id"), col("ts"))
-    val q = sink
-      .writeStream
-      .outputMode("append")
-      .format("parquet")
-      .option("path", out)
-      .option("checkpointLocation", s"$tmp/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    s.read.schema(sink.schema).parquet(out)
+    appendSink(s, sink, tmp)
       .groupBy(col("user_id"))
       .agg(count(lit(1)).as("n_distinct_events"),
         min(col("ts")).as("first_ts_us_ns"))
@@ -430,23 +393,13 @@ object Streaming {
     * instants. */
   def streamSessionize(s: SparkSession, dir: String): DataFrame = {
     val tmp = tempWorkspace("graft-stream-sess")
-    val out = s"$tmp/out"
     val batchSchema = Tables.eventsRaw(s, dir).schema
     val src = Tables.nsTs(s.readStream.schema(batchSchema)
       .option("pathGlobFilter", "events.parquet").parquet(dir))
       .withColumn("ts", expr("ts div 1000000") * 1000000L)
     val sink = StreamingIngest.sessionCounts(src, "ts", gap = "30 minutes",
         watermarkDelay = "1 hour")
-    val q = sink
-      .writeStream
-      .outputMode("append")
-      .format("parquet")
-      .option("path", out)
-      .option("checkpointLocation", s"$tmp/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    s.read.schema(sink.schema).parquet(out)
+    appendSink(s, sink, tmp)
       .select(col("user_id"),
         (unix_micros(col("session_start")) * 1000L).as("session_start_ns"),
         (unix_micros(col("session_end")) * 1000L).as("session_end_ns"),
@@ -492,7 +445,6 @@ object Streaming {
     * join, which is what the twin computes at the same µs precision. */
   def streamAttribution(s: SparkSession, dir: String): DataFrame = {
     val tmp = tempWorkspace("graft-stream-attr")
-    val out = s"$tmp/out"
     val batchSchema = Tables.eventsRaw(s, dir).schema
     def src() = Tables.nsTs(s.readStream.schema(batchSchema)
       .option("pathGlobFilter", "events.parquet").parquet(dir))
@@ -500,16 +452,7 @@ object Streaming {
         src().filter(col("event_type") === "purchase"),
         src().filter(col("event_type") === "signup"),
         "ts", within = "1 hour", watermarkDelay = "1 hour")
-    val q = sink
-      .writeStream
-      .outputMode("append")
-      .format("parquet")
-      .option("path", out)
-      .option("checkpointLocation", s"$tmp/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    s.read.schema(sink.schema).parquet(out)
+    appendSink(s, sink, tmp)
       .select(col("user_id"),
         (unix_micros(col("purchase_time")) * 1000L).as("purchase_ts_ns"),
         (unix_micros(col("signup_time")) * 1000L).as("signup_ts_ns"))
@@ -539,7 +482,6 @@ object Streaming {
     * join — what the twin computes. */
   def streamEnrich(s: SparkSession, dir: String): DataFrame = {
     val tmp = tempWorkspace("graft-stream-enrich")
-    val out = s"$tmp/out"
     val batchSchema = Tables.eventsRaw(s, dir).schema
     val src = Tables.nsTs(s.readStream.schema(batchSchema)
       .option("pathGlobFilter", "events.parquet").parquet(dir))
@@ -547,18 +489,9 @@ object Streaming {
       .select(col("c_custkey").as("user_id"), col("c_nationkey"))
     val sink = StreamingIngest.enrichStream(src, dim, Seq("user_id"))
       .select(col("user_id"), col("value"), col("c_nationkey"))
-    val q = sink
-      .writeStream
-      .outputMode("append")
-      .format("parquet")
-      .option("path", out)
-      .option("checkpointLocation", s"$tmp/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    // derived, not a string literal: a fixture with BIGINT c_nationkey
-    // would silently break a hardcoded read-back schema (ADVICE r6 low)
-    s.read.schema(sink.schema).parquet(out)
+    // the sink's own read-back schema: a fixture with BIGINT c_nationkey
+    // would silently break a hardcoded one (ADVICE r6 low)
+    appendSink(s, sink, tmp)
       .groupBy(col("c_nationkey").as("nation_key"))
       .agg(count(lit(1)).as("n_events"),
         countDistinct(col("user_id")).as("n_users"),
@@ -588,7 +521,6 @@ object Streaming {
     * batch. */
   def streamDecontaminate(s: SparkSession, dir: String): DataFrame = {
     val tmp = tempWorkspace("graft-stream-decon")
-    val out = s"$tmp/out"
     val batchSchema = s.read.parquet(s"$dir/documents.parquet").schema
     val src = s.readStream.schema(batchSchema)
       .option("pathGlobFilter", "documents.parquet").parquet(dir)
@@ -600,16 +532,7 @@ object Streaming {
     val sink = graft.operators.Dedup.shingles(src, "doc_id", "text", 5)
       .join(broadcast(evalGrams), "s")
       .select(col("doc").as("doc_id"), col("s"))
-    val q = sink
-      .writeStream
-      .outputMode("append")
-      .format("parquet")
-      .option("path", out)
-      .option("checkpointLocation", s"$tmp/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    s.read.schema(sink.schema).parquet(out)
+    appendSink(s, sink, tmp)
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_shared_grams"))
       .orderBy(col("doc_id"))
@@ -659,7 +582,6 @@ object Streaming {
     import graft.core.Point
     val tmp = tempWorkspace("graft-stream-latest")
     val out = s"$tmp/out"
-    val ckpt = s"$tmp/ckpt"
     val staged = s"$tmp/staged"
     Tables.events(s, dir).select(
         (col("user_id") * 2).as("address"),
@@ -669,15 +591,8 @@ object Streaming {
       .repartition(4).write.parquet(staged)
     val src = s.readStream.schema(Point.schema)
       .option("maxFilesPerTrigger", 1).parquet(staged).as[Point]
-    val q = StreamingIngest.statefulLatest(src).writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[Point], id: Long) =>
-        batch.write.mode("overwrite").parquet(s"$out/batch=$id")
-      }
-      .outputMode("update")
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    batchSink(StreamingIngest.statefulLatest(src), tmp, out,
+      outputMode = "update")(_.toDF())
     // final state per address = the newest trigger's emission for it
     val served = s.read.parquet(out)
     graft.operators.TimeSeriesOps.firstWinsDedup(
@@ -744,15 +659,7 @@ object Streaming {
       .schema("key LONG, ts LONG, value DOUBLE")
       .option("maxFilesPerTrigger", 1).parquet(staged)
       .as[StreamingIngest.KeyedValue]
-    val q = transform(src).toDF.writeStream
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        batch.write.mode("overwrite").parquet(s"$out/batch=$id")
-      }
-      .outputMode("append")
-      .option("checkpointLocation", s"$tmp/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    batchSink(transform(src).toDF, tmp, out)(identity)
     s.read.parquet(out)
   }
 
@@ -843,7 +750,6 @@ object Streaming {
     import graft.operators.TextIndex
     val tmp = tempWorkspace("graft-stream-bm25-index")
     val out = s"$tmp/out"
-    val ckpt = s"$tmp/ckpt"
     val staged = s"$tmp/staged"
     val idxPath = s"$tmp/index"
     val docs = Tables.documents(s, dir)
@@ -855,15 +761,7 @@ object Streaming {
     probeQs.repartition(4).write.parquet(staged)
     val src = s.readStream.schema(probeQs.schema)
       .option("maxFilesPerTrigger", 1).parquet(staged)
-    val q = src.writeStream
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        idx.search(batch, "query_id", "qtext", k = 5)
-          .write.mode("overwrite").parquet(s"$out/batch=$id")
-      }
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    batchSink(src, tmp, out)(batch => idx.search(batch, "query_id", "qtext", k = 5))
     s.read.parquet(out)
       .select(col("query_id"), col("rnk"), col("doc_id"), col("score"))
       .orderBy(col("query_id"), col("rnk"))
@@ -874,21 +772,6 @@ object Streaming {
     * retrieval against the same stored statistics. */
   val streamBm25IndexServeSql: String = NorthStar.textBm25IndexRoundtripSql
 
-  /** ONLINE HYBRID retrieval from BOTH frozen persisted indexes (VERDICT
-    * r13 #6) — the production serving shape composed end to end: hybrid is
-    * what a retrieval deployment actually runs
-    * (`ann_hybrid_index_rrf` is its one-shot form), and its online form is
-    * this — both indexes build ONCE before the stream starts, then each
-    * arriving probe micro-batch serves a term-pruned BM25 search + a
-    * probed-cell-pruned IMI search and RRF-fuses the two rankings inside
-    * `foreachBatch`, landing in a batchId-keyed idempotent sink. Fusion is
-    * PER QUERY (full-outer on query_id + a per-query rank window), so
-    * batching the probe stream partitions the output exactly: the union
-    * across micro-batches must hash-equal the one-shot hybrid twin — a
-    * dropped batch, a stale statistic, or a rank drift in either stored
-    * search breaks the hash. Per-batch cost is the two index-pruned
-    * searches over the batch's queries: independent of arrival history,
-    * sub-linear in both corpora. */
   /** Restrict the standing lexical query set to the probe ids of ONE
     * micro-batch — a size-gated broadcast semi-join, the
     * `bm25IndexSearch` term-gate pattern (VERDICT r14: the previous shape
@@ -947,21 +830,16 @@ object Streaming {
     probes.repartition(4).write.parquet(staged)
     val src = s.readStream.schema(probes.schema)
       .option("maxFilesPerTrigger", 1).parquet(staged)
-    val q = src.writeStream
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        // restrict the lexical side to the batch's probe ids so each
-        // query fuses exactly once, in the batch that carries its
-        // semantic probe — a broadcast semi-join, never a literal splice
-        val lex = bmIdx.search(lexForBatch(lexQs, batch, "vec_id"),
-          "query_id", "qtext", k = 10)
-        val sem = imiIdx.search(batch, "vec_id", "embedding",
-          k = 10, groupSize = 4, nprobeGroups = 2, nprobeCells = 4)
-        fuse(lex, sem).write.mode("overwrite").parquet(s"$out/batch=$id")
-      }
-      .option("checkpointLocation", s"$tmp/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    batchSink(src, tmp, out) { batch =>
+      // restrict the lexical side to the batch's probe ids so each query
+      // fuses exactly once, in the batch that carries its semantic probe —
+      // a broadcast semi-join, never a literal splice
+      val lex = bmIdx.search(lexForBatch(lexQs, batch, "vec_id"),
+        "query_id", "qtext", k = 10)
+      val sem = imiIdx.search(batch, "vec_id", "embedding",
+        k = 10, groupSize = 4, nprobeGroups = 2, nprobeCells = 4)
+      fuse(lex, sem)
+    }
     // catch-up: lexical queries whose id surfaced in NO probe batch still
     // owe their lexical-only fused rows (one extra serve per stream
     // LIFECYCLE, not per batch). The anti-join is computed ONCE, persisted,
@@ -1063,14 +941,7 @@ object Streaming {
     late.repartition(4).write.parquet(arrivals)
     val src = s.readStream.schema(late.schema)
       .option("maxFilesPerTrigger", 1).parquet(arrivals)
-    val q = src.writeStream
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        batch.write.mode("overwrite").parquet(s"$staged/batch=$id")
-      }
-      .option("checkpointLocation", s"$tmp/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    batchSink(src, tmp, staged)(identity)
     TextIndex.bm25IndexAppend(s, s.read.parquet(staged), "doc_id", "text",
       idxPath)
     TextIndex.bm25IndexMaybeCompact(s, idxPath, maxFilesPerLeaf = 1)

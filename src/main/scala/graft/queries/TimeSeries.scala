@@ -372,7 +372,6 @@ object TimeSeries {
   def streamStoreDelete(s: SparkSession, dir: String): DataFrame = {
     import graft.core.Point
     import graft.sources.TimeStore
-    import org.apache.spark.sql.streaming.Trigger
     import s.implicits._
     val root = Streaming.tempWorkspace("graft-stream-store-delete")
     val n = TimeStore.namespace(root, "STREAMDEL")
@@ -387,16 +386,12 @@ object TimeSeries {
     reqs.repartition(3).write.parquet(staged)
     val src = s.readStream.schema(reqs.schema)
       .option("maxFilesPerTrigger", 1).parquet(staged)
-    val q = src.writeStream
+    Streaming.runToCompletion(src.writeStream
       .foreachBatch { (batch: org.apache.spark.sql.DataFrame, id: Long) =>
         val rows = batch.collect()
           .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
         TimeStore.deletePointsBatch(s, n, rows, "gate", id)
-      }
-      .option("checkpointLocation", s"$root/ckpt")
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+      }, root)
     def read() = TimeStore.readSimple(s, n, T0, T1, Addrs.map(_ * 2))
       .select(expr("address div 2").as("user_id"), col("time").as("ts_ns"),
         col("payload").as("event_id"))
@@ -816,9 +811,8 @@ object TimeSeries {
     val src = s.readStream.schema(pts0.schema)
       .option("maxFilesPerTrigger", 1).parquet(staged)
       .as[Point]
-    val q = StreamingIngest.start(s, n, src, s"$root/ckpt",
-      trigger = Trigger.AvailableNow())
-    q.awaitTermination()
+    StreamingIngest.start(s, n, src, s"$root/ckpt",
+      trigger = Trigger.AvailableNow()).awaitTermination()
     TimeStore.compact(s, n)
     TimeStore.readSimple(s, n, T0, T1, Addrs.map(_ * 2))
       .select(expr("address div 2").as("user_id"), col("time").as("ts_ns"),
@@ -849,7 +843,6 @@ object TimeSeries {
   def streamStoreTail(s: SparkSession, dir: String): DataFrame = {
     import graft.core.Point
     import graft.sources.TimeStore
-    import org.apache.spark.sql.streaming.Trigger
     import s.implicits._
     val root = Streaming.tempWorkspace("graft-store-tail")
     val n = TimeStore.namespace(root, "TAILED")
@@ -857,20 +850,12 @@ object TimeSeries {
     // NOT "$root/tailed" — differing from the namespace dir only by case
     // would collide on a case-insensitive filesystem
     val out = s"$root/feed"
-    val ckpt = s"$root/ckpt"
     val pts = simplePts(s, dir)
-    def tailPass(gen: Long): Unit = {
-      val q = TimeStore.tailPoints(s, n, generation = Some(gen))
-        .writeStream
-        .foreachBatch { (b: DataFrame, id: Long) =>
-          // batchIds increase across restarts on one checkpoint, so the
-          // batchId-keyed overwrite is the idempotent at-least-once sink
-          b.write.mode("overwrite").parquet(s"$out/batch=$id")
-        }
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-    }
+    // every pass resumes the ONE checkpoint under `root`: batchIds increase
+    // across restarts, so the batchId-keyed overwrite stays idempotent
+    def tailPass(gen: Long): Unit =
+      Streaming.batchSink(TimeStore.tailPoints(s, n, generation = Some(gen)),
+        root, out)(identity)
     var gen = -1L // the ONE tailed generation: resolved once, pinned, tailed
     (0 until 4).foreach { i =>
       TimeStore.writePoints(s, n,

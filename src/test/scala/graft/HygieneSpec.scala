@@ -40,6 +40,18 @@ class HygieneSpec extends SparkSpec {
     assert(ScaleProbe.selects(Seq("a", "store_write"), "store_write"))
   }
 
+  /** Every `.scala` file under `dir` (relative to the repository root),
+    * with its text, in path order. */
+  private def scalaSources(dir: String): Seq[(java.io.File, String)] = {
+    val root = new java.io.File(dir)
+    assert(root.isDirectory, s"run from the repository root: ${root.getAbsolutePath}")
+    def walk(f: java.io.File): Seq[java.io.File] =
+      if (f.isDirectory) f.listFiles().toSeq.sortBy(_.getName).flatMap(walk)
+      else if (f.getName.endsWith(".scala")) Seq(f) else Nil
+    walk(root).map(f =>
+      f -> new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8"))
+  }
+
   /** Calls into parquet-mr's conf-less entry points in `src`: each builds a
     * fresh Hadoop `Configuration` and re-parses its XML defaults (~10 ms)
     * per file: a one-argument `ParquetFileReader.open(` (no top-level
@@ -76,13 +88,7 @@ class HygieneSpec extends SparkSpec {
     assert(confLessParquetOpens("ParquetReader.builder(rs, p).withConf(c)").size === 1)
     assert(confLessParquetOpens("inputs.foreach(w.appendFile)\nw.appendFile(in)").size === 2)
     assert(confLessParquetOpens("r.appendTo(w); w.appendFiles(x)").isEmpty)
-    val root = new java.io.File("src/main/scala")
-    assert(root.isDirectory, s"run from the repository root: ${root.getAbsolutePath}")
-    def walk(f: java.io.File): Seq[java.io.File] =
-      if (f.isDirectory) f.listFiles().toSeq.sortBy(_.getName).flatMap(walk)
-      else if (f.getName.endsWith(".scala")) Seq(f) else Nil
-    val offenders = walk(root).flatMap { f =>
-      val src = new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
+    val offenders = scalaSources("src/main/scala").flatMap { case (f, src) =>
       confLessParquetOpens(src).map(h => s"${f.getPath} $h")
     }
     assert(offenders.isEmpty,
@@ -90,6 +96,34 @@ class HygieneSpec extends SparkSpec {
         "(~10 ms) on every file; open through graft.sources.ParquetOpen " +
         "(open / withReader / foreachGroup) with the caller's conf instead:\n" +
         offenders.mkString("\n"))
+  }
+
+  /** Hand-built sessions in `src`: calls of the session builder on the
+    * `SparkSession` companion, whitespace around the dot allowed. */
+  private def sessionBuilders(src: String): Int =
+    """SparkSession\s*\.\s*builder\s*\(""".r.findAllMatchIn(src).size
+
+  test("one engine config: sessions build only in GraftSession and RegisterNamespace") {
+    // the detector itself (the call spelled in pieces, so this file holds
+    // no builder call of its own)
+    val (ss, b) = ("SparkSession", "builder()")
+    assert(sessionBuilders(s"$ss.$b") === 1)
+    assert(sessionBuilders(s"$ss\n  .$b\n  .master(m)") === 1)
+    assert(sessionBuilders(s"a($ss.$b); b($ss.$b)") === 2)
+    assert(sessionBuilders(s"GraftSession.local(4); $ss.active; $ss.builderX()") === 0)
+    val builders = scalaSources("src").collect {
+      case (f, src) if sessionBuilders(src) > 0 => f.getName
+    }
+    assert(builders.toSet === Set("GraftSession.scala", "RegisterNamespace.scala"),
+      "local entry points and the test fixture take their session from " +
+        "GraftSession.local (RegisterNamespace is the spark-submit entry)")
+    // the static engine confs are set in exactly one place
+    val main = scalaSources("src/main/scala")
+    Seq("spark.sql.codegen.cache.maxEntries",
+        "spark.shuffle.sort.bypassMergeThreshold").foreach { key =>
+      val holders = main.collect { case (f, src) if src.contains(key) => f.getName }
+      assert(holders === Seq("GraftSession.scala"), s"$key set in $holders")
+    }
   }
 
   test("duplicateGroups runs exactly ONE driver action per round") {
@@ -202,10 +236,10 @@ class HygieneSpec extends SparkSpec {
   }
 
   test("bench cpus: a number in every JSON line, or a fast failure") {
-    assert(Bench.parseCpus(None) === 8)
-    assert(Bench.parseCpus(Some(" 32")) === 32)
+    assert(GraftSession.parseCpus(None) === 8)
+    assert(GraftSession.parseCpus(Some(" 32")) === 32)
     Seq("", "eight", "0", "-4", "4.5").foreach { raw =>
-      intercept[IllegalArgumentException](Bench.parseCpus(Some(raw)))
+      intercept[IllegalArgumentException](GraftSession.parseCpus(Some(raw)))
     }
   }
 

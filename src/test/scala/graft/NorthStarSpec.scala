@@ -729,6 +729,30 @@ class NorthStarSpec extends SparkSpec {
     assert(perQuery.values.toSet === Set(vecs.size - 1))
   }
 
+  test("embPcaPower fails with a contract message on short vectors and an empty corpus") {
+    import spark.implicits._
+    def corpus(vecs: Seq[Array[Float]]): String = {
+      val dir = queries.Streaming.tempWorkspace("graft-pca-degenerate")
+      vecs.zipWithIndex.map { case (v, i) => (i.toLong, v) }
+        .toDF("vec_id", "embedding")
+        .write.parquet(s"$dir/embeddings.parquet")
+      dir
+    }
+    val short = corpus(Seq(Array(0.1f, 0.2f, 0.3f), Array(0.3f, -0.1f, 0.5f)))
+    val e = intercept[IllegalArgumentException](
+      queries.NorthStar.embPcaPower(spark, short))
+    assert(e.getMessage.contains("expected 2080 non-null covariance cells"), e.getMessage)
+    assert(e.getMessage.contains("found 6 (of 6 covariance rows)"), e.getMessage)
+    val empty = corpus(Nil)
+    val e2 = intercept[IllegalArgumentException](
+      queries.NorthStar.embPcaPower(spark, empty, dim = 3))
+    assert(e2.getMessage.contains("expected 6 non-null covariance cells"), e2.getMessage)
+    assert(e2.getMessage.contains("found 0 (of 0 covariance rows)"), e2.getMessage)
+    // the same short corpus meets the contract at its own dimension
+    assert(queries.NorthStar.embPcaPower(spark, short, dim = 3).count() === 3)
+    CacheScope.release(spark)
+  }
+
   test("exact dedup collapses identical content only") {
     val g = Dedup.exactGroups(docs, "doc_id", "text")
     assert(g.count() === docs.count())  // fixture has no byte-identical dups

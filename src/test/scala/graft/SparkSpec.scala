@@ -10,17 +10,6 @@ trait SparkSpec extends AnyFunSuite {
 }
 
 object SparkSpec {
-  lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    // test checkpoints are ephemeral temp dirs (see Tables scaladoc)
-    Tables.ephemeralStreamTuning(s)
-  }
+  // the engine configuration every entry point runs under (GraftSession)
+  lazy val session: SparkSession = GraftSession.local(4)
 }
