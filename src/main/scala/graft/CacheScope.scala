@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.storage.StorageLevel
 
 /** Session-wide registry of DataFrames persisted by graft operators.
   *
@@ -21,6 +22,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * After release, re-materializing a previously returned result recomputes
   * it from source — correct, just uncached; the contract is
   * consume-then-release.
+  *
+  * A frame whose plan is already cached — by its caller, or by an earlier
+  * [[cache]] of the same plan — is returned as it is and not registered:
+  * the cache belongs to whoever persisted it, so neither [[free]] nor
+  * [[release]] drops it from under that owner.
   */
 object CacheScope {
 
@@ -28,33 +34,31 @@ object CacheScope {
     new java.util.IdentityHashMap[DataFrame, java.lang.Boolean]())
   private val trackedRdds = new java.util.HashSet[java.lang.Integer]()
 
-  /** Persist `df` (MEMORY_AND_DISK) and register it for the next release. */
-  def cache(df: DataFrame): DataFrame = synchronized {
-    df.persist()
-    tracked.add(df)
-    df
-  }
+  /** Persist `df` (MEMORY_AND_DISK) and register it for the next release;
+    * an already cached plan is returned unregistered. */
+  def cache(df: DataFrame): DataFrame =
+    cache(df, StorageLevel.MEMORY_AND_DISK)
 
   /** [[cache]] at an explicit storage level — the probe harness uses
     * DISK_ONLY so single-JVM scale runs aren't bounded by driver heap
     * (on a cluster the same frames live in executor storage memory). */
-  def cache(df: DataFrame,
-            level: org.apache.spark.storage.StorageLevel): DataFrame =
-    synchronized {
+  def cache(df: DataFrame, level: StorageLevel): DataFrame = synchronized {
+    if (df.storageLevel == StorageLevel.NONE) {
       df.persist(level)
       tracked.add(df)
-      df
     }
+    df
+  }
 
   /** Register RDD ids persisted outside the Dataset cache manager. */
   def trackRddIds(ids: Iterable[Int]): Unit = synchronized {
     ids.foreach(id => trackedRdds.add(Int.box(id)))
   }
 
-  /** Unpersist one tracked frame now (superseded mid-computation). */
+  /** Unpersist one tracked frame now (superseded mid-computation); a frame
+    * [[cache]] did not register is left alone. */
   def free(df: DataFrame): Unit = synchronized {
-    df.unpersist(blocking = false)
-    tracked.remove(df)
+    if (tracked.remove(df)) df.unpersist(blocking = false)
   }
 
   /** Free every tracked cache and checkpoint block. Idempotent. */

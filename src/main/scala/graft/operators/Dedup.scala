@@ -198,39 +198,17 @@ object Dedup {
     * exact verification — 8 bytes per shingle instead of the string;
     * Jaccard over hashed shingles equals Jaccard over shingles up to
     * 2⁻⁶⁴-probability collisions (a count off by one at birthday scale,
-    * the standard trade). Both tables are generational
-    * ([[IndexTables]]): appends land in the live generation,
-    * [[dedupIndexCompact]] folds the fragments. The hot-bucket cap
-    * applies per written batch (a degenerate band is dropped at ingest);
-    * re-asserting it globally belongs to the same maintenance cadence as
-    * compaction. */
+    * the standard trade) — and `sizes/` the per-doc set sizes, so a check
+    * never re-aggregates the stored shingles. All three tables follow
+    * [[IndexTables]]' lifecycle (one root commit; appends, compaction,
+    * tombstones, vacuum). The hot-bucket cap applies per written batch (a
+    * degenerate band is dropped at ingest); [[dedupIndexRecap]]
+    * re-asserts it globally. */
   def dedupIndexWrite(sh: DataFrame, path: String, k: Int, r: Int,
-                      maxBucket: Int = DefaultMaxBucket): Unit = {
-    val spark = sh.sparkSession
-    // all three tables land beneath ONE index-root generation committed
-    // by a single _SUCCESS (the ANN/BM25 families' r14 discipline: a
-    // check must never pair one generation's buckets with another's
-    // shingles or sizes)
-    val root = IndexTables.nextRootDir(spark, path)
-    val shc = CacheScope.cache(sh)
-    shc.count() // two consumers below
-    // three independent writes off the materialized shingle cache,
-    // overlapped from driver threads (guide §2.6); visibility still gated
-    // by the single commitRoot _SUCCESS below
-    graft.Par.run(
-      () => bandedBuckets(shc, k, r, maxBucket)
-        .write.mode("overwrite")
-        .parquet(IndexTables.writeDir(s"$root/buckets")),
-      () => shc.select(col("doc"), xxhash64(col("s"), lit(-1)).as("sh64"))
-        .write.mode("overwrite")
-        .parquet(IndexTables.writeDir(s"$root/shingles")),
-      // per-doc set sizes persist WITH the index so a check never has to
-      // re-aggregate the full stored shingle table (one tiny row per doc)
-      () => shc.groupBy(col("doc")).agg(count(lit(1)).as("n"))
-        .write.mode("overwrite")
-        .parquet(IndexTables.writeDir(s"$root/sizes")))
-    IndexTables.commitRoot(spark, root)
-  }
+                      maxBucket: Int = DefaultMaxBucket): Unit =
+    IndexTables.build(sh.sparkSession, path)(root =>
+      writeTables(sh, root, IndexTables.writeDir, "overwrite", k, r,
+        maxBucket))
 
   /** Append a new batch's signatures/shingles to a persisted dedup index
     * WITHOUT touching the held rows — an ordinary parquet append into each
@@ -239,136 +217,85 @@ object Dedup {
   def dedupIndexAppend(sh: DataFrame, path: String, k: Int, r: Int,
                        maxBucket: Int = DefaultMaxBucket): Unit = {
     val spark = sh.sparkSession
-    val root = IndexTables.liveDir(spark, path)
+    writeTables(sh, IndexTables.liveDir(spark, path),
+      t => IndexTables.liveDir(spark, t), "append", k, r, maxBucket)
+  }
+
+  /** Write the three tables under `root` through `dir` (a fresh nested
+    * generation on build, the live one on append). The writes are
+    * independent once the shingle cache is materialized, so they overlap
+    * from driver threads (guide §2.6); a build's visibility is still
+    * gated by its single root `_SUCCESS`. */
+  private def writeTables(sh: DataFrame, root: String, dir: String => String,
+                          mode: String, k: Int, r: Int,
+                          maxBucket: Int): Unit = {
     val shc = CacheScope.cache(sh)
-    shc.count()
-    // three independent appends into three disjoint live generations,
-    // overlapped like [[dedupIndexWrite]]'s base writes (guide §2.6)
+    shc.count() // three consumers below
     graft.Par.run(
       () => bandedBuckets(shc, k, r, maxBucket)
-        .write.mode("append")
-        .parquet(IndexTables.liveDir(spark, s"$root/buckets")),
+        .write.mode(mode).parquet(dir(s"$root/buckets")),
       () => shc.select(col("doc"), xxhash64(col("s"), lit(-1)).as("sh64"))
-        .write.mode("append")
-        .parquet(IndexTables.liveDir(spark, s"$root/shingles")),
+        .write.mode(mode).parquet(dir(s"$root/shingles")),
       () => shc.groupBy(col("doc")).agg(count(lit(1)).as("n"))
-        .write.mode("append")
-        .parquet(IndexTables.liveDir(spark, s"$root/sizes")))
+        .write.mode(mode).parquet(dir(s"$root/sizes")))
   }
 
-  /** Merge a dedup index's append-fragmented tables —
-    * [[Similarity.indexCompact]]'s generational binary row-group merge
-    * over `buckets/` and `shingles/`. */
+  /** Merge a dedup index's append-fragmented tables
+    * ([[IndexTables.compact]]). */
   def dedupIndexCompact(spark: org.apache.spark.sql.SparkSession,
                         path: String): Unit =
-    // no-op on a never-written path, like every maintenance entry point
-    IndexTables.liveGenOpt(spark, path).map(_._2.toString).foreach(root =>
-      Seq("buckets", "shingles", "sizes").foreach(t =>
-        IndexTables.compactTable(spark, s"$root/$t")))
+    IndexTables.compact(spark, path)
 
   /** Threshold-triggered [[dedupIndexCompact]]
-    * ([[graft.operators.Similarity.indexMaybeCompact]]'s contract): cheap
-    * to call after every append batch; compacts only the tables some leaf
-    * of which exceeds `maxFilesPerLeaf` fragments. Returns whether any
-    * table compacted. */
+    * ([[IndexTables.maybeCompact]]). Returns whether any table
+    * compacted. */
   def dedupIndexMaybeCompact(spark: org.apache.spark.sql.SparkSession,
                              path: String,
-                             maxFilesPerLeaf: Int = 16): Boolean =
-    IndexTables.liveGenOpt(spark, path).map(_._2.toString).exists(root =>
-      Seq("buckets", "shingles", "sizes").map(t =>
-        IndexTables.maybeCompactTable(spark, s"$root/$t", maxFilesPerLeaf))
-        .exists(identity))
+                             maxFilesPerLeaf: Int = IndexTables.MaxFilesPerLeaf)
+      : Boolean =
+    IndexTables.maybeCompact(spark, path, maxFilesPerLeaf)
 
   /** Tombstone-delete documents from a persisted dedup index — the
-    * takedown path ([[Similarity.indexDelete]]'s contract applied to the
-    * dedup family: an opted-out or removed document must stop matching
+    * takedown path: an opted-out or removed document stops matching
     * future arrival batches immediately, without rewriting the held
-    * tables): the ids land as an ordinary append to `tombstones/`, every
-    * [[dedupIndexCheck]] anti-joins the stored buckets against it (ids
-    * only — size-gated broadcast), and [[dedupIndexVacuum]] folds them in
-    * physically. */
+    * tables, until [[dedupIndexVacuum]] folds it in. See [[IndexTables]]
+    * (tombstones). */
   def dedupIndexDelete(spark: org.apache.spark.sql.SparkSession,
                        ids: DataFrame, idCol: String, path: String): Unit =
-    ids.select(col(idCol).cast("long").as("doc")).distinct()
-      .write.mode("append").parquet(s"$path/tombstones")
+    IndexTables.tombstone(path,
+      ids.select(col(idCol).cast("long").as("doc")).distinct())
 
-  /** Physically fold the tombstones into all three dedup-index tables —
-    * as ONE new index-root generation (r14): each table rewrites without
-    * the tombstoned docs beneath root generation N+1, committed by a
-    * single `_SUCCESS` (a reader never pairs one generation's buckets
-    * with another's shingle sets), then exactly the applied tombstone
-    * files are removed. */
+  /** Physically fold the tombstones into all three dedup-index tables as
+    * ONE new index-root generation (r14): a reader never pairs one
+    * generation's buckets with another's shingle sets. See
+    * [[IndexTables]] (vacuum). */
   def dedupIndexVacuum(spark: org.apache.spark.sql.SparkSession,
-                       path: String): Unit = {
-    val tombDir = s"$path/tombstones"
-    val conf = spark.sparkContext.hadoopConfiguration
-    val applied = graft.sources.ParquetConcat.dataFiles(conf,
-      new org.apache.hadoop.fs.Path(tombDir))
-    if (applied.isEmpty) return
-    val rootOpt = IndexTables.liveGenOpt(spark, path).map(_._2.toString)
-    if (rootOpt.isEmpty) return // tombstones stay pending until a build
-    val tomb = spark.read
-      .parquet(applied.map(_.getPath.toString): _*)
-      .select(col("doc"))
-    val oldRoot = rootOpt.get
-    val newRoot = IndexTables.nextRootDir(spark, path)
-    Seq("buckets", "shingles", "sizes").foreach { t =>
-      spark.read
-        .parquet(IndexTables.liveDir(spark, s"$oldRoot/$t"))
-        .join(tomb, Seq("doc"), "left_anti")
-        .write.parquet(IndexTables.writeDir(s"$newRoot/$t"))
+                       path: String): Unit =
+    IndexTables.foldTombstones(spark, path) { (oldRoot, tomb) =>
+      IndexTables.build(spark, path)(newRoot =>
+        IndexTables.dataTables(spark, oldRoot).foreach(t =>
+          tomb.antiJoin(spark.read.parquet(
+              IndexTables.liveDir(spark, s"$oldRoot/$t")), "doc")
+            .write.parquet(IndexTables.writeDir(s"$newRoot/$t"))))
     }
-    IndexTables.commitRoot(spark, newRoot)
-    val f = new org.apache.hadoop.fs.Path(tombDir).getFileSystem(conf)
-    applied.foreach(st => f.delete(st.getPath, false))
-  }
-
-  /** Anti-join a stored dedup-index table against the tombstones (no-op
-    * when none exist); broadcast gated on the tombstone table's on-disk
-    * size like [[Similarity]]'s probe fan-outs. */
-  private def applyDocTombstones(spark: org.apache.spark.sql.SparkSession,
-                                 path: String, df: DataFrame): DataFrame = {
-    val dir = s"$path/tombstones"
-    val files = graft.sources.ParquetConcat.dataFiles(
-      spark.sparkContext.hadoopConfiguration,
-      new org.apache.hadoop.fs.Path(dir))
-    if (files.isEmpty) df
-    else {
-      val tomb = spark.read.parquet(dir).select(col("doc"))
-      val hinted =
-        if (files.map(_.getLen).sum <= Similarity.MaxProbeBroadcastBytes)
-          broadcast(tomb)
-        else tomb
-      df.join(hinted, Seq("doc"), "left_anti")
-    }
-  }
 
   /** Re-assert the hot-bucket cap GLOBALLY over the stored band buckets —
     * the maintenance step the per-batch cap can't provide: each
     * write/append caps within its own batch, so a degenerate (band, bh)
     * bucket can cross the cap only by ACCUMULATING across batches, and
     * until this runs such a bucket inflates every incoming batch's
-    * candidate join. A relational rewrite into generation N+1 (same
-    * reader-safe swap as [[Similarity.indexVacuum]]); after it the stored
-    * side's cap semantics are exactly [[minhashLshPairsCross]]'s
-    * whole-corpus cap. Run with [[dedupIndexCompact]] on the maintenance
-    * cadence. */
+    * candidate join. A rewrite of `buckets/` into its generation N+1
+    * ([[IndexTables.rewriteTable]]; cap semantics touch no other table);
+    * after it the stored side's cap semantics are exactly
+    * [[minhashLshPairsCross]]'s whole-corpus cap. No-op on a never-written
+    * path. */
   def dedupIndexRecap(spark: org.apache.spark.sql.SparkSession,
                       path: String,
-                      maxBucket: Int = DefaultMaxBucket): Unit = {
-    // single-table rewrite: cap semantics touch only the band buckets, so
-    // a nested data-generation swap suffices (no cross-table statistics);
-    // no-op on a never-written path like every maintenance entry point
-    val rootOpt = IndexTables.liveGenOpt(spark, path).map(_._2.toString)
-    if (rootOpt.isEmpty) return
-    val table = s"${rootOpt.get}/buckets"
-    IndexTables.liveGenOpt(spark, table).foreach { case (g, live) =>
-      capHotBuckets(spark.read.parquet(live.toString), maxBucket)
-        .write.mode("overwrite")
-        .parquet(s"$table/${IndexTables.genName(g + 1)}")
-      IndexTables.retireSuperseded(spark, table)
+                      maxBucket: Int = DefaultMaxBucket): Unit =
+    IndexTables.liveGenOpt(spark, path).foreach { case (_, root) =>
+      IndexTables.rewriteTable(spark, s"$root/buckets")(
+        capHotBuckets(_, maxBucket))
     }
-  }
 
   /** Near-dup pairs of an incoming batch against a PERSISTED dedup index —
     * [[minhashLshPairsCross]] with the corpus side read from the stored
@@ -405,8 +332,8 @@ object Dedup {
     // ONE root resolution per open: buckets, shingles and sizes must
     // come from the same index generation
     private val root = IndexTables.liveDir(spark, path)
-    private val stored = applyDocTombstones(spark, path, spark.read
-      .parquet(IndexTables.liveDir(spark, s"$root/buckets")))
+    private val stored = IndexTables.tombstones(spark, path).antiJoin(
+      spark.read.parquet(IndexTables.liveDir(spark, s"$root/buckets")), "doc")
     private val storedSh = spark.read
       .parquet(IndexTables.liveDir(spark, s"$root/shingles"))
     private val storedSizes = spark.read

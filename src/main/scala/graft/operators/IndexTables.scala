@@ -1,39 +1,93 @@
 package graft.operators
 
-import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.SparkSession
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.broadcast
 
 import graft.sources.{ParquetConcat, SerializableHadoopConf, TimeStore}
 
-/** Generational storage for the persisted ANN index DATA tables (`lists/`,
-  * `codes/`) — the store's reader-safe compaction discipline
-  * ([[graft.sources.TimeStore.compact]]) applied to the index family
-  * (VERDICT r12 #1): a steady stream of [[Similarity.imiIndexAppend]]-style
-  * appends lands each batch as its own parquet file, fragmenting the table
-  * into exactly the small-file layout whose search cost SCALE.md's
-  * imi_index_ab measured (26.6 s across 1,753 file-tasks vs 4.7 s).
+/** The one storage lifecycle of every persisted index — the ANN indexes
+  * ([[Similarity.imiIndexWrite]], [[Similarity.imiPqIndexWrite]],
+  * [[Similarity.pqIndexWrite]]), the BM25 index ([[TextIndex]]) and the
+  * dedup signature index ([[Dedup.dedupIndexWrite]]). The families decide
+  * what their tables hold; build, append, compaction, tombstones and
+  * vacuum run here. This is the store's rollover/compaction discipline
+  * ([[graft.sources.TimeStore.compact]]; rados-timestore
+  * `StoreHelpers.hs:194-221` keeps bucket objects file-sized) applied to
+  * the index tables.
   *
-  * Layout: a table is a directory of `gen-NNNNNN` generations. The LIVE
-  * generation is the newest one whose `_SUCCESS` committed (the marker
-  * lands atomically at Spark job commit, so the compaction swap is atomic
-  * from a reader's view — before commit readers resolve the old
-  * generation, after it the new one; never neither). Appends are ordinary
-  * parquet appends INTO the live generation. [[compactTable]] merges the
-  * live generation's accumulated files — one task per leaf directory,
-  * respecting `cell=` partitioning — into generation N+1 by binary
-  * row-group concatenation ([[graft.sources.ParquetConcat]]: raw page
-  * copy, no decode), then retires superseded generations only after
-  * [[graft.sources.TimeStore.LeaseTimeoutMs]], dated from a
-  * `_SUPERSEDED_AT` marker stamped at first observation (the superseder's
-  * own `_SUCCESS` mtime refreshes on every append, which would retain the
-  * old copy forever — the store's r4 lesson, reused unchanged).
+  * '''Layout.''' An index path holds `gen-NNNNNN` ROOT generations and a
+  * `tombstones/` table:
+  * {{{
+  *   path/gen-000003/_SUCCESS               root commit marker
+  *   path/gen-000003/coarse/ fine/ books/   MODEL tables: plain parquet
+  *   path/gen-000003/lists/gen-000001/...   DATA tables: generational
+  *   path/tombstones/part-*.parquet         pending deletes, any generation
+  * }}}
+  * A table is generational when it holds `gen-*` directories; the LIVE
+  * generation is the newest one whose `_SUCCESS` committed. The marker
+  * lands last (atomically at Spark job commit), so every swap is atomic
+  * from a reader's view: before the commit readers resolve the old
+  * generation, after it the new one, never neither. Readers resolve the
+  * root ONCE per serve ([[liveDir]]) and derive model and data dirs from
+  * it, so they never pair one build's model with another's data.
   *
-  * Reference analog: the rollover/compaction machinery that keeps bucket
-  * objects file-sized (rados-timestore `StoreHelpers.hs:194-221`).
+  * '''Build''' ([[build]]): a full write — a fresh build, a rebuild, a
+  * vacuum that recomputes statistics — lands model and data (base data
+  * under [[writeDir]]) beneath root generation N+1, made visible by one
+  * `_SUCCESS` ([[commitRoot]]).
+  *
+  * '''Append''' ([[appendLive]]): an ordinary parquet append into a data
+  * table's live generation, matching its `cell=` partitioning. Model
+  * tables are never appended to.
+  *
+  * '''Compaction''' ([[compact]], [[maybeCompact]]): each data table of
+  * the live root — found as the root's children that hold `gen-*`
+  * generations, so model tables are never touched — merges its live
+  * generation into generation N+1 with one file per leaf directory (per
+  * `cell=` partition when present) by binary row-group concatenation
+  * ([[graft.sources.ParquetConcat]]: raw page copy, no decode).
+  * [[maybeCompact]] runs it only where some leaf holds more than
+  * `maxFilesPerLeaf` files — the store's `maybeRollover`, with
+  * files-per-leaf as the unit of fragmentation (SCALE.md's imi_index_ab
+  * measured search at 26.6 s across 1,753 file-tasks vs 4.7 s compacted).
+  *
+  * '''Tombstones''' ([[tombstone]], [[tombstones]]): a delete appends key
+  * rows to `path/tombstones` without rewriting the index; serves anti-join
+  * against the files listed once ([[Tombstones.antiJoin]]), broadcast
+  * while those files' bytes stay under [[MaxProbeBroadcastBytes]].
+  *
+  * '''Vacuum''' ([[foldTombstones]]): list the pending files; with none,
+  * or no live root, do nothing; else rewrite the index without those keys
+  * (a per-table [[rewriteTable]] into table generation N+1, or a new root
+  * generation when statistics must be recomputed), then delete exactly
+  * the listed files — a delete landing mid-vacuum stays pending.
+  *
+  * '''Retirement.''' A superseded generation (table or root) is deleted
+  * only after [[graft.sources.TimeStore.LeaseTimeoutMs]], dated from a
+  * `_SUPERSEDED_AT` marker stamped at first observation — not from the
+  * superseder's `_SUCCESS` mtime, which appends refresh forever (the
+  * store's r4 lesson). A reader that resolved the old generation keeps
+  * scanning it meanwhile.
+  *
+  * Single maintainer: appends, compaction, vacuum and rebuild of one index
+  * do not run concurrently.
   */
 private[graft] object IndexTables {
 
-  def genName(g: Int): String = f"gen-$g%06d"
+  private def genName(g: Int): String = f"gen-$g%06d"
+
+  /** Default `maxFilesPerLeaf` of every `*MaybeCompact` entry point. */
+  val MaxFilesPerLeaf = 16
+
+  /** Ceiling on a side's estimated bytes under which it is broadcast
+    * into a join: probe fan-outs, query sets, tombstones. Past it a bulk
+    * side would exceed the broadcast limit, so the planner picks. */
+  private[graft] val MaxProbeBroadcastBytes = 64L << 20
+
+  /** `df` hinted for broadcast when `estBytes` fits the ceiling. */
+  def maybeBroadcast(df: DataFrame, estBytes: Long): DataFrame =
+    if (estBytes <= MaxProbeBroadcastBytes) broadcast(df) else df
 
   /** Byte ceiling under which a SINGLE-leaf compaction merges driver-side
     * instead of through a one-task Spark job — below it the job's
@@ -43,11 +97,13 @@ private[graft] object IndexTables {
   private def fsOf(spark: SparkSession, dir: String): FileSystem =
     new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
+  private def isGen(st: FileStatus): Boolean =
+    st.isDirectory && st.getPath.getName.startsWith("gen-")
+
   /** All on-disk generations of a table, ascending: (generation, path). */
   private def generations(f: FileSystem, table: Path): Seq[(Int, Path)] =
     if (!f.exists(table)) Seq.empty
-    else f.listStatus(table).toSeq
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("gen-"))
+    else f.listStatus(table).toSeq.filter(isGen)
       .flatMap(st => st.getPath.getName.stripPrefix("gen-").toIntOption
         .map(g => (g, st.getPath)))
       .sortBy(_._1)
@@ -62,8 +118,7 @@ private[graft] object IndexTables {
     * Fails loudly on a LEGACY (pre-generational) layout — real content
     * directly under the path with no `gen-*` directory at all. Treating
     * such a path as "never written" is the worst of both worlds (ADVICE
-    * r14): the maintenance entry points would silently no-op forever
-    * (tombstones pending, fragments accumulating) while serves throw
+    * r14): maintenance would silently no-op forever while serves throw
     * "index never written?" against data that plainly exists. There is no
     * silent migration: the caller must rebuild (or move the tables under
     * a committed `gen-000000`) deliberately. `tombstones` is the one
@@ -96,136 +151,17 @@ private[graft] object IndexTables {
       .getOrElse(throw new IllegalStateException(
         s"no complete generation under $table — index never written?"))
 
-  /** Stamp/retire generations superseded by the current live one under the
-    * lease-horizon rule — shared by [[compactTable]] and
-    * [[graft.operators.Similarity.indexVacuum]]'s rewrite. */
-  def retireSuperseded(spark: SparkSession, table: String): Unit = {
-    val f = fsOf(spark, table)
-    val gens = generations(f, new Path(table))
-    gens.filter(g => isComplete(f, g._2)).lastOption.foreach {
-      case (live, _) =>
-        retireable(f, gens, live).foreach(g => f.delete(g._2, true))
-    }
+  /** A full index build: `write(root)` fills root generation N+1, then
+    * [[commitRoot]] makes it visible. */
+  def build(spark: SparkSession, path: String)(write: String => Unit): Unit = {
+    val root = nextRootDir(spark, path)
+    write(root)
+    commitRoot(spark, root)
   }
 
-  /** Whether the live generation is `cell=` partitioned — appends must
-    * match the base layout. */
-  def cellPartitioned(spark: SparkSession, table: String): Boolean = {
-    val live = new Path(liveDir(spark, table))
-    fsOf(spark, table).listStatus(live)
-      .exists(_.getPath.getName.startsWith("cell="))
-  }
-
-  /** Compact a table's live generation into one file per leaf directory
-    * (the `cell=` partitions when present, else the generation root) as
-    * generation N+1. One executor task per leaf — the merge is IO-bound
-    * and a retried task overwrites its own output, so tasks are
-    * idempotent. Index writers all emit ONE physical schema by
-    * construction, so a mixed-schema leaf is corruption and fails loudly
-    * (no silent re-encode fallback here, unlike the store's evolving point
-    * schema). No-op on a table that does not exist (an index family
-    * without that data table). */
-  def compactTable(spark: SparkSession, table: String): Unit = {
-    val f = fsOf(spark, table)
-    val root = new Path(table)
-    val gens = generations(f, root)
-    gens.filter(g => isComplete(f, g._2)).lastOption.foreach {
-      case (cur, curPath) =>
-        val next = new Path(root, genName(cur + 1))
-        if (f.exists(next)) f.delete(next, true) // dead earlier attempt
-        val cells = f.listStatus(curPath).toSeq
-          .filter(st => st.isDirectory && st.getPath.getName.startsWith("cell="))
-          .map(_.getPath.getName).sorted
-        val leaves = if (cells.isEmpty) Seq("") else cells
-        val (curStr, nextStr) = (curPath.toString, next.toString)
-        def mergeLeaf(conf: org.apache.hadoop.conf.Configuration,
-                      rel: String): Unit = {
-          val src = if (rel.isEmpty) new Path(curStr)
-                    else new Path(s"$curStr/$rel")
-          val dstDir = if (rel.isEmpty) nextStr else s"$nextStr/$rel"
-          val files = ParquetConcat.dataFiles(conf, src)
-          require(
-            ParquetConcat.mergeSameSchema(conf, files,
-              new Path(s"$dstDir/compacted-0.parquet")),
-            s"mixed physical schemas under $src — index writers emit one " +
-              "schema; refusing to guess a merge")
-        }
-        val conf0 = spark.sparkContext.hadoopConfiguration
-        val smallSingleLeaf = leaves.size == 1 && {
-          val src = if (leaves.head.isEmpty) curPath
-                    else new Path(s"$curStr/${leaves.head}")
-          ParquetConcat.dataFiles(conf0, src).map(_.getLen).sum <=
-            LocalMergeMaxBytes
-        }
-        if (smallSingleLeaf)
-          // driver-side: one small leaf's byte copy sits under Spark's
-          // ~300 ms per-job scheduling floor (the kv_point_ops lesson —
-          // never ride a job to move a few MB); every real multi-leaf or
-          // large table still fans out one IO-bound task per leaf
-          mergeLeaf(conf0, leaves.head)
-        else {
-          val sconf = new SerializableHadoopConf(conf0)
-          spark.sparkContext.parallelize(leaves, leaves.size)
-            .foreach(rel => mergeLeaf(sconf.conf, rel))
-        }
-        f.create(new Path(next, "_SUCCESS"), true).close()
-        retireable(f, generations(f, root), cur + 1)
-          .foreach(g => f.delete(g._2, true))
-    }
-  }
-
-  /** Threshold-triggered [[compactTable]] — the index family's
-    * `maybeRollover` (the store keeps bucket objects file-sized by
-    * checking a threshold on every append, `TimeStore.maybeRollover`;
-    * here the unit of fragmentation is files-per-leaf, the exact quantity
-    * SCALE.md's imi_index_ab measured dominating search). Call it after
-    * appends on whatever cadence the ingest runs; it compacts only when
-    * some leaf directory of the live generation holds more than
-    * `maxFilesPerLeaf` data files, so a quiet table costs one listing.
-    * Returns whether a compaction ran. */
-  def maybeCompactTable(spark: SparkSession, table: String,
-                        maxFilesPerLeaf: Int = 16): Boolean = {
-    val f = fsOf(spark, table)
-    val live = liveGenOpt(spark, table)
-    if (live.isEmpty) return false
-    val livePath = live.get._2
-    val cells = f.listStatus(livePath).toSeq
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("cell="))
-      .map(_.getPath)
-    val leaves = if (cells.isEmpty) Seq(livePath) else cells
-    val conf = spark.sparkContext.hadoopConfiguration
-    val over = leaves.exists(l =>
-      ParquetConcat.dataFiles(conf, l).size > maxFilesPerLeaf)
-    if (over) compactTable(spark, table)
-    over
-  }
-
-  // ---- index-ROOT generations (VERDICT r13 #1) --------------------------
-  //
-  // A persisted ANN index is a MODEL (codebooks) plus DATA assigned under
-  // that model. Compaction and vacuum rewrite data bytes the model already
-  // described, so per-TABLE generations suffice; a REBUILD (retrain)
-  // changes model and assignments TOGETHER, and a reader interleaving
-  // "load model" / "scan lists" across two independently-committed table
-  // swaps could pair a new model with old-model assignments — wrong cells,
-  // silently wrong results. So the index root `path` is ITSELF a
-  // generational table: each `gen-NNNNNN` under it is one complete,
-  // internally-consistent index (model tables + nested data-table
-  // generations), committed by a single root `_SUCCESS` created LAST.
-  // Readers resolve the root ONCE per serve ([[liveDir]] on the index
-  // path) and derive model and data dirs from it — old index or new index,
-  // never a mix. Appends/compacts operate INSIDE the live root generation;
-  // a rebuild (or a fresh `*IndexWrite` over an existing path) lands as
-  // root generation N+1 and the superseded index retires on the lease
-  // horizon like every other generation. Tombstones live OUTSIDE the
-  // generations at `path/tombstones` (ids are valid against any
-  // generation; the operation that folds them in deletes them).
-
-  /** Where the NEXT full index build (write or rebuild) lands: root
-    * generation N+1 (0 for a fresh path), any incomplete earlier attempt
-    * at that slot removed. The caller writes model + data beneath it, then
-    * [[commitRoot]]s. */
-  def nextRootDir(spark: SparkSession, path: String): String = {
+  /** Where the NEXT full index build lands: root generation N+1 (0 for a
+    * fresh path), any incomplete earlier attempt at that slot removed. */
+  private def nextRootDir(spark: SparkSession, path: String): String = {
     val next = liveGenOpt(spark, path).map(_._1 + 1).getOrElse(0)
     val f = fsOf(spark, path)
     val p = new Path(path, genName(next))
@@ -235,35 +171,205 @@ private[graft] object IndexTables {
 
   /** The single atomic commit point of a full index build: create the root
     * generation's `_SUCCESS` (readers resolve the new index from here on)
-    * and start the superseded index's lease-horizon retirement clock. */
+    * and start the superseded index's retirement clock. */
   def commitRoot(spark: SparkSession, root: String): Unit = {
     val rootPath = new Path(root)
     fsOf(spark, root).create(new Path(rootPath, "_SUCCESS"), true).close()
-    retireSuperseded(spark, rootPath.getParent.toString)
+    retireSuperseded(fsOf(spark, root), rootPath.getParent)
   }
 
-  /** Superseded complete generations old enough to retire — see the
-    * object Scaladoc for why the clock is a first-observation marker, not
-    * the superseder's `_SUCCESS` mtime. */
-  private def retireable(f: FileSystem, gens: Seq[(Int, Path)],
-                         live: Int): Seq[(Int, Path)] = {
-    val complete = gens.filter(g => isComplete(f, g._2))
-    complete.filter(_._1 < live).filter { case (_, p) =>
+  /** The data tables of a root generation, by name: its children that
+    * hold `gen-*` generations. Model tables hold plain files and are not
+    * listed. */
+  def dataTables(spark: SparkSession, root: String): Seq[String] = {
+    val f = fsOf(spark, root)
+    f.listStatus(new Path(root)).toSeq
+      .filter(st => st.isDirectory && f.listStatus(st.getPath).exists(isGen))
+      .map(_.getPath.getName).sorted
+  }
+
+  /** Whether a live generation is `cell=` partitioned. */
+  private def cellPartitioned(f: FileSystem, live: Path): Boolean =
+    f.listStatus(live).exists(_.getPath.getName.startsWith("cell="))
+
+  /** The leaf directories of a live generation: its `cell=` partitions,
+    * or the generation itself when unpartitioned. */
+  private def leaves(f: FileSystem, live: Path): Seq[Path] = {
+    val cells = f.listStatus(live).toSeq
+      .filter(st => st.isDirectory && st.getPath.getName.startsWith("cell="))
+      .map(_.getPath).sortBy(_.getName)
+    if (cells.isEmpty) Seq(live) else cells
+  }
+
+  /** Append `df` to `table`'s live generation, matching its `cell=`
+    * partitioning. Fails loudly on a table never written. */
+  def appendLive(df: DataFrame, table: String): Unit = {
+    val live = liveDir(df.sparkSession, table)
+    val out = df.write.mode("append")
+    (if (cellPartitioned(fsOf(df.sparkSession, table), new Path(live)))
+       out.partitionBy("cell")
+     else out).parquet(live)
+  }
+
+  /** Rewrite `table`'s live generation through `f` into generation N+1
+    * (`cell=` partitioning kept), then retire what that supersedes.
+    * No-op on a table with no live generation. */
+  def rewriteTable(spark: SparkSession, table: String)(
+      f: DataFrame => DataFrame): Unit =
+    liveGenOpt(spark, table).foreach { case (g, live) =>
+      val out = f(spark.read.parquet(live.toString)).write.mode("overwrite")
+      (if (cellPartitioned(fsOf(spark, table), live)) out.partitionBy("cell")
+       else out).parquet(s"$table/${genName(g + 1)}")
+      retireSuperseded(fsOf(spark, table), new Path(table))
+    }
+
+  /** Compact every data table of the index at `path`. No-op on a
+    * never-written path. */
+  def compact(spark: SparkSession, path: String): Unit =
+    liveGenOpt(spark, path).foreach { case (_, root) =>
+      dataTables(spark, root.toString)
+        .foreach(t => compactTable(spark, s"$root/$t"))
+    }
+
+  /** Compact the data tables of the index at `path` some leaf of which
+    * holds more than `maxFilesPerLeaf` files; a quiet index costs its
+    * listings. Returns whether any table compacted. */
+  def maybeCompact(spark: SparkSession, path: String,
+                   maxFilesPerLeaf: Int = MaxFilesPerLeaf): Boolean =
+    liveGenOpt(spark, path).exists { case (_, root) =>
+      dataTables(spark, root.toString)
+        .map(t => maybeCompactTable(spark, s"$root/$t", maxFilesPerLeaf))
+        .exists(identity)
+    }
+
+  /** One table's live generation into one file per leaf as generation
+    * N+1. One executor task per leaf — the merge is IO-bound and a retried
+    * task overwrites its own output, so tasks are idempotent; a single
+    * small leaf merges driver-side. Index writers all emit ONE physical
+    * schema, so a mixed-schema leaf is corruption and fails loudly. */
+  private def compactTable(spark: SparkSession, table: String): Unit = {
+    val f = fsOf(spark, table)
+    val root = new Path(table)
+    generations(f, root).filter(g => isComplete(f, g._2)).lastOption.foreach {
+      case (cur, curPath) =>
+        val next = new Path(root, genName(cur + 1))
+        if (f.exists(next)) f.delete(next, true) // dead earlier attempt
+        val leafDirs = leaves(f, curPath)
+        val rels = leafDirs.map(l => if (l == curPath) "" else l.getName)
+        val (curStr, nextStr) = (curPath.toString, next.toString)
+        def mergeLeaf(conf: org.apache.hadoop.conf.Configuration,
+                      rel: String): Unit = {
+          val src = if (rel.isEmpty) new Path(curStr)
+                    else new Path(s"$curStr/$rel")
+          val dstDir = if (rel.isEmpty) nextStr else s"$nextStr/$rel"
+          require(
+            ParquetConcat.mergeSameSchema(conf,
+              ParquetConcat.dataFiles(conf, src),
+              new Path(s"$dstDir/compacted-0.parquet")),
+            s"mixed physical schemas under $src — index writers emit one " +
+              "schema; refusing to guess a merge")
+        }
+        val conf0 = spark.sparkContext.hadoopConfiguration
+        val smallSingleLeaf = rels.size == 1 &&
+          ParquetConcat.dataFiles(conf0, leafDirs.head)
+            .map(_.getLen).sum <= LocalMergeMaxBytes
+        if (smallSingleLeaf)
+          // driver-side: one small leaf's byte copy sits under Spark's
+          // ~300 ms per-job scheduling floor (the kv_point_ops lesson —
+          // never ride a job to move a few MB)
+          mergeLeaf(conf0, rels.head)
+        else {
+          val sconf = new SerializableHadoopConf(conf0)
+          spark.sparkContext.parallelize(rels, rels.size)
+            .foreach(rel => mergeLeaf(sconf.conf, rel))
+        }
+        f.create(new Path(next, "_SUCCESS"), true).close()
+        retireSuperseded(f, root)
+    }
+  }
+
+  /** [[compactTable]] when some leaf of the live generation holds more
+    * than `maxFilesPerLeaf` data files. */
+  private def maybeCompactTable(spark: SparkSession, table: String,
+                                maxFilesPerLeaf: Int): Boolean =
+    liveGenOpt(spark, table).exists { case (_, live) =>
+      val conf = spark.sparkContext.hadoopConfiguration
+      val over = leaves(fsOf(spark, table), live).exists(l =>
+        ParquetConcat.dataFiles(conf, l).size > maxFilesPerLeaf)
+      if (over) compactTable(spark, table)
+      over
+    }
+
+  /** Stamp, and past the lease horizon delete, the complete generations
+    * of `table` older than its live one — see the object Scaladoc for why
+    * the clock is a first-observation marker. */
+  private def retireSuperseded(f: FileSystem, table: Path): Unit = {
+    val complete = generations(f, table).filter(g => isComplete(f, g._2))
+    complete.dropRight(1).foreach { case (_, p) =>
       val marker = new Path(p, "_SUPERSEDED_AT")
       if (!f.exists(marker)) {
         val out = f.create(marker, true)
         try out.write(System.currentTimeMillis().toString
           .getBytes(java.nio.charset.StandardCharsets.UTF_8))
         finally out.close()
-        false
       } else {
         val in = f.open(marker)
         val at =
           try new String(in.readAllBytes(),
             java.nio.charset.StandardCharsets.UTF_8).trim.toLong
           finally in.close()
-        System.currentTimeMillis() - at > TimeStore.LeaseTimeoutMs
+        if (System.currentTimeMillis() - at > TimeStore.LeaseTimeoutMs)
+          f.delete(p, true)
       }
+    }
+  }
+
+  // ---- tombstones -------------------------------------------------------
+
+  private def tombDir(path: String): Path = new Path(path, "tombstones")
+
+  /** Append delete rows (the family's key column, plus whatever a serve
+    * needs to correct statistics) to the index's pending tombstones. */
+  def tombstone(path: String, rows: DataFrame): Unit =
+    rows.write.mode("append").parquet(tombDir(path).toString)
+
+  /** The pending tombstones of the index at `path`, listed once. */
+  def tombstones(spark: SparkSession, path: String): Tombstones =
+    new Tombstones(spark, ParquetConcat.dataFiles(
+      spark.sparkContext.hadoopConfiguration, tombDir(path)))
+
+  /** Pending deletes as listed once: `files`, and `rows` — a relation
+    * over exactly those files, broadcast-gated on their bytes (None when
+    * nothing is pending). */
+  final class Tombstones private[IndexTables] (
+      spark: SparkSession, private[IndexTables] val files: Seq[FileStatus]) {
+    val rows: Option[DataFrame] =
+      if (files.isEmpty) None
+      else Some(maybeBroadcast(
+        spark.read.parquet(files.map(_.getPath.toString): _*),
+        files.map(_.getLen).sum))
+
+    /** `df` without the rows whose `key` is tombstoned. */
+    def antiJoin(df: DataFrame, key: String): DataFrame =
+      rows.fold(df)(t => df.join(t.select(key), Seq(key), "left_anti"))
+  }
+
+  /** Fold the pending tombstones into the index at `path`: list them;
+    * with none, or no live root, do nothing; else `rewrite(root, tomb)`,
+    * then delete exactly the listed files. `always` rewrites with nothing
+    * pending too and fails on a never-written path (a rebuild). */
+  def foldTombstones(spark: SparkSession, path: String,
+                     always: Boolean = false)(
+      rewrite: (String, Tombstones) => Unit): Unit = {
+    val tomb = tombstones(spark, path)
+    val root =
+      if (always) Some(liveDir(spark, path))
+      else if (tomb.files.isEmpty) None
+      else liveGenOpt(spark, path).map(_._2.toString)
+    root.foreach { r =>
+      rewrite(r, tomb)
+      val f = fsOf(spark, path)
+      tomb.files.foreach(st => f.delete(st.getPath, false))
     }
   }
 }

@@ -15,6 +15,10 @@ import org.apache.spark.sql.functions._
   * dot product is a codegen'd `aggregate(zip_with(...))` fold over the
   * arrays in index order (deterministic, matches the oracle's list fold);
   * no UDFs, no MLlib dependency.
+  *
+  * The persisted ANN indexes (`pqIndex*`, `imiIndex*`, `imiPqIndex*`)
+  * keep their tables under the one lifecycle of [[IndexTables]]: build,
+  * append, compaction, tombstones and vacuum run there.
   */
 object Similarity {
 
@@ -1282,24 +1286,15 @@ object Similarity {
   private def adcProbeRowBytes(subs: Int, ksub: Int): Long =
     subs.toLong * ksub * 8 + 64
 
-  /** Ceiling on the estimated probe-fan-out size before the broadcast
-    * hint is dropped (ADVICE r12): probedCells is probes × nprobeCells
-    * rows, each carrying the full probe vector (or its ADC table) — a
-    * bounded online batch broadcasts (the corpus side never shuffles), but
-    * a bulk probe set past this ceiling would exceed the broadcast limit
-    * where the unhinted plan can fall back to a shuffle join. */
-  private[graft] val MaxProbeBroadcastBytes = 64L << 20
-
-  private def maybeBroadcast(df: DataFrame, estBytes: Long): DataFrame =
-    if (estBytes <= MaxProbeBroadcastBytes) broadcast(df) else df
-
   /** The exact-cosine re-rank tail over the probed cells' inverted-list
-    * members (probe side broadcasts under [[MaxProbeBroadcastBytes]] — the
-    * corpus/list side never shuffles). */
+    * members (ADVICE r12: probedCells is probes × nprobeCells rows, each
+    * carrying the full probe vector; it broadcasts under
+    * [[IndexTables.MaxProbeBroadcastBytes]] — the corpus/list side never
+    * shuffles — and past it the planner may fall back to a shuffle join). */
   private def imiRank(corpusCells: DataFrame, probedCells: DataFrame,
                       k: Int, estProbeBytes: Long): DataFrame = {
     val scored = corpusCells
-      .join(maybeBroadcast(probedCells, estProbeBytes), Seq("cell"))
+      .join(IndexTables.maybeBroadcast(probedCells, estProbeBytes), Seq("cell"))
       .filter(col("query_id") =!= col("nbr_id"))
       .select(col("query_id"), col("nbr_id"),
         round(cosine(col("pv"), col("cv")), 6).as("cos_sim"))
@@ -1344,192 +1339,113 @@ object Similarity {
     * [[imiPqTopK]]'s composition). No custom file format: the index IS a
     * set of tables, inheriting partitioning + predicate pushdown.
     *
-    * Layout: generational at TWO levels ([[IndexTables]]). The index root
-    * holds `gen-NNNNNN` generations, each one complete model + data
-    * snapshot committed atomically (a fresh write over an existing path,
-    * or [[imiIndexRebuild]], swaps the WHOLE index reader-safely); inside
-    * a root generation the data table is itself generational — the base
-    * write lands as `lists/gen-000000`, appends accumulate in the live
-    * data generation, [[indexCompact]] merges them reader-safely into the
-    * next. */
+    * Layout and lifecycle: [[IndexTables]] (`coarse/` and `fine/` are
+    * model tables, `lists/` the generational data table). */
   def imiIndexWrite(corpus: DataFrame, idCol: String, vecCol: String,
                     path: String, groups: Int, groupSize: Int, iters: Int,
                     dim: Int,
-                    literalBudget: Long = CellLiteralBudget): Unit = {
+                    literalBudget: Long = CellLiteralBudget): Unit =
+    imiRootWrite(corpus, vecCol, path, groups, groupSize, iters, dim,
+        literalBudget, "lists") { (coarse, fine, rows) =>
+      semanticAssign2Level(corpus, idCol, vecCol, fine, groupSize,
+          literalBudget, Some(coarse), Some(rows))
+        .select(col("vec_id").as("nbr_id"), col("cell"), col("v").as("cv"))
+    }
+
+  /** Train the two IMI levels on `corpus` and land them as `coarse/` and
+    * `fine/` (cell, d, comp) with the data table `table` — `data`'s rows
+    * under the trained model — as ONE index-root generation
+    * ([[IndexTables.build]]): a write over an existing path (fresh build,
+    * [[imiIndexRebuild]]) is a reader-safe swap of the whole index, never
+    * a partially-replaced model. The three writes overlap on driver
+    * threads (guide §2.6).
+    *
+    * The data table is cell-partitioned ADAPTIVELY — the index's analog of
+    * the store's bucket directories: when cells are file-sized (≥
+    * [[MinRowsPerCellPartition]] rows each), a search probing p of k
+    * cells reads ~p/k of the files via static partition pruning
+    * ([[imiIndexSearch]]); when cells are small the same layout is a
+    * tiny-file explosion (measured at 640k×2560 cells ≈ 250 rows/cell:
+    * write 51 → 343 s, search 4.7 → 26.6 s across 1753 file-tasks —
+    * SCALE.md imi_index_ab), so it lands unpartitioned and the probed-cell
+    * predicate applies as an ordinary pushed filter instead. */
+  private def imiRootWrite(corpus: DataFrame, vecCol: String, path: String,
+                           groups: Int, groupSize: Int, iters: Int,
+                           dim: Int, literalBudget: Long, table: String)(
+      data: (Array[Array[Double]], Array[Array[Double]], CorpusRows) =>
+        DataFrame): Unit = {
     val spark = corpus.sparkSession
     import spark.implicits._
-    // model + lists land under the NEXT index-root generation and become
-    // visible in ONE commit ([[IndexTables.commitRoot]]): a write over an
-    // existing path (fresh build, [[imiIndexRebuild]]) is a reader-safe
-    // swap of the whole index, never a partially-replaced model
-    val root = IndexTables.nextRootDir(spark, path)
-    val sharedRows = new CorpusRows(corpus)
-    val (coarse, fine) = imiTrainRows(corpus, vecCol, groups, groupSize,
-      iters, dim, literalBudget, sharedRows)
-    def dump(m: Array[Array[Double]], name: String): Unit =
-      spark.createDataset(
-          for { c <- m.indices; d <- m(c).indices } yield (c, d, m(c)(d)))
-        .toDF("cell", "d", "comp")
-        .coalesce(1).write.mode("overwrite").parquet(s"$root/$name")
-    // cell-partitioned ADAPTIVELY — the index's analog of the store's
-    // bucket directories: when cells are file-sized (≥
-    // [[MinRowsPerCellPartition]] rows each), a search probing p of k
-    // cells reads ~p/k of the files via static partition pruning
-    // ([[imiIndexSearch]]); when cells are small the same layout is a
-    // tiny-file explosion (measured at 640k×2560 cells ≈ 250 rows/cell:
-    // write 51 → 343 s, search 4.7 → 26.6 s across 1753 file-tasks —
-    // SCALE.md imi_index_ab), so the lists land unpartitioned and the
-    // probed-cell predicate applies as an ordinary pushed filter instead
-    val k = coarse.length.toLong * groupSize
-    val cellPart = sharedRows.n >= k * MinRowsPerCellPartition
-    // three independent writes (two driver-local model dumps + the
-    // assigned lists) under the uncommitted root: overlapped driver
-    // threads (guide §2.6), visibility still gated by the single
-    // commitRoot _SUCCESS below
-    graft.Par.run(
-      () => dump(coarse, "coarse"),
-      () => dump(fine, "fine"),
-      () => {
-        val out = semanticAssign2Level(corpus, idCol, vecCol, fine,
-            groupSize, literalBudget, Some(coarse), Some(sharedRows))
-          .select(col("vec_id").as("nbr_id"), col("cell"), col("v").as("cv"))
-          .write.mode("overwrite")
-        (if (cellPart) out.partitionBy("cell") else out)
-          .parquet(IndexTables.writeDir(s"$root/lists"))
-      })
-    IndexTables.commitRoot(spark, root)
+    IndexTables.build(spark, path) { root =>
+      val sharedRows = new CorpusRows(corpus)
+      val (coarse, fine) = imiTrainRows(corpus, vecCol, groups, groupSize,
+        iters, dim, literalBudget, sharedRows)
+      def dump(m: Array[Array[Double]], name: String): Unit =
+        spark.createDataset(
+            for { c <- m.indices; d <- m(c).indices } yield (c, d, m(c)(d)))
+          .toDF("cell", "d", "comp")
+          .coalesce(1).write.mode("overwrite").parquet(s"$root/$name")
+      val k = coarse.length.toLong * groupSize
+      val cellPart = sharedRows.n >= k * MinRowsPerCellPartition
+      graft.Par.run(
+        () => dump(coarse, "coarse"),
+        () => dump(fine, "fine"),
+        () => {
+          val out = data(coarse, fine, sharedRows).write.mode("overwrite")
+          (if (cellPart) out.partitionBy("cell") else out)
+            .parquet(IndexTables.writeDir(s"$root/$table"))
+        })
+    }
   }
 
   /** The live index-root generation of a persisted ANN index — the ONE
     * resolution a serve/maintenance entry makes before deriving model and
-    * data directories from it (see [[IndexTables]]'s index-root section:
-    * resolving per-table instead could pair a rebuilt model with the old
+    * data directories from it (see [[IndexTables]]' layout: resolving
+    * per-table instead could pair a rebuilt model with the old
     * generation's assignments). Public so specs and operational tooling
     * can locate the live tables. */
   def indexLiveRoot(spark: org.apache.spark.sql.SparkSession,
                     path: String): String =
     IndexTables.liveDir(spark, path)
 
-  /** The live root when one exists — MAINTENANCE entry points
-    * (compact/vacuum) are no-ops on a never-written path, like their
-    * pre-root per-table forms (a polling maintenance loop must not crash
-    * on an index whose first build is still in flight); serves and
-    * appends still fail loudly. */
-  private[graft] def indexLiveRootOpt(
-      spark: org.apache.spark.sql.SparkSession,
-      path: String): Option[String] =
-    IndexTables.liveGenOpt(spark, path).map(_._2.toString)
-
-  /** Compact a persisted index's DATA tables (`lists/` and/or `codes/`)
-    * after appends (VERDICT r12 #1): every [[imiIndexAppend]] /
-    * [[imiPqIndexAppend]] / [[pqIndexAppend]] batch lands as its own
-    * parquet file, and a steady append stream fragments the table into
-    * exactly the small-file layout whose search cost SCALE.md's
-    * imi_index_ab measured (26.6 s across 1,753 file-tasks vs 4.7 s). This
-    * applies the store's generational binary-concat merge to the index —
-    * one file per leaf directory (per `cell=` partition when present),
-    * raw row-group copy, reader-safe atomic generation swap, superseded
-    * generations retired after the lease horizon. See [[IndexTables]].
-    * Model tables (`coarse/`, `fine/`, `books/`) never fragment — they are
-    * rewritten whole at [[imiIndexWrite]] time and appends never touch
-    * them — so only the data tables compact. Idempotent; run it on the
-    * maintenance cadence of the append stream. */
+  /** Compact a persisted ANN index's data tables after appends: every
+    * [[imiIndexAppend]] / [[imiPqIndexAppend]] / [[pqIndexAppend]] batch
+    * lands as its own file. See [[IndexTables]] (compaction). */
   def indexCompact(spark: org.apache.spark.sql.SparkSession,
                    path: String): Unit =
-    indexLiveRootOpt(spark, path).foreach(root =>
-      Seq("lists", "codes").foreach(t =>
-        IndexTables.compactTable(spark, s"$root/$t")))
+    IndexTables.compact(spark, path)
 
-  /** Threshold-triggered [[indexCompact]] — run after every append batch
-    * (or on the ingest cadence): compacts a data table only once some
-    * leaf exceeds `maxFilesPerLeaf` fragments, so calling it
-    * unconditionally is cheap and the table self-maintains the
-    * file-sized-object invariant the whole store design rests on
-    * (rados-timestore StoreHelpers.hs:194-221's rollover check, applied
-    * to the index family). Returns whether any table compacted. */
+  /** Threshold-triggered [[indexCompact]], cheap to call after every
+    * append. Returns whether any table compacted. */
   def indexMaybeCompact(spark: org.apache.spark.sql.SparkSession,
-                        path: String, maxFilesPerLeaf: Int = 16): Boolean =
-    indexLiveRootOpt(spark, path).exists(root =>
-      Seq("lists", "codes").map(t =>
-        IndexTables.maybeCompactTable(spark, s"$root/$t", maxFilesPerLeaf))
-        .exists(identity))
+                        path: String,
+                        maxFilesPerLeaf: Int = IndexTables.MaxFilesPerLeaf)
+      : Boolean =
+    IndexTables.maybeCompact(spark, path, maxFilesPerLeaf)
 
-  /** Tombstone-delete vectors from a persisted index WITHOUT rewriting it —
-    * the takedown/decontamination path a training-data pipeline needs
-    * against a built index (remove opted-out or contaminated documents;
-    * retraining or re-encoding the corpus for a deletion batch is neither
-    * possible nor wanted, exactly the append contract mirrored): the ids
-    * land as an ordinary append to a small `tombstones/` parquet table and
-    * every `*IndexSearch` anti-joins the stored lists/codes against it.
-    * Tombstones are ids ONLY (8 bytes/row on disk), so the anti-join
-    * broadcasts until [[indexVacuum]] folds them in physically; the
-    * broadcast hint is size-gated like the probe fan-out
-    * ([[MaxProbeBroadcastBytes]] against the table's on-disk size). */
+  /** Tombstone-delete vectors from a persisted ANN index WITHOUT
+    * rewriting it — the takedown/decontamination path (remove opted-out
+    * or contaminated documents; retraining or re-encoding for a deletion
+    * batch is neither possible nor wanted): every search drops the ids
+    * until [[indexVacuum]] folds them in. See [[IndexTables]]
+    * (tombstones). */
   def indexDelete(spark: org.apache.spark.sql.SparkSession,
                   ids: DataFrame, idCol: String, path: String): Unit =
-    ids.select(col(idCol).cast("long").as("nbr_id")).distinct()
-      .write.mode("append").parquet(s"$path/tombstones")
+    IndexTables.tombstone(path,
+      ids.select(col(idCol).cast("long").as("nbr_id")).distinct())
 
-  /** On-disk byte size of a directory's data files (0 when absent) — the
-    * cheap planner-side stand-in for a count when gating a broadcast. */
-  private def dirDataBytes(spark: org.apache.spark.sql.SparkSession,
-                           dir: String): Long =
-    graft.sources.ParquetConcat.dataFiles(spark.sparkContext.hadoopConfiguration,
-      new org.apache.hadoop.fs.Path(dir)).map(_.getLen).sum
-
-  /** Anti-join a stored data table against the index's tombstones (no-op
-    * when none exist). The tombstone side broadcasts while its on-disk
-    * size stays under [[MaxProbeBroadcastBytes]]; past that the planner
-    * picks its own strategy — and the operator is overdue for
-    * [[indexVacuum]]. */
-  private def applyTombstones(spark: org.apache.spark.sql.SparkSession,
-                              path: String, df: DataFrame): DataFrame = {
-    val dir = s"$path/tombstones"
-    val bytes = dirDataBytes(spark, dir)
-    if (bytes == 0L) df
-    else df.join(
-      maybeBroadcast(spark.read.parquet(dir).select(col("nbr_id")), bytes),
-      Seq("nbr_id"), "left_anti")
-  }
-
-  /** Physically fold the tombstones into the index DATA tables: each
-    * table's live generation is rewritten WITHOUT the tombstoned rows as
-    * generation N+1 (same reader-safe `_SUCCESS` swap and lease-horizon
-    * retirement as [[indexCompact]]; the base layout — `cell=`
-    * partitioning or flat — is preserved), then exactly the tombstone
-    * files that were applied are removed. Unlike compaction this is a
-    * relational rewrite, not a byte copy — the price of row removal — so
-    * run [[indexCompact]] after it if the rewrite fans out into small
-    * files. Single-maintainer discipline like append/compact: no
-    * concurrent deletes during a vacuum. */
+  /** Physically fold the tombstones into the ANN index's data tables:
+    * each rewrites its live generation without the tombstoned rows as
+    * generation N+1 (a relational rewrite, not a byte copy — run
+    * [[indexCompact]] after it if it fans out into small files). See
+    * [[IndexTables]] (vacuum). */
   def indexVacuum(spark: org.apache.spark.sql.SparkSession,
-                  path: String): Unit = {
-    val tombDir = s"$path/tombstones"
-    val conf = spark.sparkContext.hadoopConfiguration
-    val applied = graft.sources.ParquetConcat.dataFiles(conf,
-      new org.apache.hadoop.fs.Path(tombDir))
-    if (applied.isEmpty) return
-    val rootOpt = indexLiveRootOpt(spark, path)
-    if (rootOpt.isEmpty) return // tombstones stay pending until a build
-    val tomb = spark.read
-      .parquet(applied.map(_.getPath.toString): _*)
-      .select(col("nbr_id"))
-    val root = rootOpt.get
-    Seq("lists", "codes").foreach { t =>
-      val table = s"$root/$t"
-      IndexTables.liveGenOpt(spark, table).foreach { case (g, livePath) =>
-        val kept = spark.read.parquet(livePath.toString)
-          .join(maybeBroadcast(tomb, dirDataBytes(spark, tombDir)),
-            Seq("nbr_id"), "left_anti")
-        val out = kept.write.mode("overwrite")
-        (if (IndexTables.cellPartitioned(spark, table)) out.partitionBy("cell")
-         else out).parquet(s"$table/${IndexTables.genName(g + 1)}")
-        IndexTables.retireSuperseded(spark, table)
-      }
+                  path: String): Unit =
+    IndexTables.foldTombstones(spark, path) { (root, tomb) =>
+      IndexTables.dataTables(spark, root).foreach(t =>
+        IndexTables.rewriteTable(spark, s"$root/$t")(
+          tomb.antiJoin(_, "nbr_id")))
     }
-    val f = new org.apache.hadoop.fs.Path(tombDir).getFileSystem(conf)
-    applied.foreach(st => f.delete(st.getPath, false))
-  }
 
   /** Rows-per-cell threshold above which a persisted index's list/code
     * table partitions by cell (directory pruning at search); below it the
@@ -1646,15 +1562,9 @@ object Similarity {
     * (nbr_id, cell, cv) rows to the live `lists/` generation, matching
     * the base layout. */
   def imiIndexAppendAssigned(spark: org.apache.spark.sql.SparkSession,
-                             assigned: DataFrame, path: String): Unit = {
-    val table = s"${indexLiveRoot(spark, path)}/lists"
-    val out = assigned.select(col("nbr_id"), col("cell"), col("cv"))
-      .write.mode("append")
-    val live = IndexTables.liveDir(spark, table)
-    (if (IndexTables.cellPartitioned(spark, table))
-       out.partitionBy("cell")
-     else out).parquet(live)
-  }
+                             assigned: DataFrame, path: String): Unit =
+    IndexTables.appendLive(assigned.select(col("nbr_id"), col("cell"),
+      col("cv")), s"${indexLiveRoot(spark, path)}/lists")
 
   /** Serve top-k from an [[imiIndexWrite]]-persisted index: reload the
     * two codebook levels (bounded k×dim doubles), scan only the probed
@@ -1702,13 +1612,8 @@ object Similarity {
     private val model = imiIndexModel(spark, root)
     private val listsAll = spark.read
       .parquet(IndexTables.liveDir(spark, s"$root/lists"))
-    private val tombBytes = dirDataBytes(spark, s"$path/tombstones")
-    private val tomb: Option[DataFrame] =
-      if (tombBytes == 0L) None
-      else Some(maybeBroadcast(spark.read.parquet(s"$path/tombstones")
-        .select(col("nbr_id")), tombBytes))
-    private def live(df: DataFrame): DataFrame =
-      tomb.map(t => df.join(t, Seq("nbr_id"), "left_anti")).getOrElse(df)
+    private val tomb = IndexTables.tombstones(spark, path)
+    private def live(df: DataFrame): DataFrame = tomb.antiJoin(df, "nbr_id")
 
     def search(probes: DataFrame, idCol: String, vecCol: String, k: Int,
                groupSize: Int, nprobeGroups: Int, nprobeCells: Int,
@@ -1782,10 +1687,10 @@ object Similarity {
     * generation; never loads vectors. */
   def imiIndexStats(spark: org.apache.spark.sql.SparkSession,
                     path: String): DataFrame =
-    applyTombstones(spark, path, spark.read
+    IndexTables.tombstones(spark, path).antiJoin(spark.read
         .parquet(IndexTables.liveDir(
           spark, s"${indexLiveRoot(spark, path)}/lists"))
-        .select(col("nbr_id"), col("cell")))
+        .select(col("nbr_id"), col("cell")), "nbr_id")
       .groupBy(col("cell"))
       .agg(count(lit(1)).as("n_vectors"))
       .orderBy(col("cell"))
@@ -1798,8 +1703,8 @@ object Similarity {
     * vectors (tombstones applied — a taken-down document never re-enters
     * the model), re-assign every vector under the new model, and land
     * model + lists as index-root generation N+1 under the SAME
-    * single-commit atomic swap every full build uses ([[IndexTables]]'s
-    * index-root section): a reader resolves the old index (old model +
+    * single-commit atomic swap every full build uses
+    * ([[IndexTables.build]]): a reader resolves the old index (old model +
     * old assignments) or the new one, never a mix, and the superseded
     * index retires on the lease horizon. Applied tombstones are folded in
     * (their files removed once the new generation commits, like
@@ -1825,33 +1730,22 @@ object Similarity {
                       path: String, iters: Int,
                       groupsOverride: Option[Int] = None,
                       groupSizeOverride: Option[Int] = None,
-                      literalBudget: Long = CellLiteralBudget): Unit = {
-    val root = indexLiveRoot(spark, path)
-    val (coarse0, fine0) = imiIndexModel(spark, root)
-    val groups = groupsOverride.getOrElse(coarse0.length)
-    val groupSize = groupSizeOverride.getOrElse(
-      if (coarse0.isEmpty) 1 else fine0.length / coarse0.length)
-    val dim = fine0.headOption.map(_.length).getOrElse(0)
-    val tombDir = s"$path/tombstones"
-    val conf = spark.sparkContext.hadoopConfiguration
-    val applied = graft.sources.ParquetConcat.dataFiles(conf,
-      new org.apache.hadoop.fs.Path(tombDir))
-    // the training corpus: live rows of the CURRENT generation, cached —
-    // training iterates over it and assignment reads it once more
-    val corpus = graft.CacheScope.cache(
-      applyTombstones(spark, path, spark.read
+                      literalBudget: Long = CellLiteralBudget): Unit =
+    IndexTables.foldTombstones(spark, path, always = true) { (root, tomb) =>
+      val (coarse0, fine0) = imiIndexModel(spark, root)
+      val groups = groupsOverride.getOrElse(coarse0.length)
+      val groupSize = groupSizeOverride.getOrElse(
+        if (coarse0.isEmpty) 1 else fine0.length / coarse0.length)
+      val dim = fine0.headOption.map(_.length).getOrElse(0)
+      // the training corpus: live rows of the CURRENT generation, cached —
+      // training iterates over it and assignment reads it once more
+      val corpus = graft.CacheScope.cache(tomb.antiJoin(spark.read
         .parquet(IndexTables.liveDir(spark, s"$root/lists"))
-        .select(col("nbr_id"), col("cv"))))
-    try {
-      imiIndexWrite(corpus, "nbr_id", "cv", path, groups, groupSize, iters,
-        dim, literalBudget)
-    } finally graft.CacheScope.free(corpus)
-    // the committed generation contains no tombstoned rows; exactly the
-    // applied tombstone files clear (a delete landing mid-rebuild keeps
-    // its file and still serves through the anti-join)
-    val f = new org.apache.hadoop.fs.Path(tombDir).getFileSystem(conf)
-    applied.foreach(st => f.delete(st.getPath, false))
-  }
+        .select(col("nbr_id"), col("cv")), "nbr_id"))
+      try imiIndexWrite(corpus, "nbr_id", "cv", path, groups, groupSize,
+        iters, dim, literalBudget)
+      finally graft.CacheScope.free(corpus)
+    }
 
   /** IMI + PQ composed index — the canonical billion-vector serving
     * structure (FAISS's "IMI2xN,PQM"): [[imiTrainedTopK]]'s trained
@@ -1945,13 +1839,13 @@ object Similarity {
           fine, groupSize, nprobeGroups, nprobeCells)).as("cell"))
 
   /** The broadcast-ADC scoring tail over the probed cells' code words
-    * (probe side broadcasts under [[MaxProbeBroadcastBytes]]). */
+    * (probe side broadcasts under [[IndexTables.MaxProbeBroadcastBytes]]). */
   private def imiPqRank(corpusIdx: DataFrame, probedCells: DataFrame,
                         k: Int, subs: Int, ksub: Int,
                         estProbeBytes: Long): DataFrame = {
     val adc = adcSum(subs, ksub)
     val scored = corpusIdx
-      .join(maybeBroadcast(probedCells, estProbeBytes), Seq("cell"))
+      .join(IndexTables.maybeBroadcast(probedCells, estProbeBytes), Seq("cell"))
       .filter(col("query_id") =!= col("nbr_id"))
       .select(col("query_id"), col("nbr_id"),
         (floor(adc * 1e6 + 0.5) / 1e6).as("adc_dist"))
@@ -1972,36 +1866,11 @@ object Similarity {
                       dim: Int, subs: Int = 8, ksub: Int = 4,
                       literalBudget: Long = CellLiteralBudget): Unit = {
     require(Integer.bitCount(ksub) == 1, "ksub must be a power of two")
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    // single-commit index-root generation, like [[imiIndexWrite]]
-    val root = IndexTables.nextRootDir(spark, path)
-    val sharedRows = new CorpusRows(corpus)
-    val (coarse, fine) = imiTrainRows(corpus, vecCol, groups, groupSize,
-      iters, dim, literalBudget, sharedRows)
-    def dump(m: Array[Array[Double]], name: String): Unit =
-      spark.createDataset(
-          for { c <- m.indices; d <- m(c).indices } yield (c, d, m(c)(d)))
-        .toDF("cell", "d", "comp")
-        .coalesce(1).write.mode("overwrite").parquet(s"$root/$name")
-    // adaptively cell-partitioned like [[imiIndexWrite]]'s lists — the
-    // probed-cell predicate prunes directories at search time when cells
-    // are file-sized, and applies as an ordinary pushed filter when not
-    val k = coarse.length.toLong * groupSize
-    val cellPart = sharedRows.n >= k * MinRowsPerCellPartition
-    // overlapped independent writes under the uncommitted root, like
-    // [[imiIndexWrite]] (guide §2.6)
-    graft.Par.run(
-      () => dump(coarse, "coarse"),
-      () => dump(fine, "fine"),
-      () => {
-        val out = imiPqIndexRows(corpus, idCol, vecCol, coarse, fine,
-            groupSize, subs, ksub, dim, literalBudget, Some(sharedRows))
-          .write.mode("overwrite")
-        (if (cellPart) out.partitionBy("cell") else out)
-          .parquet(IndexTables.writeDir(s"$root/codes"))
-      })
-    IndexTables.commitRoot(spark, root)
+    imiRootWrite(corpus, vecCol, path, groups, groupSize, iters, dim,
+        literalBudget, "codes") { (coarse, fine, rows) =>
+      imiPqIndexRows(corpus, idCol, vecCol, coarse, fine, groupSize, subs,
+        ksub, dim, literalBudget, Some(rows))
+    }
   }
 
   /** Append NEW vectors to an [[imiPqIndexWrite]]-persisted index without
@@ -2016,14 +1885,8 @@ object Similarity {
                        literalBudget: Long = CellLiteralBudget): Unit = {
     val root = indexLiveRoot(spark, path)
     val (coarse, fine) = imiIndexModel(spark, root)
-    val table = s"$root/codes"
-    val out = imiPqIndexRows(batch, idCol, vecCol, coarse, fine, groupSize,
-        subs, ksub, dim, literalBudget)
-      .write.mode("append")
-    val live = IndexTables.liveDir(spark, table)
-    (if (IndexTables.cellPartitioned(spark, table))
-       out.partitionBy("cell")
-     else out).parquet(live)
+    IndexTables.appendLive(imiPqIndexRows(batch, idCol, vecCol, coarse, fine,
+      groupSize, subs, ksub, dim, literalBudget), s"$root/codes")
   }
 
   /** Serve top-k from an [[imiPqIndexWrite]]-persisted index: reload the
@@ -2047,10 +1910,10 @@ object Similarity {
       .agg(count(lit(1)).as("n")).collect()
     val nProbed = cellRows.map(_.getAs[Long]("n")).sum
     val cellSet = cellRows.map(_.getAs[Int]("cell")).sorted
-    val corpusIdx = applyTombstones(spark, path, spark.read
+    val corpusIdx = IndexTables.tombstones(spark, path).antiJoin(spark.read
       .parquet(IndexTables.liveDir(spark, s"$root/codes"))
       .filter(col("cell").isin(cellSet.map(Int.box): _*))
-      .select(col("nbr_id"), col("cell"), col("pq_code")))
+      .select(col("nbr_id"), col("cell"), col("pq_code")), "nbr_id")
     imiPqRank(corpusIdx, probedCells, k, subs, ksub,
       adcProbeRowBytes(subs, ksub) * nProbed)
   }
@@ -2418,23 +2281,22 @@ object Similarity {
     require(Integer.bitCount(ksub) == 1, "ksub must be a power of two")
     val spark = corpus.sparkSession
     import spark.implicits._
-    // single-commit index-root generation, like [[imiIndexWrite]]
-    val root = IndexTables.nextRootDir(spark, path)
-    val books = pqTrainBooks(corpus, vecCol, subs, ksub, iters, dim)
-    val rows = for {
-      s <- books.indices; c <- books(s).indices; d <- books(s)(c).indices
-    } yield (s, c, d, books(s)(c)(d))
-    val ds = dim / subs
-    // overlapped independent writes under the uncommitted root, like
-    // [[imiIndexWrite]] (guide §2.6)
-    graft.Par.run(
-      () => spark.createDataset(rows).toDF("s", "c", "d", "comp")
-        .coalesce(1).write.mode("overwrite").parquet(s"$root/books"),
-      () => corpus.select(col(idCol).as("nbr_id"),
-          trainedPacked(books, ds, subs, ksub)(col(vecCol)).as("pq_code"))
-        .write.mode("overwrite")
-        .parquet(IndexTables.writeDir(s"$root/codes")))
-    IndexTables.commitRoot(spark, root)
+    IndexTables.build(spark, path) { root =>
+      val books = pqTrainBooks(corpus, vecCol, subs, ksub, iters, dim)
+      val rows = for {
+        s <- books.indices; c <- books(s).indices; d <- books(s)(c).indices
+      } yield (s, c, d, books(s)(c)(d))
+      val ds = dim / subs
+      // overlapped independent writes under the uncommitted root, like
+      // [[imiIndexWrite]] (guide §2.6)
+      graft.Par.run(
+        () => spark.createDataset(rows).toDF("s", "c", "d", "comp")
+          .coalesce(1).write.mode("overwrite").parquet(s"$root/books"),
+        () => corpus.select(col(idCol).as("nbr_id"),
+            trainedPacked(books, ds, subs, ksub)(col(vecCol)).as("pq_code"))
+          .write.mode("overwrite")
+          .parquet(IndexTables.writeDir(s"$root/codes")))
+    }
   }
 
   /** Append NEW vectors to a [[pqIndexWrite]]-persisted index WITHOUT
@@ -2452,10 +2314,9 @@ object Similarity {
     val ds = dim / subs
     val root = indexLiveRoot(spark, path)
     val books = pqIndexModel(spark, root, subs, ksub, ds)
-    batch.select(col(idCol).as("nbr_id"),
-        trainedPacked(books, ds, subs, ksub)(col(vecCol)).as("pq_code"))
-      .write.mode("append")
-      .parquet(IndexTables.liveDir(spark, s"$root/codes"))
+    IndexTables.appendLive(batch.select(col(idCol).as("nbr_id"),
+        trainedPacked(books, ds, subs, ksub)(col(vecCol)).as("pq_code")),
+      s"$root/codes")
   }
 
   /** Serve top-k from a [[pqIndexWrite]]-persisted index: reload the
@@ -2485,8 +2346,8 @@ object Similarity {
     val ds = dim / subs
     val root = indexLiveRoot(spark, path) // one resolution per serve
     val books = pqIndexModel(spark, root, subs, ksub, ds)
-    val codes = applyTombstones(spark, path, spark.read
-      .parquet(IndexTables.liveDir(spark, s"$root/codes")))
+    val codes = IndexTables.tombstones(spark, path).antiJoin(spark.read
+      .parquet(IndexTables.liveDir(spark, s"$root/codes")), "nbr_id")
     val p = probes.select(col(idCol).as("query_id"),
       trainedDtab(books, ds, subs, ksub)(col(vecCol)).as("dtab"))
     val adc = adcSum(subs, ksub)

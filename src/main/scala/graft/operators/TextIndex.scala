@@ -6,9 +6,9 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
 /** Persisted BM25 keyword-retrieval index — the lexical twin of the
-  * [[Similarity]] vector-index family, with the SAME storage lifecycle
-  * (generational tables under [[IndexTables]]: frozen-stats appends,
-  * binary-concat compaction, tombstone deletes + vacuum).
+  * [[Similarity]] vector-index family, with the same storage lifecycle:
+  * generational tables, frozen-stats appends, compaction, tombstone
+  * deletes and vacuum all follow [[IndexTables]].
   *
   * A training-data pipeline needs keyword retrieval alongside embedding
   * ANN (hybrid search, decontamination by query, targeted corpus audits —
@@ -19,7 +19,8 @@ import org.apache.spark.sql.types.DecimalType
   * `StoreHelpers.hs:194-221` keeps objects file-sized). Here the "bucket"
   * is a term's postings row-group.
   *
-  * Layout under `path` (all generational, see [[IndexTables]]):
+  * Data tables under the index root (all generational, see
+  * [[IndexTables]]):
   *   - `postings/` — (term64, doc, tf, dl): one row per distinct
   *     (document, term). `dl` (the document's token length) is
   *     DENORMALIZED into the postings so serving NEVER joins a
@@ -38,7 +39,8 @@ import org.apache.spark.sql.types.DecimalType
   *     recompute globals; serving never touches it.
   *   - `global/` — (n, len_sum) one delta row per batch; serving SUMs to
   *     the corpus size and average document length.
-  *   - `tombstones/` — (doc, dl) pending deletes; see [[bm25IndexDelete]].
+  * Pending deletes are `tombstones/` rows (doc, dl); see
+  * [[bm25IndexDelete]].
   *
   * Scoring is Okapi BM25 (k1 = 1.2, b = 0.75, the canonical constants;
   * Robertson/Sparck Jones idf in the +1 form that keeps every weight
@@ -107,7 +109,7 @@ object TextIndex {
     * (guide §2.6 — actions are only sequential because the driver calls
     * them sequentially; concurrent jobs back-fill each other's task tails
     * and scheduling/commit floors). Atomicity is unchanged: the caller's
-    * single root `_SUCCESS` ([[IndexTables.commitRoot]]) still gates
+    * single root `_SUCCESS` ([[IndexTables.build]]) still gates
     * visibility of ALL four tables, and any write failure propagates after
     * every in-flight write has settled — a partial overlap failure leaves
     * exactly what a partial sequential failure left, an uncommitted root
@@ -134,20 +136,17 @@ object TextIndex {
 
   /** Build the persisted BM25 index from scratch — tokenize, hash, count,
     * and land all four tables beneath ONE index-root generation committed
-    * by a single `_SUCCESS` ([[IndexTables.commitRoot]] — the ANN
+    * by a single `_SUCCESS` ([[IndexTables.build]] — the ANN
     * families' r14 discipline: the statistics tables must never be read
     * against another generation's postings, and a rebuild/fresh write
     * over an existing path must swap the WHOLE index atomically). One
     * shuffle each for the tf grouping and the range clustering;
     * statistics are plain aggregates of the same cached posting rows. */
   def bm25IndexWrite(docs: DataFrame, idCol: String, textCol: String,
-                     path: String): Unit = {
-    val spark = docs.sparkSession
-    val root = IndexTables.nextRootDir(spark, path)
-    writeTables(docs, idCol, textCol, root, IndexTables.writeDir,
-      mode = "overwrite")
-    IndexTables.commitRoot(spark, root)
-  }
+                     path: String): Unit =
+    IndexTables.build(docs.sparkSession, path)(root =>
+      writeTables(docs, idCol, textCol, root, IndexTables.writeDir,
+        mode = "overwrite"))
 
   /** Append a NEW batch of documents (doc ids disjoint from every held
     * batch — the frozen-stats contract: df/global are additive deltas, so
@@ -159,26 +158,18 @@ object TextIndex {
     writeTables(docs, idCol, textCol, IndexTables.liveDir(spark, path),
       t => IndexTables.liveDir(spark, t), mode = "append")
 
-  /** Fold append fragments — [[IndexTables.compactTable]]'s binary
-    * row-group merge over every index table (reader-safe generation
-    * swap; each appended batch's row groups keep their own term64
-    * min/max stats, so pushed-predicate skipping survives the concat). */
+  /** Fold append fragments ([[IndexTables.compact]]); each appended
+    * batch's row groups keep their own term64 min/max stats, so
+    * pushed-predicate skipping survives the concat. */
   def bm25IndexCompact(spark: SparkSession, path: String): Unit =
-    // no-op on a never-written path, like every maintenance entry point
-    IndexTables.liveGenOpt(spark, path).map(_._2.toString).foreach(root =>
-      Seq("postings", "vocab", "doclens", "global").foreach(t =>
-        IndexTables.compactTable(spark, s"$root/$t")))
+    IndexTables.compact(spark, path)
 
   /** Threshold-triggered [[bm25IndexCompact]]
-    * ([[Similarity.indexMaybeCompact]]'s contract): cheap to call after
-    * every append; compacts only the tables some leaf of which exceeds
-    * `maxFilesPerLeaf` fragments. Returns whether any table compacted. */
+    * ([[IndexTables.maybeCompact]]). Returns whether any table compacted. */
   def bm25IndexMaybeCompact(spark: SparkSession, path: String,
-                            maxFilesPerLeaf: Int = 16): Boolean =
-    IndexTables.liveGenOpt(spark, path).map(_._2.toString).exists(root =>
-      Seq("postings", "vocab", "doclens", "global").map(t =>
-        IndexTables.maybeCompactTable(spark, s"$root/$t", maxFilesPerLeaf))
-        .exists(identity))
+                            maxFilesPerLeaf: Int = IndexTables.MaxFilesPerLeaf)
+      : Boolean =
+    IndexTables.maybeCompact(spark, path, maxFilesPerLeaf)
 
   /** Tombstone-delete documents (takedown/decontamination against a built
     * index, [[Similarity.indexDelete]]'s contract): the ids semi-join the
@@ -190,11 +181,10 @@ object TextIndex {
     * serve. */
   def bm25IndexDelete(spark: SparkSession, ids: DataFrame, idCol: String,
                       path: String): Unit =
-    spark.read.parquet(IndexTables.liveDir(spark,
+    IndexTables.tombstone(path, spark.read.parquet(IndexTables.liveDir(spark,
         s"${IndexTables.liveDir(spark, path)}/doclens"))
       .join(broadcast(ids.select(col(idCol).cast("long").as("doc"))
-        .distinct()), Seq("doc"), "left_semi")
-      .write.mode("append").parquet(s"$path/tombstones")
+        .distinct()), Seq("doc"), "left_semi"))
 
   /** Physically fold the tombstones in — as a NEW INDEX-ROOT GENERATION
     * (r14): `postings/` and `doclens/` rewrite WITHOUT the tombstoned
@@ -206,45 +196,27 @@ object TextIndex {
     * window where a reader paired new postings with old statistics — the
     * exact cross-table inconsistency the root generation exists to kill.
     * Exactly the applied tombstone files are removed after the commit. */
-  def bm25IndexVacuum(spark: SparkSession, path: String): Unit = {
-    val tombDir = s"$path/tombstones"
-    val conf = spark.sparkContext.hadoopConfiguration
-    val applied = graft.sources.ParquetConcat.dataFiles(conf,
-      new org.apache.hadoop.fs.Path(tombDir))
-    if (applied.isEmpty) return
-    val rootOpt = IndexTables.liveGenOpt(spark, path).map(_._2.toString)
-    if (rootOpt.isEmpty) return // tombstones stay pending until a build
-    val tomb = spark.read.parquet(applied.map(_.getPath.toString): _*)
-      .select(col("doc")).distinct()
-    val tombBytes = applied.map(_.getLen).sum
-    val oldRoot = rootOpt.get
-    val newRoot = IndexTables.nextRootDir(spark, path)
-    // data tables: anti-join rewrite, preserving the term64 clustering
-    val keptPostings = spark.read
-      .parquet(IndexTables.liveDir(spark, s"$oldRoot/postings"))
-      .join(maybeBroadcastTomb(tomb, tombBytes), Seq("doc"), "left_anti")
-    keptPostings.repartitionByRange(col("term64"))
-      .sortWithinPartitions(col("term64"), col("doc"))
-      .write.parquet(IndexTables.writeDir(s"$newRoot/postings"))
-    val keptLens = spark.read
-      .parquet(IndexTables.liveDir(spark, s"$oldRoot/doclens"))
-      .join(maybeBroadcastTomb(tomb, tombBytes), Seq("doc"), "left_anti")
-    keptLens.write.parquet(IndexTables.writeDir(s"$newRoot/doclens"))
-    // statistics tables: recompute from the surviving data just written
-    spark.read.parquet(IndexTables.liveDir(spark, s"$newRoot/postings"))
-      .groupBy(col("term64")).agg(count(lit(1)).as("df"))
-      .write.parquet(IndexTables.writeDir(s"$newRoot/vocab"))
-    spark.read.parquet(IndexTables.liveDir(spark, s"$newRoot/doclens"))
-      .agg(count(lit(1)).as("n"), coalesce(sum(col("dl")), lit(0L))
-        .as("len_sum"))
-      .write.parquet(IndexTables.writeDir(s"$newRoot/global"))
-    IndexTables.commitRoot(spark, newRoot)
-    val f = new org.apache.hadoop.fs.Path(tombDir).getFileSystem(conf)
-    applied.foreach(st => f.delete(st.getPath, false))
-  }
-
-  private def maybeBroadcastTomb(df: DataFrame, bytes: Long): DataFrame =
-    if (bytes <= Similarity.MaxProbeBroadcastBytes) broadcast(df) else df
+  def bm25IndexVacuum(spark: SparkSession, path: String): Unit =
+    IndexTables.foldTombstones(spark, path) { (oldRoot, tomb) =>
+      def kept(t: String) = tomb.antiJoin(
+        spark.read.parquet(IndexTables.liveDir(spark, s"$oldRoot/$t")), "doc")
+      IndexTables.build(spark, path) { newRoot =>
+        // data tables: anti-join rewrite, preserving the term64 clustering
+        kept("postings").repartitionByRange(col("term64"))
+          .sortWithinPartitions(col("term64"), col("doc"))
+          .write.parquet(IndexTables.writeDir(s"$newRoot/postings"))
+        kept("doclens").write
+          .parquet(IndexTables.writeDir(s"$newRoot/doclens"))
+        // statistics tables: recompute from the surviving data just written
+        spark.read.parquet(IndexTables.liveDir(spark, s"$newRoot/postings"))
+          .groupBy(col("term64")).agg(count(lit(1)).as("df"))
+          .write.parquet(IndexTables.writeDir(s"$newRoot/vocab"))
+        spark.read.parquet(IndexTables.liveDir(spark, s"$newRoot/doclens"))
+          .agg(count(lit(1)).as("n"), coalesce(sum(col("dl")), lit(0L))
+            .as("len_sum"))
+          .write.parquet(IndexTables.writeDir(s"$newRoot/global"))
+      }
+    }
 
   /** Top-k BM25 retrieval against the STORED index — the serving path.
     * Queries tokenize exactly like documents; per-query terms are
@@ -262,7 +234,7 @@ object TextIndex {
     * where every other bounded-set site in the engine (probe broadcast,
     * tombstones) is size-gated. Past the ceiling the restriction becomes a
     * broadcast semi-join on `term64` instead — semantically identical,
-    * bounded plan, the [[Similarity.MaxProbeBroadcastBytes]] pattern. */
+    * bounded plan, the [[IndexTables.MaxProbeBroadcastBytes]] pattern. */
   private[graft] val MaxTermInListValues = 4096L
 
   def bm25IndexSearch(spark: SparkSession, queries: DataFrame,
@@ -301,14 +273,8 @@ object TextIndex {
       .parquet(IndexTables.liveDir(spark, s"$root/global"))
       .agg(coalesce(sum(col("n")), lit(0L)).as("n"),
         coalesce(sum(col("len_sum")), lit(0L)).as("len_sum"))
-    private val tombDir = s"$path/tombstones"
-    private val tombBytes = graft.sources.ParquetConcat.dataFiles(
-      spark.sparkContext.hadoopConfiguration,
-      new org.apache.hadoop.fs.Path(tombDir)).map(_.getLen).sum
     private val tomb: Option[DataFrame] =
-      if (tombBytes == 0L) None
-      else Some(maybeBroadcastTomb(
-        spark.read.parquet(tombDir).distinct(), tombBytes))
+      IndexTables.tombstones(spark, path).rows.map(_.distinct())
 
     def search(queries: DataFrame, qidCol: String, qtextCol: String,
                k: Int,
@@ -338,7 +304,7 @@ object TextIndex {
       lazy val qBytes = 16L * qset.count()
       def termPruned(df: DataFrame): DataFrame = inList match {
         case Some(ids) => df.filter(col("term64").isin(ids: _*))
-        case None => df.join(maybeBroadcastTomb(qset, qBytes),
+        case None => df.join(IndexTables.maybeBroadcast(qset, qBytes),
           Seq("term64"), "left_semi")
       }
       val postings = termPruned(postingsAll)
@@ -484,8 +450,6 @@ object TextIndex {
   private def scoreTopK(postings: DataFrame, qterms: DataFrame,
                         dfAgg: DataFrame, globals: DataFrame, k: Int,
                         estQBytes: Long): DataFrame = {
-    def mb(df: DataFrame, b: Long) =
-      if (b <= Similarity.MaxProbeBroadcastBytes) broadcast(df) else df
     val avgdl = col("len_sum").cast("double") / col("n")
     // literals appear EXACTLY as the twin's SQL spells them (2.2, 0.25 —
     // never computed as K1+1.0 etc.): both engines parse the same decimal
@@ -497,8 +461,8 @@ object TextIndex {
       (col("tf") + lit(1.2) * (lit(0.25) + (lit(0.75) * col("dl")) / avgdl))
     val contrib = round(idf * tfn, 8).cast(DecimalType(20, 8))
     val scored = postings
-      .join(mb(qterms, estQBytes), Seq("term64"))
-      .join(mb(dfAgg, estQBytes), Seq("term64"))
+      .join(IndexTables.maybeBroadcast(qterms, estQBytes), Seq("term64"))
+      .join(IndexTables.maybeBroadcast(dfAgg, estQBytes), Seq("term64"))
       .crossJoin(broadcast(globals))
       .select(col("query_id"), col("doc"), contrib.as("contrib"))
       .groupBy(col("query_id"), col("doc"))

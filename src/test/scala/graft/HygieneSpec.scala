@@ -98,6 +98,58 @@ class HygieneSpec extends SparkSpec {
         offenders.mkString("\n"))
   }
 
+  /** Index-lifecycle code in `src`: a tombstone-path literal, per-table
+    * compaction, generation retirement and the size-gated broadcast —
+    * each of which [[graft.operators.IndexTables]] owns for every index
+    * family. */
+  private def lifecycleCode(src: String): Seq[String] = {
+    def line(i: Int) = src.substring(0, i).count(_ == '\n') + 1
+    Seq("/tombstones\"", "compactTable\\(", "maybeCompactTable\\(",
+        "retireSuperseded\\(", "MaxProbeBroadcastBytes\\)\\s*broadcast")
+      .flatMap(re => re.r.findAllMatchIn(src)
+        .map(m => s"line ${line(m.start)}: ${m.matched.replaceAll("\\s+", " ")}"))
+  }
+
+  test("index lifecycle code lives only in IndexTables") {
+    // the detector itself: flags each form, passes the delegations
+    assert(lifecycleCode("spark.read.parquet(s\"$path/tombstones\")").size === 1)
+    assert(lifecycleCode("IndexTables.compactTable(spark, t)").size === 1)
+    assert(lifecycleCode("maybeCompactTable(spark, t, 16)").size === 1)
+    assert(lifecycleCode("retireSuperseded(fs, table)").size === 1)
+    assert(lifecycleCode(
+      "if (b <= Similarity.MaxProbeBroadcastBytes) broadcast(df) else df").size === 1)
+    assert(lifecycleCode("if (b <= MaxProbeBroadcastBytes)\n  broadcast(df)").size === 1)
+    assert(lifecycleCode("IndexTables.compact(spark, path) // path/tombstones`").isEmpty)
+    assert(lifecycleCode("IndexTables.tombstones(spark, path).antiJoin(df, k)").isEmpty)
+    assert(lifecycleCode(
+      "IndexTables.maybeBroadcast(df, b) // [[IndexTables.MaxProbeBroadcastBytes]]").isEmpty)
+    val offenders = scalaSources("src/main/scala")
+      .filter(_._1.getName != "IndexTables.scala")
+      .flatMap { case (f, src) => lifecycleCode(src).map(h => s"${f.getPath} $h") }
+    assert(offenders.isEmpty,
+      "compaction, tombstones, retirement and broadcast gating of the " +
+        "persisted indexes go through graft.operators.IndexTables:\n" +
+        offenders.mkString("\n"))
+  }
+
+  test("CacheScope leaves a frame its caller persisted cached through cache, free and release") {
+    import org.apache.spark.storage.StorageLevel
+    val mine = spark.range(0, 1000).toDF("x").persist()
+    try {
+      mine.count()
+      assert(CacheScope.cache(mine) eq mine)
+      CacheScope.free(mine)
+      CacheScope.release(spark)
+      assert(mine.storageLevel !== StorageLevel.NONE,
+        "release dropped a cache its caller still holds")
+      // a frame CacheScope persisted itself is still registered and freed
+      val scoped = CacheScope.cache(spark.range(0, 999).toDF("y"))
+      assert(scoped.storageLevel !== StorageLevel.NONE)
+      CacheScope.release(spark)
+      assert(scoped.storageLevel === StorageLevel.NONE)
+    } finally mine.unpersist(blocking = true)
+  }
+
   /** Hand-built sessions in `src`: calls of the session builder on the
     * `SparkSession` companion, whitespace around the dot allowed. */
   private def sessionBuilders(src: String): Int =

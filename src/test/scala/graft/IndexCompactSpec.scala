@@ -5,12 +5,13 @@ import org.apache.spark.sql.functions._
 
 import graft.operators.Similarity
 
-/** Maintenance lifecycle of the persisted ANN index tables (VERDICT r12
-  * #1): appends fragment the data tables, [[Similarity.indexCompact]]
-  * merges each leaf directory back to one file via binary row-group
-  * concatenation into a NEW generation, results are row-identical across
-  * the swap, and the superseded generation survives the swap (age-based
-  * retirement — a reader that resolved it pre-swap keeps scanning). */
+/** Maintenance lifecycle of the persisted index tables (VERDICT r12 #1;
+  * [[graft.operators.IndexTables]]): appends fragment the data tables,
+  * compaction merges each leaf directory back to one file via binary
+  * row-group concatenation into a NEW generation and leaves the model
+  * tables alone, results are row-identical across the swap, and the
+  * superseded generation survives the swap (age-based retirement — a
+  * reader that resolved it pre-swap keeps scanning). */
 class IndexCompactSpec extends SparkSpec {
 
   private lazy val emb = Tables.embeddings(spark, sf("0.001"))
@@ -35,6 +36,22 @@ class IndexCompactSpec extends SparkSpec {
   private def resultSet(df: org.apache.spark.sql.DataFrame) =
     df.collect().map(_.toSeq).toSet
 
+  /** A root generation's child tables split into (data, model) by whether
+    * they hold `gen-*` generations. */
+  private def tablesOf(root: String): (Set[String], Set[String]) =
+    fs.listStatus(new Path(root)).toSeq.filter(_.isDirectory)
+      .partition(st => fs.listStatus(st.getPath)
+        .exists(_.getPath.getName.startsWith("gen-"))) match {
+      case (d, m) => (d.map(_.getPath.getName).toSet,
+                      m.map(_.getPath.getName).toSet)
+    }
+
+  /** The (name, length, mtime) listing of a directory's files — the
+    * fingerprint the serving model cache keys on. */
+  private def listing(dir: String): Set[(String, Long, Long)] =
+    fs.listStatus(new Path(dir)).toSeq
+      .map(st => (st.getPath.getName, st.getLen, st.getModificationTime)).toSet
+
   test("imi index: append fragments, compact merges to one file per leaf, " +
       "results identical, superseded generation retained") {
     val path = java.nio.file.Files
@@ -57,8 +74,18 @@ class IndexCompactSpec extends SparkSpec {
     val gen0Files = dataFiles(s"$root/lists/gen-000000")
     assert(gen0Files.size > 3,
       s"appends should fragment the live generation (got ${gen0Files.size})")
+    val (dataTables, modelTables) = tablesOf(root)
+    assert(dataTables === Set("lists") && modelTables === Set("coarse", "fine"))
+    val modelsBefore = modelTables.map(t => t -> listing(s"$root/$t")).toMap
 
     Similarity.indexCompact(spark, path)
+    // every data table ends with one file per leaf; the model tables are
+    // not touched, so the serving model cache still hits
+    dataTables.foreach(t =>
+      assert(dataFiles(graft.operators.IndexTables.liveDir(spark,
+        s"$root/$t")).size === 1, s"$t: one file per leaf"))
+    assert(modelTables.map(t => t -> listing(s"$root/$t")).toMap ===
+      modelsBefore, "compaction must leave the model tables as they were")
     val live = s"$root/lists/gen-000001"
     assert(fs.exists(new Path(s"$live/_SUCCESS")),
       "compaction must commit a complete new generation")
@@ -205,23 +232,40 @@ class IndexCompactSpec extends SparkSpec {
   }
 
   test("pq index: compact after appends is row-identical and single-file") {
-    val path = java.nio.file.Files
-      .createTempDirectory("graft-compact-pq-spec").toString
-    Similarity.pqIndexWrite(emb.filter(pmod(col("vec_id"), lit(10)) =!= 0),
-      "vec_id", "embedding", path, subs = 8, ksub = 4, iters = 1, dim = 64)
-    Similarity.pqIndexAppend(spark,
-      emb.filter(pmod(col("vec_id"), lit(10)) === 0),
-      "vec_id", "embedding", path, subs = 8, ksub = 4, dim = 64)
-    def search() = Similarity.pqIndexSearch(spark,
-      emb.filter(col("vec_id") < 10), "vec_id", "embedding", path,
-      k = 5, subs = 8, ksub = 4, dim = 64)
-    val before = resultSet(search())
-    val root = Similarity.indexLiveRoot(spark, path)
-    assert(dataFiles(s"$root/codes/gen-000000").size > 1)
-    Similarity.indexCompact(spark, path)
-    assert(dataFiles(s"$root/codes/gen-000001").size === 1)
-    assert(resultSet(search()) === before)
-    fs.delete(new Path(path), true)
+    val head = pmod(col("vec_id"), lit(10)) =!= 0
+    val tail = pmod(col("vec_id"), lit(10)) === 0
+    val probes = emb.filter(col("vec_id") < 10)
+    // (name, write, append, search) of the two code-table families
+    Seq[(String, String => Unit, String => Unit,
+         String => org.apache.spark.sql.DataFrame)](
+      ("pq",
+        path => Similarity.pqIndexWrite(emb.filter(head), "vec_id",
+          "embedding", path, subs = 8, ksub = 4, iters = 1, dim = 64),
+        path => Similarity.pqIndexAppend(spark, emb.filter(tail), "vec_id",
+          "embedding", path, subs = 8, ksub = 4, dim = 64),
+        path => Similarity.pqIndexSearch(spark, probes, "vec_id",
+          "embedding", path, k = 5, subs = 8, ksub = 4, dim = 64)),
+      ("imi-pq",
+        path => Similarity.imiPqIndexWrite(emb.filter(head), "vec_id",
+          "embedding", path, groups = 4, groupSize = 4, iters = 1, dim = 64),
+        path => Similarity.imiPqIndexAppend(spark, emb.filter(tail),
+          "vec_id", "embedding", path, groupSize = 4, dim = 64),
+        path => Similarity.imiPqIndexSearch(spark, probes, "vec_id",
+          "embedding", path, k = 5, groupSize = 4, nprobeGroups = 2,
+          nprobeCells = 4, dim = 64))
+    ).foreach { case (name, write, append, search) =>
+      val path = java.nio.file.Files
+        .createTempDirectory(s"graft-compact-$name-spec").toString
+      write(path)
+      append(path)
+      val before = resultSet(search(path))
+      val root = Similarity.indexLiveRoot(spark, path)
+      assert(dataFiles(s"$root/codes/gen-000000").size > 1, name)
+      Similarity.indexCompact(spark, path)
+      assert(dataFiles(s"$root/codes/gen-000001").size === 1, name)
+      assert(resultSet(search(path)) === before, name)
+      fs.delete(new Path(path), true)
+    }
   }
 
   test("maintenance ops are no-ops on a never-written index path — a " +

@@ -1,13 +1,14 @@
 package graft
 
 import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.operators.Similarity
 
-/** Tombstone-delete + vacuum lifecycle of the persisted ANN indexes:
-  * deletes serve immediately through the anti-join, [[Similarity
-  * .indexVacuum]] folds them in physically with IDENTICAL results, the
+/** Tombstone-delete + vacuum lifecycle of the persisted indexes (IMI,
+  * IMI-PQ, PQ, dedup): deletes serve immediately through the anti-join,
+  * the vacuum folds them in physically with IDENTICAL results, the
   * applied tombstones are cleared, and the vacuumed generation no longer
   * contains the deleted ids at all. */
 class IndexDeleteSpec extends SparkSpec {
@@ -17,48 +18,69 @@ class IndexDeleteSpec extends SparkSpec {
   private def fs =
     new Path("/tmp").getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  private def resultSet(df: org.apache.spark.sql.DataFrame) =
+  private def resultSet(df: DataFrame) =
     df.collect().map(_.toSeq).toSet
+
+  /** One IMI-family index's write, search and append over `path`, and the
+    * data table that holds its rows. */
+  private case class Imi(name: String, table: String,
+                         write: String => Unit,
+                         search: String => DataFrame,
+                         append: (DataFrame, String) => Unit)
+
+  private lazy val imiFamilies = Seq(
+    Imi("imi", "lists",
+      path => Similarity.imiIndexWrite(emb, "vec_id", "embedding", path,
+        groups = 4, groupSize = 4, iters = 1, dim = 64),
+      path => Similarity.imiIndexSearch(spark,
+        emb.filter(col("vec_id") < 10), "vec_id", "embedding", path,
+        k = 5, groupSize = 4, nprobeGroups = 2, nprobeCells = 4),
+      (batch, path) => Similarity.imiIndexAppend(spark, batch, "vec_id",
+        "embedding", path, groupSize = 4)),
+    Imi("imi-pq", "codes",
+      path => Similarity.imiPqIndexWrite(emb, "vec_id", "embedding", path,
+        groups = 4, groupSize = 4, iters = 1, dim = 64),
+      path => Similarity.imiPqIndexSearch(spark,
+        emb.filter(col("vec_id") < 10), "vec_id", "embedding", path,
+        k = 5, groupSize = 4, nprobeGroups = 2, nprobeCells = 4, dim = 64),
+      (batch, path) => Similarity.imiPqIndexAppend(spark, batch, "vec_id",
+        "embedding", path, groupSize = 4, dim = 64)))
 
   test("imi index: tombstone serve == vacuumed serve; tombstones clear; " +
       "rows physically gone") {
-    val path = java.nio.file.Files
-      .createTempDirectory("graft-delete-spec").toString
-    Similarity.imiIndexWrite(emb, "vec_id", "embedding", path,
-      groups = 4, groupSize = 4, iters = 1, dim = 64)
-    def search() = Similarity.imiIndexSearch(spark,
-      emb.filter(col("vec_id") < 10), "vec_id", "embedding", path,
-      k = 5, groupSize = 4, nprobeGroups = 2, nprobeCells = 4)
-    val full = resultSet(search())
-    val delPred = pmod(col("vec_id"), lit(7)) === 3
-    Similarity.indexDelete(spark,
-      emb.filter(delPred).select(col("vec_id")), "vec_id", path)
-    val tombstoned = resultSet(search())
-    assert(tombstoned !== full,
-      "fixture should lose at least one neighbor to the deletion batch")
-    assert(!tombstoned.exists(r => r(2).asInstanceOf[Long] % 7 == 3),
-      "no deleted id may appear as a neighbor")
+    imiFamilies.foreach { ann =>
+      val path = java.nio.file.Files
+        .createTempDirectory(s"graft-delete-${ann.name}-spec").toString
+      ann.write(path)
+      def search() = resultSet(ann.search(path))
+      val full = search()
+      val delPred = pmod(col("vec_id"), lit(7)) === 3
+      Similarity.indexDelete(spark,
+        emb.filter(delPred).select(col("vec_id")), "vec_id", path)
+      val tombstoned = search()
+      assert(tombstoned !== full, s"${ann.name}: fixture should lose at " +
+        "least one neighbor to the deletion batch")
+      assert(!tombstoned.exists(r => r(2).asInstanceOf[Long] % 7 == 3),
+        s"${ann.name}: no deleted id may appear as a neighbor")
 
-    Similarity.indexVacuum(spark, path)
-    assert(resultSet(search()) === tombstoned,
-      "vacuum must not change served results")
-    // applied tombstones are cleared (data files removed)
-    assert(graft.sources.ParquetConcat.dataFiles(
-      spark.sparkContext.hadoopConfiguration,
-      new Path(s"$path/tombstones")).isEmpty)
-    // physically gone from the live generation
-    val live = graft.operators.IndexTables.liveDir(spark,
-      s"${Similarity.indexLiveRoot(spark, path)}/lists")
-    assert(spark.read.parquet(live)
-      .filter(pmod(col("nbr_id"), lit(7)) === 3).count() === 0,
-      "vacuumed generation must not contain deleted rows")
-    // a later append still lands and serves
-    Similarity.imiIndexAppend(spark,
-      emb.filter(delPred && col("vec_id") > 100), "vec_id", "embedding",
-      path, groupSize = 4)
-    val after = resultSet(search())
-    assert(after.nonEmpty)
-    fs.delete(new Path(path), true)
+      Similarity.indexVacuum(spark, path)
+      assert(search() === tombstoned,
+        s"${ann.name}: vacuum must not change served results")
+      // applied tombstones are cleared (data files removed)
+      assert(graft.sources.ParquetConcat.dataFiles(
+        spark.sparkContext.hadoopConfiguration,
+        new Path(s"$path/tombstones")).isEmpty, ann.name)
+      // physically gone from the live generation
+      val live = graft.operators.IndexTables.liveDir(spark,
+        s"${Similarity.indexLiveRoot(spark, path)}/${ann.table}")
+      assert(spark.read.parquet(live)
+        .filter(pmod(col("nbr_id"), lit(7)) === 3).count() === 0,
+        s"${ann.name}: vacuumed generation must not contain deleted rows")
+      // a later append still lands and serves
+      ann.append(emb.filter(delPred && col("vec_id") > 100), path)
+      assert(search().nonEmpty, ann.name)
+      fs.delete(new Path(path), true)
+    }
   }
 
   test("dedup index: deleted docs stop matching immediately and vacuum " +
