@@ -1,10 +1,16 @@
 package graft.operators
 
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.parquet.hadoop.Footer
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{
+  ParquetFileFormat, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions.broadcast
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types.StructType
 
-import graft.sources.{ParquetConcat, SerializableHadoopConf, TimeStore}
+import graft.sources.{
+  ParquetConcat, ParquetOpen, SerializableHadoopConf, TimeStore}
 
 /** The one storage lifecycle of every persisted index — the ANN indexes
   * ([[Similarity.imiIndexWrite]], [[Similarity.imiPqIndexWrite]],
@@ -70,6 +76,11 @@ import graft.sources.{ParquetConcat, SerializableHadoopConf, TimeStore}
   * store's r4 lesson). A reader that resolved the old generation keeps
   * scanning it meanwhile.
   *
+  * '''Reads.''' Every index-table read goes through [[read]]: the schema
+  * comes from one data file's footer, so no read pays Spark's
+  * schema-inference job (a `parquet at` job per relation, ~50-100 ms of
+  * scheduling floor each on a serve that otherwise runs a handful of jobs).
+  *
   * Single maintainer: appends, compaction, vacuum and rebuild of one index
   * do not run concurrently.
   */
@@ -99,6 +110,50 @@ private[graft] object IndexTables {
 
   private def isGen(st: FileStatus): Boolean =
     st.isDirectory && st.getPath.getName.startsWith("gen-")
+
+  /** `dir` (an index table's live generation or a model table) as a
+    * relation whose schema comes from ONE footer, opened through
+    * [[graft.sources.ParquetOpen]]: the same schema Spark's inference
+    * derives (the writer's stored Spark schema, else the parquet
+    * conversion), without its job. All index writers emit one schema per
+    * table, so one footer speaks for every file; `cell=` partition columns
+    * are still discovered from the paths. A directory with no data file
+    * falls back to inference and fails as a plain read would. */
+  def read(spark: SparkSession, dir: String): DataFrame =
+    readFiles(spark, Seq(dir),
+      firstDataFile(fsOf(spark, dir), new Path(dir)))
+
+  /** [[read]] of `table`'s live generation ([[liveDir]]). */
+  def readLive(spark: SparkSession, table: String): DataFrame =
+    read(spark, liveDir(spark, table))
+
+  private def readFiles(spark: SparkSession, paths: Seq[String],
+                        footerOf: Option[FileStatus]): DataFrame =
+    footerOf.map(footerSchema(spark, _)) match {
+      case Some(schema) => spark.read.schema(schema).parquet(paths: _*)
+      case None => spark.read.parquet(paths: _*)
+    }
+
+  private def footerSchema(spark: SparkSession, st: FileStatus): StructType =
+    ParquetOpen.withReader(spark.sparkContext.hadoopConfiguration, st)(r =>
+      ParquetFileFormat.readSchemaFromFooter(
+        new Footer(st.getPath, r.getFooter),
+        new ParquetToSparkSchemaConverter(SQLConf.get)))
+
+  /** The first data file under `dir` in path order, descending into
+    * partition directories; markers and hidden names skipped. */
+  private def firstDataFile(f: FileSystem, dir: Path): Option[FileStatus] =
+    if (!f.exists(dir)) None
+    else {
+      val (dirs, files) = f.listStatus(dir).toSeq
+        .filter { st =>
+          val nm = st.getPath.getName
+          !nm.startsWith("_") && !nm.startsWith(".")
+        }
+        .sortBy(_.getPath.getName).partition(_.isDirectory)
+      files.headOption.orElse(
+        dirs.iterator.flatMap(d => firstDataFile(f, d.getPath)).nextOption())
+    }
 
   /** All on-disk generations of a table, ascending: (generation, path). */
   private def generations(f: FileSystem, table: Path): Seq[(Int, Path)] =
@@ -217,7 +272,7 @@ private[graft] object IndexTables {
   def rewriteTable(spark: SparkSession, table: String)(
       f: DataFrame => DataFrame): Unit =
     liveGenOpt(spark, table).foreach { case (g, live) =>
-      val out = f(spark.read.parquet(live.toString)).write.mode("overwrite")
+      val out = f(read(spark, live.toString)).write.mode("overwrite")
       (if (cellPartitioned(fsOf(spark, table), live)) out.partitionBy("cell")
        else out).parquet(s"$table/${genName(g + 1)}")
       retireSuperseded(fsOf(spark, table), new Path(table))
@@ -346,7 +401,7 @@ private[graft] object IndexTables {
     val rows: Option[DataFrame] =
       if (files.isEmpty) None
       else Some(maybeBroadcast(
-        spark.read.parquet(files.map(_.getPath.toString): _*),
+        readFiles(spark, files.map(_.getPath.toString), files.headOption),
         files.map(_.getLen).sum))
 
     /** `df` without the rows whose `key` is tombstoned. */

@@ -1512,7 +1512,8 @@ object Similarity {
       : (Array[Array[Double]], Array[Array[Double]]) =
     cachedModel(spark, Seq(s"$root/coarse", s"$root/fine")) {
       def load(name: String): Array[Array[Double]] = {
-        val rows = spark.read.parquet(s"$root/$name").collect()
+        val rows = graft.Trace.phase(spark, "ann.model.load")(
+          IndexTables.read(spark, s"$root/$name").collect())
         val cells = rows.iterator.map(_.getAs[Int]("cell")).max + 1
         val dim = rows.iterator.map(_.getAs[Int]("d")).max + 1
         val m = Array.ofDim[Double](cells, dim)
@@ -1610,8 +1611,7 @@ object Similarity {
     // resolutions would mix them)
     private val root = indexLiveRoot(spark, path)
     private val model = imiIndexModel(spark, root)
-    private val listsAll = spark.read
-      .parquet(IndexTables.liveDir(spark, s"$root/lists"))
+    private val listsAll = IndexTables.readLive(spark, s"$root/lists")
     private val tomb = IndexTables.tombstones(spark, path)
     private def live(df: DataFrame): DataFrame = tomb.antiJoin(df, "nbr_id")
 
@@ -1633,8 +1633,8 @@ object Similarity {
       // the probed-cell set. The fan-out itself is a row-local projection
       // (see imiProbedCells), so recomputing it under the final join costs
       // less than caching its dim-wide rows ever did.
-      val cellRows = probedCells.groupBy(col("cell"))
-        .agg(count(lit(1)).as("n")).collect()
+      val cellRows = graft.Trace.phase(spark, "ann.search.cells")(
+        probedCells.groupBy(col("cell")).agg(count(lit(1)).as("n")).collect())
       val nProbed = cellRows.map(_.getAs[Long]("n")).sum
       val cellSet = cellRows.map(_.getAs[Int]("cell")).sorted
       val scanned = listsAll.filter(col("cell").isin(cellSet.map(Int.box): _*))
@@ -1687,9 +1687,8 @@ object Similarity {
     * generation; never loads vectors. */
   def imiIndexStats(spark: org.apache.spark.sql.SparkSession,
                     path: String): DataFrame =
-    IndexTables.tombstones(spark, path).antiJoin(spark.read
-        .parquet(IndexTables.liveDir(
-          spark, s"${indexLiveRoot(spark, path)}/lists"))
+    IndexTables.tombstones(spark, path).antiJoin(IndexTables
+        .readLive(spark, s"${indexLiveRoot(spark, path)}/lists")
         .select(col("nbr_id"), col("cell")), "nbr_id")
       .groupBy(col("cell"))
       .agg(count(lit(1)).as("n_vectors"))
@@ -1739,8 +1738,8 @@ object Similarity {
       val dim = fine0.headOption.map(_.length).getOrElse(0)
       // the training corpus: live rows of the CURRENT generation, cached —
       // training iterates over it and assignment reads it once more
-      val corpus = graft.CacheScope.cache(tomb.antiJoin(spark.read
-        .parquet(IndexTables.liveDir(spark, s"$root/lists"))
+      val corpus = graft.CacheScope.cache(tomb.antiJoin(IndexTables
+        .readLive(spark, s"$root/lists")
         .select(col("nbr_id"), col("cv")), "nbr_id"))
       try imiIndexWrite(corpus, "nbr_id", "cv", path, groups, groupSize,
         iters, dim, literalBudget)
@@ -1906,12 +1905,12 @@ object Similarity {
     val probedCells = imiPqProbedCells(probes, idCol, vecCol, coarse, fine,
       groupSize, nprobeGroups, nprobeCells, subs, ksub, dim)
     // one narrow job for count + probed-cell set (see imiIndexSearch)
-    val cellRows = probedCells.groupBy(col("cell"))
-      .agg(count(lit(1)).as("n")).collect()
+    val cellRows = graft.Trace.phase(spark, "ann.search.cells")(
+      probedCells.groupBy(col("cell")).agg(count(lit(1)).as("n")).collect())
     val nProbed = cellRows.map(_.getAs[Long]("n")).sum
     val cellSet = cellRows.map(_.getAs[Int]("cell")).sorted
-    val corpusIdx = IndexTables.tombstones(spark, path).antiJoin(spark.read
-      .parquet(IndexTables.liveDir(spark, s"$root/codes"))
+    val corpusIdx = IndexTables.tombstones(spark, path).antiJoin(IndexTables
+      .readLive(spark, s"$root/codes")
       .filter(col("cell").isin(cellSet.map(Int.box): _*))
       .select(col("nbr_id"), col("cell"), col("pq_code")), "nbr_id")
     imiPqRank(corpusIdx, probedCells, k, subs, ksub,
@@ -2332,7 +2331,8 @@ object Similarity {
                            ds: Int): Array[Array[Array[Double]]] =
     cachedModel(spark, Seq(s"$root/books")) {
       val books = Array.ofDim[Double](subs, ksub, ds)
-      spark.read.parquet(s"$root/books").collect().foreach { r =>
+      graft.Trace.phase(spark, "ann.model.load")(
+          IndexTables.read(spark, s"$root/books").collect()).foreach { r =>
         books(r.getAs[Int]("s"))(r.getAs[Int]("c"))(r.getAs[Int]("d")) =
           r.getAs[Double]("comp")
       }
@@ -2346,8 +2346,8 @@ object Similarity {
     val ds = dim / subs
     val root = indexLiveRoot(spark, path) // one resolution per serve
     val books = pqIndexModel(spark, root, subs, ksub, ds)
-    val codes = IndexTables.tombstones(spark, path).antiJoin(spark.read
-      .parquet(IndexTables.liveDir(spark, s"$root/codes")), "nbr_id")
+    val codes = IndexTables.tombstones(spark, path).antiJoin(
+      IndexTables.readLive(spark, s"$root/codes"), "nbr_id")
     val p = probes.select(col(idCol).as("query_id"),
       trainedDtab(books, ds, subs, ksub)(col(vecCol)).as("dtab"))
     val adc = adcSum(subs, ksub)

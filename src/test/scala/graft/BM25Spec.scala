@@ -85,9 +85,15 @@ class BM25Spec extends SparkSpec {
     val path = tempPath("graft-bm25-del")
     TextIndex.bm25IndexWrite(docs, "doc_id", "text", path)
     val delPred = pmod(col("doc_id"), lit(7)) === 3
-    def search() = resultSet(
-      TextIndex.bm25IndexSearch(spark, gateQueries, "query_id", "qtext",
-        path, k = 5))
+    // both sides of the In-list ceiling (0: every batch is past it) serve
+    // the same rows at every step
+    def search() = {
+      val Seq(below, past) = Seq(TextIndex.MaxTermInListValues, 0L).map(c =>
+        resultSet(TextIndex.bm25IndexSearch(spark, gateQueries, "query_id",
+          "qtext", path, k = 5, maxTermInList = c)))
+      assert(below === past)
+      below
+    }
     val before = search()
     TextIndex.bm25IndexDelete(spark, docs.filter(delPred)
       .select(col("doc_id")), "doc_id", path)

@@ -132,6 +132,49 @@ class HygieneSpec extends SparkSpec {
         offenders.mkString("\n"))
   }
 
+  /** Parquet reads in `src`, as (line, enclosing def): a `.read` chained
+    * to `.parquet(` through any calls in between (`spark.read.parquet(`,
+    * `spark.read.schema(s).parquet(`, split across lines). Each one is a
+    * relation Spark infers a schema for with a job unless the caller
+    * passes one. */
+  private def parquetReads(src: String): Seq[(Int, String)] = {
+    val arg = """\((?:[^()]|\([^()]*\))*\)"""
+    val read = ("""\.\s*read\b(?:\s*\.\s*\w+\s*(?:""" + arg +
+      """)?)*?\s*\.\s*parquet\s*\(""").r
+    val defs = """\bdef\s+(\w+)""".r.findAllMatchIn(src).toSeq
+    read.findAllMatchIn(src).map { m =>
+      (src.substring(0, m.start).count(_ == '\n') + 1,
+        defs.takeWhile(_.start < m.start).lastOption.fold("")(_.group(1)))
+    }.toSeq
+  }
+
+  test("index tables are read only through IndexTables' footer-schema reader") {
+    // the detector itself: flags each spelling, passes writes and the reader
+    assert(parquetReads("def f = spark.read.parquet(dir)") === Seq((1, "f")))
+    assert(parquetReads("def g =\n  spark.read\n    .parquet(s\"$a/b\")").size === 1)
+    assert(parquetReads("def h = s.read.schema(t(x)).option(\"a\", \"b\").parquet(p: _*)")
+      .size === 1)
+    assert(parquetReads("def w = df.write.mode(m).parquet(dir)").isEmpty)
+    assert(parquetReads("def r = IndexTables.read(spark, dir).filter(c)").isEmpty)
+    assert(parquetReads("def o = records.read(); df.write.parquet(p)").isEmpty)
+    val files = scalaSources("src/main/scala/graft/operators")
+    val offenders = files.collect {
+      case (f, src) if Set("TextIndex.scala", "Dedup.scala",
+          "Similarity.scala")(f.getName) =>
+        parquetReads(src).map { case (l, _) => s"${f.getPath} line $l" }
+      case (f, src) if f.getName == "IndexTables.scala" =>
+        parquetReads(src).collect {
+          case (l, d) if d != "readFiles" => s"${f.getPath} line $l in $d"
+        }
+    }.flatten
+    assert(offenders.isEmpty,
+      "index tables are read through IndexTables.read / readLive (schema " +
+        "from one footer, no inference job):\n" + offenders.mkString("\n"))
+    assert(files.exists { case (f, src) =>
+      f.getName == "IndexTables.scala" && parquetReads(src).nonEmpty },
+      "the reader itself must be found")
+  }
+
   test("CacheScope leaves a frame its caller persisted cached through cache, free and release") {
     import org.apache.spark.storage.StorageLevel
     val mine = spark.range(0, 1000).toDF("x").persist()

@@ -3,7 +3,7 @@ package graft
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.functions._
 
-import graft.operators.Similarity
+import graft.operators.{Similarity, TextIndex}
 
 /** Maintenance lifecycle of the persisted index tables (VERDICT r12 #1;
   * [[graft.operators.IndexTables]]): appends fragment the data tables,
@@ -179,14 +179,21 @@ class IndexCompactSpec extends SparkSpec {
       path, k = 64, r = 4)
     Dedup.dedupIndexCompact(spark, path)
     val shI = Dedup.shingles(incoming, "doc_id", "text", 3)
-    val fromIndex = resultSet(
-      Dedup.dedupIndexCheck(spark, shI, path, k = 64, r = 4, threshold = 0.5))
     val recomputed = resultSet(
       Dedup.minhashLshPairsCross(shI,
         Dedup.shingles(held, "doc_id", "text", 3), k = 64, r = 4,
         threshold = 0.5))
-    assert(fromIndex === recomputed,
-      "persisted-index check must reproduce the recomputed cross pairs")
+    assert(recomputed.nonEmpty)
+    // both sides of the ceiling: the driver-resolved check and the
+    // distributed one (ceiling 0: every batch is past it)
+    Seq(TextIndex.MaxTermInListValues, 0L).foreach { c =>
+      val fromIndex = resultSet(Dedup.dedupIndexOpen(spark, path).checkAt(
+        shI, k = 64, r = 4, threshold = 0.5,
+        maxBucket = Dedup.DefaultMaxBucket, maxInList = c))
+      assert(fromIndex === recomputed,
+        s"persisted-index check (ceiling $c) must reproduce the recomputed " +
+          "cross pairs")
+    }
     // buckets / shingles / sizes all compacted to one file each
     val dedupRoot = graft.operators.IndexTables.liveDir(spark, path)
     Seq("buckets", "shingles", "sizes").foreach(t =>
@@ -214,17 +221,39 @@ class IndexCompactSpec extends SparkSpec {
       Dedup.dedupIndexAppend(Dedup.shingles(mk(lo, hi), "doc_id", "text", 3),
         path, k = 8, r = 4, maxBucket = 5)
     }
+    // two held docs of another text, a bucket well under the cap
+    val other = Seq(12L, 13L, 300L).map(i => (i, "one two three four five six"))
+      .toDF("doc_id", "text")
+    Dedup.dedupIndexAppend(Dedup.shingles(other.filter(col("doc_id") < 100),
+      "doc_id", "text", 3), path, k = 8, r = 4, maxBucket = 5)
+    val corpus = Dedup.shingles(
+      mk(0, 12).union(other.filter(col("doc_id") < 100)), "doc_id", "text", 3)
+    // both sides of the ceiling (0: every batch is past it) check alike
+    def checkOf(sh: org.apache.spark.sql.DataFrame) = {
+      val Seq(below, past) = Seq(TextIndex.MaxTermInListValues, 0L).map(c =>
+        Dedup.dedupIndexOpen(spark, path).checkAt(sh, k = 8, r = 4,
+          threshold = 0.5, maxBucket = 5, maxInList = c))
+      assert(resultSet(below) === resultSet(past))
+      below
+    }
+    // an incoming batch whose own (band, bh) buckets exceed the cap: six
+    // copies of the held hot text pair nothing (the incoming-side cap), the
+    // copy of the other text pairs with both of its held docs
+    val hot = Dedup.shingles(
+      mk(200, 206).union(other.filter(col("doc_id") === 300)), "doc_id", "text", 3)
+    val hotPairs = resultSet(checkOf(hot))
+    assert(hotPairs.map(p => (p(0), p(1))) === Set((300L, 12L), (300L, 13L)))
+    assert(hotPairs === resultSet(Dedup.minhashLshPairsCross(hot, corpus,
+      k = 8, r = 4, threshold = 0.5, maxBucket = 5)))
     val shI = Dedup.shingles(mk(100, 102), "doc_id", "text", 3)
-    def check() = Dedup.dedupIndexCheck(spark, shI, path, k = 8, r = 4,
-      threshold = 0.5, maxBucket = 5)
+    def check() = checkOf(shI)
     assert(check().count() > 0,
       "the accumulated 12-doc bucket must still pair before recap")
     Dedup.dedupIndexRecap(spark, path, maxBucket = 5)
     val after = check()
     assert(after.count() === 0,
       "recap must drop the globally-over-cap bucket")
-    val cross = Dedup.minhashLshPairsCross(shI,
-      Dedup.shingles(mk(0, 12), "doc_id", "text", 3), k = 8, r = 4,
+    val cross = Dedup.minhashLshPairsCross(shI, corpus, k = 8, r = 4,
       threshold = 0.5, maxBucket = 5)
     assert(resultSet(after) === resultSet(cross),
       "post-recap stored-side cap semantics == whole-corpus cross cap")

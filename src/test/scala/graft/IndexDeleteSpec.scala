@@ -4,7 +4,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import graft.operators.Similarity
+import graft.operators.{Similarity, TextIndex}
 
 /** Tombstone-delete + vacuum lifecycle of the persisted indexes (IMI,
   * IMI-PQ, PQ, dedup): deletes serve immediately through the anti-join,
@@ -94,8 +94,14 @@ class IndexDeleteSpec extends SparkSpec {
     Dedup.dedupIndexWrite(Dedup.shingles(held, "doc_id", "text", 3), path,
       k = 64, r = 4)
     val shI = Dedup.shingles(incoming, "doc_id", "text", 3)
-    def check() = Dedup.dedupIndexCheck(spark, shI, path, k = 64, r = 4,
-      threshold = 0.5)
+    // both sides of the ceiling (0: every batch is past it) check alike
+    def check() = {
+      val Seq(below, past) = Seq(TextIndex.MaxTermInListValues, 0L).map(c =>
+        Dedup.dedupIndexOpen(spark, path).checkAt(shI, k = 64, r = 4,
+          threshold = 0.5, maxBucket = Dedup.DefaultMaxBucket, maxInList = c))
+      assert(resultSet(below) === resultSet(past))
+      below
+    }
     val full = resultSet(check())
     assert(full.nonEmpty)
     // delete every held doc that currently matches something — after the
