@@ -165,18 +165,27 @@ object Dedup {
     * capped — the shared front half of the self- and cross-corpus LSH
     * joins. One hash-aggregate pass for all k minhashes. */
   private def bandedBuckets(sh: DataFrame, k: Int, r: Int,
-                            maxBucket: Int): DataFrame = {
+                            maxBucket: Int): DataFrame =
     // cached: the self-join path references the bucketed frame from both
     // sides, and the k-minhash aggregate is the expensive half
-    val sig = CacheScope.cache(minhashSignature(sh, k))
-    val bands = k / r
-    val bandCols = (0 until bands).map(b =>
+    bucketsOf(CacheScope.cache(minhashSignature(sh, k)), k, r, maxBucket)
+
+  /** (doc, band, bh) of (doc, mh0..mh{k-1}) signature rows, hot buckets
+    * capped. */
+  private def bucketsOf(sig: DataFrame, k: Int, r: Int,
+                        maxBucket: Int): DataFrame = {
+    val bandCols = (0 until k / r).map(b =>
       struct(lit(b).as("band"), bandHash(b, r).as("bh")))
     capHotBuckets(sig.select(col("doc"),
         explode(array(bandCols: _*)).as("bb"))
       .select(col("doc"), col("bb.band").as("band"), col("bb.bh").as("bh")),
       maxBucket)
   }
+
+  /** The band hashes of (doc, mh0..mh{k-1}) signature rows, as one array
+    * column `bhs` (band b at index b). */
+  private def bandHashes(k: Int, r: Int): Column =
+    array((0 until k / r).map(bandHash(_, r)): _*).as("bhs")
 
   /** Cross-corpus MinHash-LSH near-dup pairs: every (incoming, corpus)
     * document pair with exact Jaccard ≥ threshold — the INCREMENTAL dedup /
@@ -218,37 +227,105 @@ object Dedup {
   def dedupIndexWrite(sh: DataFrame, path: String, k: Int, r: Int,
                       maxBucket: Int = DefaultMaxBucket): Unit =
     IndexTables.build(sh.sparkSession, path)(root =>
-      writeTables(sh, root, IndexTables.writeDir, "overwrite", k, r,
-        maxBucket))
+      writeTables(sh, root, k, r, maxBucket)((df, t) =>
+        df.write.mode("overwrite").parquet(IndexTables.writeDir(t))))
 
   /** Append a new batch's signatures/shingles to a persisted dedup index
-    * WITHOUT touching the held rows — an ordinary parquet append into each
-    * table's live generation (the [[Similarity.imiIndexAppend]]
-    * contract). */
+    * WITHOUT touching the held rows — a parquet append into each table's
+    * live generation (the [[Similarity.imiIndexAppend]] contract). A
+    * bounded batch builds its rows on the driver ([[appendLocal]]); a
+    * bigger one runs the distributed plan. */
   def dedupIndexAppend(sh: DataFrame, path: String, k: Int, r: Int,
-                       maxBucket: Int = DefaultMaxBucket): Unit = {
+                       maxBucket: Int = DefaultMaxBucket): Unit =
+    dedupIndexAppendAt(sh, path, k, r, maxBucket,
+      IndexTables.LocalAppendMaxRows)
+
+  /** [[dedupIndexAppend]] under an explicit driver-side row ceiling
+    * (specs reach the distributed plan with 0). */
+  private[graft] def dedupIndexAppendAt(sh: DataFrame, path: String, k: Int,
+                                        r: Int, maxBucket: Int,
+                                        maxLocalRows: Long): Unit = {
     val spark = sh.sparkSession
-    writeTables(sh, IndexTables.liveDir(spark, path),
-      t => IndexTables.liveDir(spark, t), "append", k, r, maxBucket)
+    Trace.phase(spark, "dedup.append") {
+      val root = IndexTables.liveDir(spark, path)
+      // per shingle row: doc, the stored shingle hash, the k minhash inputs
+      val rows = IndexTables.collectBounded(
+        sh.select(col("doc"), xxhash64(col("s"), lit(-1)).as("sh64"),
+          array((0 until k).map(i => xxhash64(col("s"), lit(i))): _*)
+            .as("h")),
+        maxLocalRows)
+      if (rows.length > maxLocalRows)
+        writeTables(sh, root, k, r, maxBucket)(IndexTables.appendLive)
+      else appendLocal(sh, root, k, r, maxBucket, rows)
+    }
   }
 
-  /** Write the three tables under `root` through `dir` (a fresh nested
-    * generation on build, the live one on append). The writes are
-    * independent once the shingle cache is materialized, so they overlap
-    * from driver threads (guide §2.6); a build's visibility is still
-    * gated by its single root `_SUCCESS`. */
-  private def writeTables(sh: DataFrame, root: String, dir: String => String,
-                          mode: String, k: Int, r: Int,
-                          maxBucket: Int): Unit = {
+  /** The three tables over shingle rows `sh`, as the distributed plan
+    * writes them from its cached signature `sig`: (table, frame). */
+  private def tableFrames(sh: DataFrame, sig: DataFrame, k: Int, r: Int,
+                          maxBucket: Int): Seq[(String, DataFrame)] = Seq(
+    "buckets" -> bucketsOf(sig, k, r, maxBucket),
+    "shingles" ->
+      sh.select(col("doc"), xxhash64(col("s"), lit(-1)).as("sh64")),
+    "sizes" -> sh.groupBy(col("doc")).agg(count(lit(1)).as("n")))
+
+  /** Write the three tables through `write(frame, table)` (a fresh nested
+    * generation on build, the live one on a distributed append). The
+    * writes are independent once the shingle cache is materialized, so
+    * they overlap from driver threads (guide §2.6); a build's visibility
+    * is still gated by its single root `_SUCCESS`. */
+  private def writeTables(sh: DataFrame, root: String, k: Int, r: Int,
+                          maxBucket: Int)(
+      write: (DataFrame, String) => Unit): Unit = {
     val shc = CacheScope.cache(sh)
     shc.count() // three consumers below
-    graft.Par.run(
-      () => bandedBuckets(shc, k, r, maxBucket)
-        .write.mode(mode).parquet(dir(s"$root/buckets")),
-      () => shc.select(col("doc"), xxhash64(col("s"), lit(-1)).as("sh64"))
-        .write.mode(mode).parquet(dir(s"$root/shingles")),
-      () => shc.groupBy(col("doc")).agg(count(lit(1)).as("n"))
-        .write.mode(mode).parquet(dir(s"$root/sizes")))
+    val sig = CacheScope.cache(minhashSignature(shc, k))
+    graft.Par.run(tableFrames(shc, sig, k, r, maxBucket).map {
+      case (t, df) => () => write(df, s"$root/$t") }: _*)
+  }
+
+  /** The driver side of [[dedupIndexAppend]] over the batch's collected
+    * (doc, sh64, minhash inputs) rows, every hash from the distributed
+    * plan's own expressions: the driver takes each doc's k minima and
+    * counts its rows; the band hashes are [[bandHash]] over a local
+    * relation of those signatures (folded at optimization, no job); the
+    * hot-bucket cap counts every member of a (band, bh) bucket in the
+    * batch, as [[capHotBuckets]] does. Each table holds exactly the rows
+    * the distributed plan writes. */
+  private def appendLocal(sh: DataFrame, root: String, k: Int, r: Int,
+                          maxBucket: Int, rows: Array[Row]): Unit = {
+    val spark = sh.sparkSession
+    // doc -> (rows, k running minima), docs in arrival order
+    val sig =
+      scala.collection.mutable.LinkedHashMap.empty[Any, (Long, Array[Long])]
+    rows.foreach { row =>
+      val h = row.getSeq[Long](2)
+      sig.get(row.get(0)) match {
+        case Some((n, mins)) =>
+          (0 until k).foreach(i => mins(i) = math.min(mins(i), h(i)))
+          sig(row.get(0)) = (n + 1, mins)
+        case None => sig(row.get(0)) = (1L, h.toArray)
+      }
+    }
+    val schemas = IndexTables.tableSchemas(("dedup", sh.schema, k, r))(
+      ("signature" -> minhashSignature(sh, k)) +:
+        tableFrames(sh, minhashSignature(sh, k), k, r, maxBucket))
+    val banded = IndexTables.local(spark,
+        sig.toSeq.map { case (doc, (_, mins)) => Row(doc +: mins.toSeq: _*) },
+        schemas("signature"))
+      .select(col("doc"), bandHashes(k, r)).collect().toSeq
+      .flatMap(row => row.getSeq[Long](1).zipWithIndex
+        .map { case (bh, band) => (row.get(0), band, bh) })
+    val members = banded.groupMapReduce(b => (b._2, b._3))(_ => 1)(_ + _)
+    Seq(
+      "buckets" -> banded.filter(b => members((b._2, b._3)) <= maxBucket)
+        .map { case (doc, band, bh) => Row(doc, band, bh) },
+      "shingles" -> rows.toSeq.map(row => Row(row.get(0), row.getLong(1))),
+      "sizes" -> sig.toSeq.map { case (doc, (n, _)) => Row(doc, n) }
+    ).foreach { case (t, tableRows) =>
+      IndexTables.appendLive(
+        IndexTables.local(spark, tableRows, schemas(t)), s"$root/$t")
+    }
   }
 
   /** Merge a dedup index's append-fragmented tables
@@ -442,8 +519,7 @@ object Dedup {
         .add("i", shIncoming.schema("doc").dataType)
         .add("j", stored.schema("doc").dataType)
         .add("common", LongType).add("ni", LongType).add("nj", LongType)
-      jaccardScored(spark.createDataFrame(
-        java.util.Arrays.asList(rows: _*), schema), threshold)
+      jaccardScored(IndexTables.local(spark, rows, schema), threshold)
     }
 
     /** A bulk batch past the ceiling: the band join and the verification
@@ -476,8 +552,7 @@ object Dedup {
     sh.groupBy(col("doc"))
       .agg(count(lit(1)).as("n"), minhashCols(k) :+
         collect_list(xxhash64(col("s"), lit(-1))).as("sh64"): _*)
-      .select(col("doc"), col("n"), col("sh64"),
-        array((0 until k / r).map(bandHash(_, r)): _*).as("bhs"))
+      .select(col("doc"), col("n"), col("sh64"), bandHashes(k, r))
 
   /** Band buckets larger than this are excluded from self-joins by default.
     * Far above anything a healthy corpus produces per (band, hash) bucket,

@@ -1,14 +1,24 @@
 package graft.operators
 
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.hadoop.mapreduce.{Job, TaskAttemptID}
+import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
 import org.apache.parquet.hadoop.Footer
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.catalyst.plans.logical.{
+  Filter, GlobalLimit, LocalLimit, LocalRelation, LogicalPlan, Project,
+  SubqueryAlias}
 import org.apache.spark.sql.execution.datasources.parquet.{
-  ParquetFileFormat, ParquetToSparkSchemaConverter}
+  ParquetFileFormat, ParquetOptions, ParquetToSparkSchemaConverter,
+  ParquetUtils}
 import org.apache.spark.sql.functions.broadcast
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.StructType
 
+import graft.Trace
 import graft.sources.{
   ParquetConcat, ParquetOpen, SerializableHadoopConf, TimeStore}
 
@@ -43,9 +53,14 @@ import graft.sources.{
   * under [[writeDir]]) beneath root generation N+1, made visible by one
   * `_SUCCESS` ([[commitRoot]]).
   *
-  * '''Append''' ([[appendLive]]): an ordinary parquet append into a data
-  * table's live generation, matching its `cell=` partitioning. Model
-  * tables are never appended to.
+  * '''Append''' ([[appendLive]]): a parquet append into a data table's
+  * live generation, matching its `cell=` partitioning. Model tables are
+  * never appended to. A bounded batch (at most [[LocalAppendMaxRows]]
+  * rows, collected once by [[collectBounded]]) reaches it as a local
+  * relation and lands on the driver through Spark's own parquet writer,
+  * with no Spark job: one file per leaf, staged under a dot-prefixed
+  * `.inprogress` name (invisible to every reader) and renamed into place.
+  * Anything else is a Spark append.
   *
   * '''Compaction''' ([[compact]], [[maybeCompact]]): each data table of
   * the live root — found as the root's children that hold `gen-*`
@@ -256,15 +271,134 @@ private[graft] object IndexTables {
     if (cells.isEmpty) Seq(live) else cells
   }
 
-  /** Append `df` to `table`'s live generation, matching its `cell=`
-    * partitioning. Fails loudly on a table never written. */
-  def appendLive(df: DataFrame, table: String): Unit = {
-    val live = liveDir(df.sparkSession, table)
-    val out = df.write.mode("append")
-    (if (cellPartitioned(fsOf(df.sparkSession, table), new Path(live)))
-       out.partitionBy("cell")
-     else out).parquet(live)
+  /** Row ceiling of a driver-side index append: a batch of at most this
+    * many collected rows (documents, shingle rows or vectors, with their
+    * hashes) stays a few MB on the driver. Past it the append runs the
+    * distributed plan. */
+  private[graft] val LocalAppendMaxRows = 4096L
+
+  /** At most `max` + 1 rows of `df`: no job when its plan folds to a
+    * local relation, else one single-task job that stops reading once
+    * the ceiling is crossed. More than `max` rows means "past the
+    * ceiling". */
+  def collectBounded(df: DataFrame, max: Long): Array[Row] = {
+    val n = math.min(max + 1, Int.MaxValue.toLong).toInt
+    val limited = df.limit(n)
+    if (localRows(limited).isDefined) limited.collect()
+    else df.coalesce(1).limit(n).collect()
   }
+
+  /** `rows` of `schema` as a local relation. */
+  def local(spark: SparkSession, rows: Seq[Row], schema: StructType)
+      : DataFrame =
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+
+  /** The rows of `df` when its plan is, or folds at optimization to, a
+    * local relation with `df`'s columns. Only projections, filters and
+    * limits over local relations fold (`ConvertToLocalRelation`), so only
+    * such a plan is optimized to find out. */
+  private def localRows(df: DataFrame): Option[Seq[InternalRow]] = {
+    def rowsOf(plan: LogicalPlan) = plan match {
+      case lr: LocalRelation if !lr.isStreaming &&
+          lr.output.map(_.name) == df.schema.fieldNames.toSeq =>
+        Some(lr.data)
+      case _ => None
+    }
+    val analyzed = df.queryExecution.analyzed
+    rowsOf(analyzed).orElse(
+      if (analyzed.find {
+            case _: Project | _: Filter | _: LocalLimit | _: GlobalLimit |
+                 _: SubqueryAlias | _: LocalRelation => false
+            case _ => true
+          }.isEmpty) rowsOf(df.queryExecution.optimizedPlan)
+      else None)
+  }
+
+  private val schemaMemo =
+    new java.util.concurrent.ConcurrentHashMap[Any, Map[String, StructType]]()
+
+  /** The schemas of a family's distributed table frames, by table: what a
+    * driver-side append writes its rows under. They depend only on `key`
+    * (the family, its input's schema and the parameters that shape its
+    * tables), and analysing the frames costs a few ms per DataFrame step
+    * (tens for the dedup signature's k aggregates), so they are derived
+    * once per key. */
+  def tableSchemas(key: Any)(frames: => Seq[(String, DataFrame)])
+      : Map[String, StructType] = {
+    if (schemaMemo.size > 256) schemaMemo.clear()
+    schemaMemo.computeIfAbsent(key,
+      _ => frames.map { case (t, df) => t -> df.schema }.toMap)
+  }
+
+  /** Append `df` to `table`'s live generation, matching its `cell=`
+    * partitioning. A frame whose plan folds to a local relation lands on
+    * the driver ([[writeLocal]]); anything else is a Spark append. Fails
+    * loudly on a table never written. */
+  def appendLive(df: DataFrame, table: String): Unit = {
+    val spark = df.sparkSession
+    val live = new Path(liveDir(spark, table))
+    val partitioned = cellPartitioned(fsOf(spark, table), live)
+    localRows(df) match {
+      case Some(rows) => writeLocal(spark, rows, df.schema, live, partitioned)
+      case None =>
+        val out = df.write.mode("append")
+        (if (partitioned) out.partitionBy("cell") else out)
+          .parquet(live.toString)
+    }
+  }
+
+  /** `rows` of `schema` appended to the generation `live` on the driver,
+    * through the writer a Spark parquet write runs in its tasks
+    * (`ParquetUtils.prepareWrite` → `OutputWriterFactory`): the same
+    * physical schema and footer metadata, so compaction concatenates these
+    * files with Spark-written ones. One file per leaf (per `cell=` value,
+    * the column dropped from the data as Spark's partitioned write does),
+    * each staged under a dot-prefixed `.inprogress` name and renamed into
+    * place once closed; stale staged files in the leaf are swept first
+    * (a writer that died before its rename left them), as the store's
+    * `writePointsLocal` does. An empty batch writes nothing. */
+  private def writeLocal(spark: SparkSession, rows: Seq[InternalRow],
+                         schema: StructType, live: Path,
+                         partitioned: Boolean): Unit =
+    if (rows.nonEmpty) {
+      val f = fsOf(spark, live.toString)
+      val cellIdx = if (partitioned) schema.fieldIndex("cell") else -1
+      val keep = schema.fields.indices.filter(_ != cellIdx)
+      val dataSchema = StructType(keep.map(schema.fields(_)))
+      val sqlConf = spark.sessionState.conf
+      val job = Job.getInstance(spark.sessionState.newHadoopConf())
+      val factory = ParquetUtils.prepareWrite(sqlConf, job, dataSchema,
+        new ParquetOptions(Map.empty[String, String], sqlConf))
+      val ctx = new TaskAttemptContextImpl(job.getConfiguration,
+        new TaskAttemptID())
+      val leaves: Seq[(Path, Seq[InternalRow])] =
+        if (!partitioned) Seq(live -> rows)
+        else rows.groupBy { r =>
+          val v = r.get(cellIdx, schema.fields(cellIdx).dataType)
+          ExternalCatalogUtils.getPartitionPathString("cell",
+            if (v == null) ExternalCatalogUtils.DEFAULT_PARTITION_NAME
+            else v.toString)
+        }.toSeq.sortBy(_._1).map { case (leaf, rs) =>
+          new Path(live, leaf) -> rs.map(r => new GenericInternalRow(
+            keep.map(i => r.get(i, schema.fields(i).dataType)).toArray))
+        }
+      leaves.foreach { case (dir, leafRows) =>
+        if (f.exists(dir))
+          f.listStatus(dir).foreach { st =>
+            if (st.isFile && st.getPath.getName.endsWith(".inprogress"))
+              f.delete(st.getPath, false)
+          }
+        val base = s"part-${java.util.UUID.randomUUID()}-local" +
+          factory.getFileExtension(ctx)
+        val staged = new Path(dir, s".$base.inprogress")
+        val w = factory.newInstance(staged.toString, dataSchema, ctx)
+        try leafRows.foreach(w.write) finally w.close()
+        TimeStore.crashPoint("index-append-before-rename")
+        if (!f.rename(staged, new Path(dir, base)))
+          throw new java.io.IOException(
+            s"failed to publish local index append: $staged")
+      }
+    }
 
   /** Rewrite `table`'s live generation through `f` into generation N+1
     * (`cell=` partitioning kept), then retire what that supersedes.
@@ -281,9 +415,13 @@ private[graft] object IndexTables {
   /** Compact every data table of the index at `path`. No-op on a
     * never-written path. */
   def compact(spark: SparkSession, path: String): Unit =
-    liveGenOpt(spark, path).foreach { case (_, root) =>
-      dataTables(spark, root.toString)
-        .foreach(t => compactTable(spark, s"$root/$t"))
+    Trace.phase(spark, "index.compact") {
+      liveGenOpt(spark, path).foreach { case (_, root) =>
+        dataTables(spark, root.toString).foreach { t =>
+          val table = s"$root/$t"
+          listTable(spark, table).foreach(compactTable(spark, table, _))
+        }
+      }
     }
 
   /** Compact the data tables of the index at `path` some leaf of which
@@ -291,76 +429,91 @@ private[graft] object IndexTables {
     * listings. Returns whether any table compacted. */
   def maybeCompact(spark: SparkSession, path: String,
                    maxFilesPerLeaf: Int = MaxFilesPerLeaf): Boolean =
-    liveGenOpt(spark, path).exists { case (_, root) =>
-      dataTables(spark, root.toString)
-        .map(t => maybeCompactTable(spark, s"$root/$t", maxFilesPerLeaf))
-        .exists(identity)
+    Trace.phase(spark, "index.compact") {
+      liveGenOpt(spark, path).exists { case (_, root) =>
+        dataTables(spark, root.toString).map { t =>
+          val table = s"$root/$t"
+          listTable(spark, table).exists { listing =>
+            val over = listing.leaves.exists(_._2.size > maxFilesPerLeaf)
+            if (over) compactTable(spark, table, listing)
+            over
+          }
+        }.exists(identity)
+      }
     }
 
-  /** One table's live generation into one file per leaf as generation
-    * N+1. One executor task per leaf — the merge is IO-bound and a retried
-    * task overwrites its own output, so tasks are idempotent; a single
-    * small leaf merges driver-side. Index writers all emit ONE physical
-    * schema, so a mixed-schema leaf is corruption and fails loudly. */
-  private def compactTable(spark: SparkSession, table: String): Unit = {
+  /** A data table as listed once: its complete generations (ascending;
+    * the last is live) and each leaf of the live generation with its data
+    * files. */
+  private final case class TableListing(complete: Seq[(Int, Path)],
+                                        leaves: Seq[(Path, Seq[FileStatus])])
+
+  private def listTable(spark: SparkSession,
+                        table: String): Option[TableListing] = {
     val f = fsOf(spark, table)
-    val root = new Path(table)
-    generations(f, root).filter(g => isComplete(f, g._2)).lastOption.foreach {
-      case (cur, curPath) =>
-        val next = new Path(root, genName(cur + 1))
-        if (f.exists(next)) f.delete(next, true) // dead earlier attempt
-        val leafDirs = leaves(f, curPath)
-        val rels = leafDirs.map(l => if (l == curPath) "" else l.getName)
-        val (curStr, nextStr) = (curPath.toString, next.toString)
-        def mergeLeaf(conf: org.apache.hadoop.conf.Configuration,
-                      rel: String): Unit = {
-          val src = if (rel.isEmpty) new Path(curStr)
-                    else new Path(s"$curStr/$rel")
-          val dstDir = if (rel.isEmpty) nextStr else s"$nextStr/$rel"
-          require(
-            ParquetConcat.mergeSameSchema(conf,
-              ParquetConcat.dataFiles(conf, src),
-              new Path(s"$dstDir/compacted-0.parquet")),
-            s"mixed physical schemas under $src — index writers emit one " +
-              "schema; refusing to guess a merge")
-        }
-        val conf0 = spark.sparkContext.hadoopConfiguration
-        val smallSingleLeaf = rels.size == 1 &&
-          ParquetConcat.dataFiles(conf0, leafDirs.head)
-            .map(_.getLen).sum <= LocalMergeMaxBytes
-        if (smallSingleLeaf)
-          // driver-side: one small leaf's byte copy sits under Spark's
-          // ~300 ms per-job scheduling floor (the kv_point_ops lesson —
-          // never ride a job to move a few MB)
-          mergeLeaf(conf0, rels.head)
-        else {
-          val sconf = new SerializableHadoopConf(conf0)
-          spark.sparkContext.parallelize(rels, rels.size)
-            .foreach(rel => mergeLeaf(sconf.conf, rel))
-        }
-        f.create(new Path(next, "_SUCCESS"), true).close()
-        retireSuperseded(f, root)
+    val complete = generations(f, new Path(table))
+      .filter(g => isComplete(f, g._2))
+    complete.lastOption.map { case (_, live) =>
+      val conf = spark.sparkContext.hadoopConfiguration
+      TableListing(complete,
+        leaves(f, live).map(l => l -> ParquetConcat.dataFiles(conf, l)))
     }
   }
 
-  /** [[compactTable]] when some leaf of the live generation holds more
-    * than `maxFilesPerLeaf` data files. */
-  private def maybeCompactTable(spark: SparkSession, table: String,
-                                maxFilesPerLeaf: Int): Boolean =
-    liveGenOpt(spark, table).exists { case (_, live) =>
-      val conf = spark.sparkContext.hadoopConfiguration
-      val over = leaves(fsOf(spark, table), live).exists(l =>
-        ParquetConcat.dataFiles(conf, l).size > maxFilesPerLeaf)
-      if (over) compactTable(spark, table)
-      over
+  /** One table's live generation, as `listing` found it, into one file
+    * per leaf as generation N+1. One executor task per leaf — the merge
+    * is IO-bound and a retried task overwrites its own output, so tasks
+    * are idempotent; a single small leaf merges driver-side. Index
+    * writers all emit ONE physical schema, so a mixed-schema leaf is
+    * corruption and fails loudly. */
+  private def compactTable(spark: SparkSession, table: String,
+                           listing: TableListing): Unit = {
+    val f = fsOf(spark, table)
+    val (cur, curPath) = listing.complete.last
+    val next = new Path(table, genName(cur + 1))
+    if (f.exists(next)) f.delete(next, true) // dead earlier attempt
+    // (leaf relative to the generation, its files as (path, length))
+    val work = listing.leaves.map { case (l, files) =>
+      (if (l == curPath) "" else l.getName,
+        files.map(st => (st.getPath.toString, st.getLen)))
     }
+    val nextStr = next.toString
+    def mergeLeaf(conf: org.apache.hadoop.conf.Configuration, rel: String,
+                  files: Seq[(String, Long)]): Unit = {
+      val dstDir = if (rel.isEmpty) nextStr else s"$nextStr/$rel"
+      require(
+        ParquetConcat.mergeSameSchema(conf,
+          files.map { case (p, len) =>
+            new FileStatus(len, false, 0, 0, 0, new Path(p)) },
+          new Path(s"$dstDir/compacted-0.parquet")),
+        s"mixed physical schemas under $curPath/$rel — index writers emit " +
+          "one schema; refusing to guess a merge")
+    }
+    val conf0 = spark.sparkContext.hadoopConfiguration
+    if (work.size == 1 && work.head._2.map(_._2).sum <= LocalMergeMaxBytes)
+      // driver-side: one small leaf's byte copy sits under Spark's
+      // ~300 ms per-job scheduling floor (the kv_point_ops lesson —
+      // never ride a job to move a few MB)
+      mergeLeaf(conf0, work.head._1, work.head._2)
+    else {
+      val sconf = new SerializableHadoopConf(conf0)
+      spark.sparkContext.parallelize(work, work.size)
+        .foreach { case (rel, files) => mergeLeaf(sconf.conf, rel, files) }
+    }
+    f.create(new Path(next, "_SUCCESS"), true).close()
+    retire(f, listing.complete.map(_._2))
+  }
 
   /** Stamp, and past the lease horizon delete, the complete generations
     * of `table` older than its live one — see the object Scaladoc for why
     * the clock is a first-observation marker. */
-  private def retireSuperseded(f: FileSystem, table: Path): Unit = {
-    val complete = generations(f, table).filter(g => isComplete(f, g._2))
-    complete.dropRight(1).foreach { case (_, p) =>
+  private def retireSuperseded(f: FileSystem, table: Path): Unit =
+    retire(f, generations(f, table).filter(g => isComplete(f, g._2))
+      .dropRight(1).map(_._2))
+
+  /** [[retireSuperseded]] over generations already known superseded. */
+  private def retire(f: FileSystem, superseded: Seq[Path]): Unit =
+    superseded.foreach { p =>
       val marker = new Path(p, "_SUPERSEDED_AT")
       if (!f.exists(marker)) {
         val out = f.create(marker, true)
@@ -377,7 +530,6 @@ private[graft] object IndexTables {
           f.delete(p, true)
       }
     }
-  }
 
   // ---- tombstones -------------------------------------------------------
 

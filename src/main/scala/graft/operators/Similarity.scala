@@ -698,6 +698,11 @@ object Similarity {
     * engines produce identical bits and the argmin (ties → lowest k) cannot
     * flip; the packed code is exact integer arithmetic and only the final
     * error is rounded (r6). `d*d`, never `pow`. */
+  /** The literal PQ codebook ([[pqComponent]]): subs × ksub × dim/subs. */
+  private def pqBooks(subs: Int, ksub: Int,
+                      dim: Int): Array[Array[Array[Double]]] =
+    Array.tabulate(subs, ksub, dim / subs)(pqComponent)
+
   def pqCodes(corpus: DataFrame, idCol: String, vecCol: String,
               subs: Int = 8, ksub: Int = 4, dim: Int = 64): DataFrame = {
     // r16: packed code + reconstruction error via the
@@ -708,8 +713,7 @@ object Similarity {
     // distances are the identical left-associated Σ(x−c)² folds, argmin
     // ties to the lowest code, the packed word exact integer arithmetic —
     // bit-identical output.
-    val ds = dim / subs
-    val books = Array.tabulate(subs, ksub, ds)(pqComponent)
+    val books = pqBooks(subs, ksub, dim)
     import graft.functions.QuantOps
     corpus.select(col(idCol).as("vec_id"),
       QuantOps.pqPackedCode(col(vecCol), books, identityForm = false)
@@ -745,8 +749,7 @@ object Similarity {
     // r16: the subs×ksub table via the [[graft.functions.PqAdcTable]]
     // kernel — same (s, c) row order, same left-assoc Σ(x−c)² folds,
     // codebook as a reference object instead of dim·ksub literal terms
-    graft.functions.QuantOps.pqAdcTable(col(vecCol),
-      Array.tabulate(subs, ksub, dim / subs)(pqComponent),
+    graft.functions.QuantOps.pqAdcTable(col(vecCol), pqBooks(subs, ksub, dim),
       identityForm = false)
 
   /** Shared ADC serving tail: per-probe rank by (adc_dist, nbr_id), keep
@@ -1537,9 +1540,9 @@ object Similarity {
                      batch: DataFrame, idCol: String, vecCol: String,
                      path: String, groupSize: Int,
                      literalBudget: Long = CellLiteralBudget): Unit =
-    imiIndexAppendAssigned(spark,
+    graft.Trace.phase(spark, "ann.append")(imiIndexAppendAssigned(spark,
       imiIndexAssign(spark, batch, idCol, vecCol, path, groupSize,
-        literalBudget), path)
+        literalBudget), path))
 
   /** The COMPUTE step of [[imiIndexAppend]], exposed for streaming ingest:
     * frozen-model rank-1 cell assignment of an arrival batch, returning
@@ -1627,16 +1630,10 @@ object Similarity {
       // applied to the ANN index)
       val probedCells = imiProbedCells(probes, idCol, vecCol, coarse, fine,
         groupSize, nprobeGroups, nprobeCells)
-      // ONE narrow job replaces the r15 pair (fan-out count + distinct-cell
-      // collect): the per-cell aggregate prunes the wide pv column, its sum
-      // is the fan-out row count (the broadcast-gate input) and its keys are
-      // the probed-cell set. The fan-out itself is a row-local projection
-      // (see imiProbedCells), so recomputing it under the final join costs
-      // less than caching its dim-wide rows ever did.
-      val cellRows = graft.Trace.phase(spark, "ann.search.cells")(
-        probedCells.groupBy(col("cell")).agg(count(lit(1)).as("n")).collect())
-      val nProbed = cellRows.map(_.getAs[Long]("n")).sum
-      val cellSet = cellRows.map(_.getAs[Int]("cell")).sorted
+      // the fan-out itself is a row-local projection (see
+      // imiProbedCells), so recomputing it under the final join costs
+      // less than caching its dim-wide rows ever did
+      val (nProbed, cellSet) = probedCellSet(spark, probedCells)
       val scanned = listsAll.filter(col("cell").isin(cellSet.map(Int.box): _*))
       val lists = live(
         serveFilter.map(scanned.filter).getOrElse(scanned)
@@ -1657,6 +1654,26 @@ object Similarity {
         .select(col("vec_id").as("nbr_id"), col("cell"), col("v").as("cv"))
     }
   }
+
+  /** A probe batch's fan-out row count (the broadcast-gate input) and
+    * its probed-cell set, from the (…, cell) fan-out: ONE single-task job
+    * collects the fan-out's cells — the wide probe columns prune away —
+    * while it holds at most [[TextIndex.MaxTermInListValues]] rows; past
+    * that, one per-cell aggregate. */
+  private def probedCellSet(spark: org.apache.spark.sql.SparkSession,
+                            probedCells: DataFrame): (Long, Array[Int]) =
+    graft.Trace.phase(spark, "ann.search.cells") {
+      val cells = probedCells.select(col("cell"))
+      val ceiling = TextIndex.MaxTermInListValues
+      val rows = IndexTables.collectBounded(cells, ceiling)
+      if (rows.length <= ceiling)
+        (rows.length.toLong, rows.map(_.getInt(0)).distinct.sorted)
+      else {
+        val perCell = cells.groupBy(col("cell")).agg(count(lit(1)).as("n"))
+          .collect()
+        (perCell.map(_.getLong(1)).sum, perCell.map(_.getInt(0)).sorted)
+      }
+    }
 
   /** Recall@k of an approximate top-k result against the exact one —
     * evaluation as an ENGINE operator, not a test assertion: the audit a
@@ -1782,22 +1799,23 @@ object Similarity {
   }
 
   /** The (nbr_id, cell, pq_code) corpus index rows shared by [[imiPqTopK]]
-    * (cached in-invocation) and [[imiPqIndexWrite]] (persisted): trained
-    * two-level cell assignment joined to the row-local packed PQ code. */
+    * (cached in-invocation), [[imiPqIndexWrite]] (persisted) and
+    * [[imiPqIndexAppend]]: the trained two-level cell assignment and
+    * [[pqCodes]]' packed PQ code of the same row's vector `v` (the
+    * assignment carries it through both of its plans) in one projection.
+    * Over a local relation with the literal assignment the whole frame
+    * folds at optimization. */
   private def imiPqIndexRows(corpus: DataFrame, idCol: String,
                              vecCol: String, coarse: Array[Array[Double]],
                              fine: Array[Array[Double]], groupSize: Int,
                              subs: Int, ksub: Int, dim: Int,
                              literalBudget: Long,
-                             sharedRows: Option[CorpusRows] = None): DataFrame = {
-    val cells2 = semanticAssign2Level(corpus, idCol, vecCol, fine,
-        groupSize, literalBudget, Some(coarse), sharedRows)
-      .select(col("vec_id"), col("cell"))
-    val codes = pqCodes(corpus, idCol, vecCol, subs, ksub, dim)
-      .select(col("vec_id").as("__cid"), col("pq_code"))
-    cells2.join(codes, col("vec_id") === col("__cid"))
-      .select(col("vec_id").as("nbr_id"), col("cell"), col("pq_code"))
-  }
+                             sharedRows: Option[CorpusRows] = None): DataFrame =
+    semanticAssign2Level(corpus, idCol, vecCol, fine, groupSize,
+        literalBudget, Some(coarse), sharedRows)
+      .select(col("vec_id").as("nbr_id"), col("cell"),
+        graft.functions.QuantOps.pqPackedCode(col("v"), pqBooks(subs, ksub,
+          dim), identityForm = false).as("pq_code"))
 
   /** The IMI+PQ SERVING tail shared by [[imiPqTopK]] (model trained
     * in-invocation) and [[imiPqIndexSearch]] (model + code table reloaded
@@ -1881,12 +1899,33 @@ object Similarity {
                        batch: DataFrame, idCol: String, vecCol: String,
                        path: String, groupSize: Int, dim: Int,
                        subs: Int = 8, ksub: Int = 4,
-                       literalBudget: Long = CellLiteralBudget): Unit = {
-    val root = indexLiveRoot(spark, path)
-    val (coarse, fine) = imiIndexModel(spark, root)
-    IndexTables.appendLive(imiPqIndexRows(batch, idCol, vecCol, coarse, fine,
-      groupSize, subs, ksub, dim, literalBudget), s"$root/codes")
-  }
+                       literalBudget: Long = CellLiteralBudget): Unit =
+    imiPqIndexAppendAt(spark, batch, idCol, vecCol, path, groupSize, dim,
+      subs, ksub, literalBudget, IndexTables.LocalAppendMaxRows)
+
+  /** [[imiPqIndexAppend]] under an explicit driver-side row ceiling (specs
+    * reach the distributed plan with 0). A bounded batch is collected
+    * once and re-enters as a local relation of known size, so the code
+    * rows fold at optimization and land on the driver
+    * ([[IndexTables.appendLive]]). */
+  private[graft] def imiPqIndexAppendAt(
+      spark: org.apache.spark.sql.SparkSession, batch: DataFrame,
+      idCol: String, vecCol: String, path: String, groupSize: Int, dim: Int,
+      subs: Int, ksub: Int, literalBudget: Long, maxLocalRows: Long): Unit =
+    graft.Trace.phase(spark, "ann.append") {
+      val root = indexLiveRoot(spark, path)
+      val (coarse, fine) = imiIndexModel(spark, root)
+      val vecs = batch.select(col(idCol), col(vecCol))
+      val rows = IndexTables.collectBounded(vecs, maxLocalRows)
+      val (input, known) =
+        if (rows.length > maxLocalRows) (batch, None)
+        else (IndexTables.local(spark, rows.toSeq, vecs.schema),
+          Some(rows.length.toLong))
+      IndexTables.appendLive(imiPqIndexRows(input, idCol, vecCol, coarse,
+          fine, groupSize, subs, ksub, dim, literalBudget,
+          Some(new CorpusRows(input, known))),
+        s"$root/codes")
+    }
 
   /** Serve top-k from an [[imiPqIndexWrite]]-persisted index: reload the
     * IMI levels (bounded k×dim doubles), ADC-scan only the probed cells'
@@ -1904,11 +1943,7 @@ object Similarity {
     // code files
     val probedCells = imiPqProbedCells(probes, idCol, vecCol, coarse, fine,
       groupSize, nprobeGroups, nprobeCells, subs, ksub, dim)
-    // one narrow job for count + probed-cell set (see imiIndexSearch)
-    val cellRows = graft.Trace.phase(spark, "ann.search.cells")(
-      probedCells.groupBy(col("cell")).agg(count(lit(1)).as("n")).collect())
-    val nProbed = cellRows.map(_.getAs[Long]("n")).sum
-    val cellSet = cellRows.map(_.getAs[Int]("cell")).sorted
+    val (nProbed, cellSet) = probedCellSet(spark, probedCells)
     val corpusIdx = IndexTables.tombstones(spark, path).antiJoin(IndexTables
       .readLive(spark, s"$root/codes")
       .filter(col("cell").isin(cellSet.map(Int.box): _*))
@@ -2309,14 +2344,15 @@ object Similarity {
   def pqIndexAppend(spark: org.apache.spark.sql.SparkSession,
                     batch: DataFrame, idCol: String, vecCol: String,
                     path: String, subs: Int = 8, ksub: Int = 4,
-                    dim: Int = 64): Unit = {
-    val ds = dim / subs
-    val root = indexLiveRoot(spark, path)
-    val books = pqIndexModel(spark, root, subs, ksub, ds)
-    IndexTables.appendLive(batch.select(col(idCol).as("nbr_id"),
-        trainedPacked(books, ds, subs, ksub)(col(vecCol)).as("pq_code")),
-      s"$root/codes")
-  }
+                    dim: Int = 64): Unit =
+    graft.Trace.phase(spark, "ann.append") {
+      val ds = dim / subs
+      val root = indexLiveRoot(spark, path)
+      val books = pqIndexModel(spark, root, subs, ksub, ds)
+      IndexTables.appendLive(batch.select(col(idCol).as("nbr_id"),
+          trainedPacked(books, ds, subs, ksub)(col(vecCol)).as("pq_code")),
+        s"$root/codes")
+    }
 
   /** Serve top-k from a [[pqIndexWrite]]-persisted index: reload the
     * model (subs×ksub×ds doubles — tiny), scan the stored code table

@@ -101,9 +101,22 @@ object TextIndex {
       .agg(count(lit(1)).as("tf"))
       .select(col("term64"), col("doc"), col("tf"), col("dl"))
 
-  /** Write the four tables under `root` through `dir` (the per-table
-    * generation resolver: a fresh nested generation on build/vacuum, the
-    * live one on append).
+  /** The four tables over `d` (the documents) and `p` (their postings),
+    * as the distributed plan writes them: (table, frame). */
+  private def tableFrames(d: DataFrame, p: DataFrame, idCol: String,
+                          textCol: String): Seq[(String, DataFrame)] = {
+    val l = lens(d, idCol, textCol)
+    Seq(
+      "postings" -> p.repartitionByRange(col("term64"))
+        .sortWithinPartitions(col("term64"), col("doc")),
+      "vocab" -> p.groupBy(col("term64")).agg(count(lit(1)).as("df")),
+      "doclens" -> l,
+      "global" -> l.agg(count(lit(1)).as("n"),
+        coalesce(sum(col("dl")), lit(0L)).as("len_sum")))
+  }
+
+  /** Write the four tables through `write(frame, table)` — a fresh nested
+    * generation on build/vacuum, the live one on a distributed append.
     *
     * The four writes are INDEPENDENT once the shared posting rows are
     * materialized (they land in four disjoint directories and all read the
@@ -117,23 +130,14 @@ object TextIndex {
     * exactly what a partial sequential failure left, an uncommitted root
     * generation. */
   private def writeTables(docs: DataFrame, idCol: String, textCol: String,
-                          root: String, dir: String => String,
-                          mode: String): Unit = {
+                          root: String)(
+      write: (DataFrame, String) => Unit): Unit = {
     val d = graft.CacheScope.cache(docs)
     d.count() // three consumers below
     val p = graft.CacheScope.cache(postingsOf(d, idCol, textCol))
     p.count() // materialize ONCE before the overlapped consumers race it
-    val l = lens(d, idCol, textCol)
-    graft.Par.run(
-      () => p.repartitionByRange(col("term64"))
-        .sortWithinPartitions(col("term64"), col("doc"))
-        .write.mode(mode).parquet(dir(s"$root/postings")),
-      () => p.groupBy(col("term64")).agg(count(lit(1)).as("df"))
-        .write.mode(mode).parquet(dir(s"$root/vocab")),
-      () => l.write.mode(mode).parquet(dir(s"$root/doclens")),
-      () => l.agg(count(lit(1)).as("n"), coalesce(sum(col("dl")), lit(0L))
-          .as("len_sum"))
-        .write.mode(mode).parquet(dir(s"$root/global")))
+    graft.Par.run(tableFrames(d, p, idCol, textCol).map { case (t, df) =>
+      () => write(df, s"$root/$t") }: _*)
   }
 
   /** Build the persisted BM25 index from scratch — tokenize, hash, count,
@@ -147,18 +151,73 @@ object TextIndex {
   def bm25IndexWrite(docs: DataFrame, idCol: String, textCol: String,
                      path: String): Unit =
     IndexTables.build(docs.sparkSession, path)(root =>
-      writeTables(docs, idCol, textCol, root, IndexTables.writeDir,
-        mode = "overwrite"))
+      writeTables(docs, idCol, textCol, root)((df, t) =>
+        df.write.mode("overwrite").parquet(IndexTables.writeDir(t))))
 
   /** Append a NEW batch of documents (doc ids disjoint from every held
     * batch — the frozen-stats contract: df/global are additive deltas, so
     * the held tables are never read or rewritten) into each table's live
-    * generation under the live index root. Appends fragment; run
-    * [[bm25IndexCompact]] on the maintenance cadence. */
+    * generation under the live index root. A bounded batch builds its
+    * rows on the driver ([[appendLocal]]); a bigger one runs the
+    * distributed plan. Appends fragment; run [[bm25IndexCompact]] on the
+    * maintenance cadence. */
   def bm25IndexAppend(spark: SparkSession, docs: DataFrame, idCol: String,
                       textCol: String, path: String): Unit =
-    writeTables(docs, idCol, textCol, IndexTables.liveDir(spark, path),
-      t => IndexTables.liveDir(spark, t), mode = "append")
+    bm25IndexAppendAt(spark, docs, idCol, textCol, path,
+      IndexTables.LocalAppendMaxRows)
+
+  /** [[bm25IndexAppend]] under an explicit driver-side row ceiling (specs
+    * reach the distributed plan with 0). */
+  private[graft] def bm25IndexAppendAt(spark: SparkSession, docs: DataFrame,
+                                       idCol: String, textCol: String,
+                                       path: String, maxLocalRows: Long)
+      : Unit = Trace.phase(spark, "bm25.append") {
+    val root = IndexTables.liveDir(spark, path)
+    // per doc: id, token count and each token's term hash
+    val rows = IndexTables.collectBounded(
+      docs.select(col(idCol).cast("long").as("doc"),
+          tokens(col(textCol)).as("ts"))
+        .select(col("doc"), size(col("ts")).as("dl"),
+          transform(col("ts"), xxhash64(_)).as("h")),
+      maxLocalRows)
+    if (rows.length > maxLocalRows)
+      writeTables(docs, idCol, textCol, root)(IndexTables.appendLive)
+    else appendLocal(spark, docs, idCol, textCol, root, rows)
+  }
+
+  /** The driver side of [[bm25IndexAppend]] over the batch's collected
+    * (doc, dl, term hashes) rows, each hash Spark's `xxhash64` of a token
+    * as the distributed plan computes it: the driver only counts and
+    * sorts, so each table holds exactly the rows the distributed plan
+    * writes, postings sorted by (term64, doc) as its range clustering
+    * sorts them. */
+  private def appendLocal(spark: SparkSession, docs: DataFrame, idCol: String,
+                          textCol: String, root: String,
+                          rows: Array[Row]): Unit = {
+    // (term64, doc, dl) -> tf
+    val tf = scala.collection.mutable.HashMap.empty[(Long, Any, Any), Long]
+    rows.foreach(r => if (!r.isNullAt(2)) r.getSeq[Long](2).foreach { h =>
+      val key = (h, r.get(0), r.get(1))
+      tf(key) = tf.getOrElse(key, 0L) + 1L
+    })
+    val postings = tf.toSeq.sortBy { case ((term, doc, _), _) =>
+      (term, Option(doc).map(_.asInstanceOf[Long])) }
+    val dls = rows.iterator.map(_.get(1)).collect { case dl: Int => dl.toLong }
+    val schemas = IndexTables.tableSchemas(("bm25", docs.schema, idCol,
+        textCol))(
+      tableFrames(docs, postingsOf(docs, idCol, textCol), idCol, textCol))
+    Seq(
+      "postings" -> postings.map { case ((term, doc, dl), n) =>
+        Row(term, doc, n, dl) },
+      "vocab" -> postings.groupMapReduce(_._1._1)(_ => 1L)(_ + _).toSeq
+        .map { case (term, n) => Row(term, n) },
+      "doclens" -> rows.toSeq.map(r => Row(r.get(0), r.get(1))),
+      "global" -> Seq(Row(rows.length.toLong, dls.sum))
+    ).foreach { case (t, tableRows) =>
+      IndexTables.appendLive(
+        IndexTables.local(spark, tableRows, schemas(t)), s"$root/$t")
+    }
+  }
 
   /** Fold append fragments ([[IndexTables.compact]]); each appended
     * batch's row groups keep their own term64 min/max stats, so
@@ -347,15 +406,13 @@ object TextIndex {
       val lenSum = total(1, 3) - total(3, 3)
       val live = tomb.fold(postings)(t =>
         postings.join(t.select(col("doc")), Seq("doc"), "left_anti"))
-      val qLocal = local(pairs, QueryTermSchema)
-      val statsLocal = local(sums(0).toSeq.sorted.map { case (t, d) =>
-        Row(t, d - dfDel.getOrElse(t, 0L), n, lenSum) }, TermStatsSchema)
+      val qLocal = IndexTables.local(spark, pairs, QueryTermSchema)
+      val statsLocal = IndexTables.local(spark, sums(0).toSeq.sorted.map {
+        case (t, d) => Row(t, d - dfDel.getOrElse(t, 0L), n, lenSum) },
+        TermStatsSchema)
       rank(live.join(broadcast(qLocal), Seq("term64"))
         .join(broadcast(statsLocal), Seq("term64")), k)
     }
-
-    private def local(rows: Seq[Row], schema: StructType): DataFrame =
-      spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
 
     /** A bulk batch past the ceiling: the query terms stay distributed
       * and cached; the term restriction is a literal In when the batch's

@@ -320,8 +320,10 @@ object TimeStore {
   }
 
   /** Fault-injection seams for the batch write path (StoreProtocolSpec's
-    * crash tests): a registered seam throws ONCE at that point, simulating
-    * a writer that died between two non-atomic protocol steps. Production
+    * crash tests) and the driver-side index append (between staging a
+    * file and renaming it into place, [[graft.operators.IndexTables]]): a
+    * registered seam throws ONCE at that point, simulating a writer that
+    * died between two non-atomic protocol steps. Production
     * cost: one concurrent-map probe per batch, zero when unused. (The
     * exception path releases the lease via withWriterLease's finally — a
     * kill -9 would instead leave a stale lease, and THAT state is already
@@ -329,7 +331,7 @@ object TimeStore {
     * the partial on-disk protocol state between commit points.) */
   private[graft] val crashSeams =
     java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-  private def crashPoint(name: String): Unit =
+  private[graft] def crashPoint(name: String): Unit =
     if (crashSeams.remove(name))
       throw new RuntimeException(s"injected crash at $name")
 

@@ -122,11 +122,17 @@ class IndexCompactSpec extends SparkSpec {
     (1 to 3).foreach(b =>
       batch(400 * b, 400 * (b + 1)).write.mode("append")
         .partitionBy("cell").parquet(gen0))
+    graft.operators.IndexTables.commitRoot(spark, root)
+    // a local batch lands driver-side: one file per cell directory
+    graft.operators.IndexTables.appendLive(batch(1600, 1700), table)
+    (0 until 4).foreach(c =>
+      assert(dataFiles(s"$gen0/cell=$c").count(_.contains("-local")) === 1,
+        s"cell=$c should hold the local append's one file"))
     val before = spark.read.parquet(gen0)
       .collect().map(_.toSeq).toSet
+    assert(before.size === 1700)
     assert(dataFiles(s"$gen0/cell=0").size > 1,
       "appends should fragment each cell directory")
-    graft.operators.IndexTables.commitRoot(spark, root)
     Similarity.indexCompact(spark, path)
     val live = s"$table/gen-000001"
     (0 until 4).foreach(c =>

@@ -68,8 +68,8 @@ class IndexServeSpec extends SparkSpec {
     val incoming = local(docs.filter(pmod(col("doc_id"), lit(5)) === 0 &&
       col("doc_id") < 40).select(col("doc_id"), col("text")))
     val probes = local(emb.filter(col("vec_id") < 8))
-    // (name, serve, budget, the serve's phase prefix); the parent ran 18,
-    // 18 and 6 jobs
+    // (name, serve, budget, the serve's phase prefix); before the
+    // driver-side query sides they ran 18, 18 and 6 jobs
     val serves = Seq[(String, () => DataFrame, Int, String)](
       ("bm25IndexSearch", () => TextIndex.bm25IndexSearch(spark, queries,
         "query_id", "qtext", bm25, k = 5), 7, "bm25.search."),
@@ -78,7 +78,7 @@ class IndexServeSpec extends SparkSpec {
         threshold = 0.5), 5, "dedup.check."),
       ("imiPqIndexSearch", () => Similarity.imiPqIndexSearch(spark, probes,
         "vec_id", "embedding", ann, k = 5, groupSize = 4, nprobeGroups = 2,
-        nprobeCells = 4, dim = 64), 5, "ann.search."))
+        nprobeCells = 4, dim = 64), 4, "ann.search."))
     serves.foreach { case (name, serve, budget, prefix) =>
       // warm: the first IMI-PQ search loads the frozen model into the
       // session cache, as the first search of a serving session does
@@ -113,6 +113,58 @@ class IndexServeSpec extends SparkSpec {
         assert(IndexTables.read(spark, live).schema ===
           spark.read.parquet(live).schema, live)
       }
+    }
+    new Path(tmp.toString).getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .delete(new Path(tmp.toString), true)
+  }
+
+  test("index appends: a local batch submits at most one job per family, " +
+      "every job named, none a schema-inference job") {
+    val tmp = java.nio.file.Files.createTempDirectory("graft-append-spec")
+    val (bm25, dedup, ann) = (s"$tmp/bm25", s"$tmp/dedup", s"$tmp/ann")
+    val held = pmod(col("doc_id"), lit(5)) =!= 0
+    TextIndex.bm25IndexWrite(docs.filter(held), "doc_id", "text", bm25)
+    Dedup.dedupIndexWrite(Dedup.shingles(docs.filter(held), "doc_id",
+      "text", 3), dedup, k = 64, r = 4)
+    Similarity.imiPqIndexWrite(emb.filter(pmod(col("vec_id"), lit(5)) =!= 0),
+      "vec_id", "embedding", ann, groups = 4, groupSize = 4, iters = 1,
+      dim = 64)
+    // batch i: disjoint new docs and vectors, as local relations
+    def batchDocs(i: Int) = local(docs.filter(!held &&
+      pmod(col("doc_id"), lit(10)) === i * 5).select(col("doc_id"), col("text")))
+    def batchVecs(i: Int) = local(emb.filter(pmod(col("vec_id"), lit(5)) === 0 &&
+      pmod(col("vec_id"), lit(10)) === i * 5))
+    val (docBatches, vecBatches) = (Seq(0, 1).map(batchDocs),
+      Seq(0, 1).map(batchVecs))
+    // (name, append of batch i then its maintenance check, phase prefixes)
+    val appends = Seq[(String, Int => Unit, Seq[String])](
+      ("bm25IndexAppend", i => {
+        TextIndex.bm25IndexAppend(spark, docBatches(i), "doc_id", "text",
+          bm25)
+        TextIndex.bm25IndexMaybeCompact(spark, bm25, 1)
+      }, Seq("bm25.append", "index.compact")),
+      ("dedupIndexAppend", i => {
+        Dedup.dedupIndexAppend(Dedup.shingles(docBatches(i), "doc_id", "text",
+          3), dedup, k = 64, r = 4)
+        Dedup.dedupIndexMaybeCompact(spark, dedup, 1)
+      }, Seq("dedup.append", "index.compact")),
+      ("imiPqIndexAppend", i => {
+        Similarity.imiPqIndexAppend(spark, vecBatches(i), "vec_id",
+          "embedding", ann, groupSize = 4, dim = 64)
+        Similarity.indexMaybeCompact(spark, ann, 1)
+      }, Seq("ann.append", "ann.model.load", "index.compact")))
+    appends.foreach { case (name, append, phases) =>
+      // warm: the first IMI-PQ append loads the frozen model into the
+      // session cache, as the first append of an ingest session does
+      append(0)
+      val jobs = jobsOf(append(1))
+      CacheScope.release(spark)
+      assert(jobs.size <= 1,
+        s"$name ran ${jobs.size} jobs (budget 1):\n${jobs.mkString("\n")}")
+      assert(!jobs.exists(_._2.split("; ").exists(_.startsWith("parquet at"))),
+        s"$name ran a schema-inference job:\n${jobs.mkString("\n")}")
+      assert(jobs.forall(j => phases.contains(j._1)),
+        s"$name's jobs must carry its phase names:\n${jobs.mkString("\n")}")
     }
     new Path(tmp.toString).getFileSystem(spark.sparkContext.hadoopConfiguration)
       .delete(new Path(tmp.toString), true)
