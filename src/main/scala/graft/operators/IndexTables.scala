@@ -1,8 +1,6 @@
 package graft.operators
 
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
-import org.apache.hadoop.mapreduce.{Job, TaskAttemptID}
-import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
 import org.apache.parquet.hadoop.Footer
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
@@ -12,15 +10,14 @@ import org.apache.spark.sql.catalyst.plans.logical.{
   Filter, GlobalLimit, LocalLimit, LocalRelation, LogicalPlan, Project,
   SubqueryAlias}
 import org.apache.spark.sql.execution.datasources.parquet.{
-  ParquetFileFormat, ParquetOptions, ParquetToSparkSchemaConverter,
-  ParquetUtils}
+  ParquetFileFormat, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions.broadcast
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.StructType
 
 import graft.Trace
 import graft.sources.{
-  ParquetConcat, ParquetOpen, SerializableHadoopConf, TimeStore}
+  LocalParquet, ParquetConcat, ParquetOpen, SerializableHadoopConf, TimeStore}
 
 /** The one storage lifecycle of every persisted index — the ANN indexes
   * ([[Similarity.imiIndexWrite]], [[Similarity.imiPqIndexWrite]],
@@ -57,10 +54,11 @@ import graft.sources.{
   * live generation, matching its `cell=` partitioning. Model tables are
   * never appended to. A bounded batch (at most [[LocalAppendMaxRows]]
   * rows, collected once by [[collectBounded]]) reaches it as a local
-  * relation and lands on the driver through Spark's own parquet writer,
-  * with no Spark job: one file per leaf, staged under a dot-prefixed
-  * `.inprogress` name (invisible to every reader) and renamed into place.
-  * Anything else is a Spark append.
+  * relation and lands on the driver with no Spark job, one file per leaf,
+  * through the publisher the store's point puts and takedowns share
+  * ([[graft.sources.LocalParquet]]: Spark's own parquet writer, staged
+  * under a name every reader skips, renamed into place). Anything else is
+  * a Spark append.
   *
   * '''Compaction''' ([[compact]], [[maybeCompact]]): each data table of
   * the live root — found as the root's children that hold `gen-*`
@@ -347,30 +345,17 @@ private[graft] object IndexTables {
     }
   }
 
-  /** `rows` of `schema` appended to the generation `live` on the driver,
-    * through the writer a Spark parquet write runs in its tasks
-    * (`ParquetUtils.prepareWrite` → `OutputWriterFactory`): the same
-    * physical schema and footer metadata, so compaction concatenates these
-    * files with Spark-written ones. One file per leaf (per `cell=` value,
-    * the column dropped from the data as Spark's partitioned write does),
-    * each staged under a dot-prefixed `.inprogress` name and renamed into
-    * place once closed; stale staged files in the leaf are swept first
-    * (a writer that died before its rename left them), as the store's
-    * `writePointsLocal` does. An empty batch writes nothing. */
+  /** `rows` of `schema` appended to the generation `live` on the driver
+    * ([[LocalParquet.publish]]: the writer Spark's own parquet write runs,
+    * so compaction concatenates these files with Spark-written ones). One
+    * file per leaf (per `cell=` value, the column dropped from the data
+    * as Spark's partitioned write does). An empty batch writes nothing. */
   private def writeLocal(spark: SparkSession, rows: Seq[InternalRow],
                          schema: StructType, live: Path,
                          partitioned: Boolean): Unit =
     if (rows.nonEmpty) {
-      val f = fsOf(spark, live.toString)
       val cellIdx = if (partitioned) schema.fieldIndex("cell") else -1
       val keep = schema.fields.indices.filter(_ != cellIdx)
-      val dataSchema = StructType(keep.map(schema.fields(_)))
-      val sqlConf = spark.sessionState.conf
-      val job = Job.getInstance(spark.sessionState.newHadoopConf())
-      val factory = ParquetUtils.prepareWrite(sqlConf, job, dataSchema,
-        new ParquetOptions(Map.empty[String, String], sqlConf))
-      val ctx = new TaskAttemptContextImpl(job.getConfiguration,
-        new TaskAttemptID())
       val leaves: Seq[(Path, Seq[InternalRow])] =
         if (!partitioned) Seq(live -> rows)
         else rows.groupBy { r =>
@@ -382,22 +367,10 @@ private[graft] object IndexTables {
           new Path(live, leaf) -> rs.map(r => new GenericInternalRow(
             keep.map(i => r.get(i, schema.fields(i).dataType)).toArray))
         }
-      leaves.foreach { case (dir, leafRows) =>
-        if (f.exists(dir))
-          f.listStatus(dir).foreach { st =>
-            if (st.isFile && st.getPath.getName.endsWith(".inprogress"))
-              f.delete(st.getPath, false)
-          }
-        val base = s"part-${java.util.UUID.randomUUID()}-local" +
-          factory.getFileExtension(ctx)
-        val staged = new Path(dir, s".$base.inprogress")
-        val w = factory.newInstance(staged.toString, dataSchema, ctx)
-        try leafRows.foreach(w.write) finally w.close()
-        TimeStore.crashPoint("index-append-before-rename")
-        if (!f.rename(staged, new Path(dir, base)))
-          throw new java.io.IOException(
-            s"failed to publish local index append: $staged")
-      }
+      LocalParquet.publish(spark, StructType(keep.map(schema.fields(_))),
+        leaves.map { case (dir, leafRows) =>
+          LocalParquet.Staged(dir, LocalParquet.partName(), leafRows)
+        })
     }
 
   /** Rewrite `table`'s live generation through `f` into generation N+1

@@ -1267,16 +1267,13 @@ object Similarity {
                        nprobeGroups: Int, nprobeCells: Int): DataFrame = {
     val probedCells = imiProbedCells(probes, idCol, vecCol, coarse, fine,
       groupSize, nprobeGroups, nprobeCells)
-    // broadcast gate: count the FAN-OUT itself with the narrow per-cell
-    // aggregate [[imiIndexSearch]] already uses (ADVICE r16: a separate
-    // probes.count() ran the probe lineage once more than needed and, on a
-    // derived probe frame, paid its full lineage twice per serve; the
-    // aggregate prunes the wide pv column and its sum is the exact
-    // broadcast-size bound the old probes × nprobeCells product only
-    // over-estimated)
-    val nProbed = probedCells.groupBy(col("cell"))
-      .agg(count(lit(1)).as("n")).collect()
-      .map(_.getAs[Long]("n")).sum
+    // broadcast gate: count the FAN-OUT itself, as [[imiIndexSearch]]
+    // does (ADVICE r16: a separate probes.count() ran the probe lineage
+    // once more than needed and, on a derived probe frame, paid its full
+    // lineage twice per serve; the count prunes the wide pv column and is
+    // the exact broadcast-size bound the old probes × nprobeCells product
+    // only over-estimated)
+    val (nProbed, _) = probedCellSet(spark, probedCells)
     val dim = fine.headOption.map(_.length).getOrElse(0)
     imiRank(corpusCells, probedCells, k, imiProbeRowBytes(dim) * nProbed)
   }
@@ -1832,9 +1829,7 @@ object Similarity {
     val probedCells = imiPqProbedCells(probes, idCol, vecCol, coarse, fine,
       groupSize, nprobeGroups, nprobeCells, subs, ksub, dim)
     // narrow fan-out count instead of probes.count() — see [[imiServe]]
-    val nProbed = probedCells.groupBy(col("cell"))
-      .agg(count(lit(1)).as("n")).collect()
-      .map(_.getAs[Long]("n")).sum
+    val (nProbed, _) = probedCellSet(probes.sparkSession, probedCells)
     imiPqRank(corpusIdx, probedCells, k, subs, ksub,
       adcProbeRowBytes(subs, ksub) * nProbed)
   }

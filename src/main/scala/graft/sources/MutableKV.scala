@@ -151,7 +151,7 @@ object MutableKV {
       try {
         TimeStore.withWriterLease(spark, s) {
           lookupWithSeq(spark, s, addr).foreach { case (seq, _) =>
-            TimeStore.deletePointsHeld(spark, s, Seq(addr), 0L, seq)
+            TimeStore.deleteRangesHeld(spark, s, Seq(addr), Seq((0L, seq)))
           }
         }
         done = true

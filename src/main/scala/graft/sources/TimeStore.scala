@@ -4,7 +4,9 @@ import java.nio.charset.StandardCharsets
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, Dataset, Observation, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 import graft.core.{EpochIndex, Point}
 import graft.functions.PointFunctions
@@ -320,9 +322,9 @@ object TimeStore {
   }
 
   /** Fault-injection seams for the batch write path (StoreProtocolSpec's
-    * crash tests) and the driver-side index append (between staging a
-    * file and renaming it into place, [[graft.operators.IndexTables]]): a
-    * registered seam throws ONCE at that point, simulating a writer that
+    * crash tests) and the driver-side publish (`publish-before-rename`,
+    * between staging a file and renaming it into place, [[LocalParquet]]):
+    * a registered seam throws ONCE at that point, simulating a writer that
     * died between two non-atomic protocol steps. Production
     * cost: one concurrent-map probe per batch, zero when unused. (The
     * exception path releases the lease via withWriterLease's finally — a
@@ -344,7 +346,7 @@ object TimeStore {
     */
   def writePoints(spark: SparkSession, n: Namespace, points: Dataset[Point],
                   rolloverBytes: Long = DefaultRolloverBytes): Unit =
-    withWriterLease(spark, n) {
+    withWriterLease(spark, n)(graft.Trace.phase(spark, "store.write") {
       val sIdx = mustFetchIndex(spark, n, "simple")
       val eIdx = mustFetchIndex(spark, n, "extended")
 
@@ -390,7 +392,7 @@ object TimeStore {
         maybeRollover(spark, n, "simple", sIdx, sMax, rolloverBytes, target)
       if (metrics.getOrElse("extended", null) != null)
         maybeRollover(spark, n, "extended", eIdx, eMax, rolloverBytes, target)
-    }
+    })
 
   /** Add routing columns: epoch by strict-floor index lookup on time
     * (`Index.hs:76-88`), bucket by `placeBucket`. The index is tiny (a few
@@ -840,9 +842,10 @@ object TimeStore {
     * supersession, so readers already scanning them are not broken even by
     * several back-to-back compactions.
     */
-  def compact(spark: SparkSession, n: Namespace): Unit = withWriterLease(spark, n) {
-    doCompact(spark, n)
-  }
+  def compact(spark: SparkSession, n: Namespace): Unit =
+    withWriterLease(spark, n)(graft.Trace.phase(spark, "store.compact") {
+      doCompact(spark, n)
+    })
 
   private def doCompact(spark: SparkSession, n: Namespace): Unit = {
     val f = fs(spark, n.dir)
@@ -896,6 +899,18 @@ object TimeStore {
         retireable(spark, f, gens, curGen + 1).foreach(g => f.delete(g._2, true))
     }
   }
+
+  /** [[mergePartitionDir]]'s re-encode schema: the physical form of
+    * [[Point.schema]] (non-nullable fields required, the blob optional;
+    * partition columns live in the directory names). */
+  private val LocalFileSchema = org.apache.parquet.schema.MessageTypeParser
+    .parseMessageType(
+      """message spark_schema {
+        |  required int64 address;
+        |  required int64 time;
+        |  required int64 payload;
+        |  optional binary value;
+        |}""".stripMargin)
 
   /** Executor-side merge of one partition directory's parquet files into a
     * single file. Fast path (the only one real stores hit — every writer in
@@ -1003,19 +1018,11 @@ object TimeStore {
     * and the namespace is overdue for a vacuum. */
   private[graft] val DeleteBroadcastBytes: Long = 64L << 20
 
-  private val DeleteFileSchema = org.apache.parquet.schema.MessageTypeParser
-    .parseMessageType(
-      """message spark_schema {
-        |  required int64 address;
-        |  required int64 tstart;
-        |  required int64 tend;
-        |}""".stripMargin)
-
   /** Tombstone-delete every point of `addrs` in the UNSIGNED time range
     * [start, end] (the defaults span all of time — a whole-address
     * takedown). The entries land as ONE staged-then-renamed parquet file
     * under `deletes/` (readers are lock-free, so they must never list an
-    * uncommitted footer — the same publish discipline as the local point
+    * uncommitted footer — [[LocalParquet.publish]], as the local point
     * writes) and suppress matching rows from every read path immediately;
     * [[vacuumDeletes]] folds them in physically. Held under the writer
     * lease: deletes are writer-side mutations in the single-writer
@@ -1025,25 +1032,19 @@ object TimeStore {
   def deletePoints(spark: SparkSession, n: Namespace, addrs: Seq[Long],
                    start: Long = 0L, end: Long = -1L): Unit =
     withWriterLease(spark, n) {
-      deletePointsHeld(spark, n, addrs, start, end)
+      deleteRangesHeld(spark, n, addrs, Seq((start, end)))
     }
 
-  /** [[deletePoints]]' body for callers ALREADY holding the writer lease —
-    * [[MutableKV.delete]] must read a key's current sequence and write its
-    * tombstone under ONE lease acquisition (a read outside the lease can
-    * go stale against a concurrent insert, leaving the key's newest record
-    * alive after the takedown "completed"). */
-  private[sources] def deletePointsHeld(spark: SparkSession, n: Namespace,
-                                        addrs: Seq[Long], start: Long,
-                                        end: Long): Unit =
-    deleteRangesHeld(spark, n, addrs, Seq((start, end)))
-
-  /** Multi-range form of [[deletePointsHeld]]: ALL (address × range)
-    * tombstone rows land in ONE staged-then-renamed file, so a takedown
-    * whose signed SQL interval splits at the unsigned wrap (two ranges)
-    * publishes all-or-nothing — two independent files would let a crash
-    * between renames report the DELETE failed with half of it already
-    * suppressing rows (r15 review catch). */
+  /** [[deletePoints]]' body for callers ALREADY holding the writer lease
+    * — [[MutableKV.delete]] must read a key's current sequence and write
+    * its tombstone under ONE lease acquisition (a read outside the lease
+    * can go stale against a concurrent insert, leaving the key's newest
+    * record alive after the takedown "completed") — over several ranges:
+    * ALL (address × range) tombstone rows land in ONE staged-then-renamed
+    * file, so a takedown whose signed SQL interval splits at the unsigned
+    * wrap (two ranges) publishes all-or-nothing — two independent files
+    * would let a crash between renames report the DELETE failed with half
+    * of it already suppressing rows (r15 review catch). */
   private[sources] def deleteRangesHeld(spark: SparkSession, n: Namespace,
                                         addrs: Seq[Long],
                                         ranges: Seq[(Long, Long)]): Unit = {
@@ -1059,58 +1060,18 @@ object TimeStore {
           s"del-${java.util.UUID.randomUUID()}.parquet")
     }
 
-  /** Write one atomically-published tombstone file of (address, tstart,
-    * tend) rows under `deletes/`. A `base` that already exists is KEPT —
-    * the idempotence hook for deterministic (batchId-keyed) names: an
-    * at-least-once retry carries identical content (the Structured
-    * Streaming replay guarantee), so the earlier publish already says
-    * everything this one would. Replacing (delete + rename) instead would
-    * open a window with the committed tombstone ABSENT — a concurrent
-    * reader could serve taken-down rows mid-replay, and a crash between
-    * the delete and the rename would leave the takedown silently
-    * unpublished until the stream's next retry. */
+  /** Publish one tombstone file of (address, tstart, tend) rows under
+    * `deletes/` ([[LocalParquet.publish]]). A `base` that already exists
+    * is KEPT: deterministic (batchId-keyed) names make a replayed batch
+    * find its own earlier publish. */
   private def publishDeleteFile(spark: SparkSession, n: Namespace,
                                 rows: Seq[(Long, Long, Long)],
-                                base: String): Unit = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val dir = new Path(deletesDir(n))
-    val f = fs(spark, dir.toString)
-    f.mkdirs(dir)
-    import org.apache.parquet.hadoop.example.ExampleParquetWriter
-    import org.apache.parquet.hadoop.metadata.CompressionCodecName
-    import org.apache.parquet.example.data.simple.SimpleGroupFactory
-    val tmp = new Path(dir, s".$base.inprogress")
-    // sweep a stale staged copy from a writer that died before its rename:
-    // the tmp name is deterministic for batchId-keyed publishes, and the
-    // parquet writer creates in no-overwrite mode — without the sweep a
-    // replayed batch would throw FileAlreadyExists on every retry forever,
-    // wedging the takedown feed (only this writer, under the lease, ever
-    // touches the staged name — same sweep discipline as writePointsLocal)
-    f.delete(tmp, false)
-    val writer = ExampleParquetWriter.builder(tmp)
-      .withConf(conf).withType(DeleteFileSchema)
-      .withCompressionCodec(CompressionCodecName.SNAPPY)
-      .build()
-    try {
-      val factory = new SimpleGroupFactory(DeleteFileSchema)
-      rows.foreach { case (a, start, end) =>
-        val g = factory.newGroup()
-        g.append("address", a)
-        g.append("tstart", start)
-        g.append("tend", end)
-        writer.write(g)
-      }
-    } finally writer.close()
-    val dst = new Path(dir, base)
-    if (!f.rename(tmp, dst)) {
-      // deterministic-name replay on a store whose rename won't clobber:
-      // the earlier publish is this batch verbatim — keep it, drop the
-      // staged copy. Anything else is a genuine failure.
-      f.delete(tmp, false)
-      if (!f.exists(dst))
-        throw new java.io.IOException(s"failed to publish delete: $tmp")
-    }
-  }
+                                base: String): Unit =
+    LocalParquet.publish(spark,
+      StructType(Seq("address", "tstart", "tend")
+        .map(StructField(_, LongType, nullable = false))),
+      Seq(LocalParquet.Staged(new Path(deletesDir(n)), base,
+        rows.map { case (a, start, end) => InternalRow(a, start, end) })))
 
   /** STREAMING takedown (VERDICT r15 #3): publish one micro-batch of
     * delete requests `(address, unsigned tstart, unsigned tend)` from a
@@ -1285,7 +1246,7 @@ object TimeStore {
     * harmlessly (the rows are already gone — the mask and the anti-join
     * match nothing) until the next vacuum clears them. */
   def vacuumDeletes(spark: SparkSession, n: Namespace): Unit =
-    withWriterLease(spark, n) {
+    withWriterLease(spark, n)(graft.Trace.phase(spark, "store.vacuum") {
       val applied = deleteFiles(spark, n)
       if (applied.nonEmpty) {
         val f = fs(spark, n.dir)
@@ -1334,7 +1295,7 @@ object TimeStore {
             applied.foreach(st => f.delete(st.getPath, false))
         }
       }
-    }
+    })
 
   /** One row of [[storeStats]] — the primary store's maintenance view. */
   final case class KindStats(
@@ -1470,25 +1431,14 @@ object TimeStore {
   // These local twins keep the EXACT on-disk protocol — same lease, same
   // index routing (`EpochIndex.locate` is the Scala form of [[route]]'s
   // CASE chain), same partition layout, same pinned dedup winner, same
-  // watermark/rollover maintenance — but do the IO driver-side with the
-  // Parquet file API, so a point op costs one pruned bucket-file read or
-  // one small file append, like the reference's one-object IO. Bulk stays
+  // watermark/rollover maintenance — but do the IO driver-side (the
+  // Parquet file API to read, [[LocalParquet.publish]] to append), so a
+  // point op costs one pruned bucket-file read or one small file append,
+  // like the reference's one-object IO. Bulk stays
   // on [[writePoints]]/[[readSimple]]; the distributed and local paths are
   // interchangeable per-call on the same namespace (spec-pinned, and the
   // `ts_store_mutable` oracle reads locally-written data through the
   // distributed scan, so layout parity is hash-gated end to end).
-
-  private val LocalFileSchema = org.apache.parquet.schema.MessageTypeParser
-    .parseMessageType(
-      // matches writePoints' file schema: non-nullable case-class fields
-      // write as required, the blob as optional (partition cols live in
-      // the directory names)
-      """message spark_schema {
-        |  required int64 address;
-        |  required int64 time;
-        |  required int64 payload;
-        |  optional binary value;
-        |}""".stripMargin)
 
   private def readParquetPoints(conf: org.apache.hadoop.conf.Configuration,
                                 st: org.apache.hadoop.fs.FileStatus,
@@ -1505,30 +1455,6 @@ object TimeStore {
         g.getLong("payload", 0), v)
     }
     out.result()
-  }
-
-  private def writeParquetPoints(conf: org.apache.hadoop.conf.Configuration,
-                                 file: Path, pts: Seq[Point]): Unit = {
-    import org.apache.parquet.hadoop.example.ExampleParquetWriter
-    import org.apache.parquet.hadoop.metadata.CompressionCodecName
-    import org.apache.parquet.example.data.simple.SimpleGroupFactory
-    import org.apache.parquet.io.api.Binary
-    val writer = ExampleParquetWriter.builder(file)
-      .withConf(conf).withType(LocalFileSchema)
-      .withCompressionCodec(CompressionCodecName.SNAPPY)
-      .build()
-    try {
-      val factory = new SimpleGroupFactory(LocalFileSchema)
-      pts.foreach { p =>
-        val g = factory.newGroup()
-        g.append("address", p.address)
-        g.append("time", p.time)
-        g.append("payload", p.payload)
-        if (p.value != null)
-          g.append("value", Binary.fromConstantByteArray(p.value))
-        writer.write(g)
-      }
-    } finally writer.close()
   }
 
   /** Spark BinaryType order: unsigned lexicographic, shorter-prefix-first,
@@ -1650,7 +1576,7 @@ object TimeStore {
     * outside the lease can go stale against a concurrent insert or
     * delete-then-recreate, landing a duplicate (address, seq) whose
     * pinned-dedup winner silently drops one writer's merge — ADVICE
-    * r14). The same shape as [[deletePointsHeld]]. */
+    * r14). The same shape as [[deleteRangesHeld]]. */
   private[sources] def writePointsLocalHeld(spark: SparkSession,
                                             n: Namespace, points: Seq[Point],
                                             rolloverBytes: Long): Unit = {
@@ -1658,38 +1584,18 @@ object TimeStore {
         val sIdx = mustFetchIndex(spark, n, "simple")
         val eIdx = mustFetchIndex(spark, n, "extended")
         val target = livePointsPath(spark, n).getOrElse(n.pointsDir)
-        val f = fs(spark, target)
-        val conf = spark.sparkContext.hadoopConfiguration
-        points.groupBy { p =>
+        // one file per touched (kind, epoch, bucket) leaf, under the schema
+        // writePoints' files carry ([[LocalParquet.publish]])
+        LocalParquet.publish(spark, Point.schema, points.groupBy { p =>
           val idx = if (p.isExtended) eIdx else sIdx
           val (epoch, bucket) = EpochIndex.locate(idx, p.time, p.address)
           (if (p.isExtended) "extended" else "simple", epoch, bucket)
-        }.foreach { case ((kind, epoch, bucket), pts) =>
-          val dir = new Path(s"$target/kind=$kind/epoch=$epoch/bucket=$bucket")
-          f.mkdirs(dir)
-          // Sweep stale staged files first: we hold the writer lease, so any
-          // existing .inprogress here is an orphan from a writer that crashed
-          // between staging and rename — invisible to readers (dot-prefixed)
-          // but otherwise accumulating forever (ADVICE r9). Compact retires
-          // them wholesale with the superseded generation; this covers the
-          // no-compact path at one listStatus per touched bucket.
-          f.listStatus(dir).foreach { st =>
-            if (st.isFile && st.getPath.getName.endsWith(".inprogress"))
-              f.delete(st.getPath, false)
-          }
-          // Stage under a dot-prefixed name (targetObjs, which every read
-          // plans through, skips '.'/'_' names) and rename into place only
-          // after the writer closes: reads are lease-free, so a concurrent
-          // reader must never list a file whose footer isn't committed.
-          // Rename is atomic on HDFS and the local FS — the same publish
-          // discipline Spark's commit protocol gives writePoints.
-          val base = s"part-${java.util.UUID.randomUUID()}-local.snappy.parquet"
-          val tmp = new Path(dir, s".$base.inprogress")
-          writeParquetPoints(conf, tmp, pts)
-          if (!f.rename(tmp, new Path(dir, base)))
-            throw new java.io.IOException(
-              s"failed to publish local point write: $tmp")
-        }
+        }.toSeq.map { case ((kind, epoch, bucket), pts) =>
+          LocalParquet.Staged(
+            new Path(s"$target/kind=$kind/epoch=$epoch/bucket=$bucket"),
+            LocalParquet.partName(),
+            pts.map(p => InternalRow(p.address, p.time, p.payload, p.value)))
+        })
         val (s0, e0) = fetchLatest(spark, n)
         val (simplePts, extPts) = points.partition(!_.isExtended)
         val sMax = simplePts.foldLeft(s0)((a, p) => maxU(a, p.time))

@@ -175,6 +175,49 @@ class HygieneSpec extends SparkSpec {
       "the reader itself must be found")
   }
 
+  /** Driver-side Parquet writing in `src`, as (line, form, enclosing
+    * def): parquet-mr's example writer, Spark's output-writer factory
+    * (named or instantiated) and a `.inprogress` staging name. */
+  private def parquetWriters(src: String): Seq[(Int, String, String)] = {
+    val defs = """\bdef\s+(\w+)""".r.findAllMatchIn(src).toSeq
+    Seq("ExampleParquetWriter", "OutputWriterFactory", """\.newInstance\(""",
+        """\.inprogress"""")
+      .flatMap(_.r.findAllMatchIn(src).map { m =>
+        (src.substring(0, m.start).count(_ == '\n') + 1, m.matched,
+          defs.takeWhile(_.start < m.start).lastOption.fold("")(_.group(1)))
+      })
+  }
+
+  test("src/main writes driver-side parquet only through LocalParquet.publish") {
+    // the detector itself: flags each form, passes the publisher's callers
+    assert(parquetWriters("def w = ExampleParquetWriter.builder(p)") ===
+      Seq((1, "ExampleParquetWriter", "w")))
+    assert(parquetWriters("val f: OutputWriterFactory = x").size === 1)
+    assert(parquetWriters("def n =\n  factory.newInstance(p, s, ctx)") ===
+      Seq((2, ".newInstance(", "n")))
+    assert(parquetWriters("val tmp = new Path(dir, s\".$base.inprogress\")").size === 1)
+    assert(parquetWriters("if (nm.endsWith(\".inprogress\")) f.delete(p)").size === 1)
+    assert(parquetWriters("LocalParquet.publish(spark, schema, files) // .inprogress").isEmpty)
+    assert(parquetWriters("w.newInstanceOf(x); ParquetWriter.DEFAULT_BLOCK_SIZE").isEmpty)
+    val found = scalaSources("src/main/scala").flatMap { case (f, src) =>
+      parquetWriters(src).map { case (l, form, d) => (f, l, form, d) }
+    }
+    val offenders = found.collect {
+      case (f, l, form, d) if !(
+          (form == "ExampleParquetWriter" && f.getName == "TimeStore.scala" &&
+            d == "mergePartitionDir") ||
+          (form != "ExampleParquetWriter" && f.getName == "LocalParquet.scala")) =>
+        s"${f.getPath} line $l: $form in ${if (d.isEmpty) "(top level)" else d}"
+    }
+    assert(offenders.isEmpty,
+      "driver-side parquet files are written, staged and renamed only by " +
+        "graft.sources.LocalParquet.publish (the example writer survives " +
+        "only in the store compaction's mixed-schema fallback):\n" +
+        offenders.mkString("\n"))
+    assert(found.map(_._3).toSet === Set("ExampleParquetWriter", ".newInstance(",
+      ".inprogress\""), "the publisher and the compaction fallback must be found")
+  }
+
   test("CacheScope leaves a frame its caller persisted cached through cache, free and release") {
     import org.apache.spark.storage.StorageLevel
     val mine = spark.range(0, 1000).toDF("x").persist()

@@ -139,7 +139,7 @@ class IndexAppendSpec extends SparkSpec {
       s"${IndexTables.liveDir(spark, path)}/postings")
     def staged() = fs.listStatus(new Path(postings)).map(_.getPath.getName)
       .filter(_.endsWith(".inprogress")).toSeq
-    TimeStore.crashSeams.add("index-append-before-rename")
+    TimeStore.crashSeams.add("publish-before-rename")
     val boom = intercept[RuntimeException](
       TextIndex.bm25IndexAppend(spark, batch, "doc_id", "text", path))
     assert(boom.getMessage.contains("injected crash"))

@@ -167,6 +167,80 @@ class LocalPointOpsSpec extends SparkSpec {
       Seq(Long.MinValue + 20L, Long.MinValue + 30L, Long.MinValue + 40L, -50L, -40L, -30L, -20L))
   }
 
+  test("a leaf holding distributed, driver-written and older example-writer " +
+      "files compacts by concatenation, every row kept") {
+    import org.apache.hadoop.fs.Path
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
+    import org.apache.parquet.io.api.Binary
+    import graft.sources.{ParquetConcat, ParquetOpen}
+    val n = freshNs()
+    TimeStore.register(spark, n, 1, 1) // one leaf per kind
+    val conf = spark.sparkContext.hadoopConfiguration
+    def leaf(kind: String) = new Path(s"${n.pointsDir}/kind=$kind/epoch=0/bucket=0")
+    def footer(st: org.apache.hadoop.fs.FileStatus) =
+      ParquetOpen.withReader(conf, st)(_.getFooter)
+    val rowMeta = "org.apache.spark.sql.parquet.row.metadata"
+    TimeStore.writePoints(spark, n, ds(
+      Point(2L, 10L, 1L), Point(4L, 11L, 2L), Point(3L, 12L, 3L, Array[Byte](7))))
+    TimeStore.writePointsLocal(spark, n, Seq(
+      Point(2L, 20L, 4L), Point(6L, 21L, 5L), Point(5L, 22L, 6L, Array[Byte](8, 9)),
+      Point(7L, 23L, 7L)))
+    Seq("simple", "extended").foreach { kind =>
+      val files = ParquetConcat.dataFiles(conf, leaf(kind))
+      val (local, dist) = files.partition(_.getPath.getName.contains("-local"))
+      assert(local.size === 1 && dist.size === 1, files.map(_.getPath.getName))
+      val (f0, f1) = (footer(dist.head).getFileMetaData, footer(local.head).getFileMetaData)
+      // the physical schema the parent's hand-written LocalFileSchema spelled
+      assert(f1.getSchema.toString.replaceAll("\\s+", " ").trim ===
+        "message spark_schema { required int64 address; required int64 time; " +
+          "required int64 payload; optional binary value; }")
+      assert(f1.getSchema === f0.getSchema, kind)
+      assert(f1.getKeyValueMetaData.get(rowMeta) === f0.getKeyValueMetaData.get(rowMeta) &&
+        f0.getKeyValueMetaData.containsKey(rowMeta), kind)
+      val probe = new Path(Files.createTempDirectory("graft-concat").toString, "m.parquet")
+      assert(ParquetConcat.mergeSameSchema(conf, files, probe),
+        s"$kind: the leaf must take the concatenation path")
+    }
+    // a fragment written the way earlier versions wrote driver-side puts:
+    // parquet-mr's example writer under the hand-written schema
+    val legacySchema = org.apache.parquet.schema.MessageTypeParser.parseMessageType(
+      "message spark_schema { required int64 address; required int64 time; " +
+        "required int64 payload; optional binary value; }")
+    val w = ExampleParquetWriter.builder(
+        new Path(leaf("extended"), "part-legacy-local.snappy.parquet"))
+      .withConf(conf).withType(legacySchema).build()
+    try Seq(Point(9L, 30L, 1L, Array[Byte](3)), Point(3L, 12L, 0L, null)).foreach { p =>
+      val g = new SimpleGroupFactory(legacySchema).newGroup()
+      g.append("address", p.address).append("time", p.time).append("payload", p.payload)
+      if (p.value != null) g.append("value", Binary.fromConstantByteArray(p.value))
+      w.write(g)
+    } finally w.close()
+    val (sAddrs, eAddrs) = (Seq(2L, 4L, 6L), Seq(3L, 5L, 7L, 9L))
+    def reads() = (collectSimple(n, 0L, -1L, sAddrs), collectExtended(n, 0L, -1L, eAddrs))
+    val before = reads()
+    assert(before._1.size === 4 && before._2.size === 4)
+    assert(before._2.find(_.address == 3L).get.payload === 0L,
+      "the legacy fragment's row is read (and wins the pinned dedup)")
+    val groups = Seq("simple", "extended").map(k =>
+      k -> ParquetConcat.dataFiles(conf, leaf(k)).map(footer(_).getBlocks.size).sum).toMap
+    TimeStore.compact(spark, n)
+    val live = TimeStore.livePointsPath(spark, n).get
+    Seq("simple", "extended").foreach { kind =>
+      val files = ParquetConcat.dataFiles(conf,
+        new Path(s"$live/kind=$kind/epoch=0/bucket=0"))
+      assert(files.size === 1, kind)
+      // concatenation keeps every input row group and the Spark schema
+      // metadata; the re-encode fallback would write one row group without it
+      val merged = footer(files.head)
+      assert(merged.getBlocks.size === groups(kind), kind)
+      assert(merged.getFileMetaData.getKeyValueMetaData.containsKey(rowMeta), kind)
+    }
+    assert(reads() === before)
+    assert(TimeStore.readSimpleLocal(spark, n, 0L, -1L, sAddrs) === before._1)
+    assert(TimeStore.readExtendedLocal(spark, n, 0L, -1L, eAddrs) === before._2)
+  }
+
   test("sign-crossing reads plan only their index epochs; unregistered reads fail at the call") {
     // rollover after every batch: epochs on both sides of the sign bit
     val n = freshNs()

@@ -73,7 +73,33 @@ class StoreDeleteSpec extends SparkSpec {
       "physically gone, superseded generation survives the swap") {
     val (root, n) = mkStore("vacuum")
     TimeStore.deletePoints(spark, n, Seq(4L, 8L), 150L, 250L)
+    // a tombstone file written the way earlier versions wrote them:
+    // parquet-mr's example writer under a hand-written schema, which is
+    // the physical schema the current writer produces
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
+    val conf = spark.sparkContext.hadoopConfiguration
+    val legacySchema = org.apache.parquet.schema.MessageTypeParser.parseMessageType(
+      "message spark_schema { required int64 address; required int64 tstart; " +
+        "required int64 tend; }")
+    val current = TimeStore.deleteFiles(spark, n)
+    assert(current.size === 1)
+    assert(graft.sources.ParquetOpen.withReader(conf, current.head)(
+      _.getFooter.getFileMetaData.getSchema) === legacySchema)
+    val w = ExampleParquetWriter.builder(
+        new Path(TimeStore.deletesDir(n), "del-legacy.parquet"))
+      .withConf(conf).withType(legacySchema).build()
+    try w.write(new SimpleGroupFactory(legacySchema).newGroup()
+      .append("address", 10L).append("tstart", 0L).append("tend", 150L))
+    finally w.close()
+    // both files load as triples, and the mask every reader tests suppresses both
+    val triples = TimeStore.loadDeleteTriples(conf, TimeStore.deleteFiles(spark, n))
+    assert(triples.grouped(3).map(_.toSeq).toSet ===
+      Set(Seq(4L, 150L, 250L), Seq(8L, 150L, 250L), Seq(10L, 0L, 150L)))
+    val mask = TimeStore.deleteMask(spark, n)
+    assert(mask.deleted(4L, 202L) && mask.deleted(10L, 105L) && !mask.deleted(10L, 205L))
     val tombstoned = readAddrs(n)
+    assert(!tombstoned.contains((10L, 105L)) && tombstoned.contains((10L, 205L)))
     TimeStore.vacuumDeletes(spark, n)
     assert(readAddrs(n) === tombstoned, "vacuum must not change served rows")
     assert(TimeStore.deleteFiles(spark, n).isEmpty,
@@ -83,6 +109,8 @@ class StoreDeleteSpec extends SparkSpec {
     assert(live.endsWith("points-g1"), s"vacuum must swap generations: $live")
     assert(spark.read.parquet(live)
       .where("address IN (4, 8) AND time BETWEEN 150 AND 250").count() === 0)
+    assert(spark.read.parquet(live).where("address = 10 AND time = 105").count() === 0)
+    assert(spark.read.parquet(live).where("address = 10 AND time = 205").count() === 1)
     // reader safety: generation 0 survives until the lease horizon
     assert(fs.exists(new Path(s"${n.dir}/points")),
       "superseded points generation must survive the swap")
@@ -381,6 +409,30 @@ class StoreDeleteSpec extends SparkSpec {
     val keys2 = TimeStore.maskCacheKeys.filter(_.contains("LRU"))
     assert(keys2.contains(ns(1).dir), "recently-used entry survives eviction")
     assert(!keys2.contains(ns(2).dir), "LRU entry is the one evicted")
+    fs.delete(new Path(root), true)
+  }
+
+  test("the store's own jobs carry their phase names: write, compact, vacuum") {
+    val root = Files.createTempDirectory("graft-del-jobs").toString
+    val n = TimeStore.namespace(root, "DEL")
+    TimeStore.register(spark, n, 4, 4)
+    import spark.implicits._
+    val phases = Seq[(String, () => Unit)](
+      ("store.write", () => TimeStore.writePoints(spark, n,
+        spark.createDataset(pts(0 until 8, 100L)))),
+      ("store.write", () => TimeStore.writePoints(spark, n,
+        spark.createDataset(pts(0 until 8, 200L)))),
+      ("store.compact", () => TimeStore.compact(spark, n)),
+      ("store.vacuum", () => {
+        TimeStore.deletePoints(spark, n, Seq(4L), 150L, 250L)
+        TimeStore.vacuumDeletes(spark, n)
+      }))
+    phases.foreach { case (phase, op) =>
+      val jobs = jobsOf(op())
+      assert(jobs.nonEmpty && jobs.forall(_._1 == phase),
+        s"$phase:\n${jobs.mkString("\n")}")
+    }
+    assert(readAddrs(n).size === 15)
     fs.delete(new Path(root), true)
   }
 }

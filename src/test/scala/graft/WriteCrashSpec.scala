@@ -104,4 +104,78 @@ class WriteCrashSpec extends SparkSpec {
     val rows = TimeStore.readSimple(spark, n, 0L, 100000L, addrs).collect()
     assert(rows.length === 36)
   }
+
+  /** The staged files under `dir`, recursively. */
+  private def staged(dir: String): Seq[String] = {
+    val p = new org.apache.hadoop.fs.Path(dir)
+    val f = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!f.exists(p)) Nil
+    else {
+      val it = f.listFiles(p, true)
+      Iterator.continually(it).takeWhile(_.hasNext).map(_.next().getPath.getName)
+        .filter(_.endsWith(".inprogress")).toSeq
+    }
+  }
+
+  test("a local put that dies between staging and rename publishes nothing; " +
+      "the next put sweeps its staged file") {
+    val root = Files.createTempDirectory("graft-crash-put").toString
+    val n = TimeStore.namespace(root, "CRASHP")
+    TimeStore.register(spark, n, 4, 4)
+    TimeStore.writePointsLocal(spark, n, pts(0 until 4, 100L))
+    val addrs = (0 until 4).map(_.toLong * 2)
+    def local() = TimeStore.readSimpleLocal(spark, n, 0L, -1L, addrs)
+    def scan() = TimeStore.readSimple(spark, n, 0L, -1L, addrs).collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted
+    val (before, scanBefore) = (local(), scan())
+    val latest = TimeStore.fetchLatest(spark, n)
+    // one point, so one leaf: the seam fires on its only file
+    TimeStore.crashSeams.add("publish-before-rename")
+    val boom = intercept[RuntimeException](
+      TimeStore.writePointsLocal(spark, n, Seq(Point(2L, 500L, 9L))))
+    assert(boom.getMessage.contains("injected crash"))
+    assert(TimeStore.crashSeams.isEmpty, "seam did not fire")
+    assert(staged(n.pointsDir).size === 1, "the crash leaves one staged file")
+    // readers see the pre-write state; the watermark did not advance
+    assert(local() === before && scan() === scanBefore)
+    assert(TimeStore.fetchLatest(spark, n) === latest)
+    // the next put into the same leaf sweeps the orphan and serves
+    TimeStore.writePointsLocal(spark, n, Seq(Point(2L, 500L, 9L)))
+    assert(staged(n.pointsDir).isEmpty, "the next put sweeps the orphan")
+    assert(local().count(_.time == 500L) === 1)
+    assert(scan().count(_ == ((2L, 500L))) === 1)
+    assert(TimeStore.fetchLatest(spark, n)._1 === 500L)
+  }
+
+  test("a takedown that dies between staging and rename suppresses nothing; " +
+      "the next takedown sweeps its staged file") {
+    val root = Files.createTempDirectory("graft-crash-del").toString
+    val n = TimeStore.namespace(root, "CRASHD")
+    TimeStore.register(spark, n, 4, 4)
+    import spark.implicits._
+    TimeStore.writePoints(spark, n, spark.createDataset(pts(0 until 8, 100L)))
+    val addrs = (0 until 8).map(_.toLong * 2)
+    def local() = TimeStore.readSimpleLocal(spark, n, 0L, -1L, addrs)
+      .map(p => (p.address, p.time))
+    def scan() = TimeStore.readSimple(spark, n, 0L, -1L, addrs).collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted
+    val before = scan()
+    assert(before.size === 8 && local() === before)
+    TimeStore.crashSeams.add("publish-before-rename")
+    val boom = intercept[RuntimeException](TimeStore.deletePoints(spark, n, Seq(4L)))
+    assert(boom.getMessage.contains("injected crash"))
+    assert(TimeStore.crashSeams.isEmpty, "seam did not fire")
+    assert(staged(TimeStore.deletesDir(n)).size === 1,
+      "the crash leaves one staged file")
+    // no tombstone is pending, and every reader still serves address 4
+    assert(TimeStore.deleteFiles(spark, n).isEmpty)
+    assert(scan() === before && local() === before)
+    // the next takedown sweeps the orphan and suppresses
+    TimeStore.deletePoints(spark, n, Seq(4L))
+    assert(staged(TimeStore.deletesDir(n)).isEmpty,
+      "the next takedown sweeps the orphan")
+    assert(TimeStore.deleteFiles(spark, n).size === 1)
+    val after = before.filter(_._1 != 4L)
+    assert(scan() === after && local() === after)
+  }
 }
