@@ -191,7 +191,7 @@ class LocalPointOpsSpec extends SparkSpec {
       val (local, dist) = files.partition(_.getPath.getName.contains("-local"))
       assert(local.size === 1 && dist.size === 1, files.map(_.getPath.getName))
       val (f0, f1) = (footer(dist.head).getFileMetaData, footer(local.head).getFileMetaData)
-      // the physical schema the parent's hand-written LocalFileSchema spelled
+      // the physical schema mergePartitionDir's LocalFileSchema spells
       assert(f1.getSchema.toString.replaceAll("\\s+", " ").trim ===
         "message spark_schema { required int64 address; required int64 time; " +
           "required int64 payload; optional binary value; }")
