@@ -72,17 +72,10 @@ object PointFunctions {
   def unsignedGt(a: Column, b: Column): Column = flip(a) > flip(b)
   def unsignedGte(a: Column, b: Column): Column = flip(a) >= flip(b)
   def unsignedLte(a: Column, b: Column): Column = flip(a) <= flip(b)
-  def unsignedLt(a: Column, b: Column): Column = flip(a) < flip(b)
-
-  def unsignedMod(a: Column, n: Column): Column =
-    ColumnBridge.column(UnsignedMod(expr(a), expr(n.cast("long"))))
 
   /** Column form of `placeBucket` (`Core.hs:272-276`): clear bit 0, unsigned
     * mod bucket count. */
   def placeBucket(addr: Column, buckets: Column): Column =
     ColumnBridge.column(UnsignedMod(
       BitwiseAnd(expr(addr), Literal(-2L)), expr(buckets.cast("long"))))
-
-  def decodePoints(bin: Column): Column =
-    ColumnBridge.column(DecodePoints(expr(bin)))
 }

@@ -16,8 +16,7 @@ import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.StructType
 
 import graft.Trace
-import graft.sources.{
-  LocalParquet, ParquetConcat, ParquetOpen, SerializableHadoopConf, TimeStore}
+import graft.sources.{Generations, LocalParquet, ParquetConcat, ParquetOpen}
 
 /** The one storage lifecycle of every persisted index — the ANN indexes
   * ([[Similarity.imiIndexWrite]], [[Similarity.imiPqIndexWrite]],
@@ -37,13 +36,12 @@ import graft.sources.{
   *   path/gen-000003/lists/gen-000001/...   DATA tables: generational
   *   path/tombstones/part-*.parquet         pending deletes, any generation
   * }}}
-  * A table is generational when it holds `gen-*` directories; the LIVE
-  * generation is the newest one whose `_SUCCESS` committed. The marker
-  * lands last (atomically at Spark job commit), so every swap is atomic
-  * from a reader's view: before the commit readers resolve the old
-  * generation, after it the new one, never neither. Readers resolve the
-  * root ONCE per serve ([[liveDir]]) and derive model and data dirs from
-  * it, so they never pair one build's model with another's data.
+  * A table is generational when it holds `gen-*` directories. Listing,
+  * the live generation (the newest committed `_SUCCESS`), commit and
+  * retirement are the store's own ([[graft.sources.Generations]]), so
+  * every swap is atomic from a reader's view. Readers resolve the root
+  * ONCE per serve ([[liveDir]]) and derive model and data dirs from it,
+  * so they never pair one build's model with another's data.
   *
   * '''Build''' ([[build]]): a full write — a fresh build, a rebuild, a
   * vacuum that recomputes statistics — lands model and data (base data
@@ -62,11 +60,11 @@ import graft.sources.{
   *
   * '''Compaction''' ([[compact]], [[maybeCompact]]): each data table of
   * the live root — found as the root's children that hold `gen-*`
-  * generations, so model tables are never touched — merges its live
+  * generations, so model tables are never touched — copies its live
   * generation into generation N+1 with one file per leaf directory (per
-  * `cell=` partition when present) by binary row-group concatenation
-  * ([[graft.sources.ParquetConcat]]: raw page copy, no decode).
-  * [[maybeCompact]] runs it only where some leaf holds more than
+  * `cell=` partition when present) through the store's leaf compaction
+  * ([[graft.sources.Generations.compact]]: raw row-group copy, no
+  * decode). [[maybeCompact]] runs it only where some leaf holds more than
   * `maxFilesPerLeaf` files — the store's `maybeRollover`, with
   * files-per-leaf as the unit of fragmentation (SCALE.md's imi_index_ab
   * measured search at 26.6 s across 1,753 file-tasks vs 4.7 s compacted).
@@ -83,11 +81,9 @@ import graft.sources.{
   * the listed files — a delete landing mid-vacuum stays pending.
   *
   * '''Retirement.''' A superseded generation (table or root) is deleted
-  * only after [[graft.sources.TimeStore.LeaseTimeoutMs]], dated from a
-  * `_SUPERSEDED_AT` marker stamped at first observation — not from the
-  * superseder's `_SUCCESS` mtime, which appends refresh forever (the
-  * store's r4 lesson). A reader that resolved the old generation keeps
-  * scanning it meanwhile.
+  * only after [[graft.sources.TimeStore.LeaseTimeoutMs]], on the store's
+  * first-observation clock ([[graft.sources.Generations]]). A reader that
+  * resolved the old generation keeps scanning it meanwhile.
   *
   * '''Reads.''' Every index-table read goes through [[read]]: the schema
   * comes from one data file's footer, so no read pays Spark's
@@ -98,8 +94,6 @@ import graft.sources.{
   * do not run concurrently.
   */
 private[graft] object IndexTables {
-
-  private def genName(g: Int): String = f"gen-$g%06d"
 
   /** Default `maxFilesPerLeaf` of every `*MaybeCompact` entry point. */
   val MaxFilesPerLeaf = 16
@@ -113,16 +107,8 @@ private[graft] object IndexTables {
   def maybeBroadcast(df: DataFrame, estBytes: Long): DataFrame =
     if (estBytes <= MaxProbeBroadcastBytes) broadcast(df) else df
 
-  /** Byte ceiling under which a SINGLE-leaf compaction merges driver-side
-    * instead of through a one-task Spark job — below it the job's
-    * scheduling floor dominates the byte copy. */
-  private val LocalMergeMaxBytes: Long = 64L << 20
-
   private def fsOf(spark: SparkSession, dir: String): FileSystem =
     new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  private def isGen(st: FileStatus): Boolean =
-    st.isDirectory && st.getPath.getName.startsWith("gen-")
 
   /** `dir` (an index table's live generation or a model table) as a
     * relation whose schema comes from ONE footer, opened through
@@ -168,19 +154,12 @@ private[graft] object IndexTables {
         dirs.iterator.flatMap(d => firstDataFile(f, d.getPath)).nextOption())
     }
 
-  /** All on-disk generations of a table, ascending: (generation, path). */
-  private def generations(f: FileSystem, table: Path): Seq[(Int, Path)] =
-    if (!f.exists(table)) Seq.empty
-    else f.listStatus(table).toSeq.filter(isGen)
-      .flatMap(st => st.getPath.getName.stripPrefix("gen-").toIntOption
-        .map(g => (g, st.getPath)))
-      .sortBy(_._1)
-
-  private def isComplete(f: FileSystem, p: Path): Boolean =
-    f.exists(new Path(p, "_SUCCESS"))
+  private def gens(f: FileSystem, table: String): Seq[(Long, Path)] =
+    Generations.list(f, new Path(table), Generations.Numbered)
 
   /** The directory a fresh base write lands in. */
-  def writeDir(table: String): String = s"$table/${genName(0)}"
+  def writeDir(table: String): String =
+    s"$table/${Generations.Numbered.dirName(0)}"
 
   /** The live generation when the table exists: the newest complete one.
     * Fails loudly on a LEGACY (pre-generational) layout — real content
@@ -193,11 +172,11 @@ private[graft] object IndexTables {
     * sanctioned non-generational resident of an index root; `_`/`.` names
     * are markers/staging. An in-flight FIRST build (gen dir present, no
     * `_SUCCESS` yet) is NOT legacy — maintenance stays a no-op on it. */
-  def liveGenOpt(spark: SparkSession, table: String): Option[(Int, Path)] = {
+  def liveGenOpt(spark: SparkSession, table: String): Option[(Long, Path)] = {
     val f = fsOf(spark, table)
     val root = new Path(table)
-    val gens = generations(f, root)
-    if (gens.isEmpty && f.exists(root) &&
+    val all = gens(f, table)
+    if (all.isEmpty && f.exists(root) &&
         f.listStatus(root).exists { st =>
           val nm = st.getPath.getName
           !nm.startsWith("_") && !nm.startsWith(".") && nm != "tombstones"
@@ -208,7 +187,7 @@ private[graft] object IndexTables {
         "index (e.g. *IndexWrite over a fresh path, or move the existing " +
         "tables under <path>/gen-000000 with a _SUCCESS marker) and retire " +
         "the legacy directory")
-    gens.filter(g => isComplete(f, g._2)).lastOption
+    Generations.complete(f, all).lastOption
   }
 
   /** The live generation — where reads resolve and appends land. Fails
@@ -229,21 +208,19 @@ private[graft] object IndexTables {
 
   /** Where the NEXT full index build lands: root generation N+1 (0 for a
     * fresh path), any incomplete earlier attempt at that slot removed. */
-  private def nextRootDir(spark: SparkSession, path: String): String = {
-    val next = liveGenOpt(spark, path).map(_._1 + 1).getOrElse(0)
-    val f = fsOf(spark, path)
-    val p = new Path(path, genName(next))
-    if (f.exists(p)) f.delete(p, true) // dead earlier attempt
-    p.toString
-  }
+  private def nextRootDir(spark: SparkSession, path: String): String =
+    Generations.claim(fsOf(spark, path), new Path(path), Generations.Numbered,
+      liveGenOpt(spark, path).fold(0L)(_._1 + 1)).toString
 
   /** The single atomic commit point of a full index build: create the root
     * generation's `_SUCCESS` (readers resolve the new index from here on)
     * and start the superseded index's retirement clock. */
   def commitRoot(spark: SparkSession, root: String): Unit = {
+    val f = fsOf(spark, root)
     val rootPath = new Path(root)
-    fsOf(spark, root).create(new Path(rootPath, "_SUCCESS"), true).close()
-    retireSuperseded(fsOf(spark, root), rootPath.getParent)
+    Generations.commit(f, rootPath)
+    Generations.retireSuperseded(f,
+      Generations.complete(f, gens(f, rootPath.getParent.toString)))
   }
 
   /** The data tables of a root generation, by name: its children that
@@ -252,22 +229,14 @@ private[graft] object IndexTables {
   def dataTables(spark: SparkSession, root: String): Seq[String] = {
     val f = fsOf(spark, root)
     f.listStatus(new Path(root)).toSeq
-      .filter(st => st.isDirectory && f.listStatus(st.getPath).exists(isGen))
+      .filter(st => st.isDirectory && f.listStatus(st.getPath).exists(c =>
+        c.isDirectory && Generations.Numbered.parse(c.getPath.getName).isDefined))
       .map(_.getPath.getName).sorted
   }
 
   /** Whether a live generation is `cell=` partitioned. */
   private def cellPartitioned(f: FileSystem, live: Path): Boolean =
     f.listStatus(live).exists(_.getPath.getName.startsWith("cell="))
-
-  /** The leaf directories of a live generation: its `cell=` partitions,
-    * or the generation itself when unpartitioned. */
-  private def leaves(f: FileSystem, live: Path): Seq[Path] = {
-    val cells = f.listStatus(live).toSeq
-      .filter(st => st.isDirectory && st.getPath.getName.startsWith("cell="))
-      .map(_.getPath).sortBy(_.getName)
-    if (cells.isEmpty) Seq(live) else cells
-  }
 
   /** Row ceiling of a driver-side index append: a batch of at most this
     * many collected rows (documents, shingle rows or vectors, with their
@@ -379,22 +348,18 @@ private[graft] object IndexTables {
   def rewriteTable(spark: SparkSession, table: String)(
       f: DataFrame => DataFrame): Unit =
     liveGenOpt(spark, table).foreach { case (g, live) =>
+      val fs = fsOf(spark, table)
       val out = f(read(spark, live.toString)).write.mode("overwrite")
-      (if (cellPartitioned(fsOf(spark, table), live)) out.partitionBy("cell")
-       else out).parquet(s"$table/${genName(g + 1)}")
-      retireSuperseded(fsOf(spark, table), new Path(table))
+      (if (cellPartitioned(fs, live)) out.partitionBy("cell")
+       else out).parquet(s"$table/${Generations.Numbered.dirName(g + 1)}")
+      Generations.retireSuperseded(fs, Generations.complete(fs, gens(fs, table)))
     }
 
   /** Compact every data table of the index at `path`. No-op on a
     * never-written path. */
   def compact(spark: SparkSession, path: String): Unit =
     Trace.phase(spark, "index.compact") {
-      liveGenOpt(spark, path).foreach { case (_, root) =>
-        dataTables(spark, root.toString).foreach { t =>
-          val table = s"$root/$t"
-          listTable(spark, table).foreach(compactTable(spark, table, _))
-        }
-      }
+      liveTables(spark, path).foreach(compactTable(spark, _))
     }
 
   /** Compact the data tables of the index at `path` some leaf of which
@@ -403,106 +368,27 @@ private[graft] object IndexTables {
   def maybeCompact(spark: SparkSession, path: String,
                    maxFilesPerLeaf: Int = MaxFilesPerLeaf): Boolean =
     Trace.phase(spark, "index.compact") {
-      liveGenOpt(spark, path).exists { case (_, root) =>
-        dataTables(spark, root.toString).map { t =>
-          val table = s"$root/$t"
-          listTable(spark, table).exists { listing =>
-            val over = listing.leaves.exists(_._2.size > maxFilesPerLeaf)
-            if (over) compactTable(spark, table, listing)
-            over
-          }
-        }.exists(identity)
-      }
+      liveTables(spark, path).map { l =>
+        val over = l.leaves.exists(_._2.size > maxFilesPerLeaf)
+        if (over) compactTable(spark, l)
+        over
+      }.exists(identity)
     }
 
-  /** A data table as listed once: its complete generations (ascending;
-    * the last is live) and each leaf of the live generation with its data
-    * files. */
-  private final case class TableListing(complete: Seq[(Int, Path)],
-                                        leaves: Seq[(Path, Seq[FileStatus])])
+  /** The data tables of the index at `path`'s live root, each listed once
+    * ([[graft.sources.Generations.listing]]). */
+  private def liveTables(spark: SparkSession,
+                         path: String): Seq[Generations.Listing] =
+    liveGenOpt(spark, path).toSeq.flatMap { case (_, root) =>
+      val f = fsOf(spark, path)
+      dataTables(spark, root.toString).map(t =>
+        Generations.listing(f, new Path(root, t), Generations.Numbered))
+    }
 
-  private def listTable(spark: SparkSession,
-                        table: String): Option[TableListing] = {
-    val f = fsOf(spark, table)
-    val complete = generations(f, new Path(table))
-      .filter(g => isComplete(f, g._2))
-    complete.lastOption.map { case (_, live) =>
-      val conf = spark.sparkContext.hadoopConfiguration
-      TableListing(complete,
-        leaves(f, live).map(l => l -> ParquetConcat.dataFiles(conf, l)))
-    }
-  }
-
-  /** One table's live generation, as `listing` found it, into one file
-    * per leaf as generation N+1. One executor task per leaf — the merge
-    * is IO-bound and a retried task overwrites its own output, so tasks
-    * are idempotent; a single small leaf merges driver-side. Index
-    * writers all emit ONE physical schema, so a mixed-schema leaf is
-    * corruption and fails loudly. */
-  private def compactTable(spark: SparkSession, table: String,
-                           listing: TableListing): Unit = {
-    val f = fsOf(spark, table)
-    val (cur, curPath) = listing.complete.last
-    val next = new Path(table, genName(cur + 1))
-    if (f.exists(next)) f.delete(next, true) // dead earlier attempt
-    // (leaf relative to the generation, its files as (path, length))
-    val work = listing.leaves.map { case (l, files) =>
-      (if (l == curPath) "" else l.getName,
-        files.map(st => (st.getPath.toString, st.getLen)))
-    }
-    val nextStr = next.toString
-    def mergeLeaf(conf: org.apache.hadoop.conf.Configuration, rel: String,
-                  files: Seq[(String, Long)]): Unit = {
-      val dstDir = if (rel.isEmpty) nextStr else s"$nextStr/$rel"
-      require(
-        ParquetConcat.mergeSameSchema(conf,
-          files.map { case (p, len) =>
-            new FileStatus(len, false, 0, 0, 0, new Path(p)) },
-          new Path(s"$dstDir/compacted-0.parquet")),
-        s"mixed physical schemas under $curPath/$rel — index writers emit " +
-          "one schema; refusing to guess a merge")
-    }
-    val conf0 = spark.sparkContext.hadoopConfiguration
-    if (work.size == 1 && work.head._2.map(_._2).sum <= LocalMergeMaxBytes)
-      // driver-side: one small leaf's byte copy sits under Spark's
-      // ~300 ms per-job scheduling floor (the kv_point_ops lesson —
-      // never ride a job to move a few MB)
-      mergeLeaf(conf0, work.head._1, work.head._2)
-    else {
-      val sconf = new SerializableHadoopConf(conf0)
-      spark.sparkContext.parallelize(work, work.size)
-        .foreach { case (rel, files) => mergeLeaf(sconf.conf, rel, files) }
-    }
-    f.create(new Path(next, "_SUCCESS"), true).close()
-    retire(f, listing.complete.map(_._2))
-  }
-
-  /** Stamp, and past the lease horizon delete, the complete generations
-    * of `table` older than its live one — see the object Scaladoc for why
-    * the clock is a first-observation marker. */
-  private def retireSuperseded(f: FileSystem, table: Path): Unit =
-    retire(f, generations(f, table).filter(g => isComplete(f, g._2))
-      .dropRight(1).map(_._2))
-
-  /** [[retireSuperseded]] over generations already known superseded. */
-  private def retire(f: FileSystem, superseded: Seq[Path]): Unit =
-    superseded.foreach { p =>
-      val marker = new Path(p, "_SUPERSEDED_AT")
-      if (!f.exists(marker)) {
-        val out = f.create(marker, true)
-        try out.write(System.currentTimeMillis().toString
-          .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        finally out.close()
-      } else {
-        val in = f.open(marker)
-        val at =
-          try new String(in.readAllBytes(),
-            java.nio.charset.StandardCharsets.UTF_8).trim.toLong
-          finally in.close()
-        if (System.currentTimeMillis() - at > TimeStore.LeaseTimeoutMs)
-          f.delete(p, true)
-      }
-    }
+  /** One table's live generation, as listed, into one file per leaf as
+    * generation N+1 ([[graft.sources.Generations.compact]]). */
+  private def compactTable(spark: SparkSession, l: Generations.Listing): Unit =
+    Generations.compact(spark, fsOf(spark, l.parent.toString), l)(_ => ())
 
   // ---- tombstones -------------------------------------------------------
 

@@ -25,7 +25,7 @@ import org.apache.spark.sql.types.StructType
   * tasks (`ParquetUtils.prepareWrite` and its output-writer factory), so a
   * driver-written file carries the physical schema and footer metadata a
   * Spark-written file of the same schema carries, and compaction
-  * concatenates the two ([[ParquetConcat.mergeSameSchema]]).
+  * concatenates the two ([[ParquetConcat.concat]]).
   *
   * Every call site holds its table's single-writer scope (the store's
   * writer lease, an index's single maintainer), so any staged file already

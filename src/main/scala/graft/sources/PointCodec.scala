@@ -57,9 +57,4 @@ object PointCodec {
     }
     buf.array()
   }
-
-  /** Streaming-friendly record splitter: yields each point's wire bytes —
-    * used when a blob must be re-chunked without full materialization. */
-  def splitRecords(blob: Array[Byte]): Either[String, Vector[Array[Byte]]] =
-    decode(blob).map(_.map(p => encode(Seq(p))))
 }

@@ -82,49 +82,19 @@ object TimeStore {
   private def fs(spark: SparkSession, path: String): FileSystem =
     new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  /** Atomic metadata publish: write a sibling temp file, then rename over
-    * the destination. Readers are lock-free BY DESIGN, so an in-place
-    * `create(overwrite)` — which truncates first — would expose a window
-    * where a concurrent `fetchIndex`/`fetchLatest` reads an empty or torn
-    * file and either throws or silently sees a shorter index (skipping the
-    * newest epoch's partitions). Rename is atomic on HDFS-like stores and
-    * POSIX. */
-  private def writeSmall(spark: SparkSession, path: String, body: String): Unit = {
-    val f = fs(spark, path)
-    val p = new Path(path)
-    val tmp = new Path(p.getParent,
-      s".${p.getName}.tmp-${java.util.UUID.randomUUID()}")
-    val out = f.create(tmp, true)
-    try out.write(body.getBytes(StandardCharsets.UTF_8)) finally out.close()
-    if (!f.rename(tmp, p)) {
-      // a store whose rename won't clobber: delete + rename — the brief
-      // absence window reads as not-yet-written (None), never as torn data
-      f.delete(p, false)
-      if (!f.rename(tmp, p)) {
-        f.delete(tmp, false)
-        throw new java.io.IOException(s"atomic publish failed for $path")
-      }
-    }
-  }
+  /** Atomic metadata publish ([[Generations.writeSmall]]: a sibling temp
+    * file renamed over the destination). Readers are lock-free BY DESIGN,
+    * so an in-place `create(overwrite)` — which truncates first — would
+    * expose a window where a concurrent `fetchIndex`/`fetchLatest` reads an
+    * empty or torn file and either throws or silently sees a shorter index
+    * (skipping the newest epoch's partitions). */
+  private def writeSmall(spark: SparkSession, path: String, body: String): Unit =
+    Generations.writeSmall(fs(spark, path), new Path(path), body)
 
-  private def readSmall(spark: SparkSession, path: String): Option[String] = {
-    val f = fs(spark, path)
-    val p = new Path(path)
-    if (!f.exists(p)) None
-    else try {
-      val len = f.getFileStatus(p).getLen.toInt
-      val buf = new Array[Byte](len)
-      val in = f.open(p)
-      try { in.readFully(0, buf); Some(new String(buf, StandardCharsets.UTF_8)) }
-      finally in.close()
-    } catch {
-      // exists-then-open TOCTOU: on a store whose rename won't clobber,
-      // writeSmall's delete+rename fallback removes the file for an instant
-      // on EVERY publish — a concurrent lock-free reader racing that window
-      // must see not-yet-visible (None), not a crash (ADVICE r6 medium)
-      case _: java.io.FileNotFoundException => None
-    }
-  }
+  /** A small file's text; None when absent, including the exists-then-open
+    * race with a non-clobbering publish (ADVICE r6 medium). */
+  private def readSmall(spark: SparkSession, path: String): Option[String] =
+    Generations.readSmall(fs(spark, path), new Path(path))
 
   /** [[readSmall]] with one bounded retry on absence, for metadata whose
     * absence may be a transient publish window rather than a fact: on
@@ -350,7 +320,7 @@ object TimeStore {
       val sIdx = mustFetchIndex(spark, n, "simple")
       val eIdx = mustFetchIndex(spark, n, "extended")
 
-      val routed = route(points.toDF(), sIdx, eIdx)
+      val routed = route(requiredPoints(points.toDF()), sIdx, eIdx)
       // Per-kind max collected DURING the write via observe() — one source
       // scan per batch, not a second evaluation of the routing CASE chains
       // (VERDICT r1 #6). Unsigned max: observe over the sign-flipped time
@@ -393,6 +363,21 @@ object TimeStore {
       if (metrics.getOrElse("extended", null) != null)
         maybeRollover(spark, n, "extended", eIdx, eMax, rolloverBytes, target)
     })
+
+  /** `df` with address, time and payload asserted non-null — the physical
+    * form of [[Point.schema]] (`required int64`) whatever nullability the
+    * frame carries (a frame read back from parquet is all-nullable), so
+    * every file of a leaf shares one schema and compaction concatenates
+    * them. A null fails the write loudly instead of landing. */
+  private def requiredPoints(df: DataFrame): DataFrame = {
+    import org.apache.spark.sql.catalyst.expressions.objects.AssertNotNull
+    import org.apache.spark.sql.graftshim.ColumnBridge
+    df.select(df.columns.toSeq.map {
+      case c @ ("address" | "time" | "payload") => ColumnBridge.column(
+        AssertNotNull(ColumnBridge.expression(col(c)), Seq(c))).as(c)
+      case c => col(c)
+    }: _*)
+  }
 
   /** Add routing columns: epoch by strict-floor index lookup on time
     * (`Index.hs:76-88`), bucket by `placeBucket`. The index is tiny (a few
@@ -570,80 +555,21 @@ object TimeStore {
   //
   // Reader-safe compaction (VERDICT r2 missing #1): instead of renaming the
   // live directory (whose swap window left readers with no directory at
-  // all), each compaction writes a NEW generation `points-g<k>` and the
-  // live generation is resolved by listing: the highest generation whose
-  // `_SUCCESS` marker exists. The marker lands atomically at job commit, so
-  // the swap is atomic from a reader's perspective — before commit readers
-  // resolve the old generation, after it the new one; there is no window
-  // with neither. A superseded generation is retained until its
-  // SUPERSESSION is older than [[LeaseTimeoutMs]] (age-based retirement,
-  // VERDICT r4 missing #1): a reader that resolved generation g started
-  // scanning before g+1 committed, so holding g for the lease horizon
-  // after that commit protects it through ANY number of back-to-back
-  // compactions — the count-based rule ("keep one superseded gen") broke a
-  // reader when two compactions committed during one scan. Readers slower
-  // than the 120 s horizon are outside the guarantee, exactly like the
-  // reference's watchdog, which breaks locks on the same clock
-  // (`Core.hs:125-164`). Storage cost: superseded copies linger ≤ 120 s.
+  // all), each compaction or vacuum writes a NEW generation `points-g<k>`,
+  // live from its `_SUCCESS` commit, and retires superseded generations on
+  // the lease horizon — the lifecycle the persisted indexes share
+  // ([[Generations]]). Holding a superseded generation for the horizon
+  // after its supersession protects a reader through ANY number of
+  // back-to-back compactions (the count-based rule "keep one superseded
+  // gen" broke a reader when two compactions committed during one scan).
+  // Readers slower than the 120 s horizon are outside the guarantee,
+  // exactly like the reference's watchdog, which breaks locks on the same
+  // clock (`Core.hs:125-164`). Storage cost: superseded copies linger
+  // ≤ 120 s.
 
-  private val GenDirRe = "points-g([0-9]+)".r
-
-  private def genPath(n: Namespace, g: Long): String =
-    if (g == 0L) n.pointsDir else s"${n.dir}/points-g$g"
-
-  /** All on-disk generations, ascending: (generation, path). */
-  private def generations(spark: SparkSession, n: Namespace): Seq[(Long, Path)] = {
-    val f = fs(spark, n.dir)
-    val base = new Path(n.dir)
-    if (!f.exists(base)) Nil
-    else f.listStatus(base).toSeq.filter(_.isDirectory).flatMap { st =>
-      st.getPath.getName match {
-        case "points"     => Some((0L, st.getPath))
-        case GenDirRe(g)  => Some((g.toLong, st.getPath))
-        case _            => None
-      }
-    }.sortBy(_._1)
-  }
-
-  private def isComplete(f: FileSystem, p: Path): Boolean =
-    f.exists(new Path(p, "_SUCCESS"))
-
-  /** Superseded generations old enough to retire: complete generations
-    * below `live` whose supersession is older than [[LeaseTimeoutMs]] and
-    * which are not PINNED ([[pinGeneration]] — the snapshot-read retention
-    * override; a pinned generation survives any number of compact/vacuum
-    * passes until [[unpinGeneration]]). Any reader still scanning an
-    * unpinned retireable generation resolved it before the horizon, i.e.
-    * has been running longer than the lease horizon — outside the reader
-    * guarantee (the reference draws the same line with its 120 s lock
-    * watchdog).
-    *
-    * The supersession clock is a `_SUPERSEDED_AT` marker written ONCE into
-    * the superseded generation when a writer first observes it superseded
-    * (writers only — always under the lease). It must NOT be the
-    * superseder's `_SUCCESS` mtime: every micro-batch append to the live
-    * generation re-commits that marker, so a hot stream would refresh the
-    * clock forever and the superseded full copy would never retire
-    * (permanent ~2× storage). First-observation time is ≥ the true
-    * supersession time, so the marker only ever retains longer — safe for
-    * readers. */
-  private def retireable(spark: SparkSession, f: FileSystem,
-                         gens: Seq[(Long, Path)],
-                         live: Long): Seq[(Long, Path)] = {
-    val complete = gens.filter(g => isComplete(f, g._2))
-    complete.filter(_._1 < live).filter { case (g, p) =>
-      complete.exists(_._1 > g) && !isPinned(f, p) && {
-        val marker = s"$p/_SUPERSEDED_AT"
-        readSmall(spark, marker).map(_.trim.toLong) match {
-          case None =>
-            writeSmall(spark, marker, System.currentTimeMillis().toString)
-            false
-          case Some(at) =>
-            System.currentTimeMillis() - at > LeaseTimeoutMs
-        }
-      }
-    }
-  }
+  /** All on-disk points generations, ascending: (generation, path). */
+  private def pointsGens(spark: SparkSession, n: Namespace): Seq[(Long, Path)] =
+    Generations.list(fs(spark, n.dir), new Path(n.dir), Generations.Points)
 
   // ---- generation pins: snapshot reads / time travel (VERDICT r15 #1) ---
   //
@@ -663,17 +589,14 @@ object TimeStore {
   // must reach ARCHIVED corpus versions requires dropping their pins —
   // the pin IS the explicit record that such versions exist.
 
-  private def isPinned(f: FileSystem, p: Path): Boolean =
-    f.exists(new Path(p, "_PINNED"))
-
   /** All on-disk generations with their state, ascending:
     * (generation, complete, pinned). The live generation is the highest
     * complete one. */
   def storeGenerations(spark: SparkSession, n: Namespace)
       : Seq[(Long, Boolean, Boolean)] = {
     val f = fs(spark, n.dir)
-    generations(spark, n).map { case (g, p) =>
-      (g, isComplete(f, p), isPinned(f, p))
+    pointsGens(spark, n).map { case (g, p) =>
+      (g, Generations.isComplete(f, p), Generations.isPinned(f, p))
     }
   }
 
@@ -686,8 +609,8 @@ object TimeStore {
     * it unstamped; always under the lease). The birth time must be its own
     * write-once marker and NOT the `_SUCCESS` mtime: every micro-batch
     * append to the live generation re-commits `_SUCCESS` and refreshes
-    * that mtime (the same trap the `_SUPERSEDED_AT` design comment
-    * documents), which would make [[generationAsOf]] resolve a hot
+    * that mtime (the same trap the retirement clock avoids,
+    * [[Generations]]), which would make [[generationAsOf]] resolve a hot
     * generation as "not yet born" and time-travel to its PREDECESSOR —
     * on a takedown-vacuumed store, serving deleted rows. */
   private def stampBornAt(spark: SparkSession, f: FileSystem,
@@ -707,9 +630,9 @@ object TimeStore {
   def generationAsOf(spark: SparkSession, n: Namespace,
                      millis: Long): Option[Long] = {
     val f = fs(spark, n.dir)
-    generations(spark, n)
+    pointsGens(spark, n)
       .filter { case (_, p) =>
-        isComplete(f, p) && {
+        Generations.isComplete(f, p) && {
           val born = readSmall(spark, s"$p/_BORN_AT").map(_.trim.toLong)
             .getOrElse(f.getFileStatus(new Path(p, "_SUCCESS"))
               .getModificationTime)
@@ -728,20 +651,19 @@ object TimeStore {
   def pinGeneration(spark: SparkSession, n: Namespace, g: Long): Unit =
     withWriterLease(spark, n) {
       val f = fs(spark, n.dir)
-      val p = generations(spark, n).collectFirst { case (`g`, path) => path }
+      val p = pointsGens(spark, n).collectFirst { case (`g`, path) => path }
         .getOrElse(throw new IllegalStateException(
           s"namespace '${n.ns}': generation $g does not exist " +
             "(already retired, or never created)"))
-      require(isComplete(f, p),
+      require(Generations.isComplete(f, p),
         s"namespace '${n.ns}': generation $g is incomplete (dead compaction " +
           "attempt) — only complete generations can be pinned")
-      writeSmall(spark, s"$p/_PINNED",
-        System.currentTimeMillis().toString)
+      Generations.pin(f, p)
     }
 
   /** Drop generation `g`'s pin; if superseded it retires on the normal
-    * lease-horizon clock FROM THE UNPIN — the `_SUPERSEDED_AT` marker is
-    * re-stamped on the pin's actual removal so the clock restarts, giving
+    * lease-horizon clock FROM THE UNPIN — the retirement clock is
+    * re-stamped on the pin's actual removal so it restarts, giving
     * any reader who resolved the pinned snapshot the full
     * [[LeaseTimeoutMs]] grace before its files vanish (a months-old
     * supersession time would retire it on the very next maintenance pass,
@@ -753,18 +675,7 @@ object TimeStore {
     * unknown generation (its files are already gone). */
   def unpinGeneration(spark: SparkSession, n: Namespace, g: Long): Unit =
     withWriterLease(spark, n) {
-      val f = fs(spark, n.dir)
-      val gens = generations(spark, n)
-      gens.collectFirst { case (`g`, path) => path }.foreach { p =>
-        val hadPin = f.delete(new Path(p, "_PINNED"), false)
-        // only meaningful once a higher complete generation exists — a
-        // still-live generation must NOT carry a marker (it would
-        // pre-date its real supersession and cut the readers' grace)
-        if (hadPin &&
-            gens.exists { case (og, op) => og > g && isComplete(f, op) })
-          writeSmall(spark, s"$p/_SUPERSEDED_AT",
-            System.currentTimeMillis().toString)
-      }
+      Generations.unpin(fs(spark, n.dir), pointsGens(spark, n), g)
     }
 
   /** Resolve a pinned/snapshot generation's points path — loud on a
@@ -773,12 +684,12 @@ object TimeStore {
   private[graft] def snapshotPath(spark: SparkSession, n: Namespace,
                                   g: Long): String = {
     val f = fs(spark, n.dir)
-    val p = generations(spark, n).collectFirst { case (`g`, path) => path }
+    val p = pointsGens(spark, n).collectFirst { case (`g`, path) => path }
       .getOrElse(throw new IllegalStateException(
         s"namespace '${n.ns}': generation $g does not exist (retired or " +
           "never created) — pin generations you need reproducible reads of " +
           "(TimeStore.pinGeneration)"))
-    require(isComplete(f, p),
+    require(Generations.isComplete(f, p),
       s"namespace '${n.ns}': generation $g is incomplete and cannot be read")
     p.toString
   }
@@ -787,9 +698,8 @@ object TimeStore {
     * incomplete generation-0 (first append in flight / crashed) still
     * resolves so appends land consistently. None = never written. */
   private[graft] def livePointsPath(spark: SparkSession, n: Namespace): Option[String] = {
-    val f = fs(spark, n.dir)
-    val gens = generations(spark, n)
-    gens.filter(g => isComplete(f, g._2)).lastOption
+    val gens = pointsGens(spark, n)
+    Generations.complete(fs(spark, n.dir), gens).lastOption
       .orElse(gens.headOption)
       .map(_._2.toString)
   }
@@ -827,150 +737,40 @@ object TimeStore {
       }
     }
 
-  /** Compact a namespace: rewrite each (kind, epoch, bucket) partition's
-    * accumulated small append files into one file per partition. The
+  /** Compact a namespace: copy each (kind, epoch, bucket) leaf's
+    * accumulated small append files into one file per leaf. The
     * streaming/batch append path writes a file per micro-batch per bucket —
     * at scale the read side degrades on file-count, and the reference never
     * faces this (RADOS appends in place). Old epochs are immutable, so
     * compaction is idempotent and safe under the single-writer discipline.
     *
+    * ZERO-SHUFFLE, ZERO-DECODE (r11): the store is already physically
+    * partitioned by leaf directories, so compaction is a per-leaf FILE
+    * copy, not a relational rewrite (the old read → repartition →
+    * partitionBy shape shuffled 1.02B points in 287.6 s and spilled
+    * ~19 GB; SCALE.md decade table). The live generation is listed once
+    * and each leaf's row groups are copied raw by one task
+    * ([[Generations.compact]], [[ParquetConcat.concat]]): one output file
+    * per physical schema, so a leaf still holding `optional int64` files
+    * from before every writer landed `required` columns keeps two files
+    * until its next [[vacuumDeletes]] rewrites it. Transient space is the
+    * two generations only — the irreducible cost of the reader-safe swap.
+    *
     * Reader-safe: the compacted copy is written as a NEW generation and
     * becomes live atomically when its `_SUCCESS` marker commits — a
     * concurrent reader resolves either the old or the new generation, never
-    * neither (the old rename-based swap had a no-live-directory window).
-    * Superseded generations survive for [[LeaseTimeoutMs]] after their
-    * supersession, so readers already scanning them are not broken even by
-    * several back-to-back compactions.
+    * neither. Superseded generations survive for [[LeaseTimeoutMs]] after
+    * their supersession, so readers already scanning them are not broken
+    * even by several back-to-back compactions.
     */
   def compact(spark: SparkSession, n: Namespace): Unit =
     withWriterLease(spark, n)(graft.Trace.phase(spark, "store.compact") {
-      doCompact(spark, n)
+      val f = fs(spark, n.dir)
+      // birth marker before visibility: born ≤ live-from
+      Generations.compact(spark, f,
+        Generations.listing(f, new Path(n.dir), Generations.Points))(
+        next => stampBornAt(spark, f, next))
     })
-
-  private def doCompact(spark: SparkSession, n: Namespace): Unit = {
-    val f = fs(spark, n.dir)
-    val gens = generations(spark, n)
-    gens.filter(g => isComplete(f, g._2)).lastOption.foreach {
-      case (curGen, curPath) =>
-        val next = new Path(genPath(n, curGen + 1))
-        if (f.exists(next)) f.delete(next, true) // dead earlier attempt
-        // ZERO-SHUFFLE merge (r11): the store is already physically
-        // partitioned by (kind, epoch, bucket) directories, so compaction
-        // is a per-directory FILE merge, not a relational rewrite. The old
-        // shape (read → repartition(kind,epoch,bucket) → partitionBy write)
-        // shuffled the ENTIRE corpus to land rows it already had grouped —
-        // at 1.02B points that shuffle cost 287.6 s and spilled ~19 GB; at
-        // 2.05B the spill alone outgrew the box (SCALE.md decade table).
-        // Instead: one task per partition directory, each streaming its
-        // files' rows into one output file (raw byte copy when the
-        // directory already holds a single file). Transient space is the
-        // two generations only — the irreducible cost of the reader-safe
-        // swap — and network traffic is zero.
-        val leaves = scala.collection.mutable.SortedSet.empty[String]
-        val walk = f.listFiles(curPath, true)
-        while (walk.hasNext) {
-          val st = walk.next()
-          val nm = st.getPath.getName
-          if (st.isFile && !nm.startsWith("_") && !nm.startsWith(".")) {
-            val rel = st.getPath.getParent.toString
-              .stripPrefix(curPath.toString).stripPrefix("/")
-            if (rel.nonEmpty) leaves += rel
-          }
-        }
-        val sconf = new SerializableHadoopConf(
-          spark.sparkContext.hadoopConfiguration)
-        val (curStr, nextStr) = (curPath.toString, next.toString)
-        if (leaves.nonEmpty)
-          // one partition-dir per task: the merge is IO-bound and a retried
-          // task overwrites its own output file, so tasks are idempotent
-          spark.sparkContext.parallelize(leaves.toSeq, leaves.size)
-            .foreach { rel =>
-              mergePartitionDir(sconf.conf, new Path(s"$curStr/$rel"),
-                new Path(s"$nextStr/$rel/compacted-0.parquet"))
-            }
-        else f.mkdirs(next)
-        // the new generation is live from here (its _SUCCESS committed);
-        // retire only superseded generations whose supersession is older
-        // than the lease horizon — curGen and any recently-superseded
-        // predecessor stay for readers that resolved them pre-swap (two
-        // fast back-to-back compactions must not strand an in-flight scan)
-        stampBornAt(spark, f, next) // before visibility: born ≤ live-from
-        f.create(new Path(next, "_SUCCESS"), true).close()
-        retireable(spark, f, gens, curGen + 1).foreach(g => f.delete(g._2, true))
-    }
-  }
-
-  /** [[mergePartitionDir]]'s re-encode schema: the physical form of
-    * [[Point.schema]] (non-nullable fields required, the blob optional;
-    * partition columns live in the directory names). */
-  private val LocalFileSchema = org.apache.parquet.schema.MessageTypeParser
-    .parseMessageType(
-      """message spark_schema {
-        |  required int64 address;
-        |  required int64 time;
-        |  required int64 payload;
-        |  optional binary value;
-        |}""".stripMargin)
-
-  /** Executor-side merge of one partition directory's parquet files into a
-    * single file. Fast path (the only one real stores hit — every writer in
-    * the protocol emits the same physical schema): BINARY row-group
-    * concatenation via `ParquetFileReader.appendTo` — no decode, no
-    * re-encode, no writer buffer; pure IO with the footers rewritten
-    * (VERDICT r11 next #3: the old Group-API row loop was the exact decode
-    * path the r11 read-side fix measured 4-5× slow). Files are appended in
-    * name order so the merged row groups preserve per-append time locality
-    * (row-group min/max stats keep skipping). Mixed-schema directories fall
-    * back to a streaming row re-encode under [[LocalFileSchema]], FAILING
-    * LOUDLY if a source file carries a field that schema lacks — a future
-    * point-schema extension must extend compaction, never silently lose a
-    * column (ADVICE r11) — with the writer's row-group size capped so peak
-    * merge-task memory is bounded independently of core count (ADVICE r11).
-    * A directory already holding one file is byte-copied unchanged.
-    * Overwrite modes make task retries idempotent. */
-  private def mergePartitionDir(conf: org.apache.hadoop.conf.Configuration,
-                                srcDir: Path, dstFile: Path): Unit = {
-    import org.apache.parquet.hadoop.ParquetFileWriter
-    import org.apache.parquet.hadoop.example.ExampleParquetWriter
-    import org.apache.parquet.hadoop.metadata.CompressionCodecName
-    val files = ParquetConcat.dataFiles(conf, srcDir)
-    if (files.isEmpty) return
-    // fast path: raw row-group concatenation ([[ParquetConcat]], shared
-    // with the ANN index compaction); false means a mixed-schema directory
-    if (ParquetConcat.mergeSameSchema(conf, files, dstFile)) return
-    // loud-loss guard BEFORE any row moves: every source field must exist in
-    // the merge schema with the same primitive type
-    files.foreach { st =>
-      val s = ParquetOpen.withReader(conf, st)(_.getFooter.getFileMetaData.getSchema)
-      s.getFields.forEach { fld =>
-        require(LocalFileSchema.containsField(fld.getName) &&
-            LocalFileSchema.getType(Seq(fld.getName): _*).asPrimitiveType()
-              .getPrimitiveTypeName == fld.asPrimitiveType().getPrimitiveTypeName,
-          s"compact would drop field '${fld.getName}' of ${st.getPath} " +
-            s"(not in the merge schema) — refusing to lose data")
-      }
-    }
-    import org.apache.parquet.example.data.simple.SimpleGroupFactory
-    val writer = ExampleParquetWriter.builder(dstFile)
-      .withConf(conf).withType(LocalFileSchema)
-      .withCompressionCodec(CompressionCodecName.SNAPPY)
-      .withWriteMode(ParquetFileWriter.Mode.OVERWRITE)
-      .withRowGroupSize(32L << 20) // bounded writer buffer per merge task
-      .build()
-    val factory = new SimpleGroupFactory(LocalFileSchema)
-    try files.foreach { st =>
-      ParquetOpen.foreachGroup(conf, st) { g =>
-        val out = factory.newGroup()
-        out.append("address", g.getLong("address", 0))
-        out.append("time", g.getLong("time", 0))
-        out.append("payload", g.getLong("payload", 0))
-        if (g.getType.containsField("value") &&
-            g.getFieldRepetitionCount("value") > 0)
-          out.append("value", g.getBinary("value", 0))
-        writer.write(out)
-      }
-    } finally writer.close()
-  }
 
   /** Crash recovery for [[compact]]: a compaction that died mid-write left
     * a newest generation without `_SUCCESS` — readers never resolve it, and
@@ -981,11 +781,11 @@ object TimeStore {
     * called by writers on open. */
   def recoverStranded(spark: SparkSession, n: Namespace): Unit = {
     val f = fs(spark, n.dir)
-    val gens = generations(spark, n)
-    gens.filter(g => isComplete(f, g._2)).lastOption.foreach {
-      case (live, _) =>
-        (gens.filter { case (g, _) => g > live } ++ retireable(spark, f, gens, live))
-          .foreach(g => f.delete(g._2, true))
+    val gens = pointsGens(spark, n)
+    val done = Generations.complete(f, gens)
+    done.lastOption.foreach { case (live, _) =>
+      gens.filter(_._1 > live).foreach(g => f.delete(g._2, true))
+      Generations.retireSuperseded(f, done)
     }
   }
 
@@ -1250,17 +1050,16 @@ object TimeStore {
       val applied = deleteFiles(spark, n)
       if (applied.nonEmpty) {
         val f = fs(spark, n.dir)
-        val gens = generations(spark, n)
-        val liveComplete = gens.filter(g => isComplete(f, g._2)).lastOption
-        liveComplete match {
+        val done = Generations.complete(f, pointsGens(spark, n))
+        done.lastOption match {
           case None =>
             // never-written (or first-append-in-flight) namespace: nothing
             // to fold, reads are empty/masked either way — keep the
             // tombstones pending until there is a generation to rewrite
             ()
           case Some((curGen, curPath)) =>
-            val next = new Path(genPath(n, curGen + 1))
-            if (f.exists(next)) f.delete(next, true) // dead earlier attempt
+            val next = Generations.claim(f, new Path(n.dir),
+              Generations.Points, curGen + 1)
             val bytes = applied.map(_.getLen).sum
             if (bytes > DeleteBroadcastBytes)
               org.slf4j.LoggerFactory.getLogger(getClass).warn(
@@ -1274,12 +1073,13 @@ object TimeStore {
               .select(col("address").as("__del_addr"),
                 col("tstart").as("__del_start"), col("tend").as("__del_end"))
             val t = if (bytes <= DeleteBroadcastBytes) broadcast(tomb) else tomb
-            spark.read.schema(GraftTableProvider.StoreSchema).parquet(curPath.toString)
-              .join(t,
-                col("address") === col("__del_addr") &&
-                  PointFunctions.unsignedGte(col("time"), col("__del_start")) &&
-                  PointFunctions.unsignedLte(col("time"), col("__del_end")),
-                "left_anti")
+            requiredPoints(
+              spark.read.schema(GraftTableProvider.StoreSchema).parquet(curPath.toString)
+                .join(t,
+                  col("address") === col("__del_addr") &&
+                    PointFunctions.unsignedGte(col("time"), col("__del_start")) &&
+                    PointFunctions.unsignedLte(col("time"), col("__del_end")),
+                  "left_anti"))
               .write.mode(SaveMode.Overwrite)
               .partitionBy("kind", "epoch", "bucket")
               .parquet(next.toString)
@@ -1290,8 +1090,7 @@ object TimeStore {
             // _SUCCESS-mtime fallback, then the next append stamps it.
             stampBornAt(spark, f, next)
             crashPoint("vacuum-after-gen-commit")
-            retireable(spark, f, generations(spark, n), curGen + 1)
-              .foreach(g => f.delete(g._2, true))
+            Generations.retireSuperseded(f, done :+ (curGen + 1 -> next))
             applied.foreach(st => f.delete(st.getPath, false))
         }
       }
@@ -1341,22 +1140,13 @@ object TimeStore {
     // one recursive walk of the live generation: per-leaf file counts/bytes
     val leafFiles = scala.collection.mutable.HashMap
       .empty[(String, Long, Int), (Long, Long)] // leaf -> (files, bytes)
+    val LeafRe = "kind=([a-z]+)/epoch=([0-9]+)/bucket=([0-9]+)".r
     livePointsPath(spark, n).foreach { live =>
-      val LeafRe = "kind=([a-z]+)/epoch=([0-9]+)/bucket=([0-9]+)".r
-      val walk = f.listFiles(new Path(live), true)
-      while (walk.hasNext) {
-        val st = walk.next()
-        val nm = st.getPath.getName
-        if (st.isFile && !nm.startsWith("_") && !nm.startsWith(".")) {
-          st.getPath.getParent.toString.stripPrefix(live)
-            .stripPrefix("/") match {
-            case LeafRe(k, e, b) =>
-              val key = (k, java.lang.Long.parseUnsignedLong(e), b.toInt)
-              val (c0, b0) = leafFiles.getOrElse(key, (0L, 0L))
-              leafFiles.update(key, (c0 + 1, b0 + st.getLen))
-            case _ => ()
-          }
-        }
+      Generations.leaves(f, new Path(live)).foreach {
+        case (LeafRe(k, e, b), files) =>
+          leafFiles((k, java.lang.Long.parseUnsignedLong(e), b.toInt)) =
+            (files.size.toLong, files.map(_.getLen).sum)
+        case _ => ()
       }
     }
     val delFiles = deleteFiles(spark, n)

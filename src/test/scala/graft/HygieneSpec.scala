@@ -98,24 +98,33 @@ class HygieneSpec extends SparkSpec {
         offenders.mkString("\n"))
   }
 
-  /** Index-lifecycle code in `src`: a tombstone-path literal, per-table
-    * compaction, generation retirement and the size-gated broadcast —
-    * each of which [[graft.operators.IndexTables]] owns for every index
-    * family. */
-  private def lifecycleCode(src: String): Seq[String] = {
+  /** Matches of `patterns` in `src`, as "line N: text". */
+  private def matchesOf(src: String, patterns: Seq[String]): Seq[String] = {
     def line(i: Int) = src.substring(0, i).count(_ == '\n') + 1
-    Seq("/tombstones\"", "compactTable\\(", "maybeCompactTable\\(",
-        "retireSuperseded\\(", "MaxProbeBroadcastBytes\\)\\s*broadcast")
-      .flatMap(re => re.r.findAllMatchIn(src)
-        .map(m => s"line ${line(m.start)}: ${m.matched.replaceAll("\\s+", " ")}"))
+    patterns.flatMap(re => re.r.findAllMatchIn(src)
+      .map(m => s"line ${line(m.start)}: ${m.matched.replaceAll("\\s+", " ")}"))
   }
+
+  /** Index-lifecycle code in `src`: a tombstone-path literal, per-table
+    * compaction and the size-gated broadcast — each of which
+    * [[graft.operators.IndexTables]] owns for every index family. */
+  private def lifecycleCode(src: String): Seq[String] =
+    matchesOf(src, Seq("/tombstones\"", "compactTable\\(", "maybeCompactTable\\(",
+      "MaxProbeBroadcastBytes\\)\\s*broadcast"))
+
+  /** Generation-retirement code in `src`: the retirement marker's name as
+    * a literal and a retirement pass defined or called unqualified —
+    * [[graft.sources.Generations]] owns them for the store and every
+    * index; its callers delegate as `Generations.retireSuperseded(`. */
+  private def retirementCode(src: String): Seq[String] =
+    matchesOf(src, Seq("_SUPERSEDED_AT\"", "(?<!Generations\\.)\\bretireSuperseded\\(",
+      "(?<!Generations\\.)\\bretireable\\("))
 
   test("index lifecycle code lives only in IndexTables") {
     // the detector itself: flags each form, passes the delegations
     assert(lifecycleCode("spark.read.parquet(s\"$path/tombstones\")").size === 1)
     assert(lifecycleCode("IndexTables.compactTable(spark, t)").size === 1)
     assert(lifecycleCode("maybeCompactTable(spark, t, 16)").size === 1)
-    assert(lifecycleCode("retireSuperseded(fs, table)").size === 1)
     assert(lifecycleCode(
       "if (b <= Similarity.MaxProbeBroadcastBytes) broadcast(df) else df").size === 1)
     assert(lifecycleCode("if (b <= MaxProbeBroadcastBytes)\n  broadcast(df)").size === 1)
@@ -127,9 +136,28 @@ class HygieneSpec extends SparkSpec {
       .filter(_._1.getName != "IndexTables.scala")
       .flatMap { case (f, src) => lifecycleCode(src).map(h => s"${f.getPath} $h") }
     assert(offenders.isEmpty,
-      "compaction, tombstones, retirement and broadcast gating of the " +
+      "compaction, tombstones and broadcast gating of the " +
         "persisted indexes go through graft.operators.IndexTables:\n" +
         offenders.mkString("\n"))
+    // generation retirement, for the store and the indexes alike, lives
+    // only in the shared lifecycle module
+    assert(retirementCode("val m = new Path(p, \"_SUPERSEDED_AT\")").size === 1)
+    assert(retirementCode("writeSmall(spark, s\"$p/_SUPERSEDED_AT\", now)").size === 1)
+    assert(retirementCode("private def retireSuperseded(f: FileSystem) =").size === 1)
+    assert(retirementCode("retireSuperseded(fs, table)").size === 1)
+    assert(retirementCode("retireable(spark, f, gens, live).foreach(rm)").size === 1)
+    assert(retirementCode("Generations.retireSuperseded(f, done)").isEmpty)
+    assert(retirementCode("// stamped as `_SUPERSEDED_AT` at first observation").isEmpty)
+    val sources = scalaSources("src/main/scala")
+    val (module, rest) = sources.partition(_._1.getName == "Generations.scala")
+    val scattered = rest.flatMap { case (f, src) =>
+      retirementCode(src).map(h => s"${f.getPath} $h")
+    }
+    assert(scattered.isEmpty,
+      "generation retirement goes through graft.sources.Generations:\n" +
+        scattered.mkString("\n"))
+    assert(module.exists { case (_, src) => retirementCode(src).nonEmpty },
+      "the shared retirement itself must be found")
   }
 
   /** Parquet reads in `src`, as (line, enclosing def): a `.read` chained
@@ -204,18 +232,15 @@ class HygieneSpec extends SparkSpec {
     }
     val offenders = found.collect {
       case (f, l, form, d) if !(
-          (form == "ExampleParquetWriter" && f.getName == "TimeStore.scala" &&
-            d == "mergePartitionDir") ||
-          (form != "ExampleParquetWriter" && f.getName == "LocalParquet.scala")) =>
+          form != "ExampleParquetWriter" && f.getName == "LocalParquet.scala") =>
         s"${f.getPath} line $l: $form in ${if (d.isEmpty) "(top level)" else d}"
     }
     assert(offenders.isEmpty,
       "driver-side parquet files are written, staged and renamed only by " +
-        "graft.sources.LocalParquet.publish (the example writer survives " +
-        "only in the store compaction's mixed-schema fallback):\n" +
-        offenders.mkString("\n"))
-    assert(found.map(_._3).toSet === Set("ExampleParquetWriter", ".newInstance(",
-      ".inprogress\""), "the publisher and the compaction fallback must be found")
+        "graft.sources.LocalParquet.publish, and src/main holds no example " +
+        "writer:\n" + offenders.mkString("\n"))
+    assert(found.map(_._3).toSet === Set(".newInstance(", ".inprogress\""),
+      "the publisher must be found")
   }
 
   test("CacheScope leaves a frame its caller persisted cached through cache, free and release") {

@@ -169,6 +169,57 @@ class IndexCompactSpec extends SparkSpec {
     fs.delete(new Path(path), true)
   }
 
+  test("index retirement: a torn marker is re-stamped, an aged generation " +
+      "retires, a fresh one stays") {
+    val path = java.nio.file.Files
+      .createTempDirectory("graft-retire-spec").toString
+    def build() = Similarity.imiIndexWrite(emb.filter(col("vec_id") < 300),
+      "vec_id", "embedding", path, groups = 2, groupSize = 2, iters = 1, dim = 64)
+    def search() = Similarity.imiIndexSearch(spark,
+      emb.filter(col("vec_id") < 5), "vec_id", "embedding", path,
+      k = 3, groupSize = 2, nprobeGroups = 1, nprobeCells = 2)
+    def marker(g: String) = new Path(g, "_SUPERSEDED_AT")
+    def stampedAt(g: String): Long = {
+      val in = fs.open(marker(g))
+      try new String(in.readAllBytes()).trim.toLong finally in.close()
+    }
+    def torn(g: String): Unit = fs.create(marker(g), true).close()
+    build()
+    // root level: a rebuild supersedes root generation 0, whose marker a
+    // writer then tore; the next rebuild's commit succeeds and re-stamps it
+    build()
+    val root0 = s"$path/gen-000000"
+    assert(fs.exists(marker(root0)))
+    torn(root0)
+    val t0 = System.currentTimeMillis()
+    build()
+    assert(stampedAt(root0) >= t0, "the torn root marker restarts the clock")
+    assert(Similarity.indexLiveRoot(spark, path).endsWith("gen-000002"))
+    val before = resultSet(search())
+    // table level: compaction supersedes lists generation 0; tear its marker
+    val lists = s"${Similarity.indexLiveRoot(spark, path)}/lists"
+    Similarity.indexCompact(spark, path)
+    val (g0, g1) = (s"$lists/gen-000000", s"$lists/gen-000001")
+    torn(g0)
+    val t1 = System.currentTimeMillis()
+    Similarity.indexCompact(spark, path) // the pass succeeds and re-stamps
+    assert(stampedAt(g0) >= t1, "the torn table marker restarts the clock")
+    assert(fs.exists(new Path(s"$lists/gen-000002/_SUCCESS")))
+    // fresh markers: both superseded generations stay through another pass
+    Similarity.indexCompact(spark, path)
+    assert(fs.exists(new Path(g0)) && fs.exists(new Path(g1)))
+    // an aged marker: that generation retires at the next pass, the fresh
+    // ones stay
+    val old = System.currentTimeMillis() - graft.sources.TimeStore.LeaseTimeoutMs - 5000
+    val out = fs.create(marker(g0), true)
+    try out.write(old.toString.getBytes) finally out.close()
+    Similarity.indexCompact(spark, path)
+    assert(!fs.exists(new Path(g0)), "aged generation retired")
+    assert(fs.exists(new Path(g1)), "freshly superseded generation kept")
+    assert(resultSet(search()) === before)
+    fs.delete(new Path(path), true)
+  }
+
   test("dedup signature index: stored-table check equals the recomputed " +
       "cross pairs, across append + compact") {
     import graft.operators.Dedup

@@ -169,46 +169,74 @@ class LocalPointOpsSpec extends SparkSpec {
 
   test("a leaf holding distributed, driver-written and older example-writer " +
       "files compacts by concatenation, every row kept") {
-    import org.apache.hadoop.fs.Path
+    import org.apache.hadoop.fs.{FileStatus, Path}
     import org.apache.parquet.example.data.simple.SimpleGroupFactory
     import org.apache.parquet.hadoop.example.ExampleParquetWriter
     import org.apache.parquet.io.api.Binary
+    import org.apache.spark.sql.Row
     import graft.sources.{ParquetConcat, ParquetOpen}
+    import spark.implicits._
     val n = freshNs()
     TimeStore.register(spark, n, 1, 1) // one leaf per kind
     val conf = spark.sparkContext.hadoopConfiguration
-    def leaf(kind: String) = new Path(s"${n.pointsDir}/kind=$kind/epoch=0/bucket=0")
-    def footer(st: org.apache.hadoop.fs.FileStatus) =
-      ParquetOpen.withReader(conf, st)(_.getFooter)
+    val f = new Path(n.dir).getFileSystem(conf)
+    def leaf(kind: String, gen: String = n.pointsDir) =
+      new Path(s"$gen/kind=$kind/epoch=0/bucket=0")
+    def live() = TimeStore.livePointsPath(spark, n).get
+    def footer(st: FileStatus) = ParquetOpen.withReader(conf, st)(_.getFooter)
+    def physical(st: FileStatus) =
+      footer(st).getFileMetaData.getSchema.toString.replaceAll("\\s+", " ").trim
+    // Point.schema's physical form, which every store writer lands
+    val required = "message spark_schema { required int64 address; required int64 time; " +
+      "required int64 payload; optional binary value; }"
     val rowMeta = "org.apache.spark.sql.parquet.row.metadata"
+    /** The files `files` concatenate into. */
+    def concatenated(files: Seq[FileStatus]): Seq[FileStatus] = {
+      val dir = new Path(Files.createTempDirectory("graft-concat").toString, "leaf")
+      ParquetConcat.concat(conf, files, dir)
+      ParquetConcat.dataFiles(conf, dir)
+    }
+    /** `pts` as the ts_store_* gates hold them: read back from parquet,
+      * every column nullable. */
+    def readBack(pts: Point*) = {
+      val dir = Files.createTempDirectory("graft-readback").toString + "/pts"
+      ds(pts: _*).toDF().coalesce(1).write.parquet(dir)
+      spark.read.parquet(dir)
+    }
     TimeStore.writePoints(spark, n, ds(
       Point(2L, 10L, 1L), Point(4L, 11L, 2L), Point(3L, 12L, 3L, Array[Byte](7))))
     TimeStore.writePointsLocal(spark, n, Seq(
       Point(2L, 20L, 4L), Point(6L, 21L, 5L), Point(5L, 22L, 6L, Array[Byte](8, 9)),
       Point(7L, 23L, 7L)))
+    val nullable = readBack(Point(8L, 30L, 8L), Point(11L, 31L, 9L, Array[Byte](1)))
+    assert(nullable.schema.forall(_.nullable))
+    TimeStore.writePoints(spark, n, nullable.as[Point])
     Seq("simple", "extended").foreach { kind =>
       val files = ParquetConcat.dataFiles(conf, leaf(kind))
       val (local, dist) = files.partition(_.getPath.getName.contains("-local"))
-      assert(local.size === 1 && dist.size === 1, files.map(_.getPath.getName))
-      val (f0, f1) = (footer(dist.head).getFileMetaData, footer(local.head).getFileMetaData)
-      // the physical schema mergePartitionDir's LocalFileSchema spells
-      assert(f1.getSchema.toString.replaceAll("\\s+", " ").trim ===
-        "message spark_schema { required int64 address; required int64 time; " +
-          "required int64 payload; optional binary value; }")
-      assert(f1.getSchema === f0.getSchema, kind)
-      assert(f1.getKeyValueMetaData.get(rowMeta) === f0.getKeyValueMetaData.get(rowMeta) &&
-        f0.getKeyValueMetaData.containsKey(rowMeta), kind)
-      val probe = new Path(Files.createTempDirectory("graft-concat").toString, "m.parquet")
-      assert(ParquetConcat.mergeSameSchema(conf, files, probe),
-        s"$kind: the leaf must take the concatenation path")
+      assert(local.size === 1 && dist.size === 2, files.map(_.getPath.getName))
+      files.foreach(st => assert(physical(st) === required, st.getPath))
+      val metas = files.map(footer(_).getFileMetaData.getKeyValueMetaData)
+      assert(metas.head.containsKey(rowMeta) &&
+        metas.forall(_.get(rowMeta) == metas.head.get(rowMeta)), kind)
+      assert(concatenated(files).size === 1, s"$kind: one schema, one file")
     }
-    // a fragment written the way earlier versions wrote driver-side puts:
-    // parquet-mr's example writer under the hand-written schema
-    val legacySchema = org.apache.parquet.schema.MessageTypeParser.parseMessageType(
-      "message spark_schema { required int64 address; required int64 time; " +
-        "required int64 payload; optional binary value; }")
+    // a vacuum's rewrite lands the same schema, so a later put's fragment
+    // concatenates with it
+    TimeStore.deletePoints(spark, n, Seq(8L))
+    TimeStore.vacuumDeletes(spark, n)
+    TimeStore.writePointsLocal(spark, n, Seq(Point(4L, 24L, 10L)))
+    val vacuumed = ParquetConcat.dataFiles(conf, leaf("simple", live()))
+    assert(vacuumed.exists(_.getPath.getName.contains("-local")) &&
+      vacuumed.exists(!_.getPath.getName.contains("-local")))
+    vacuumed.foreach(st => assert(physical(st) === required, st.getPath))
+    assert(concatenated(vacuumed).size === 1)
+    // fragments written the way earlier versions wrote: parquet-mr's
+    // example writer under the hand-written schema (extended leaf), and a
+    // writePoints of a read-back frame, `optional int64` (simple leaf)
+    val legacySchema = org.apache.parquet.schema.MessageTypeParser.parseMessageType(required)
     val w = ExampleParquetWriter.builder(
-        new Path(leaf("extended"), "part-legacy-local.snappy.parquet"))
+        new Path(leaf("extended", live()), "part-legacy-local.snappy.parquet"))
       .withConf(conf).withType(legacySchema).build()
     try Seq(Point(9L, 30L, 1L, Array[Byte](3)), Point(3L, 12L, 0L, null)).foreach { p =>
       val g = new SimpleGroupFactory(legacySchema).newGroup()
@@ -216,29 +244,55 @@ class LocalPointOpsSpec extends SparkSpec {
       if (p.value != null) g.append("value", Binary.fromConstantByteArray(p.value))
       w.write(g)
     } finally w.close()
-    val (sAddrs, eAddrs) = (Seq(2L, 4L, 6L), Seq(3L, 5L, 7L, 9L))
+    val optionalDir = Files.createTempDirectory("graft-optional").toString + "/pts"
+    readBack(Point(2L, 50L, 11L)).write.parquet(optionalDir)
+    val optional = ParquetConcat.dataFiles(conf, new Path(optionalDir)).head
+    assert(physical(optional).contains("optional int64 address"))
+    assert(f.rename(optional.getPath,
+      new Path(leaf("simple", live()), "part-legacy-optional.snappy.parquet")))
+    val (sAddrs, eAddrs) = (Seq(2L, 4L, 6L, 8L), Seq(3L, 5L, 7L, 9L, 11L))
     def reads() = (collectSimple(n, 0L, -1L, sAddrs), collectExtended(n, 0L, -1L, eAddrs))
     val before = reads()
-    assert(before._1.size === 4 && before._2.size === 4)
+    assert(before._1.size === 6 && before._2.size === 5)
     assert(before._2.find(_.address == 3L).get.payload === 0L,
       "the legacy fragment's row is read (and wins the pinned dedup)")
+    def rowGroups(files: Seq[FileStatus]) = files.map(footer(_).getBlocks.size).sum
     val groups = Seq("simple", "extended").map(k =>
-      k -> ParquetConcat.dataFiles(conf, leaf(k)).map(footer(_).getBlocks.size).sum).toMap
+      k -> rowGroups(ParquetConcat.dataFiles(conf, leaf(k, live())))).toMap
     TimeStore.compact(spark, n)
-    val live = TimeStore.livePointsPath(spark, n).get
-    Seq("simple", "extended").foreach { kind =>
-      val files = ParquetConcat.dataFiles(conf,
-        new Path(s"$live/kind=$kind/epoch=0/bucket=0"))
-      assert(files.size === 1, kind)
-      // concatenation keeps every input row group and the Spark schema
-      // metadata; the re-encode fallback would write one row group without it
-      val merged = footer(files.head)
-      assert(merged.getBlocks.size === groups(kind), kind)
-      assert(merged.getFileMetaData.getKeyValueMetaData.containsKey(rowMeta), kind)
+    Seq("simple" -> 2, "extended" -> 1).foreach { case (kind, schemas) =>
+      val files = ParquetConcat.dataFiles(conf, leaf(kind, live()))
+      // one file per physical schema: concatenation keeps every input row
+      // group and the Spark schema metadata; no row is re-encoded
+      assert(files.size === schemas, kind)
+      assert(files.map(physical).distinct.size === schemas, kind)
+      assert(rowGroups(files) === groups(kind), kind)
+      files.foreach(st => assert(
+        footer(st).getFileMetaData.getKeyValueMetaData.containsKey(rowMeta), kind))
     }
     assert(reads() === before)
     assert(TimeStore.readSimpleLocal(spark, n, 0L, -1L, sAddrs) === before._1)
     assert(TimeStore.readExtendedLocal(spark, n, 0L, -1L, eAddrs) === before._2)
+    // the mixed leaf heals on its next vacuum: one schema, one file
+    TimeStore.deletePoints(spark, n, Seq(6L))
+    TimeStore.vacuumDeletes(spark, n)
+    TimeStore.compact(spark, n)
+    Seq("simple", "extended").foreach { kind =>
+      val files = ParquetConcat.dataFiles(conf, leaf(kind, live()))
+      assert(files.size === 1 && physical(files.head) === required, kind)
+    }
+    val healed = reads()
+    assert(healed === (before._1.filter(_.address != 6L), before._2))
+    // a null point column fails the write loudly and lands nothing
+    val nulls = spark.createDataFrame(
+      java.util.Arrays.asList(Row(null, 60L, 1L, null)), nullable.schema)
+    val err = intercept[Exception](TimeStore.writePoints(spark, n, nulls.as[Point]))
+    assert(Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
+      .exists { e =>
+        val m = String.valueOf(e.getMessage)
+        m.contains("NOT_NULL_ASSERT_VIOLATION") && m.contains("address")
+      }, err)
+    assert(reads() === healed)
   }
 
   test("sign-crossing reads plan only their index epochs; unregistered reads fail at the call") {

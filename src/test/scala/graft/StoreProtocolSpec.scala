@@ -301,6 +301,40 @@ class StoreProtocolSpec extends SparkSpec {
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet === expected)
   }
 
+  test("a torn retirement marker is re-stamped; an aged generation retires, " +
+      "a fresh one stays") {
+    val n = freshNs()
+    TimeStore.register(spark, n, 2, 2)
+    TimeStore.writePoints(spark, n, pts((2L, 1L, 1L), (4L, 2L, 2L)))
+    val expected = TimeStore.readSimple(spark, n, 0L, 100L, Seq(2L, 4L)).collect().toSet
+    val f = new Path(n.dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val (g0, g1) = (new Path(n.pointsDir), new Path(s"${n.dir}/points-g1"))
+    def marker(g: Path) = new Path(g, "_SUPERSEDED_AT")
+    def stampedAt(g: Path): Long = {
+      val in = f.open(marker(g))
+      try new String(in.readAllBytes()).trim.toLong finally in.close()
+    }
+    TimeStore.compact(spark, n) // points -> g1: generation 0's clock starts
+    assert(f.exists(marker(g0)))
+    // a writer that died between the marker's create and close
+    f.create(marker(g0), true).close()
+    val before = System.currentTimeMillis()
+    TimeStore.compact(spark, n) // g1 -> g2: the pass succeeds and re-stamps
+    assert(stampedAt(g0) >= before, "the torn marker restarts the clock")
+    // fresh markers: both superseded generations stay
+    TimeStore.recoverStranded(spark, n)
+    assert(f.exists(g0) && f.exists(g1))
+    // an aged marker: that generation retires, the fresh one stays
+    val old = System.currentTimeMillis() - TimeStore.LeaseTimeoutMs - 5000
+    val out = f.create(marker(g0), true)
+    try out.write(old.toString.getBytes) finally out.close()
+    TimeStore.recoverStranded(spark, n)
+    assert(!f.exists(g0), "aged generation 0 retired")
+    assert(f.exists(g1), "freshly superseded generation 1 kept")
+    assert(TimeStore.liveGeneration(spark, n) === Some(2L))
+    assert(TimeStore.readSimple(spark, n, 0L, 100L, Seq(2L, 4L)).collect().toSet === expected)
+  }
+
   test("register CLI is idempotent and spark-submit shaped (Store.hs:87-105)") {
     val root = Files.createTempDirectory("graft-cli").toString
     val first = RegisterNamespace.run(spark, root, "CLI", 8, 16)
