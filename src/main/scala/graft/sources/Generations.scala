@@ -104,17 +104,17 @@ private[graft] object Generations {
   def commit(f: FileSystem, gen: Path): Unit =
     f.create(new Path(gen, "_SUCCESS"), true).close()
 
-  /** Stamp, and past the lease horizon delete, every unpinned generation
-    * of `complete` (the [[complete]] ones, ascending) below the last. */
+  /** Stamp, and past the lease horizon delete unless pinned, every
+    * generation of `complete` (the [[complete]] ones, ascending) below the
+    * last. */
   def retireSuperseded(f: FileSystem, complete: Seq[(Long, Path)]): Unit = {
     val now = System.currentTimeMillis()
     complete.dropRight(1).foreach { case (_, p) =>
-      if (!isPinned(f, p)) {
-        val marker = new Path(p, SupersededAt)
-        readSmall(f, marker).flatMap(_.trim.toLongOption) match {
-          case Some(at) => if (now - at > TimeStore.LeaseTimeoutMs) f.delete(p, true)
-          case None => writeSmall(f, marker, now.toString)
-        }
+      val marker = new Path(p, SupersededAt)
+      readSmall(f, marker).flatMap(_.trim.toLongOption) match {
+        case Some(at) =>
+          if (now - at > TimeStore.LeaseTimeoutMs && !isPinned(f, p)) f.delete(p, true)
+        case None => writeSmall(f, marker, now.toString)
       }
     }
   }
@@ -214,14 +214,12 @@ private[graft] object Generations {
     }
   }
 
-  /** The text of `p`, or None when it does not exist — including when it
-    * vanishes between the probe and the open ([[writeSmall]]'s window). */
+  /** The text of `p`, or None when it does not exist — including inside
+    * [[writeSmall]]'s delete-then-rename window. One open, no probe. */
   private[sources] def readSmall(f: FileSystem, p: Path): Option[String] =
-    if (!f.exists(p)) None
-    else try {
-      val buf = new Array[Byte](f.getFileStatus(p).getLen.toInt)
+    try {
       val in = f.open(p)
-      try { in.readFully(0, buf); Some(new String(buf, StandardCharsets.UTF_8)) }
+      try Some(new String(in.readAllBytes(), StandardCharsets.UTF_8))
       finally in.close()
     } catch { case _: java.io.FileNotFoundException => None }
 }
